@@ -30,3 +30,20 @@ def spark():
     s.sparkContext.setLogLevel("WARN")
     yield s
     s.stop()
+
+
+def spark_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return (its result, the
+    number of Spark jobs it launched). The status tracker is fed by the
+    listener bus, so the bus is drained before counting."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -610,3 +612,108 @@ def test_opq_engine_filtered_and_pruned(spark, qvec, opq_engine):
     assert _as_tuples(got) == _as_tuples(want)
     pruned, _ = opq_engine.search(qvec, k=5, filter=flt, search_top_size=50)
     assert all(r["vendor"] == "fr" for r in pruned)
+
+
+def test_ivf_search_df_root_is_take_ordered(qvec, ivf_engine_nonstrict):
+    """The post-join re-sort carries limit(k): the plan root is a
+    TakeOrderedAndProject, with no range-partitioning exchange (whose
+    sampling job and shuffle a bare ORDER BY would run per request)."""
+    from ydb_vector_search_simple_api_spark.plans import checks
+
+    df = ivf_engine_nonstrict.search_df(qvec, k=5, search_top_size=4)
+    plan = checks.simple_plan(df)
+    ops = [
+        ln.strip().lstrip("+-: ").strip()
+        for ln in plan.split("== Physical Plan ==")[1].splitlines()
+        if ln.strip()
+    ]
+    ops = [op for op in ops if not op.startswith("AdaptiveSparkPlan")]
+    assert ops[0].startswith("TakeOrderedAndProject"), plan
+    assert "rangepartitioning" not in plan, plan
+
+
+# ------------------------------------------- result cache under threads
+
+
+def _hammer(eng, queries, n_threads, rounds):
+    """Every thread runs every query ``rounds`` times, in a
+    thread-specific order; returns (errors, {query index: results})."""
+    import threading
+
+    errors, seen = [], {}
+    lock = threading.Lock()
+    start = threading.Barrier(n_threads)
+
+    def run(t):
+        try:
+            start.wait()
+            for r in range(rounds):
+                for i in range(len(queries)):
+                    qi = (i + t + r) % len(queries)
+                    q, k = queries[qi]
+                    got, _ = eng.search(q, k=k)
+                    with lock:
+                        seen.setdefault(qi, []).append(got)
+        except Exception as e:  # noqa: BLE001 - collected for the assert
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(t,)) for t in range(n_threads)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    return errors, seen
+
+
+def test_result_cache_is_thread_safe(spark):
+    """Many threads hitting, missing and evicting one small cache: no
+    exception, and every reply equals the backend's answer. The
+    backend is a stub, so the cache's own bookkeeping is what is
+    hammered; without the lock, threads die of KeyError."""
+
+    class Row(dict):
+        def asDict(self):
+            return dict(self)
+
+    class Result:
+        def __init__(self, rows):
+            self.rows = rows
+
+        def collect(self):
+            return [Row(r) for r in self.rows]
+
+    def backend(embedding, k, filter=None, search_top_size=None):
+        return Result([{"id": int(embedding[0]) * 100 + j, "score": -j} for j in range(k)])
+
+    eng = api.VectorSearchEngine(spark, SF_SMALL, result_cache_size=3)
+    eng.search_df = backend
+    queries = [([float(i), 1.0], 1 + i % 3) for i in range(7)]
+    # switch threads far more often than the default 5 ms, so a
+    # check-then-act window in the cache is actually interleaved
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        errors, seen = _hammer(eng, queries, n_threads=8, rounds=400)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, errors[:3]
+    for qi, replies in seen.items():
+        want = [r.asDict() for r in backend(*queries[qi]).collect()]
+        assert all(r == want for r in replies), qi
+
+
+def test_result_cache_threads_match_uncached_search(spark, qvec):
+    """The same under real searches: concurrent cached replies equal
+    the uncached engine's."""
+    embs = [
+        [float(x) for x in r.embedding]
+        for r in load_embeddings(spark, SF_SMALL).filter(F.col("vec_id") < 3).collect()
+    ]
+    queries = [(e, 3) for e in embs]
+    plain = api.VectorSearchEngine(spark, SF_SMALL)
+    want = {i: plain.search(q, k=k)[0] for i, (q, k) in enumerate(queries)}
+    cached = api.VectorSearchEngine(spark, SF_SMALL, result_cache_size=2)
+    errors, seen = _hammer(cached, queries, n_threads=4, rounds=2)
+    assert not errors, errors[:3]
+    for qi, replies in seen.items():
+        assert all(r == want[qi] for r in replies), qi

@@ -478,3 +478,116 @@ def test_ivf_range_search_lossless_and_prunes(spark, built, qvec):
     )
     ub = np.cos(np.maximum(0.0, np.arccos(np.clip(cn @ qn, -1, 1)) - angles))
     assert (ub < 0.5 - 5e-7 - 1e-9).any()
+
+
+# ------------------------------------------- explicit-directory reader
+
+
+def test_ivf_search_plan_launches_no_jobs(spark, built, qvec):
+    """Under Spark's 32-path parallel-discovery threshold, the stored
+    schema and the explicit cluster directories leave nothing for
+    Spark to list or infer in a job while the plan is built."""
+    from conftest import spark_jobs
+
+    def plan():
+        df = ivf.ivf_search(spark, built, qvec, k=5, search_top_size=4)
+        return checks.formatted_plan(df)
+
+    _, n = spark_jobs(spark, plan)
+    assert n == 0
+
+
+def test_ivf_engine_search_launches_at_most_two_jobs(spark, built, qvec):
+    """The pruned top-k (broadcast) and the metadata join's top-k."""
+    from conftest import spark_jobs
+
+    from ydb_vector_search_simple_api_spark.api import VectorSearchEngine
+    from ydb_vector_search_simple_api_spark.config import SearchConfig
+
+    eng = VectorSearchEngine(
+        spark, SF_SMALL, config=SearchConfig(index_enabled=True), index=built
+    )
+    # the first read of documents.parquet infers its schema once per
+    # session (sources.store's scan cache); count a warm request
+    eng.search(qvec, k=5, search_top_size=4)
+    (results, _), n = spark_jobs(
+        spark, lambda: eng.search(qvec, k=5, search_top_size=4)
+    )
+    assert len(results) == 5
+    assert n <= 2
+
+
+def test_upserts_between_searches_are_read(spark, tmp_path_factory, built):
+    """Directories are listed per request: rows upserted after a first
+    search come back from the same index object at full width, also
+    from a cluster directory that did not exist at the first search."""
+    import shutil
+
+    out = str(tmp_path_factory.mktemp("ivf_relist") / "idx")
+    shutil.copytree(built.path, out)
+    idx = ivf.load_ivf_index(out)
+    gone = 3
+    shutil.rmtree(f"{out}/cluster_id={gone}")
+    home = 5
+    q_gone = [float(x) for x in idx.centroids[gone]]
+    q_home = [float(x) for x in idx.centroids[home]]
+
+    def top1(q):
+        return ivf.ivf_search(
+            spark, idx, q, k=1, search_top_size=N_CLUSTERS
+        ).head().id
+
+    before = {top1(q_gone), top1(q_home)}
+    new = spark.createDataFrame(
+        [(10**9, q_gone), (10**9 + 1, q_home)], "id long, embedding array<float>"
+    )
+    assert ivf.ivf_upsert(spark, idx, new)["per_cluster"] == {gone: 1, home: 1}
+    assert top1(q_gone) == 10**9
+    assert top1(q_home) == 10**9 + 1
+    assert not before & {10**9, 10**9 + 1}
+
+
+def test_index_without_stored_schema_loads_and_matches(
+    spark, tmp_path_factory, built, qvec
+):
+    """A centroid file written before the schema was stored still
+    loads (the schema is inferred once) and serves the same rows; so
+    does a hand-built index with no schema (inferred per read)."""
+    import json
+    import shutil
+
+    out = str(tmp_path_factory.mktemp("ivf_noschema") / "idx")
+    shutil.copytree(built.path, out)
+    meta_path = f"{out}/{ivf._CENTROIDS_FILE}"
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert "schema" in meta
+    del meta["schema"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+
+    old = ivf.load_ivf_index(out)
+    assert old.schema is not None
+    assert old.schema.fieldNames() == ["id", "embedding", "cluster_id"]
+    bare = ivf.IvfIndex(path=out, n_clusters=built.n_clusters, centroids=built.centroids)
+
+    def rows(idx):
+        return [
+            (r.id, r.score)
+            for r in ivf.ivf_search(spark, idx, qvec, k=10, search_top_size=3).collect()
+        ]
+
+    want = rows(built)
+    assert rows(old) == want
+    assert rows(bare) == want
+
+
+def test_read_clusters_empty_keep_and_missing_directory(spark, built):
+    cols = ["id", "embedding", "cluster_id"]
+    for keep in ([], [N_CLUSTERS + 7]):
+        df = ivf._read_clusters(spark, built, keep)
+        assert df.columns == cols
+        assert df.collect() == []
+    whole = ivf._read_clusters(spark, built)
+    assert whole.columns == cols
+    assert whole.count() == ivf._read_clusters(spark, built, range(N_CLUSTERS)).count()

@@ -322,3 +322,27 @@ def test_tree_routed_blocked_matches_distributed(spark, built):
         ]
         for ra, rb in zip(a, b):
             assert ra.score == pytest.approx(rb.score, abs=1e-9)
+
+
+def test_tree_reads_routed_leaves_with_stored_schema(spark, built, qvec):
+    """The tree shares the flat index's explicit-directory reader:
+    the build stores the layout schema, building the search plan
+    launches no Spark job, and an empty or unwritten leaf set reads
+    no rows."""
+    from conftest import spark_jobs
+
+    from ydb_vector_search_simple_api_spark.operators.index import _read_clusters
+
+    loaded = kmt.load_kmeans_tree(built.path)
+    assert loaded.schema.fieldNames() == ["id", "embedding", "l1", "l2"]
+
+    def plan():
+        df = kmt.tree_search(spark, loaded, qvec, k=5, search_top_size=2)
+        return checks.formatted_plan(df)
+
+    _, n = spark_jobs(spark, plan)
+    assert n == 0
+    for keep in ([], [(N_L1 + 1, 0)]):
+        df = _read_clusters(spark, loaded, keep)
+        assert df.columns == ["id", "embedding", "l1", "l2"]
+        assert df.collect() == []

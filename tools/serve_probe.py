@@ -17,20 +17,33 @@ Measured:
     (broadcast(docs) — the corpus on the wire) for before/after
   * filtered top-k end-to-end
   * engine-served IVF at width 1/4/full (index + metadata join)
+  * HTTP ``POST /search`` on the IVF engine (k=10, width 10) under
+    closed-loop load from 1, 8 and 32 client threads: q/s, p50/p99
+    latency and Spark jobs per request. Each request runs under its
+    own job group, counted through the status tracker, so a change
+    in the per-request job count shows without an event log.
   * routed-blocked batch ANN join, 256 queries
 
-Usage: python tools/serve_probe.py [reps] [sf_dir]
-  reps=200 (default) => 1M docs / 400k vectors from sf0.1.
-Output: markdown table (recorded in SCALING.md / README).
+Usage: python tools/serve_probe.py [reps] [sf_dir] [seconds]
+  reps=200 (default) => 1M docs / 400k vectors from sf0.1;
+  seconds=10 (default) is the load window per concurrency level.
+Output: markdown tables (recorded in SCALING.md / README).
 """
 
 from __future__ import annotations
 
+import itertools
+import json
+import os
 import sys
 import tempfile
+import threading
 import time
+import urllib.request
 
-sys.path.insert(0, "/root/repo")
+import numpy as np
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def timed(fn, runs: int = 3) -> float:
@@ -43,9 +56,84 @@ def timed(fn, runs: int = 3) -> float:
     return best
 
 
+def count_jobs_per_request(engine) -> list[str]:
+    """Run each ``engine.search`` under a job group of its own; returns
+    the list the groups are appended to (see :func:`jobs_in`)."""
+    sc = engine.spark.sparkContext
+    search, seq, groups = engine.search, itertools.count(), []
+
+    def wrapped(*a, **kw):
+        group = f"serve-probe-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            return search(*a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            groups.append(group)
+
+    engine.search = wrapped
+    return groups
+
+
+def jobs_in(spark, groups: list[str]) -> list[int]:
+    """Jobs each group launched; the status tracker is fed by the
+    listener bus, so the bus is drained first."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+
+
+def load(port: int, queries: list, clients: int, seconds: float) -> tuple[float, list[float]]:
+    """``clients`` closed-loop threads POST /search for ``seconds``
+    after one warm-up request each. Returns (q/s, latencies in s) of
+    the requests sent in the window; q/s counts them over the span
+    until the last one returned."""
+    lat: list[float] = []
+    done = [0.0]
+    lock = threading.Lock()
+    start = threading.Barrier(clients + 1)
+    end = [float("inf")]
+
+    def post(q):
+        body = json.dumps(
+            {"embedding": q, "k": 10, "index_tree_search_top_size": 10}
+        ).encode()
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}/search",
+            data=body,
+            headers={"Content-Type": "application/json"},
+        )
+        with urllib.request.urlopen(req, timeout=600) as r:
+            assert r.status == 200 and json.loads(r.read())["count"] == 10
+
+    def client(c):
+        post(queries[c % len(queries)])
+        start.wait()
+        for i in itertools.count(1):
+            t0 = time.perf_counter()
+            if t0 >= end[0]:
+                return
+            post(queries[(c + i * clients) % len(queries)])
+            t1 = time.perf_counter()
+            with lock:
+                lat.append(t1 - t0)
+                done[0] = max(done[0], t1)
+
+    threads = [threading.Thread(target=client, args=(c,)) for c in range(clients)]
+    for t in threads:
+        t.start()
+    start.wait()
+    t_start = time.perf_counter()
+    end[0] = t_start + seconds
+    for t in threads:
+        t.join()
+    return len(lat) / (done[0] - t_start), lat
+
+
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 200
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
+    seconds = float(sys.argv[3]) if len(sys.argv) > 3 else 10.0
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -211,6 +299,35 @@ def main() -> None:
             )
         )
 
+    from ydb_vector_search_simple_api_spark import http_server
+
+    pool = [
+        [float(x) for x in r.embedding]
+        for r in load_embeddings(spark, work).filter(F.col("vec_id") < 256).collect()
+    ]
+    groups = count_jobs_per_request(eng)
+    server = http_server.serve(eng, "127.0.0.1", 0)
+    server.daemon_threads = True
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    load_rows = []
+    for clients in (1, 8, 32):
+        qps, lat = load(server.server_address[1], pool, clients, seconds)
+        jobs = jobs_in(spark, groups)
+        groups.clear()
+        ms = np.asarray(lat) * 1000.0
+        load_rows.append(
+            (
+                clients,
+                len(lat),
+                qps,
+                float(np.percentile(ms, 50)),
+                float(np.percentile(ms, 99)),
+                float(np.mean(jobs)),
+            )
+        )
+    server.shutdown()
+    server.server_close()
+
     n_q = 256
     queries = (
         load_embeddings(spark, work)
@@ -236,6 +353,16 @@ def main() -> None:
         f"({n_q / t_batch:.0f} q/s) | pruned dirs x BLAS blocks |"
     )
     print(f"\nivf build (16k-row fit sample): {t_build:.1f} s")
+    print(
+        f"\nHTTP POST /search, IVF {n_clusters} clusters, k=10 width=10, "
+        f"{seconds:.0f} s closed-loop window per level:\n"
+    )
+    print("| clients | requests | q/s | p50 | p99 | Spark jobs/request |")
+    print("|---|---|---|---|---|---|")
+    for clients, n, qps, p50, p99, jobs in load_rows:
+        print(
+            f"| {clients} | {n} | {qps:.2f} | {p50:.0f} ms | {p99:.0f} ms | {jobs:.2f} |"
+        )
 
 
 if __name__ == "__main__":

@@ -19,6 +19,7 @@ from __future__ import annotations
 import copy
 import json
 import os
+import threading
 import time
 import urllib.error
 import urllib.request
@@ -115,6 +116,11 @@ class VectorSearchEngine:
     _result_cache: OrderedDict = field(
         default_factory=OrderedDict, init=False, repr=False
     )
+    #: guards every read-modify-write of ``_result_cache``: the HTTP
+    #: server runs requests on concurrent threads
+    _cache_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def embed(self, query: str) -> list[float]:
         fn = self.embed_fn or get_query_embedding
@@ -139,23 +145,29 @@ class VectorSearchEngine:
                 tuple(sorted((filter or {}).items())),
                 search_top_size,
             )
-            hit = self._result_cache.get(key)
+            with self._cache_lock:
+                hit = self._result_cache.get(key)
+                if hit is not None:
+                    self._result_cache.move_to_end(key)
             if hit is not None:
-                self._result_cache.move_to_end(key)
-                # deep copy: callers may mutate the result dicts
+                # deep copy: callers may mutate the result dicts (the
+                # cached list itself is never mutated, so no lock)
                 return copy.deepcopy(hit), time.perf_counter() - t0
         df = self.search_df(embedding, k, filter, search_top_size)
         results = [r.asDict() for r in df.collect()]
         if key is not None:
-            self._result_cache[key] = copy.deepcopy(results)
-            while len(self._result_cache) > self.result_cache_size:
-                self._result_cache.popitem(last=False)
+            cached = copy.deepcopy(results)
+            with self._cache_lock:
+                self._result_cache[key] = cached
+                while len(self._result_cache) > self.result_cache_size:
+                    self._result_cache.popitem(last=False)
         return results, time.perf_counter() - t0
 
     def clear_result_cache(self) -> None:
         """Drop the memoized results — call after upserts/deletes
         change what a query should return."""
-        self._result_cache.clear()
+        with self._cache_lock:
+            self._result_cache.clear()
 
     def search_df(
         self,
@@ -269,11 +281,15 @@ class VectorSearchEngine:
             # stream-side order — mirrors exact_search. Broadcast the
             # k-row TOP-K side; the documents table is the 100 TB side
             # and stays the streamed probe (plan-asserted in
-            # tests/test_api.py).
+            # tests/test_api.py). The join emits at most k rows, so
+            # limit(k) changes no result; it makes the re-sort a
+            # TakeOrderedAndProject instead of a range-partitioned
+            # Sort, whose sampling job and shuffle ran per request.
             df = (
                 F.broadcast(topk).join(docs, "id", "inner")
                 .select("id", "title", "vendor", "description", "score")
                 .orderBy(direction, F.col("id").asc())
+                .limit(k)
             )
         else:
             df = exact_search(

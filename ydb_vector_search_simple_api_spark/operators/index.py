@@ -18,11 +18,18 @@ Spark-native design (no custom Catalyst rule needed):
   cluster becomes a *physical partition directory*.
 * **Search**: the driver ranks the (tiny) centroid table against the
   query vector in NumPy, keeps the ``search_top_size`` nearest
-  cluster ids, and reads the table with
-  ``cluster_id IN (...)`` — Catalyst partition-prunes to exactly
-  those directories, so scanned bytes shrink by
-  ~``search_top_size / n_clusters``. Candidates are re-ranked exactly
-  (same TakeOrderedAndProject shape as exact_search).
+  cluster ids, and reads ONLY those ``cluster_id=<c>`` directories,
+  named explicitly, with the layout schema stored beside the
+  centroids (:func:`_read_clusters`). Scanned bytes shrink by
+  ~``search_top_size / n_clusters``, and planning launches no Spark
+  job: a known schema skips the footer-inference job, and a handful
+  of paths (under Spark's 32-path parallel-discovery threshold) is
+  listed in-process, where reading the table root made Spark list
+  every cluster directory in a job. The listing runs per request, so
+  directories that ``ivf_upsert`` creates are seen at once. The
+  ``cluster_id IN (...)`` list also stays on the scan as its
+  PartitionFilters. Candidates are re-ranked exactly (same
+  TakeOrderedAndProject shape as exact_search).
 * Recall contract (SURVEY.md §4.3): recall is monotone in
   ``search_top_size`` and the search is EXACT when
   ``search_top_size >= n_clusters`` (all partitions read).
@@ -37,10 +44,12 @@ import json
 import os
 from collections.abc import Sequence
 from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import tombstones
 from ..config import DEFAULT_K, DEFAULT_SEARCH_TOP_SIZE, sort_descending, validate_strategy
@@ -56,6 +65,78 @@ class IvfIndex:
     centroids: np.ndarray  # (n_clusters, dim) float64
     id_col: str = "id"
     vec_col: str = "embedding"
+    #: schema of the partitioned layout; None = infer from the files
+    schema: T.StructType | None = None
+
+    partition_cols: ClassVar[tuple[str, ...]] = ("cluster_id",)
+
+
+def _infer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """Spark's own schema inference for a layout: a job that lists the
+    directories (past 32 of them) and a job that reads a footer."""
+    return spark.read.parquet(path).schema
+
+
+def _read_clusters(spark: SparkSession, index, keep=None) -> DataFrame:
+    """The one reader of a partitioned index layout (the flat IVF's
+    ``cluster_id=<c>`` or the tree's ``l1=<a>/l2=<b>`` directories).
+
+    ``keep=None`` reads the whole table; otherwise only the kept
+    clusters' directories (ints, or tuples over ``partition_cols``)
+    that exist on disk, so an empty ``keep`` or a never-written cluster
+    reads no rows. The kept keys also filter the scan, where the plan
+    shows them as PartitionFilters. ``basePath`` keeps the partition
+    columns, and the stored schema replaces Spark's inference job."""
+    schema = index.schema if index.schema is not None else _infer_schema(spark, index.path)
+    reader = spark.read.schema(schema).option("basePath", index.path)
+    if keep is None:
+        return reader.parquet(index.path)
+    cols = index.partition_cols
+    keys = [k if isinstance(k, tuple) else (k,) for k in dict.fromkeys(keep)]
+    dirs = [
+        os.path.join(index.path, *(f"{c}={v}" for c, v in zip(cols, key)))
+        for key in keys
+    ]
+    if len(cols) == 1:
+        cond = F.col(cols[0]).isin([key[0] for key in keys])
+    else:  # OR of conjunctions; Catalyst drops the literal seeds
+        cond = F.lit(False)
+        for key in keys:
+            conj = F.lit(True)
+            for c, v in zip(cols, key):
+                conj = conj & (F.col(c) == v)
+            cond = cond | conj
+    return reader.parquet(*[d for d in dirs if os.path.isdir(d)]).filter(cond)
+
+
+def _stored_schema(meta: dict, path: str) -> T.StructType | None:
+    """The layout schema from an index's metadata file. An index
+    written without one is inferred once through the active (or
+    default) session; with no session, None (the reader then infers
+    per call)."""
+    from pyspark.errors import PySparkRuntimeError
+
+    if "schema" in meta:
+        return T.StructType.fromJson(meta["schema"])
+    try:
+        spark = SparkSession.active()
+    except PySparkRuntimeError:
+        return None
+    return _infer_schema(spark, path)
+
+
+def _write_meta(
+    out_dir: str, n_clusters: int, centroids: np.ndarray, schema: T.StructType
+) -> None:
+    with open(os.path.join(out_dir, _CENTROIDS_FILE), "w") as f:
+        json.dump(
+            {
+                "n_clusters": n_clusters,
+                "centroids": centroids.tolist(),
+                "schema": json.loads(schema.json()),
+            },
+            f,
+        )
 
 
 def build_ivf_index(
@@ -109,11 +190,11 @@ def build_ivf_index(
     centroids = np.array(
         [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
     )
-    with open(os.path.join(out_dir, _CENTROIDS_FILE), "w") as f:
-        json.dump(
-            {"n_clusters": n_clusters, "centroids": centroids.tolist()}, f
-        )
-    return IvfIndex(path=out_dir, n_clusters=n_clusters, centroids=centroids)
+    _write_meta(out_dir, n_clusters, centroids, assigned.schema)
+    return IvfIndex(
+        path=out_dir, n_clusters=n_clusters, centroids=centroids,
+        schema=assigned.schema,
+    )
 
 
 def load_ivf_index(path: str) -> IvfIndex:
@@ -123,6 +204,7 @@ def load_ivf_index(path: str) -> IvfIndex:
         path=path,
         n_clusters=meta["n_clusters"],
         centroids=np.asarray(meta["centroids"], dtype=np.float64),
+        schema=_stored_schema(meta, path),
     )
 
 
@@ -167,11 +249,9 @@ def ivf_search(
         raise ValueError("search_top_size must be a positive integer")
     keep = _rank_centroids(index, query_vec, strategy)[:search_top_size]
 
-    df = spark.read.parquet(index.path)
-    # partition pruning: cluster_id is a partition column, so this IN
-    # list prunes whole directories at planning time.
-    pruned = df.filter(F.col("cluster_id").isin(keep))
-    pruned = tombstones.apply_tombstones(spark, index.path, pruned)
+    pruned = tombstones.apply_tombstones(
+        spark, index.path, _read_clusters(spark, index, keep)
+    )
     if filter_ids is not None:
         # Catalyst/AQE broadcasts the (small) filtered id set
         pruned = pruned.join(filter_ids, "id", "left_semi")
@@ -224,7 +304,7 @@ def _cell_max_angles(spark: SparkSession, index: IvfIndex) -> np.ndarray:
             yield pd.DataFrame({"cluster_id": cids, "min_cos": cos})
 
     rows = (
-        spark.read.parquet(index.path)
+        _read_clusters(spark, index)
         .select("cluster_id", "embedding")
         .mapInPandas(part, "cluster_id int, min_cos double")
         .groupBy("cluster_id")
@@ -278,8 +358,9 @@ def ivf_range_search(
     ubound = np.cos(np.maximum(0.0, theta_qc - angles))
     keep = [int(i) for i in np.nonzero(ubound >= threshold - 5e-7 - 1e-9)[0]]
 
-    pruned = spark.read.parquet(index.path).filter(F.col("cluster_id").isin(keep))
-    pruned = tombstones.apply_tombstones(spark, index.path, pruned)
+    pruned = tombstones.apply_tombstones(
+        spark, index.path, _read_clusters(spark, index, keep)
+    )
     from .search import _order_cols
 
     score = score_expr("CosineSimilarity", F.col("embedding"), list(query_vec))
@@ -388,7 +469,7 @@ def ivf_knn_join_distributed(
     )
 
     corpus = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(index.path)
+        spark, index.path, _read_clusters(spark, index)
     )
     if filter_ids is not None:
         corpus = corpus.join(filter_ids, "id", "left_semi")
@@ -478,9 +559,7 @@ def ivf_knn_join(
     corpus = tombstones.apply_tombstones(
         spark,
         index.path,
-        spark.read.parquet(index.path).filter(
-            F.col("cluster_id").isin(needed)  # static partition pruning
-        ),
+        _read_clusters(spark, index, needed),  # static partition pruning
     )
     if filter_ids is not None:
         corpus = corpus.join(filter_ids, "id", "left_semi")
@@ -643,9 +722,8 @@ def ivf_compact(
     """
     if files_per_cluster < 1:
         raise ValueError("files_per_cluster must be a positive integer")
-    df = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(index.path)
-    )
+    src = _read_clusters(spark, index)
+    df = tombstones.apply_tombstones(spark, index.path, src)
     if dedup_ids:
         df = df.dropDuplicates(["id"])
     if files_per_cluster == 1:
@@ -660,20 +738,14 @@ def ivf_compact(
         .partitionBy("cluster_id")
         .parquet(out_dir)
     )
-    with open(os.path.join(out_dir, _CENTROIDS_FILE), "w") as f:
-        json.dump(
-            {
-                "n_clusters": index.n_clusters,
-                "centroids": index.centroids.tolist(),
-            },
-            f,
-        )
+    _write_meta(out_dir, index.n_clusters, index.centroids, src.schema)
     return IvfIndex(
         path=out_dir,
         n_clusters=index.n_clusters,
         centroids=index.centroids,
         id_col=index.id_col,
         vec_col=index.vec_col,
+        schema=src.schema,
     )
 
 
@@ -760,10 +832,16 @@ def ivf_knn_join_routed_blocked(
     desc = sort_descending(strategy)
     bc = spark.sparkContext.broadcast((qids, Q, cluster_queries, strategy, desc, k))
 
+    corpus = tombstones.apply_tombstones(
+        spark,
+        index.path,
+        # static partition pruning: the routed dirs are known here
+        _read_clusters(spark, index, sorted(cluster_queries)),
+    ).select("cluster_id", "id", "embedding")
     out_schema = T.StructType(
         [
             T.StructField("query_id", queries_df.schema[query_id].dataType),
-            T.StructField("id", spark.read.parquet(index.path).schema["id"].dataType),
+            T.StructField("id", corpus.schema["id"].dataType),
             T.StructField("score", T.DoubleType()),
         ]
     )
@@ -797,13 +875,6 @@ def ivf_knn_join_routed_blocked(
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    corpus = tombstones.apply_tombstones(
-        spark,
-        index.path,
-        spark.read.parquet(index.path)
-        # static partition pruning: the driver knows the needed dirs
-        .filter(F.col("cluster_id").isin(sorted(cluster_queries))),
-    ).select("cluster_id", "id", "embedding")
     candidates = corpus.mapInPandas(score_block, schema=out_schema).withColumn(
         "score",
         F.when(F.isnan(F.col("score")), F.lit(None).cast("double")).otherwise(

@@ -27,9 +27,15 @@ structure:
      ``partitionBy("l1", "l2")`` — each leaf is a physical directory.
 * **Search**: the driver ranks level-1 centroids against the query
   (NumPy, tiny), keeps ``top_l1`` cells, ranks their children, keeps
-  ``top_l2`` leaves, and reads the table with an OR-of-conjunctions
-  over the two partition columns — Catalyst prunes to exactly those
-  leaf directories. Candidates re-rank exactly (same
+  ``top_l2`` leaves, and reads ONLY those ``l1=<a>/l2=<b>`` leaf
+  directories, named explicitly, with the layout schema stored in the
+  tree's metadata file — the flat index's reader
+  (``index._read_clusters``), so planning launches no listing or
+  schema-inference job at a width under Spark's 32-path
+  parallel-discovery threshold, and leaves created by
+  :func:`tree_upsert` are listed per request. An OR-of-conjunctions
+  over the two partition columns also stays on the scan as its
+  PartitionFilters. Candidates re-rank exactly (same
   TakeOrderedAndProject shape as exact_search).
 * Recall contract: monotone in both widths; EXACT when both widths
   cover the whole tree (every leaf read).
@@ -46,6 +52,7 @@ import json
 import os
 from collections.abc import Sequence
 from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import tombstones
+from .index import _read_clusters, _stored_schema
 from ..config import DEFAULT_K, sort_descending, validate_strategy
 from ..functions.distance import score_expr
 
@@ -66,6 +74,10 @@ class KmeansTreeIndex:
     fanout: int  # max level-2 children per level-1 cell
     centroids_l1: np.ndarray  # (n_l1, dim) float64
     centroids_l2: list[np.ndarray]  # [l1] -> (n_children_l1, dim)
+    #: schema of the partitioned layout; None = infer from the files
+    schema: T.StructType | None = None
+
+    partition_cols: ClassVar[tuple[str, ...]] = ("l1", "l2")
 
     @property
     def n_leaves(self) -> int:
@@ -226,9 +238,10 @@ def build_kmeans_tree(
 
     _leaf = F.pandas_udf(_leaf_fn, T.IntegerType())
 
-    assigned.withColumn("l2", _leaf(F.col("l1"), F.col("embedding"))).select(
+    leaves = assigned.withColumn("l2", _leaf(F.col("l1"), F.col("embedding"))).select(
         "id", "embedding", "l1", "l2"
-    ).write.mode("overwrite").partitionBy("l1", "l2").parquet(out_dir)
+    )
+    leaves.write.mode("overwrite").partitionBy("l1", "l2").parquet(out_dir)
 
     with open(os.path.join(out_dir, _META_FILE), "w") as f:
         json.dump(
@@ -239,6 +252,7 @@ def build_kmeans_tree(
                     [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
                 ).tolist(),
                 "centroids_l2": [c.tolist() for c in centroids_l2],
+                "schema": json.loads(leaves.schema.json()),
             },
             f,
         )
@@ -257,6 +271,7 @@ def load_kmeans_tree(path: str) -> KmeansTreeIndex:
             np.asarray(c, dtype=np.float64).reshape(-1, len(meta["centroids_l1"][0]))
             for c in meta["centroids_l2"]
         ],
+        schema=_stored_schema(meta, path),
     )
 
 
@@ -332,16 +347,9 @@ def tree_search(
     )
 
     leaves = route(index, query_vec, strategy, top_l1=w1, top_l2=w2)
-    df = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(index.path)
+    pruned = tombstones.apply_tombstones(
+        spark, index.path, _read_clusters(spark, index, leaves)
     )
-    # OR of conjunctions over the two partition columns: Catalyst
-    # prunes to exactly the routed leaf directories.
-    cond = None
-    for l1, l2 in leaves:
-        c = (F.col("l1") == l1) & (F.col("l2") == l2)
-        cond = c if cond is None else (cond | c)
-    pruned = df.filter(cond) if cond is not None else df.limit(0)
     if filter_ids is not None:
         pruned = pruned.join(filter_ids, "id", "left_semi")
 
@@ -468,9 +476,7 @@ def tree_compact(
     unconditional-dedup argument as ivf_compact)."""
     import shutil
 
-    df = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(index.path)
-    )
+    df = tombstones.apply_tombstones(spark, index.path, _read_clusters(spark, index))
     if dedup_ids:
         df = df.dropDuplicates(["id"])
     (
@@ -562,9 +568,7 @@ def tree_knn_join_distributed(
         )
     )
 
-    corpus = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(index.path)
-    )
+    corpus = tombstones.apply_tombstones(spark, index.path, _read_clusters(spark, index))
     if filter_ids is not None:
         corpus = corpus.join(filter_ids, "id", "left_semi")
     scored = corpus.join(assignment, ["l1", "l2"], "inner").withColumn(
@@ -643,12 +647,13 @@ def tree_knn_join_routed_blocked(
         for leaf in route(index, Q[qi], strategy, top_l1=w1, top_l2=w2):
             leaf_queries.setdefault(leaf, []).append(qi)
 
+    corpus = tombstones.apply_tombstones(
+        spark, index.path, _read_clusters(spark, index, sorted(leaf_queries))
+    ).select("l1", "l2", "id", "embedding")
     out_schema = T.StructType(
         [
             T.StructField("query_id", queries_df.schema[query_id].dataType),
-            T.StructField(
-                "id", spark.read.parquet(index.path).schema["id"].dataType
-            ),
+            T.StructField("id", corpus.schema["id"].dataType),
             T.StructField("score", T.DoubleType()),
         ]
     )
@@ -688,13 +693,6 @@ def tree_knn_join_routed_blocked(
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    cond = None
-    for l1, l2 in sorted(leaf_queries):
-        c = (F.col("l1") == l1) & (F.col("l2") == l2)
-        cond = c if cond is None else (cond | c)
-    corpus = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(index.path).filter(cond)
-    ).select("l1", "l2", "id", "embedding")
     candidates = corpus.mapInPandas(score_block, schema=out_schema).withColumn(
         "score",
         F.when(F.isnan(F.col("score")), F.lit(None).cast("double")).otherwise(
