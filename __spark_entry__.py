@@ -11,12 +11,11 @@ scores are double-math + ROUND(6) on both sides (see
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ydb_vector_search_simple_api_spark import (
     oracles,
@@ -26,6 +25,7 @@ from ydb_vector_search_simple_api_spark import (
     sql_surface,
 )
 from ydb_vector_search_simple_api_spark import oracles_curation
+from ydb_vector_search_simple_api_spark.artifacts import persisted, session_memo
 from ydb_vector_search_simple_api_spark.operators import (
     curation,
     dedup,
@@ -35,6 +35,10 @@ from ydb_vector_search_simple_api_spark.operators import (
     textual,
 )
 from ydb_vector_search_simple_api_spark.operators import bpe as bpe_mod
+from ydb_vector_search_simple_api_spark.operators import bq as bq_mod
+from ydb_vector_search_simple_api_spark.operators import opq as opq_mod
+from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
+from ydb_vector_search_simple_api_spark.operators import sq as sq_mod
 from ydb_vector_search_simple_api_spark.operators import sp_unigram as sp_unigram_mod
 from ydb_vector_search_simple_api_spark.operators import classify as classify_mod
 from ydb_vector_search_simple_api_spark.operators import dsir as dsir_mod
@@ -82,23 +86,23 @@ from ydb_vector_search_simple_api_spark.streaming import image_ingest as streami
 
 ROUND = oracles.ROUND_DIGITS
 
-_QVEC_CACHE: dict[str, list[float]] = {}
+
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table as the (id, embedding) source every index
+    and rerank reads."""
+    return load_embeddings(spark, sf_dir).select(
+        F.col("vec_id").alias("id"), "embedding"
+    )
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
     """The deterministic query vector: stored embedding of vec_id=0
     (query-by-example; same row the oracle SQL selects)."""
-    if sf_dir not in _QVEC_CACHE:
-        from pyspark.sql import functions as F
-
-        row = (
-            load_embeddings(spark, sf_dir)
-            .filter(F.col("vec_id") == oracles.QUERY_VEC_ID)
-            .select("embedding")
-            .head()
-        )
-        _QVEC_CACHE[sf_dir] = [float(x) for x in row.embedding]
-    return _QVEC_CACHE[sf_dir]
+    return session_memo(spark, "qvec", sf_dir, {}, lambda: [
+        float(x) for x in load_embeddings(spark, sf_dir)
+        .filter(F.col("vec_id") == oracles.QUERY_VEC_ID)
+        .select("embedding").head().embedding
+    ])
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -112,70 +116,32 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ---------------------------------------------------------------- helpers
-
-_IVF_CACHE: dict[str, ivf.IvfIndex] = {}
-
-#: session memo for the drained-KN5-stream entry (pure function of
-#: the corpus files; the drain itself is the suite's heaviest query —
-#: honest cost in BENCH_DETAIL cold_s / SCALING.md round 11)
-_STREAM_KN5_CACHE: dict[tuple, DataFrame] = {}
+# Indexes persist through artifacts.persisted (keyed by corpus files,
+# params and builder module); session results through session_memo.
 
 
 def _stream_kn5_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STREAM_KN5_CACHE:
-        from ydb_vector_search_simple_api_spark.streaming import (
-            curation_ingest as _ci,
-        )
+    """The drained KN5 stream (the suite's heaviest query; its honest
+    cost is in BENCH_DETAIL cold_s / SCALING.md round 11)."""
+    return session_memo(spark, "stream_kn5", sf_dir, {}, lambda: (
+        streaming_curing.stream_kn5_ingest(spark, sf_dir).localCheckpoint(eager=True)
+    ))
 
-        _STREAM_KN5_CACHE[key] = _ci.stream_kn5_ingest(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return _STREAM_KN5_CACHE[key]
+
 IVF_CLUSTERS = 8
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str) -> ivf.IvfIndex:
-    key = sf_dir
-    if key not in _IVF_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_ivf_{tag}_k{IVF_CLUSTERS}")
-        marker = os.path.join(out, "_ivf_centroids.json")
-        if os.path.exists(marker):
-            _IVF_CACHE[key] = ivf.load_ivf_index(out)
-        else:
-            from pyspark.sql import functions as F
-
-            embs = load_embeddings(spark, sf_dir).select(
-                F.col("vec_id").alias("id"), "embedding"
-            )
-            _IVF_CACHE[key] = ivf.build_ivf_index(
-                spark, embs, out, n_clusters=IVF_CLUSTERS, seed=42
-            )
-    return _IVF_CACHE[key]
-
-
-_SQ_CACHE: dict[str, object] = {}
+    params = {"n_clusters": IVF_CLUSTERS, "seed": 42}
+    return persisted("ivf", sf_dir, params, partial(
+        ivf.build_ivf_index, spark, _vectors(spark, sf_dir), **params
+    ), ivf.load_ivf_index)
 
 
 def _sq_index(spark: SparkSession, sf_dir: str):
-    from ydb_vector_search_simple_api_spark.operators import sq as sq_mod
-
-    key = sf_dir
-    if key not in _SQ_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_sq_{tag}")
-        marker = os.path.join(out, "_sq_meta.json")
-        if os.path.exists(marker):
-            _SQ_CACHE[key] = sq_mod.load_sq_index(out)
-        else:
-            from pyspark.sql import functions as F
-
-            embs = load_embeddings(spark, sf_dir).select(
-                F.col("vec_id").alias("id"), "embedding"
-            )
-            _SQ_CACHE[key] = sq_mod.build_sq_index(spark, embs, out)
-    return _SQ_CACHE[key]
+    return persisted("sq", sf_dir, {}, partial(
+        sq_mod.build_sq_index, spark, _vectors(spark, sf_dir)
+    ), sq_mod.load_sq_index)
 
 
 def _mk_sq_rerank(strategy: str, k: int, shortlist: int | None):
@@ -184,106 +150,51 @@ def _mk_sq_rerank(strategy: str, k: int, shortlist: int | None):
     (strong oracle)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from ydb_vector_search_simple_api_spark.operators import sq as sq_mod
-
-        idx = _sq_index(spark, sf_dir)
-        src = load_embeddings(spark, sf_dir).select(
-            F.col("vec_id").alias("id"), "embedding"
-        )
         return sq_mod.sq_search_rerank(
-            spark, idx, src, _query_vec(spark, sf_dir), k=k,
-            strategy=strategy, shortlist=shortlist, round_digits=ROUND,
+            spark, _sq_index(spark, sf_dir), _vectors(spark, sf_dir),
+            _query_vec(spark, sf_dir), k=k, strategy=strategy,
+            shortlist=shortlist, round_digits=ROUND,
         )
 
     return run
 
 
-_BQ_CACHE: dict[str, "bq_mod.BqIndex"] = {}
-
-
 def _bq_index(spark: SparkSession, sf_dir: str):
-    from ydb_vector_search_simple_api_spark.operators import bq as bq_mod
-
-    key = sf_dir
-    if key not in _BQ_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_bq_{tag}")
-        marker = os.path.join(out, "_bq_meta.json")
-        if os.path.exists(marker):
-            _BQ_CACHE[key] = bq_mod.load_bq_index(out)
-        else:
-            from pyspark.sql import functions as F
-
-            embs = load_embeddings(spark, sf_dir).select(
-                F.col("vec_id").alias("id"), "embedding"
-            )
-            _BQ_CACHE[key] = bq_mod.build_bq_index(spark, embs, out)
-    return _BQ_CACHE[key]
-
-
-_LEX_CACHE: dict[str, object] = {}
+    return persisted("bq", sf_dir, {}, partial(
+        bq_mod.build_bq_index, spark, _vectors(spark, sf_dir)
+    ), bq_mod.load_bq_index)
 
 
 def _lex_index(spark: SparkSession, sf_dir: str):
-    """Cached persisted BM25 postings/stats (the serving-path lexical
+    """The persisted BM25 postings/stats (the serving-path lexical
     index — operators/ranking.py build_lexical_index)."""
-    key = sf_dir
-    if key not in _LEX_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_lex_{tag}")
-        marker = os.path.join(out, "_lexical_meta.json")
-        if os.path.exists(marker):
-            _LEX_CACHE[key] = ranking_mod.load_lexical_index(out)
-        else:
-            _LEX_CACHE[key] = ranking_mod.build_lexical_index(
-                spark, load_documents(spark, sf_dir), out
-            )
-    return _LEX_CACHE[key]
-
-
-_BPE_MERGES_CACHE: dict[str, list] = {}
-
-
-_UNIGRAM_VOCAB_CACHE: dict[str, DataFrame] = {}
+    return persisted("lex", sf_dir, {}, partial(
+        ranking_mod.build_lexical_index, spark, load_documents(spark, sf_dir)
+    ), ranking_mod.load_lexical_index)
 
 
 def _unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session cache of the trained unigram-LM vocab (the _bpe_merges
-    contract: the encode entry times the ENCODE, not a re-train)."""
-    if sf_dir not in _UNIGRAM_VOCAB_CACHE:
-        _UNIGRAM_VOCAB_CACHE[sf_dir] = sp_unigram_mod.unigram_lm_train(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return _UNIGRAM_VOCAB_CACHE[sf_dir]
-
-
-_WORDPIECE_VOCAB_CACHE: dict[str, DataFrame] = {}
+    """The trained unigram-LM vocab (the encode entry times the
+    ENCODE, not a re-train)."""
+    return session_memo(spark, "unigram_vocab", sf_dir, {}, lambda: (
+        sp_unigram_mod.unigram_lm_train(spark, sf_dir).localCheckpoint(eager=True)
+    ))
 
 
 def _wordpiece_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session cache of the trained WordPiece vocab (the
-    _unigram_vocab contract: the encode entry times the ENCODE)."""
-    if sf_dir not in _WORDPIECE_VOCAB_CACHE:
-        _WORDPIECE_VOCAB_CACHE[sf_dir] = wordpiece_mod.wordpiece_vocab(
-            spark, sf_dir, n_merges=10
-        ).localCheckpoint(eager=True)
-    return _WORDPIECE_VOCAB_CACHE[sf_dir]
+    """The trained WordPiece vocab (the _unigram_vocab contract)."""
+    return session_memo(spark, "wordpiece_vocab", sf_dir, {"n_merges": 10}, lambda: (
+        wordpiece_mod.wordpiece_vocab(spark, sf_dir, n_merges=10)
+        .localCheckpoint(eager=True)
+    ))
 
 
 def _bpe_merges(spark: SparkSession, sf_dir: str, n_merges: int = 10) -> list:
-    key = f"{sf_dir}:{n_merges}"
-    if key not in _BPE_MERGES_CACHE:
-        from ydb_vector_search_simple_api_spark.operators import bpe as bpe_mod
-
-        _BPE_MERGES_CACHE[key] = [
-            (r.left, r.right)
-            for r in bpe_mod.bpe_train(spark, sf_dir, n_merges=n_merges)
-            .orderBy("rank")
-            .collect()
-        ]
-    return _BPE_MERGES_CACHE[key]
+    return session_memo(spark, "bpe_merges", sf_dir, {"n_merges": n_merges}, lambda: [
+        (r.left, r.right)
+        for r in bpe_mod.bpe_train(spark, sf_dir, n_merges=n_merges)
+        .orderBy("rank").collect()
+    ])
 
 
 def _mk_bq_rerank(strategy: str, k: int, shortlist: int | None):
@@ -291,63 +202,46 @@ def _mk_bq_rerank(strategy: str, k: int, shortlist: int | None):
     shortlist=None keeps every row => exact (strong oracle)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from ydb_vector_search_simple_api_spark.operators import bq as bq_mod
-
-        idx = _bq_index(spark, sf_dir)
-        src = load_embeddings(spark, sf_dir).select(
-            F.col("vec_id").alias("id"), "embedding"
-        )
         return bq_mod.bq_search_rerank(
-            spark, idx, src, _query_vec(spark, sf_dir), k=k,
-            strategy=strategy, shortlist=shortlist, round_digits=ROUND,
+            spark, _bq_index(spark, sf_dir), _vectors(spark, sf_dir),
+            _query_vec(spark, sf_dir), k=k, strategy=strategy,
+            shortlist=shortlist, round_digits=ROUND,
         )
 
     return run
+
+
+def _ivfbq_index(spark: SparkSession, sf_dir: str):
+    ivf_idx = _ivf_index(spark, sf_dir)
+    return persisted("ivfbq", sf_dir, {"ivf": ivf_idx.path}, partial(
+        bq_mod.build_ivfbq_index, spark, ivf_idx
+    ), bq_mod.load_bq_index)
 
 
 def _mk_ivfbq(strategy: str, k: int, width: int, shortlist: int | None):
-    _IVFBQ_CACHE: dict[str, object] = {}
-
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ydb_vector_search_simple_api_spark.operators import bq as bq_mod
-
-        ivf_idx = _ivf_index(spark, sf_dir)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_ivfbq_{tag}")
-        if sf_dir not in _IVFBQ_CACHE:
-            if os.path.exists(os.path.join(out, "_bq_meta.json")):
-                _IVFBQ_CACHE[sf_dir] = bq_mod.load_bq_index(out)
-            else:
-                _IVFBQ_CACHE[sf_dir] = bq_mod.build_ivfbq_index(spark, ivf_idx, out)
         return bq_mod.ivfbq_search(
-            spark, ivf_idx, _IVFBQ_CACHE[sf_dir], _query_vec(spark, sf_dir),
-            k=k, strategy=strategy, search_top_size=width,
-            shortlist=shortlist, round_digits=ROUND,
+            spark, _ivf_index(spark, sf_dir), _ivfbq_index(spark, sf_dir),
+            _query_vec(spark, sf_dir), k=k, strategy=strategy,
+            search_top_size=width, shortlist=shortlist, round_digits=ROUND,
         )
 
     return run
 
 
+def _ivfsq_index(spark: SparkSession, sf_dir: str):
+    ivf_idx = _ivf_index(spark, sf_dir)
+    return persisted("ivfsq", sf_dir, {"ivf": ivf_idx.path}, partial(
+        sq_mod.build_ivfsq_index, spark, ivf_idx
+    ), sq_mod.load_sq_index)
+
+
 def _mk_ivfsq(strategy: str, k: int, width: int, shortlist: int | None):
-    _IVFSQ_CACHE: dict[str, object] = {}
-
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ydb_vector_search_simple_api_spark.operators import sq as sq_mod
-
-        ivf_idx = _ivf_index(spark, sf_dir)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_ivfsq_{tag}")
-        if sf_dir not in _IVFSQ_CACHE:
-            if os.path.exists(os.path.join(out, "_sq_meta.json")):
-                _IVFSQ_CACHE[sf_dir] = sq_mod.load_sq_index(out)
-            else:
-                _IVFSQ_CACHE[sf_dir] = sq_mod.build_ivfsq_index(spark, ivf_idx, out)
         return sq_mod.ivfsq_search(
-            spark, ivf_idx, _IVFSQ_CACHE[sf_dir], _query_vec(spark, sf_dir),
-            k=k, strategy=strategy, search_top_size=width,
-            shortlist=shortlist, round_digits=ROUND,
+            spark, _ivf_index(spark, sf_dir), _ivfsq_index(spark, sf_dir),
+            _query_vec(spark, sf_dir), k=k, strategy=strategy,
+            search_top_size=width, shortlist=shortlist, round_digits=ROUND,
         )
 
     return run
@@ -355,112 +249,54 @@ def _mk_ivfsq(strategy: str, k: int, width: int, shortlist: int | None):
 
 def _mk_gann(strategy: str, k: int, beam: int | None):
     def run(s: SparkSession, d: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        idx = _gann_index(s, d)
-        src = load_embeddings(s, d).select(
-            F.col("vec_id").alias("id"), "embedding"
-        )
         return gann_mod.graphann_search(
-            s, idx, src, _query_vec(s, d), k=k, strategy=strategy,
-            beam=beam, round_digits=ROUND,
+            s, _gann_index(s, d), _vectors(s, d), _query_vec(s, d), k=k,
+            strategy=strategy, beam=beam, round_digits=ROUND,
         )
     return run
 
 
 def _mk_bq_knn_join(strategy: str, k: int, n_queries: int, shortlist: int | None):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from ydb_vector_search_simple_api_spark.operators import bq as bq_mod
-
-        idx = _bq_index(spark, sf_dir)
-        embs = load_embeddings(spark, sf_dir)
-        src = embs.select(F.col("vec_id").alias("id"), "embedding")
-        queries_df = embs.filter(F.col("vec_id") < n_queries).select(
+        queries_df = load_embeddings(spark, sf_dir).filter(
+            F.col("vec_id") < n_queries
+        ).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
         return bq_mod.bq_knn_join(
-            spark, idx, src, queries_df, k=k, strategy=strategy,
-            shortlist=shortlist, round_digits=ROUND,
+            spark, _bq_index(spark, sf_dir), _vectors(spark, sf_dir), queries_df,
+            k=k, strategy=strategy, shortlist=shortlist, round_digits=ROUND,
         )
 
     return run
 
 
-_PQ_CACHE: dict[str, "pq_mod.PqIndex"] = {}
 PQ_M = 8
+_PQ_PARAMS = {"m": PQ_M, "nbits": 8, "normalize": True}
 
 
 def _pq_index(spark: SparkSession, sf_dir: str):
-    from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
-
-    key = sf_dir
-    if key not in _PQ_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_pq_{tag}_m{PQ_M}")
-        marker = os.path.join(out, "_pq_meta.json")
-        if os.path.exists(marker):
-            _PQ_CACHE[key] = pq_mod.load_pq_index(out)
-        else:
-            from pyspark.sql import functions as F
-
-            embs = load_embeddings(spark, sf_dir).select(
-                F.col("vec_id").alias("id"), "embedding"
-            )
-            _PQ_CACHE[key] = pq_mod.build_pq_index(
-                spark, embs, out, m=PQ_M, nbits=8, normalize=True
-            )
-    return _PQ_CACHE[key]
-
-
-_NB_SCORED_CACHE: dict[tuple, DataFrame] = {}
+    return persisted("pq", sf_dir, _PQ_PARAMS, partial(
+        pq_mod.build_pq_index, spark, _vectors(spark, sf_dir), **_PQ_PARAMS
+    ), pq_mod.load_pq_index)
 
 
 def _nb_scored_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NB_SCORED_CACHE:
-        _NB_SCORED_CACHE[key] = classify_mod.nb_classify_docs(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return _NB_SCORED_CACHE[key]
-
-
-_OPQ_CACHE: dict[str, object] = {}
+    return session_memo(spark, "nb_scored", sf_dir, {}, lambda: (
+        classify_mod.nb_classify_docs(spark, sf_dir).localCheckpoint(eager=True)
+    ))
 
 
 def _opq_index(spark: SparkSession, sf_dir: str):
-    from ydb_vector_search_simple_api_spark.operators import opq as opq_mod
-
-    key = sf_dir
-    if key not in _OPQ_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_opq_{tag}_m{PQ_M}")
-        if os.path.exists(os.path.join(out, "_opq_meta.json")):
-            _OPQ_CACHE[key] = opq_mod.load_opq_index(out)
-        else:
-            from pyspark.sql import functions as F
-
-            embs = load_embeddings(spark, sf_dir).select(
-                F.col("vec_id").alias("id"), "embedding"
-            )
-            _OPQ_CACHE[key] = opq_mod.build_opq_index(
-                spark, embs, out, m=PQ_M, nbits=8, normalize=True
-            )
-    return _OPQ_CACHE[key]
+    return persisted("opq", sf_dir, _PQ_PARAMS, partial(
+        opq_mod.build_opq_index, spark, _vectors(spark, sf_dir), **_PQ_PARAMS
+    ), opq_mod.load_opq_index)
 
 
 def _opq_rerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ydb_vector_search_simple_api_spark.operators import opq as opq_mod
-
-    idx = _opq_index(spark, sf_dir)
-    embs = load_embeddings(spark, sf_dir).select(
-        F.col("vec_id").alias("id"), "embedding"
-    )
+    embs = _vectors(spark, sf_dir)
     return opq_mod.opq_search_rerank(
-        spark, idx, embs, _query_vec(spark, sf_dir), k=10,
+        spark, _opq_index(spark, sf_dir), embs, _query_vec(spark, sf_dir), k=10,
         strategy="CosineSimilarity", shortlist=embs.count(),
         round_digits=ROUND,
     )
@@ -470,18 +306,11 @@ def _mk_pq_rerank(strategy: str, k: int, shortlist: int | None):
     """shortlist=None -> full corpus (exact, strong oracle)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
-
-        idx = _pq_index(spark, sf_dir)
-        embs = load_embeddings(spark, sf_dir).select(
-            F.col("vec_id").alias("id"), "embedding"
-        )
+        embs = _vectors(spark, sf_dir)
         n = shortlist if shortlist is not None else embs.count()
         return pq_mod.pq_search_rerank(
-            spark, idx, embs, _query_vec(spark, sf_dir), k=k,
-            strategy=strategy, shortlist=n, round_digits=ROUND,
+            spark, _pq_index(spark, sf_dir), embs, _query_vec(spark, sf_dir),
+            k=k, strategy=strategy, shortlist=n, round_digits=ROUND,
         )
 
     return run
@@ -489,11 +318,9 @@ def _mk_pq_rerank(strategy: str, k: int, shortlist: int | None):
 
 def _mk_pq_adc(strategy: str, k: int):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
-
-        idx = _pq_index(spark, sf_dir)
         return pq_mod.pq_adc_topk(
-            spark, idx, _query_vec(spark, sf_dir), k=k, strategy=strategy
+            spark, _pq_index(spark, sf_dir), _query_vec(spark, sf_dir), k=k,
+            strategy=strategy,
         )
 
     return run
@@ -501,40 +328,23 @@ def _mk_pq_adc(strategy: str, k: int):
 
 def _mk_pq_knn_join(strategy: str, k: int, n_queries: int):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
-
-        idx = _pq_index(spark, sf_dir)
         queries_df = load_embeddings(spark, sf_dir).filter(
             F.col("vec_id") < n_queries
         ).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
-        return pq_mod.pq_knn_join(spark, idx, queries_df, k=k, strategy=strategy)
+        return pq_mod.pq_knn_join(
+            spark, _pq_index(spark, sf_dir), queries_df, k=k, strategy=strategy
+        )
 
     return run
 
 
-_IVFPQ_CACHE: dict[str, "pq_mod.PqIndex"] = {}
-
-
 def _ivfpq_index(spark: SparkSession, sf_dir: str):
-    from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
-
-    key = sf_dir
-    if key not in _IVFPQ_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_ivfpq_{tag}_m{PQ_M}")
-        marker = os.path.join(out, "_pq_meta.json")
-        if os.path.exists(marker):
-            _IVFPQ_CACHE[key] = pq_mod.load_pq_index(out)
-        else:
-            _IVFPQ_CACHE[key] = pq_mod.build_ivfpq_index(
-                spark, _ivf_index(spark, sf_dir), out, m=PQ_M, nbits=8,
-                normalize=True,
-            )
-    return _IVFPQ_CACHE[key]
+    ivf_idx = _ivf_index(spark, sf_dir)
+    return persisted("ivfpq", sf_dir, {**_PQ_PARAMS, "ivf": ivf_idx.path}, partial(
+        pq_mod.build_ivfpq_index, spark, ivf_idx, **_PQ_PARAMS
+    ), pq_mod.load_pq_index)
 
 
 def _mk_ivfpq(strategy: str, k: int, width: int | None, rerank: int | None):
@@ -542,62 +352,39 @@ def _mk_ivfpq(strategy: str, k: int, width: int | None, rerank: int | None):
     full-precision rescore (None = pure ADC)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
-
         ivf_idx = _ivf_index(spark, sf_dir)
-        pq_idx = _ivfpq_index(spark, sf_dir)
         return pq_mod.ivfpq_search(
-            spark, ivf_idx, pq_idx, _query_vec(spark, sf_dir), k=k,
-            strategy=strategy, search_top_size=width or ivf_idx.n_clusters,
+            spark, ivf_idx, _ivfpq_index(spark, sf_dir), _query_vec(spark, sf_dir),
+            k=k, strategy=strategy, search_top_size=width or ivf_idx.n_clusters,
             rerank=rerank,
         )
 
     return run
 
 
-_IVFOPQ_CACHE: dict[str, object] = {}
-
-
 def _ivfopq_index(spark: SparkSession, sf_dir: str):
-    from ydb_vector_search_simple_api_spark.operators import opq as opq_mod
-
-    key = sf_dir
-    if key not in _IVFOPQ_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_ivfopq_{tag}_m{PQ_M}")
-        if os.path.exists(os.path.join(out, "_opq_meta.json")):
-            _IVFOPQ_CACHE[key] = opq_mod.load_opq_index(out)
-        else:
-            _IVFOPQ_CACHE[key] = opq_mod.build_ivfopq_index(
-                spark, _ivf_index(spark, sf_dir), out, m=PQ_M, nbits=8,
-                normalize=True,
-            )
-    return _IVFOPQ_CACHE[key]
+    ivf_idx = _ivf_index(spark, sf_dir)
+    return persisted("ivfopq", sf_dir, {**_PQ_PARAMS, "ivf": ivf_idx.path}, partial(
+        opq_mod.build_ivfopq_index, spark, ivf_idx, **_PQ_PARAMS
+    ), opq_mod.load_opq_index)
 
 
 def _ivfopq_rerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ydb_vector_search_simple_api_spark.operators import opq as opq_mod
-
     ivf_idx = _ivf_index(spark, sf_dir)
-    opq_idx = _ivfopq_index(spark, sf_dir)
     n = load_embeddings(spark, sf_dir).count()
     return opq_mod.ivfopq_search(
-        spark, ivf_idx, opq_idx, _query_vec(spark, sf_dir), k=10,
-        strategy="CosineSimilarity",
+        spark, ivf_idx, _ivfopq_index(spark, sf_dir), _query_vec(spark, sf_dir),
+        k=10, strategy="CosineSimilarity",
         search_top_size=ivf_idx.n_clusters, rerank=n, round_digits=ROUND,
     )
 
 
 def _prefixdim_rerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from ydb_vector_search_simple_api_spark.operators.search import (
         prefix_dim_search_rerank,
     )
 
-    embs = load_embeddings(spark, sf_dir).select(
-        F.col("vec_id").alias("id"), "embedding"
-    )
+    embs = _vectors(spark, sf_dir)
     return prefix_dim_search_rerank(
         spark, embs, _query_vec(spark, sf_dir), k=10,
         strategy="CosineSimilarity", prefix_dims=16,
@@ -605,61 +392,28 @@ def _prefixdim_rerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GANN_CACHE: dict[str, gann_mod.GraphAnnIndex] = {}
 GANN_M = 8
 
 
 def _gann_index(spark: SparkSession, sf_dir: str) -> gann_mod.GraphAnnIndex:
-    key = sf_dir
-    if key not in _GANN_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"svs_gann_{tag}_m{GANN_M}")
-        marker = os.path.join(out, "_graphann_meta.json")
-        if os.path.exists(marker):
-            _GANN_CACHE[key] = gann_mod.load_graph_index(out)
-        else:
-            from pyspark.sql import functions as F
-
-            embs = load_embeddings(spark, sf_dir).select(
-                F.col("vec_id").alias("id"), "embedding"
-            )
-            _GANN_CACHE[key] = gann_mod.build_knn_graph(
-                spark, embs, out, m=GANN_M
-            )
-    return _GANN_CACHE[key]
+    return persisted("gann", sf_dir, {"m": GANN_M}, partial(
+        gann_mod.build_knn_graph, spark, _vectors(spark, sf_dir), m=GANN_M
+    ), gann_mod.load_graph_index)
 
 
-_KMT_CACHE: dict[str, kmt.KmeansTreeIndex] = {}
 KMT_L1 = 4
 KMT_FANOUT = 4
 
 
 def _kmt_index(spark: SparkSession, sf_dir: str) -> kmt.KmeansTreeIndex:
-    key = sf_dir
-    if key not in _KMT_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(
-            tempfile.gettempdir(), f"svs_kmt_{tag}_l{KMT_L1}f{KMT_FANOUT}"
-        )
-        marker = os.path.join(out, "_kmeans_tree.json")
-        if os.path.exists(marker):
-            _KMT_CACHE[key] = kmt.load_kmeans_tree(out)
-        else:
-            from pyspark.sql import functions as F
-
-            embs = load_embeddings(spark, sf_dir).select(
-                F.col("vec_id").alias("id"), "embedding"
-            )
-            _KMT_CACHE[key] = kmt.build_kmeans_tree(
-                spark, embs, out, n_l1=KMT_L1, fanout=KMT_FANOUT, seed=42
-            )
-    return _KMT_CACHE[key]
+    params = {"n_l1": KMT_L1, "fanout": KMT_FANOUT, "seed": 42}
+    return persisted("kmt", sf_dir, params, partial(
+        kmt.build_kmeans_tree, spark, _vectors(spark, sf_dir), **params
+    ), kmt.load_kmeans_tree)
 
 
 def _mk_tree_knn_join(strategy: str, k: int, n_queries: int, width: int | None):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         idx = _kmt_index(spark, sf_dir)
         queries_df = load_embeddings(spark, sf_dir).filter(
             F.col("vec_id") < n_queries
@@ -717,8 +471,6 @@ def _mk_ivf_knn_join_filtered(
     == filtered exact knn_join (strong oracle)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         from ydb_vector_search_simple_api_spark.operators.search import (
             filtered_doc_ids,
         )
@@ -765,18 +517,13 @@ def _mk_gann_filtered(strategy: str, k: int, filter: dict, beam: int | None = No
     beam=None -> whole-graph traversal == exact filtered search."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         from ydb_vector_search_simple_api_spark.operators.search import (
             filtered_doc_ids,
         )
 
-        idx = _gann_index(spark, sf_dir)
-        src = load_embeddings(spark, sf_dir).select(
-            F.col("vec_id").alias("id"), "embedding"
-        )
         return gann_mod.graphann_search(
-            spark, idx, src, _query_vec(spark, sf_dir), k=k,
+            spark, _gann_index(spark, sf_dir), _vectors(spark, sf_dir),
+            _query_vec(spark, sf_dir), k=k,
             strategy=strategy, beam=beam, round_digits=ROUND,
             filter_ids=filtered_doc_ids(spark, sf_dir, filter),
         )
@@ -837,8 +584,6 @@ def _mk_sql_topk(strategy: str, k: int, filter: dict | None = None):
 
 def _mk_knn_join(strategy: str, k: int, n_queries: int):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         embs = load_embeddings(spark, sf_dir)
         queries_df = embs.filter(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -853,8 +598,6 @@ def _mk_knn_join(strategy: str, k: int, n_queries: int):
 
 def _mk_knn_join_blocked(strategy: str, k: int, n_queries: int):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         from ydb_vector_search_simple_api_spark.operators.search import knn_join_blocked
 
         embs = load_embeddings(spark, sf_dir)
@@ -869,8 +612,6 @@ def _mk_knn_join_blocked(strategy: str, k: int, n_queries: int):
 
 def _mk_ivf_knn_join(strategy: str, k: int, n_queries: int, width: int | None):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         idx = _ivf_index(spark, sf_dir)
         embs = load_embeddings(spark, sf_dir)
         queries_df = embs.filter(F.col("vec_id") < n_queries).select(
@@ -914,8 +655,6 @@ def _embed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm and a content digest (stable scalars) instead of the raw
     array. Rows-only check: the md5-seeded fake embedder has no SQL
     twin; the plumbing is pinned in tests/test_api.py."""
-    from pyspark.sql import functions as F
-
     from ydb_vector_search_simple_api_spark.operators import enrich
 
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
@@ -937,8 +676,6 @@ def _embed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mk_tree_knn_join_routed(strategy: str, k: int, n_queries: int):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         idx = _kmt_index(spark, sf_dir)
         embs = load_embeddings(spark, sf_dir)
         queries_df = embs.filter(F.col("vec_id") < n_queries).select(
@@ -953,8 +690,6 @@ def _mk_tree_knn_join_routed(strategy: str, k: int, n_queries: int):
 
 def _mk_ivf_knn_join_routed(strategy: str, k: int, n_queries: int):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         idx = _ivf_index(spark, sf_dir)
         embs = load_embeddings(spark, sf_dir)
         queries_df = embs.filter(F.col("vec_id") < n_queries).select(
@@ -970,8 +705,6 @@ def _mk_ivf_knn_join_routed(strategy: str, k: int, n_queries: int):
 
 def _mk_ivf_knn_join_dist(strategy: str, k: int, n_queries: int, width: int | None):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         idx = _ivf_index(spark, sf_dir)
         embs = load_embeddings(spark, sf_dir)
         queries_df = embs.filter(F.col("vec_id") < n_queries).select(
@@ -990,8 +723,6 @@ def _embedding_pca_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate wrapper: pca_project with the k=8 component array
     flattened to scalar columns (driver canonicalization sorts rows
     by every column and cannot order array cells)."""
-    from pyspark.sql import functions as F
-
     k = 8
     out = embstats_mod.pca_project(spark, sf_dir, n_components=k)
     return out.select(
@@ -1007,8 +738,6 @@ def _ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-shaped: ONE exact kNN join + one pruned ivf_knn_join per
     width; recall is a Spark-side semi-join count (no per-query
     driver loop)."""
-    from pyspark.sql import functions as F
-
     from ydb_vector_search_simple_api_spark.operators.search import knn_join
 
     idx = _ivf_index(spark, sf_dir)
@@ -2344,8 +2073,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the CCNet configuration (tiles per source, head+middle keep)
     q["perplexity_buckets_kn5"] = textual.perplexity_buckets_kn5
     # sibling: the same 5-gram KN scores served from the PERSISTED
-    # model store (round 11, VERDICT r10 #3): build once into a
-    # deterministic temp dir (only the top-order c5 count table
+    # model store (round 11, VERDICT r10 #3): build once
+    # (artifacts.persisted; only the top-order c5 count table
     # persists — the whole continuation cascade re-derives from it,
     # which is what makes the upsert a pure count fold), score the
     # corpus FROM the store. Store == recompute, so it shares the

@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
+from ..artifacts import persisted
 from ..sources.store import load_documents
 from .dedup import _ensure_parallelism
 from .multimodal import decode_pcm
@@ -108,8 +109,8 @@ def track_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     The input is fanned out to cluster parallelism first — a small
     parquet scans as ONE split, serializing the whole Arrow stage
     (measured 10.6 s single-task vs ~1 s fanned at sf0.1).
-    Session-cached to parquet per sf_dir (pure function of the
-    corpus; rm -rf /tmp/svs_afp_* after changing fingerprint code)."""
+    Persisted to parquet (``artifacts.persisted``; a pure function of
+    the corpus)."""
     return _fp_cached(spark, sf_dir, "afpt", _track_fingerprints_uncached)
 
 
@@ -200,19 +201,11 @@ def _probe_fingerprints_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fp_cached(spark, sf_dir, tag, fn):
-    import hashlib as _hashlib
-    import os
-    import tempfile
-
-    cache = os.path.join(
-        tempfile.gettempdir(),
-        f"svs_afp_{tag}_{_hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
+    return persisted(
+        f"afp_{tag}", sf_dir, {},
+        lambda out: fn(spark, sf_dir).write.parquet(out),
+        spark.read.parquet,
     )
-    if os.path.exists(cache):
-        return spark.read.parquet(cache)
-    df = fn(spark, sf_dir)
-    df.write.mode("overwrite").parquet(cache)
-    return spark.read.parquet(cache)
 
 
 def match_fingerprints(
@@ -347,14 +340,11 @@ def audio_match_store(
     recompute-everything :func:`audio_fingerprint_match` recovers
     (equivalence pinned in tests/test_audiofp.py) while never
     re-reading the audio corpus. Rows-only like its direct twin."""
-    import hashlib as _hashlib
-    import os
-    import tempfile
-
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"svs_afpstore_{tag}")
-    if not os.path.exists(os.path.join(path, "postings")):
-        build_audiofp_store(track_fingerprints(spark, sf_dir), path)
+    path = persisted(
+        "afpstore", sf_dir, {},
+        lambda out: build_audiofp_store(track_fingerprints(spark, sf_dir), out),
+        lambda path: path,
+    )
     probes = probe_fingerprints(spark, sf_dir).select("probe_id", "key", "t")
     return screen_audio_against_store(
         spark,

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..artifacts import persisted
 from ..functions import text as TXT
 from ..sources.store import load_documents
 
@@ -281,15 +282,11 @@ def bpe_encode_from_store(
 
 
 def bpe_encode_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate entry: build-once into the deterministic temp dir, encode
-    from the store; == the self-contained bpe_encode entry
+    """Gate entry: build the store once (``artifacts.persisted``), encode
+    from it; == the self-contained bpe_encode entry
     (rows-only family — the encode digest has no SQL twin)."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"svs_bpestore_{tag}")
-    if not os.path.exists(os.path.join(path, "_bpe_meta.json")):
-        bpe_store_build(spark, sf_dir, path)
-    return bpe_encode_from_store(spark, sf_dir, path)
+    return persisted(
+        "bpestore", sf_dir, {},
+        lambda out: bpe_store_build(spark, sf_dir, out),
+        lambda path: bpe_encode_from_store(spark, sf_dir, path),
+    )

@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from . import tombstones
 from ..config import validate_strategy
 from ..functions.distance import score_expr
+from .index import _read_clusters
 from .search import _order_cols
 
 
@@ -575,7 +576,7 @@ def build_ivfbq_index(spark: SparkSession, ivf_index, out_dir: str) -> BqIndex:
     1/32 of the bytes per row it does read. Rows-read and
     bytes-per-row levers multiply; the Hamming scan stays pure
     codegen."""
-    src = spark.read.parquet(ivf_index.path).select(
+    src = _read_clusters(spark, ivf_index).select(
         F.col(ivf_index.id_col).alias("id"),
         F.col(ivf_index.vec_col).alias("embedding"),
         "cluster_id",
@@ -646,8 +647,7 @@ def ivfbq_search(
     )
 
     vecs = (
-        spark.read.parquet(ivf_index.path)
-        .filter(F.col("cluster_id").isin(keep))
+        _read_clusters(spark, ivf_index, keep)
         .select(
             F.col(ivf_index.id_col).alias("id"),
             F.col(ivf_index.vec_col).alias("embedding"),

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import session_memo
 from ..functions import text as TXT
 from ..sources.store import load_documents, load_embeddings
 from . import dedup
@@ -210,12 +211,6 @@ def bloom_admission_state(
     return bits, k, m
 
 
-#: (applicationId, sf_dir, n, fpp) -> Bloom state for the gate entry —
-#: the _SCAN_CACHE/bigram-score precedent: a pure corpus function kept
-#: session-resident; bench reports its cold build via cold_s.
-_BLOOM_STATE_CACHE: dict[tuple, tuple] = {}
-
-
 def decontaminate_bloom(
     docs: DataFrame,
     bench_pred: Column,
@@ -371,14 +366,14 @@ def decontaminate_bloom_documents(
     """Gate entry: the Bloom-admission twin of ``decontaminate`` —
     same benchmark convention (source 'src0'), same oracle."""
     d = load_documents(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, n, 0.01)
-    if key not in _BLOOM_STATE_CACHE:
-        _BLOOM_STATE_CACHE[key] = bloom_admission_state(
-            d.filter(F.col("source") == "src0"), n=n
-        )
+    # a pure corpus function kept session-resident; bench reports its
+    # cold build via cold_s
+    state = session_memo(spark, "bloom_state", sf_dir, {"n": n}, lambda: (
+        bloom_admission_state(d.filter(F.col("source") == "src0"), n=n)
+    ))
     return decontaminate_bloom(
         d, F.col("source") == "src0", n=n, min_containment=min_containment,
-        bloom_state=_BLOOM_STATE_CACHE[key],
+        bloom_state=state,
     )
 
 

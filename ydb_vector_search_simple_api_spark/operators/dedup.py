@@ -1577,12 +1577,9 @@ def incremental_dedup_store(
     """Gate entry: the store-backed screen must equal
     :func:`incremental_dedup` exactly (same oracle SQL) — the
     maintained-state path producing the identical answer. Builds the
-    store from the 'existing' split into a deterministic temp dir,
+    store from the 'existing' split once (``artifacts.persisted``),
     then screens the 'incoming' split against it."""
-    import hashlib as _hashlib
-    import os
-    import tempfile
-
+    from ..artifacts import persisted
     from ..sources.store import load_documents
     from .sampling import _draw, _threshold_hex
 
@@ -1590,11 +1587,11 @@ def incremental_dedup_store(
     d = load_documents(spark, sf_dir).select("doc_id", "text")
     existing = d.filter(_draw(F.col("doc_id")) < F.lit(thr))
     incoming = d.filter(~(_draw(F.col("doc_id")) < F.lit(thr)))
-    tag = _hashlib.md5(f"{sf_dir}:{existing_frac}".encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"svs_fpstore_{tag}")
-    if not os.path.exists(os.path.join(path, "fps")):
-        build_fingerprint_store(spark, existing, path)
-    return screen_against_store(spark, incoming, path)
+    return persisted(
+        "fpstore", sf_dir, {"existing_frac": existing_frac},
+        lambda out: build_fingerprint_store(spark, existing, out),
+        lambda path: screen_against_store(spark, incoming, path),
+    )
 
 
 def best_quality_election(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,21 +32,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import persisted, session_memo
 from ..sources.store import load_embeddings
-
-#: session cache for the covariance cells — a pure function of the
-#: corpus files (the scan-cache contract); shared by the covariance
-#: gate entry and the power-iteration loop that reads the same cells.
-_COV_CACHE: dict[tuple, DataFrame] = {}
 
 
 def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _COV_CACHE.get(key)
-    if cached is None:
-        cached = _embedding_covariance_build(spark, sf_dir).persist()
-        _COV_CACHE[key] = cached
-    return cached
+    """Session memo of the covariance cells, shared by the covariance
+    gate entry and the power-iteration loop that reads the same cells."""
+    return session_memo(spark, "cov", sf_dir, {}, lambda: (
+        _embedding_covariance_build(spark, sf_dir).persist()
+    ))
 
 
 def _embedding_covariance_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,15 +576,13 @@ def covariance_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`moment_store_upsert`, serve the covariance from stored
     decimals — shares ``embedding_covariance``'s oracle (the fold is
     exact, so maintained state answers identically)."""
-    import hashlib
-    import os
-    import tempfile
-
     embs = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
-    tag = hashlib.md5(f"{sf_dir}:mom".encode()).hexdigest()[:8]
-    store = os.path.join(tempfile.gettempdir(), f"svs_mom_{tag}")
-    if not os.path.exists(os.path.join(store, _MOM_META)):
+
+    def build(out: str) -> None:
         half = embs.agg(F.expr("percentile_approx(vec_id, 0.5)")).head()[0]
-        build_moment_store(embs.filter(F.col("vec_id") <= half), store)
-        moment_store_upsert(spark, store, embs.filter(F.col("vec_id") > half))
-    return moment_store_covariance(spark, store)
+        build_moment_store(embs.filter(F.col("vec_id") <= half), out)
+        moment_store_upsert(spark, out, embs.filter(F.col("vec_id") > half))
+
+    return persisted(
+        "mom", sf_dir, {}, build, lambda path: moment_store_covariance(spark, path)
+    )

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 
 from ..config import validate_strategy
 from ..functions.distance import score_expr
+from .index import _read_clusters
 from .search import _order_cols
 
 _META_FILE = "_graphann_meta.json"
@@ -313,7 +314,7 @@ def clustered_bootstrap_edges(
 
     cents = ivf_index.centroids  # (C, d) numpy
     bc_c = spark.sparkContext.broadcast(cents)
-    store = spark.read.parquet(ivf_index.path).select("id", "embedding")
+    store = _read_clusters(spark, ivf_index).select("id", "embedding")
 
     def _assign(batches):
         C = bc_c.value
@@ -415,7 +416,7 @@ def cluster_representatives(
 
     cents = ivf_index.centroids
     bc = spark.sparkContext.broadcast(cents)
-    store = spark.read.parquet(ivf_index.path).select(
+    store = _read_clusters(spark, ivf_index).select(
         "cluster_id", "id", "embedding"
     )
 

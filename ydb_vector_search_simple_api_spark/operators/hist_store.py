@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import persisted
 from ..sources.store import load_events
 
 META = "_hist_meta.json"
@@ -159,16 +160,16 @@ def histogram_store_quantiles(
     p50/p90/p99 from the stored counts. Output and oracle identical
     to histogram_quantiles — the store path proves maintained state
     answers the same question without rescanning facts."""
-    import hashlib
-    import tempfile
-
     ev = load_events(spark, sf_dir).select("event_type", "value")
-    tag = hashlib.md5(f"{sf_dir}:{n_buckets}".encode()).hexdigest()[:8]
-    store = os.path.join(tempfile.gettempdir(), f"svs_hist_{tag}")
-    if not os.path.exists(os.path.join(store, META)):
+
+    def build(out: str) -> None:
         b = ev.agg(F.min("value").alias("lo"), F.max("value").alias("hi")).head()
         build_hist_store(
-            ev, store, ["event_type"], "value",
+            ev, out, ["event_type"], "value",
             lo=float(b.lo), hi=float(b.hi), n_buckets=n_buckets,
         )
-    return hist_store_quantiles(spark, store)
+
+    return persisted(
+        "hist", sf_dir, {"n_buckets": n_buckets}, build,
+        lambda path: hist_store_quantiles(spark, path),
+    )

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
 from ..functions.png import resize_bilinear
+from ..artifacts import persisted
 from ..sources.store import load_documents
 from .multimodal import _fake_raster, decode_raster, encode_raster
 
@@ -103,24 +104,15 @@ def image_dhashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads it. One Arrow stage; the base-image lookup is a self-join
     on ``doc_id - 9`` (narrow key join, only for the planted 10%).
 
-    Session-cached to parquet per ``sf_dir`` (the ``_ivf_index``
-    build-once pattern): the table is a pure function of the corpus,
-    and four consumers (pairs, groups, store, stream landing) would
-    otherwise re-decode the images per call. ``rm -rf
-    /tmp/svs_imgh_*`` after changing the hash or augmentation code."""
-    import hashlib as _hashlib
-    import os
-    import tempfile
-
-    cache = os.path.join(
-        tempfile.gettempdir(),
-        f"svs_imgh_{_hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
+    Persisted to parquet (``artifacts.persisted``): the table is a
+    pure function of the corpus, and four consumers (pairs, groups,
+    store, stream landing) would otherwise re-decode the images per
+    call."""
+    return persisted(
+        "imgh", sf_dir, {},
+        lambda out: _image_dhashes_uncached(spark, sf_dir).write.parquet(out),
+        spark.read.parquet,
     )
-    if os.path.exists(cache):
-        return spark.read.parquet(cache)
-    df = _image_dhashes_uncached(spark, sf_dir)
-    df.write.mode("overwrite").parquet(cache)
-    return spark.read.parquet(cache)
 
 
 def _image_dhashes_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,10 +412,6 @@ def incremental_image_dedup(
     split, the 'incoming' split screened against it. Rows-only
     (pHash corpus); store == recompute equivalence and upsert growth
     pinned in tests/test_imagededup.py."""
-    import hashlib as _hashlib
-    import os
-    import tempfile
-
     from .sampling import _draw, _threshold_hex
 
     thr = _threshold_hex(existing_frac)
@@ -431,12 +419,12 @@ def incremental_image_dedup(
     h = h.localCheckpoint(eager=False)
     existing = h.filter(_draw(F.col("doc_id")) < F.lit(thr))
     incoming = h.filter(~(_draw(F.col("doc_id")) < F.lit(thr)))
-    tag = _hashlib.md5(f"{sf_dir}:{existing_frac}".encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"svs_phash_{tag}")
-    if not os.path.exists(os.path.join(path, "bands")):
-        build_phash_store(existing, path)
-    return screen_images_against_store(
-        spark, incoming, path, max_hamming=max_hamming
+    return persisted(
+        "phash", sf_dir, {"existing_frac": existing_frac},
+        lambda out: build_phash_store(existing, out),
+        lambda path: screen_images_against_store(
+            spark, incoming, path, max_hamming=max_hamming
+        ),
     )
 
 

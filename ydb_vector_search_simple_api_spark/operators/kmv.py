@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import persisted
 from ..sources.store import load_events
 
 #: hex digits of the md5 prefix — 48-bit hash space.
@@ -361,23 +362,20 @@ def kmv_store_overlap(
     k-min merge is lossless, so output — and oracle — are identical
     to ``kmv_user_overlap``: maintained state answers the same
     question without rescanning facts."""
-    import hashlib
-    import os
-    import tempfile
-
     ev = load_events(spark, sf_dir).select("event_id", "event_type", "user_id")
-    tag = hashlib.md5(f"{sf_dir}:{k}:overlap".encode()).hexdigest()[:8]
-    store = os.path.join(tempfile.gettempdir(), f"svs_kmv_{tag}")
-    if not os.path.exists(os.path.join(store, META)):
+
+    def build(out: str) -> None:
         half = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).head()[0]
         build_kmv_store(
-            ev.filter(F.col("event_id") <= half), store, "user_id",
+            ev.filter(F.col("event_id") <= half), out, "user_id",
             ["event_type"], k=k,
         )
         kmv_store_upsert(
-            spark, store, ev.filter(F.col("event_id") > half), "user_id",
+            spark, out, ev.filter(F.col("event_id") > half), "user_id",
             ["event_type"], k=k,
         )
+
+    store = persisted("kmv", sf_dir, {"k": k}, build, lambda path: path)
     return kmv_store_pair_report(spark, store, "event_type", k=k).select(
         F.col("a").alias("type_a"),
         F.col("b").alias("type_b"),

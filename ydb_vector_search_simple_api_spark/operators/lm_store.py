@@ -45,6 +45,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import persisted, session_memo
+from ..sources.store import load_documents
 from .textual import _kn5_docg, _kn5_score, _mkn5_score
 
 _META_FILE = "_kn5_meta.json"
@@ -126,55 +128,35 @@ def mkn5_store_score(
     return _mkn5_score(docg, c5)
 
 
-#: session cache for the corpus-scores gate entries — pure functions
-#: of the corpus files (the kn5_scores_cached contract; the honest
-#: per-call score cost is recorded in SCALING.md round 11 and in
-#: BENCH_DETAIL's cold_s).
-_STORE_SCORE_CACHE: dict[tuple, DataFrame] = {}
+def corpus_kn5_store(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the KN5 model store trained on the whole corpus, built
+    once (``artifacts.persisted``); shared by both scorers here and the
+    production verdict store in ``pipeline``."""
+    return persisted(
+        "kn5store", sf_dir, {},
+        lambda out: kn5_store_build(spark, _corpus(spark, sf_dir), out),
+        lambda path: path,
+    )
+
+
+def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_documents(spark, sf_dir).select("doc_id", "text")
 
 
 def mkn5_store_corpus_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate entry: the modified-KN scores served from the shared
-    per-corpus store (same temp-dir memo as
-    :func:`kn5_store_corpus_scores`); == the recompute, same oracle."""
-    import hashlib
-    import tempfile
-
-    from ..sources.store import load_documents
-
-    key = (spark.sparkContext.applicationId, sf_dir, "mkn5")
-    if key not in _STORE_SCORE_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(tempfile.gettempdir(), f"svs_kn5store_{tag}")
-        docs = load_documents(spark, sf_dir).select("doc_id", "text")
-        if not os.path.exists(os.path.join(path, _META_FILE)):
-            kn5_store_build(spark, docs, path)
-        _STORE_SCORE_CACHE[key] = mkn5_store_score(
-            spark, docs, path
-        ).localCheckpoint(eager=True)
-    return _STORE_SCORE_CACHE[key]
+    per-corpus store, memoized per session; == the recompute, same
+    oracle."""
+    return session_memo(spark, "mkn5_store_scores", sf_dir, {}, lambda: mkn5_store_score(
+        spark, _corpus(spark, sf_dir), corpus_kn5_store(spark, sf_dir)
+    ).localCheckpoint(eager=True))
 
 
 def kn5_store_corpus_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate entry: build the store from the corpus ONCE (deterministic
-    temp dir keyed on the corpus path — the ``incremental_dedup_store``
-    convention), then serve the whole corpus's scores FROM the store.
-    Must equal :func:`textual.kneser_ney5_logprob` exactly, so it
-    shares the recompute's oracle SQL — the store==recompute pin at
-    model scope."""
-    import hashlib
-    import tempfile
-
-    from ..sources.store import load_documents
-
-    key = (spark.sparkContext.applicationId, sf_dir, "kn5")
-    if key not in _STORE_SCORE_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(tempfile.gettempdir(), f"svs_kn5store_{tag}")
-        docs = load_documents(spark, sf_dir).select("doc_id", "text")
-        if not os.path.exists(os.path.join(path, _META_FILE)):
-            kn5_store_build(spark, docs, path)
-        _STORE_SCORE_CACHE[key] = kn5_store_score(
-            spark, docs, path
-        ).localCheckpoint(eager=True)
-    return _STORE_SCORE_CACHE[key]
+    """Gate entry: serve the whole corpus's scores FROM the per-corpus
+    store, memoized per session. Must equal
+    :func:`textual.kneser_ney5_logprob` exactly, so it shares the
+    recompute's oracle SQL — the store==recompute pin at model scope."""
+    return session_memo(spark, "kn5_store_scores", sf_dir, {}, lambda: kn5_store_score(
+        spark, _corpus(spark, sf_dir), corpus_kn5_store(spark, sf_dir)
+    ).localCheckpoint(eager=True))

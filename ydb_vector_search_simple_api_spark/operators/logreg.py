@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import persisted, session_memo
 from ..functions import text as TXT
 from ..sources.store import load_documents
 
@@ -165,10 +166,23 @@ def train_weights(
         train.unpersist()
 
 
-#: session cache for trained weights — a pure function of the corpus
-#: files + hyperparameters (the wordpiece-vocab / scan-cache contract);
-#: logreg_report shares logreg_score's training pass through it.
-_WEIGHT_CACHE: dict[tuple, dict[int, int]] = {}
+def trained_weights(
+    spark: SparkSession, sf_dir: str, n_iter: int = N_ITER, lr: int = LR
+) -> dict[int, int]:
+    """Session memo of :func:`train_weights` over the corpus: every
+    consumer (scoring, the report, the store build, the streaming
+    scorer) shares one training pass."""
+
+    def train() -> dict[int, int]:
+        feats = _features(load_documents(spark, sf_dir)).persist()
+        try:
+            return train_weights(spark, feats, n_iter=n_iter, lr=lr)
+        finally:
+            feats.unpersist()
+
+    return session_memo(
+        spark, "logreg_weights", sf_dir, {"n_iter": n_iter, "lr": int(lr)}, train
+    )
 
 
 def _score_output(docs: DataFrame, feats: DataFrame, wdf: DataFrame) -> DataFrame:
@@ -208,23 +222,11 @@ def logreg_score(
     probability of the positive class, rounded to 6; the 0.5 tie
     predicts positive (a fixed, engine-portable convention)."""
     docs = load_documents(spark, sf_dir)
-    feats = _features(docs).persist()
-    try:
-        key = (spark.sparkContext.applicationId, sf_dir, n_iter, int(lr))
-        w = _WEIGHT_CACHE.get(key)
-        if w is None:
-            w = train_weights(spark, feats, n_iter=n_iter, lr=lr)
-            _WEIGHT_CACHE[key] = w
-        wdf = spark.createDataFrame(
-            [(b, u / 1e9) for b, u in w.items()], "b bigint, w double"
-        )
-        # materialization happens at the driver's collect; the persisted
-        # features back both the training jobs and this final plan
-        return _score_output(docs, feats, wdf)
-    finally:
-        # the returned plan re-derives features if the cache is gone;
-        # unpersisting here keeps the session footprint bounded
-        feats.unpersist()
+    w = trained_weights(spark, sf_dir, n_iter=n_iter, lr=lr)
+    wdf = spark.createDataFrame(
+        [(b, u / 1e9) for b, u in w.items()], "b bigint, w double"
+    )
+    return _score_output(docs, _features(docs), wdf)
 
 
 def logreg_store_build(
@@ -245,16 +247,7 @@ def logreg_store_build(
     import json as _json
     import os as _os
 
-    docs = load_documents(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, n_iter, int(lr))
-    w = _WEIGHT_CACHE.get(key)
-    if w is None:
-        feats = _features(docs).persist()
-        try:
-            w = train_weights(spark, feats, n_iter=n_iter, lr=lr)
-        finally:
-            feats.unpersist()
-        _WEIGHT_CACHE[key] = w
+    w = trained_weights(spark, sf_dir, n_iter=n_iter, lr=lr)
     spark.createDataFrame(
         [(int(b), int(u)) for b, u in w.items()], "b bigint, w_nano bigint"
     ).coalesce(1).write.mode("overwrite").parquet(
@@ -283,17 +276,13 @@ def logreg_store_score(
 
 
 def logreg_score_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate entry: build-once into the deterministic temp dir, score
-    from the store; == logreg_score (same oracle SQL)."""
-    import hashlib as _hashlib
-    import os as _os
-    import tempfile as _tempfile
-
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = _os.path.join(_tempfile.gettempdir(), f"svs_logregstore_{tag}")
-    if not _os.path.exists(_os.path.join(path, "_logreg_meta.json")):
-        logreg_store_build(spark, sf_dir, path)
-    return logreg_store_score(spark, sf_dir, path)
+    """Gate entry: build the store once (``artifacts.persisted``), score
+    from it; == logreg_score (same oracle SQL)."""
+    return persisted(
+        "logregstore", sf_dir, {"n_iter": N_ITER, "lr": int(LR)},
+        lambda out: logreg_store_build(spark, sf_dir, out),
+        lambda path: logreg_store_score(spark, sf_dir, path),
+    )
 
 
 def logreg_report(

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..config import sort_descending, validate_strategy
 from ..functions.distance import score_expr
+from .index import _read_clusters
 from .pq import PqIndex, build_pq_index, load_pq_index, pq_adc_topk
 
 _META_FILE = "_opq_meta.json"
@@ -245,7 +246,7 @@ def build_ivfopq_index(
     partition column — directory pruning and rotated-ADC byte
     compression multiply, exactly like IVFADC, with the rotation's
     lower per-code distortion on top."""
-    src = spark.read.parquet(ivf_index.path).select(
+    src = _read_clusters(spark, ivf_index).select(
         F.col(ivf_index.id_col).alias("id"),
         F.col(ivf_index.vec_col).alias("embedding"),
         "cluster_id",

@@ -77,6 +77,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import persisted
 from . import dedup
 from .curation import decontaminate_documents, pack_chunks
 from .sampling import _draw, _threshold_hex, document_splits
@@ -182,18 +183,10 @@ def production_verdict_store_build(
     "never scored" — the staleness signal for a corpus that grew
     since the build (the tiles are corpus-defined, so a grown corpus
     needs a REBUILD, not an upsert). Returns the passing-row count."""
-    import json as _json
-    import os as _os
-
     df = production_quality_flags(
         spark, sf_dir, kn5_store=kn5_store, keep_all=True
     )
     df.write.mode("overwrite").parquet(path)
-    # format marker: build-once consumers check THIS (not _SUCCESS) so
-    # a store from the pre-keep_all layout rebuilds instead of
-    # tripping the staleness fence on its missing failed-rows
-    with open(_os.path.join(path, "_verdict_meta.json"), "w") as f:
-        _json.dump({"keep_all": True}, f)
     return spark.read.parquet(path).filter("quality_ok").count()
 
 
@@ -876,30 +869,21 @@ def snapshot_loop_production_store(
 ) -> DataFrame:
     """Gate entry: the production-gate snapshot loop served by the
     PERSISTED store chain (VERDICT r10 #2+#3) — the KN5 model store
-    is built once (deterministic temp dir, the
-    ``incremental_dedup_store`` convention), the gate verdict table
+    is built once (``artifacts.persisted``), the gate verdict table
     is built once FROM it, and the loop probes the verdict parquet.
     Must equal ``incremental_snapshot_loop(quality_gate="production")``
     row-for-row (store == recompute at gate scope), so it shares that
     entry's oracle SQL."""
-    import hashlib
-    import os
-    import tempfile
-
     from . import lm_store
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    kn5_path = os.path.join(tempfile.gettempdir(), f"svs_kn5store_{tag}")
-    verdict_path = os.path.join(
-        tempfile.gettempdir(), f"svs_prodverdict_{tag}"
+    kn5_path = lm_store.corpus_kn5_store(spark, sf_dir)
+    verdict_path = persisted(
+        "prodverdict", sf_dir, {"kn5_store": kn5_path},
+        lambda out: production_verdict_store_build(
+            spark, sf_dir, out, kn5_store=kn5_path
+        ),
+        lambda path: path,
     )
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    if not os.path.exists(os.path.join(kn5_path, "_kn5_meta.json")):
-        lm_store.kn5_store_build(spark, docs, kn5_path)
-    if not os.path.exists(os.path.join(verdict_path, "_verdict_meta.json")):
-        production_verdict_store_build(
-            spark, sf_dir, verdict_path, kn5_store=kn5_path
-        )
     return incremental_snapshot_loop(
         spark,
         sf_dir,

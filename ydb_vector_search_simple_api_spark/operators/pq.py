@@ -61,6 +61,7 @@ from pyspark.sql import types as T
 from . import tombstones
 from ..config import DEFAULT_K, sort_descending, validate_strategy
 from ..functions.distance import score_expr
+from .index import _read_clusters
 from .tree import _lloyd
 
 _META_FILE = "_pq_meta.json"
@@ -642,7 +643,7 @@ def build_ivfpq_index(
     keeping ``cluster_id`` as the codes partition column. The returned
     PqIndex reads ~(search_top_size / n_clusters) of the code bytes
     when searched through :func:`ivfpq_search`."""
-    src = spark.read.parquet(ivf_index.path).select(
+    src = _read_clusters(spark, ivf_index).select(
         F.col(ivf_index.id_col).alias("id"),
         F.col(ivf_index.vec_col).alias("embedding"),
         "cluster_id",
@@ -698,9 +699,7 @@ def ivfpq_search(
         tombstones.apply_tombstones(
             spark,
             ivf_index.path,
-            spark.read.parquet(ivf_index.path).filter(
-                F.col("cluster_id").isin(keep)
-            ),
+            _read_clusters(spark, ivf_index, keep),
             id_col=ivf_index.id_col,
         )
         .select(

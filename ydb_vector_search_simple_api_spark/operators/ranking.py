@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from ..config import sort_descending, validate_strategy
 from ..functions import text as TXT
 from ..functions.distance import score_expr
+from ..artifacts import persisted
 from ..sources.store import load_documents, load_embeddings
 
 #: deterministic gate query (terms present in the synthetic corpus)
@@ -693,13 +694,10 @@ def phrase_search_store(
     spark: SparkSession, sf_dir: str, phrase: Sequence[str] = PHRASE_TERMS
 ) -> DataFrame:
     """Gate entry: phrase serving through the positional store built
-    once per session (the store-cache convention) — shares
-    ``phrase_search``'s oracle, proving store path == scan path."""
-    import hashlib
-    import tempfile
-
-    tag = hashlib.md5(f"{sf_dir}:pos".encode()).hexdigest()[:8]
-    out = os.path.join(tempfile.gettempdir(), f"svs_pospost_{tag}")
-    if not os.path.exists(os.path.join(out, "postings", "_SUCCESS")):
-        build_positional_postings(spark, load_documents(spark, sf_dir), out)
-    return phrase_search_indexed(spark, out, phrase)
+    once (``artifacts.persisted``) — shares ``phrase_search``'s
+    oracle, proving store path == scan path."""
+    return persisted(
+        "pospost", sf_dir, {},
+        lambda out: build_positional_postings(spark, load_documents(spark, sf_dir), out),
+        lambda path: phrase_search_indexed(spark, path, phrase),
+    )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import persisted
 from ..sources.store import load_events
 
 DEFAULT_LG_K = 12
@@ -110,18 +111,14 @@ def daily_user_sketches(
     n_users_exact) — rows-only (binary sketches are engine-specific);
     the <=5% relative-error and fold-equality contracts are pinned in
     tests/test_sketch_store.py."""
-    import hashlib
-    import os
-    import tempfile
-
     ev = load_events(spark, sf_dir).select(
         F.to_date("ts").alias("day"), "event_type", "user_id"
     )
-    tag = hashlib.md5(f"{sf_dir}:{lg_k}".encode()).hexdigest()[:8]
-    store = os.path.join(tempfile.gettempdir(), f"svs_hll_{tag}")
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        build_hll_store(ev, store, ["day", "event_type"], "user_id", lg_k)
-    est = hll_rollup_estimate(spark, store, ["day"])
+    est = persisted(
+        "hll", sf_dir, {"lg_k": lg_k},
+        lambda out: build_hll_store(ev, out, ["day", "event_type"], "user_id", lg_k),
+        lambda path: hll_rollup_estimate(spark, path, ["day"]),
+    )
     exact = ev.groupBy("day").agg(
         F.count_distinct("user_id").alias("n_users_exact")
     )

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from . import tombstones
 from ..config import validate_strategy
 from ..functions.distance import score_expr
+from .index import _read_clusters
 from .search import _order_cols
 
 
@@ -379,7 +380,7 @@ def build_ivfsq_index(spark: SparkSession, ivf_index, out_dir: str) -> SqIndex:
     of the rows AND ~1/2 of the parquet bytes per row it does read,
     with near-exact codes (tight shortlists; see the recall contract
     in tests/test_sq.py)."""
-    src = spark.read.parquet(ivf_index.path).select(
+    src = _read_clusters(spark, ivf_index).select(
         F.col(ivf_index.id_col).alias("id"),
         F.col(ivf_index.vec_col).alias("embedding"),
         "cluster_id",
@@ -449,8 +450,7 @@ def ivfsq_search(
         .limit(int(n_short))
     )
     vecs = (
-        spark.read.parquet(ivf_index.path)
-        .filter(F.col("cluster_id").isin(keep))
+        _read_clusters(spark, ivf_index, keep)
         .select(
             F.col(ivf_index.id_col).alias("id"),
             F.col(ivf_index.vec_col).alias("embedding"),

@@ -323,16 +323,14 @@ def tdigest_quantiles(
     = hash(event_id) — deterministic) and serve p50/p90/p99 from the
     centroid state. Rows-only (no engine replays a t-digest); rank
     accuracy vs exact quantiles pinned in tests/test_tdigest.py."""
-    import hashlib
-    import tempfile
-
+    from ..artifacts import persisted
     from ..sources.store import load_events
 
-    tag = hashlib.md5(f"{sf_dir}:{delta}".encode()).hexdigest()[:8]
-    store = os.path.join(tempfile.gettempdir(), f"svs_td_{tag}")
-    if not os.path.exists(os.path.join(store, META)):
-        ev = load_events(spark, sf_dir).select("event_type", "value", "event_id")
-        build_tdigest_store(
-            ev, store, "event_type", "value", "event_id", delta=delta
-        )
-    return tdigest_store_quantiles(spark, store)
+    return persisted(
+        "td", sf_dir, {"delta": delta},
+        lambda out: build_tdigest_store(
+            load_events(spark, sf_dir).select("event_type", "value", "event_id"),
+            out, "event_type", "value", "event_id", delta=delta,
+        ),
+        lambda path: tdigest_store_quantiles(spark, path),
+    )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import persisted, session_memo
 from ..functions import text as TXT
 from ..sources.store import load_documents
 
@@ -983,18 +984,11 @@ def doc_bigram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOCPAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def docpair_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped cache of :func:`doc_bigram_pairs` — a pure
-    function of the corpus files (the bigram_scores_cached contract).
-    Lives at the cache layer: the library operators stay lazy and
-    take the aggregate as an optional argument instead."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DOCPAIR_CACHE:
-        _DOCPAIR_CACHE[key] = doc_bigram_pairs(spark, sf_dir)
-    return _DOCPAIR_CACHE[key]
+    """Session memo of :func:`doc_bigram_pairs` — a pure function of
+    the corpus files. Lives at the cache layer: the library operators
+    stay lazy and take the aggregate as an optional argument instead."""
+    return session_memo(spark, "docpair", sf_dir, {}, lambda: doc_bigram_pairs(spark, sf_dir))
 
 
 def kneser_ney_logprob(
@@ -1231,19 +1225,12 @@ def _kn5_score(docg: DataFrame, c5: DataFrame, discount: float) -> DataFrame:
     )
 
 
-_KN5_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def kn5_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped cache of the per-doc 5-gram KN scores — pure
-    function of the corpus files (the bigram_scores_cached contract);
-    shared by the logprob entry and the perplexity tiles."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KN5_CACHE:
-        _KN5_CACHE[key] = kneser_ney5_logprob(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-    return _KN5_CACHE[key]
+    """Session memo of the per-doc 5-gram KN scores, shared by the
+    logprob entry and the perplexity tiles."""
+    return session_memo(spark, "kn5_scores", sf_dir, {}, lambda: (
+        kneser_ney5_logprob(spark, sf_dir).localCheckpoint(eager=True)
+    ))
 
 
 def kneser_ney5_modified_logprob(
@@ -1415,18 +1402,11 @@ def _mkn5_score(docg: DataFrame, c5: DataFrame) -> DataFrame:
     )
 
 
-_MKN5_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def mkn5_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped cache of the per-doc MODIFIED-KN scores — the
-    kn5_scores_cached contract (pure function of the corpus files)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MKN5_CACHE:
-        _MKN5_CACHE[key] = kneser_ney5_modified_logprob(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return _MKN5_CACHE[key]
+    """Session memo of the per-doc MODIFIED-KN scores."""
+    return session_memo(spark, "mkn5_scores", sf_dir, {}, lambda: (
+        kneser_ney5_modified_logprob(spark, sf_dir).localCheckpoint(eager=True)
+    ))
 
 
 def perplexity_buckets_kn5(
@@ -1566,24 +1546,15 @@ def source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIGRAM_SCORE_CACHE: dict = {}
-
-
 def bigram_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped cache of the :func:`bigram_logprob` score table
-    (doc_id, n_bigrams, mean_bigram_logprob) — a pure function of the
-    corpus files, like the scan cache in ``sources/store.py``. Both
-    the raw score entry and :func:`perplexity_buckets` read it, so
-    the corpus-sized tokenize+explode+aggregate pipeline runs ONCE
-    per (session, corpus) instead of once per caller. Keyed on the
-    Spark applicationId so a restarted session never sees a dead
-    checkpoint."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BIGRAM_SCORE_CACHE:
-        _BIGRAM_SCORE_CACHE[key] = bigram_logprob(
-            spark, sf_dir, docpair=docpair_cached(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _BIGRAM_SCORE_CACHE[key]
+    """Session memo of the :func:`bigram_logprob` score table
+    (doc_id, n_bigrams, mean_bigram_logprob). Both the raw score entry
+    and :func:`perplexity_buckets` read it, so the corpus-sized
+    tokenize+explode+aggregate pipeline runs ONCE per (session, corpus)
+    instead of once per caller."""
+    return session_memo(spark, "bigram_scores", sf_dir, {}, lambda: bigram_logprob(
+        spark, sf_dir, docpair=docpair_cached(spark, sf_dir)
+    ).localCheckpoint(eager=True))
 
 
 #: Unicode scripts profiled by :func:`script_profile` — (column name,
@@ -2262,26 +2233,21 @@ def line_dedup_store(
     """Gate entry: the store-served line screen must equal
     :func:`line_dedup` exactly (same oracle SQL) — built
     INCREMENTALLY (existing split build + incoming split upsert, the
-    ``incremental_dedup_store`` convention) into a deterministic temp
-    dir, then the full corpus screens against it."""
-    import hashlib as _hashlib
-    import os as _os
-    import tempfile as _tempfile
-
+    ``incremental_dedup_store`` convention) once
+    (``artifacts.persisted``), then the full corpus screens against it."""
     from .sampling import _draw, _threshold_hex
 
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = _os.path.join(_tempfile.gettempdir(), f"svs_linestore_{tag}")
-    if not _os.path.exists(_os.path.join(path, "_line_meta.json")):
-        thr = _threshold_hex(0.9)
-        line_hash_store_build(
-            spark, docs.filter(_draw(F.col("doc_id")) < F.lit(thr)), path
-        )
-        line_hash_store_upsert(
-            spark, docs.filter(_draw(F.col("doc_id")) >= F.lit(thr)), path
-        )
-    return line_dedup_from_store(spark, docs, path, min_occ=min_occ)
+    draw, thr = _draw(F.col("doc_id")), F.lit(_threshold_hex(0.9))
+
+    def build(out: str) -> None:
+        line_hash_store_build(spark, docs.filter(draw < thr), out)
+        line_hash_store_upsert(spark, docs.filter(draw >= thr), out)
+
+    return persisted(
+        "linestore", sf_dir, {}, build,
+        lambda path: line_dedup_from_store(spark, docs, path, min_occ=min_occ),
+    )
 
 
 def c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:

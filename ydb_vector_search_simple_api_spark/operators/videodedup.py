@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
+from ..artifacts import persisted
 from ..sources.store import load_documents
 from .dedup import _ensure_parallelism
 from .imagededup import dhash64
@@ -107,22 +108,13 @@ _SHINGLE_SCHEMA = T.StructType(
 
 def video_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, key, t) sequence landmarks for every document's
-    synthetic clip. Session-cached to parquet per sf_dir (pure
-    function of the corpus; rm -rf /tmp/svs_vshg_* after changing
-    the frame-hash or shingle code)."""
-    import hashlib as _hashlib
-    import os
-    import tempfile
-
-    cache = os.path.join(
-        tempfile.gettempdir(),
-        f"svs_vshg_{_hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
+    synthetic clip, persisted to parquet (``artifacts.persisted``; a
+    pure function of the corpus)."""
+    return persisted(
+        "vshg", sf_dir, {},
+        lambda out: _video_shingles_uncached(spark, sf_dir).write.parquet(out),
+        spark.read.parquet,
     )
-    if os.path.exists(cache):
-        return spark.read.parquet(cache)
-    df = _video_shingles_uncached(spark, sf_dir)
-    df.write.mode("overwrite").parquet(cache)
-    return spark.read.parquet(cache)
 
 
 def _video_shingles_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:

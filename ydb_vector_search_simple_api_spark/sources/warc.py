@@ -103,23 +103,19 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate entry: export the documents table as a WET archive (once
-    per session, the store-cache convention), read it back through the
+    """Gate entry: export the documents table as a WET archive (once,
+    ``artifacts.persisted``), read it back through the
     record-split reader, and surface per-doc digests. The oracle is a
     plain projection of ``documents`` — equality proves the writer and
     the distributed parser are exact inverses."""
-    import hashlib
-    import os
-    import tempfile
-
+    from ..artifacts import persisted
     from .store import load_documents
 
     docs = load_documents(spark, sf_dir).select("doc_id", "text", "lang", "source")
-    tag = hashlib.md5(f"{sf_dir}:wet".encode()).hexdigest()[:8]
-    out = os.path.join(tempfile.gettempdir(), f"svs_wet_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        write_wet_export(docs, out)
-    parsed = read_wet(spark, out)
+    parsed = persisted(
+        "wet", sf_dir, {}, lambda out: write_wet_export(docs, out),
+        lambda path: read_wet(spark, path),
+    )
     return parsed.select(
         "doc_id",
         "lang",

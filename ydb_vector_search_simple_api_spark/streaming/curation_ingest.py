@@ -274,13 +274,8 @@ def stream_logreg_score(
     docs = load_documents(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    # train once (session weight cache) — the offline half
-    feats = LR._features(docs)
-    key = (spark.sparkContext.applicationId, sf_dir, LR.N_ITER, int(LR.LR))
-    w = LR._WEIGHT_CACHE.get(key)
-    if w is None:
-        w = LR.train_weights(spark, feats, n_iter=LR.N_ITER, lr=LR.LR)
-        LR._WEIGHT_CACHE[key] = w
+    # train once per session — the offline half
+    w = LR.trained_weights(spark, sf_dir)
     wdf = spark.createDataFrame(
         [(b, u / 1e9) for b, u in w.items()], "b bigint, w double"
     )
