@@ -26,6 +26,7 @@ from ydb_vector_search_simple_api_spark import (
 )
 from ydb_vector_search_simple_api_spark import oracles_curation
 from ydb_vector_search_simple_api_spark.artifacts import persisted, session_memo
+from ydb_vector_search_simple_api_spark.branches import run_branches
 from ydb_vector_search_simple_api_spark.operators import (
     curation,
     dedup,
@@ -753,13 +754,6 @@ def _ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "id")
         .localCheckpoint(eager=True)
     )
-    # round 12 (guide §2.6 — overlap independent jobs): the four width
-    # probes are independent reads of the exact checkpoint + the
-    # session-cached index, so they run concurrently from a thread
-    # pool instead of four sequential count jobs; pool.map preserves
-    # the width order, values unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _one(width: int) -> tuple[int, float]:
         got = ivf.ivf_knn_join(
             spark, idx, queries_df, k=k, strategy="CosineSimilarity",
@@ -768,8 +762,12 @@ def _ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         hits = got.join(exact, ["query_id", "id"], "left_semi").count()
         return (int(width), round(hits / float(k * n_q), 6))
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        out = list(pool.map(_one, (1, 2, 4, idx.n_clusters)))
+    # the width probes are independent reads of the exact checkpoint
+    # and the session's index
+    out = list(run_branches(spark, {
+        f"ann-recall/width-{w}": partial(_one, w)
+        for w in (1, 2, 4, idx.n_clusters)
+    }).values())
     return spark.createDataFrame(out, "width int, recall double")
 
 

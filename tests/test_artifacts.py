@@ -48,7 +48,7 @@ def _write_marker(out: str) -> None:
     Path(out, "x").write_text("built")
 
 
-def test_rewritten_input_rebuilds_the_index(spark, tmp_path, tmp_root, monkeypatch):
+def test_rewritten_input_rebuilds_the_index(spark, tmp_path, tmp_root):
     import __spark_entry__ as E
 
     sf = tmp_path / "sf"
@@ -60,13 +60,23 @@ def test_rewritten_input_rebuilds_the_index(spark, tmp_path, tmp_root, monkeypat
 
     table = pq.read_table(sf / "embeddings.parquet")
     pq.write_table(table.slice(0, 200), sf / "embeddings.parquet")
-    # the session's table scans are keyed by path (a separate cache);
-    # drop them so the rebuild reads the rewritten file
-    monkeypatch.setattr(store, "_SCAN_CACHE", {})
     second = E._ivf_index(spark, str(sf))
     assert ivf._read_clusters(spark, second).count() == 200
     assert second.path != first.path
     assert E._ivf_index(spark, str(sf)).path == second.path
+
+
+def test_table_grown_in_place_gets_a_fresh_scan(spark, tmp_path):
+    """The session's scan of a table is keyed by the file's size and
+    mtime, not only its path: a stale scan reads just the old file
+    length of the grown file, so it misses the later row groups."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    table = pq.read_table(os.path.join(SF_SMALL, "embeddings.parquet"))
+    pq.write_table(table.slice(0, 100), sf / "embeddings.parquet")
+    assert store.load_embeddings(spark, str(sf)).count() == 100
+    pq.write_table(table, sf / "embeddings.parquet", row_group_size=50)
+    assert store.load_embeddings(spark, str(sf)).count() == 500
 
 
 def _session(app):

@@ -24,6 +24,7 @@ import hashlib
 import json
 import os
 import shutil
+import stat
 import tempfile
 import threading
 from collections.abc import Callable
@@ -42,21 +43,29 @@ def _source_digest(filename: str) -> str:
         return hashlib.sha256(f.read()).hexdigest()
 
 
-def _listing(sf_dir: str) -> list[tuple[str, int, int]]:
+def listing(path: str) -> list[tuple[str, int, int]]:
+    """(relative name, size, ``mtime_ns``) of every file under
+    ``path``; a file lists itself, at the cost of one ``stat``."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return []
+    if not stat.S_ISDIR(st.st_mode):
+        return [(os.path.basename(path), st.st_size, st.st_mtime_ns)]
     out = []
-    for root, dirs, files in os.walk(sf_dir):
+    for root, dirs, files in os.walk(path):
         dirs.sort()
         for name in sorted(files):
             p = os.path.join(root, name)
             st = os.stat(p)
-            out.append((os.path.relpath(p, sf_dir), st.st_size, st.st_mtime_ns))
+            out.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
     return out
 
 
 def _key(kind: str, sf_dir: str, params: dict, builder: Callable) -> str:
     source = getattr(builder, "func", builder).__code__.co_filename
     blob = json.dumps(
-        [kind, params, _source_digest(source), _listing(sf_dir)],
+        [kind, params, _source_digest(source), listing(sf_dir)],
         sort_keys=True,
         default=str,
     )

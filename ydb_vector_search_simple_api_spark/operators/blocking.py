@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..branches import run_branches
+
 ROUND = 6
 
 
@@ -232,29 +234,16 @@ def sorted_neighborhood_multi_key(
     duplicates that escape pass 1 sort together when the text is
     read from the tail) unioned and deduplicated. Output as
     :func:`sorted_neighborhood_pairs`."""
-    # The two passes are INDEPENDENT and each is driver-blocking
-    # (snm_ranks' bucket-count collect + the two eager checkpoints),
-    # so run sequentially they serialize five small jobs each. Round
-    # 12 (guide §2.6 — overlap independent jobs): submit both passes
-    # from a 2-thread pool so each pass's tasks back-fill the
-    # executor slots the other leaves idle. Results byte-identical —
-    # only the job schedule changes.
-    from concurrent.futures import ThreadPoolExecutor
-
     rev = df.select(
         F.col(id_col).alias(id_col),
         F.reverse(F.col(text_col)).alias(text_col),
     )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(
-            sorted_neighborhood_pairs,
-            df, id_col, text_col, key_len, window, max_rel_dist,
-        )
-        f2 = pool.submit(
-            sorted_neighborhood_pairs,
-            rev, id_col, text_col, key_len, window, max_rel_dist,
-        )
-        p1, p2 = f1.result(), f2.result()
+    # the two passes are independent, driver-blocking job chains
+    args = (id_col, text_col, key_len, window, max_rel_dist)
+    p1, p2 = run_branches(df.sparkSession, {
+        "snm/forward": lambda: sorted_neighborhood_pairs(df, *args),
+        "snm/reversed": lambda: sorted_neighborhood_pairs(rev, *args),
+    }).values()
     # scores are key-independent (exact Levenshtein is reverse-
     # invariant), so a plain distinct-union merges the passes
     return p1.unionByName(p2).distinct()

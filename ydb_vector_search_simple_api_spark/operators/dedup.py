@@ -1348,47 +1348,28 @@ def incremental_dedup_arrow(
 ) -> "DataFrame":
     """Production twin of :func:`incremental_dedup`: the fingerprint
     layer is the Arrow rolling-hash winnowing kernel
-    (``textual.winnowing_digest_arrow``'s math — numpy uint64
-    polynomial hash + stride-tricks sliding minima, ~15x the md5
-    expression form), emitted as an exploded (doc, fp) stream straight
-    from ``mapInPandas``. Join topology is identical: content-hash
+    (``textual.winnow_fingerprints``, ~15x the md5 expression form),
+    emitted as an exploded (doc, fp) stream straight from
+    ``mapInPandas``. Join topology is identical: content-hash
     membership for exact dups, fingerprint left-semi for near-dup
     evidence. Rows-only in the gate (the md5 form carries the oracle);
     cross-variant agreement pinned in tests/test_dedup.py."""
-    import numpy as np
-    import pandas as pd
     import pyspark.sql.types as T
 
     from ..sources.store import load_documents
     from .sampling import _draw, _threshold_hex
-
-    P = np.uint64(1099511628211)
+    from .textual import winnow_fingerprints
 
     def batch(it):
-        pw = P ** np.arange(k - 1, -1, -1, dtype=np.uint64)
         for pdf in it:
-            ids, sides, fps_out = [], [], []
-            for doc_id, side, text in zip(pdf["doc_id"], pdf["side"], pdf["text"]):
-                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(
-                    np.uint64
-                )
-                L = len(b) - k + 1
-                if L <= 0:
-                    continue
-                H = np.zeros(L, dtype=np.uint64)
-                for j in range(k):
-                    H += b[j : j + L] * pw[j]
-                if L >= window:
-                    sw = np.lib.stride_tricks.sliding_window_view(H, window)
-                    fps = np.unique(sw.min(axis=1))
-                else:
-                    fps = np.unique([H.min()])
-                n = len(fps)
-                ids.extend([doc_id] * n)
-                sides.extend([side] * n)
+            fps = [winnow_fingerprints(t, k, window) for t in pdf["text"]]
+            n = [len(f) for f in fps]
+            yield pd.DataFrame({
+                "doc_id": np.repeat(pdf["doc_id"].to_numpy(), n),
+                "side": np.repeat(pdf["side"].to_numpy(), n),
                 # int64 reinterpret: Spark has no uint64
-                fps_out.extend(fps.astype(np.int64).tolist())
-            yield pd.DataFrame({"doc_id": ids, "side": sides, "fp": fps_out})
+                "fp": np.concatenate([np.empty(0, np.uint64), *fps]).astype(np.int64),
+            })
 
     thr = _threshold_hex(existing_frac)
     side = F.when(

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..branches import run_branches
 from ..functions import text as TXT
 from ..sources.store import load_documents
 
@@ -58,51 +59,26 @@ def multimodal_curation_report(
     def later_ids(pairs: DataFrame) -> DataFrame:
         return pairs.select(F.col("id_b").alias("doc_id")).distinct()
 
-    # the four modality pair builders are independent jobs; run them
-    # concurrently so each builder's small-stage tail back-fills the
-    # executor slots the others leave idle (guide §2.6 — the snapshot-
-    # loop branch-pool pattern). Each branch pins only its duplicate
-    # ID SET — O(duplicated docs) rows, never the corpus — so the
-    # eager checkpoint is duplicate-fraction-sized at 100 TB.
-    def _text_branch() -> DataFrame:
-        spark.sparkContext.setJobDescription("mm-curation: text branch")
-        return later_ids(
+    # the four modality pair builders are independent jobs; each
+    # branch pins only its duplicate ID SET (O(duplicated docs) rows,
+    # never the corpus)
+    text_dup, image_dup, video_dup, audio_dup = run_branches(spark, {
+        "mm-curation/text": lambda: later_ids(
             dedup.ngram_jaccard_pairs(docs, n=3, threshold=jaccard_threshold)
-        ).localCheckpoint(eager=True)
-
-    def _image_branch() -> DataFrame:
-        spark.sparkContext.setJobDescription("mm-curation: image branch")
-        return later_ids(
+        ).localCheckpoint(eager=True),
+        "mm-curation/image": lambda: later_ids(
             imagededup.image_phash_dedup(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-
-    def _video_branch() -> DataFrame:
-        spark.sparkContext.setJobDescription("mm-curation: video branch")
-        return later_ids(
+        ).localCheckpoint(eager=True),
+        "mm-curation/video": lambda: later_ids(
             videodedup.video_sequence_dedup(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-
-    def _audio_branch() -> DataFrame:
+        ).localCheckpoint(eager=True),
         # audio probes ARE the later docs (probe_id = base_id + 9)
-        spark.sparkContext.setJobDescription("mm-curation: audio branch")
-        return (
-            audiofp.audio_fingerprint_match(spark, sf_dir)
-            .select(F.col("probe_id").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        text_f = pool.submit(_text_branch)
-        image_f = pool.submit(_image_branch)
-        audio_f = pool.submit(_audio_branch)
-        video_f = pool.submit(_video_branch)
-        text_dup = text_f.result()
-        image_dup = image_f.result()
-        audio_dup = audio_f.result()
-        video_dup = video_f.result()
+        "mm-curation/audio": lambda: audiofp.audio_fingerprint_match(
+            spark, sf_dir
+        ).select(F.col("probe_id").alias("doc_id")).distinct().localCheckpoint(
+            eager=True
+        ),
+    }).values()
 
     out = spine
     for name, ids in (
@@ -159,55 +135,25 @@ def multimodal_safe_splits(
 
     docs = load_documents(spark, sf_dir)
 
-    # the four modality edge builders are independent jobs — pooled
-    # like the curation report's branches (guide §2.6); each pins only
-    # its near-dup EDGE LIST (O(duplicated docs) rows at 100 TB).
-    def _text_edges() -> DataFrame:
-        spark.sparkContext.setJobDescription("mm-splits: text edges")
-        return (
-            dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.8)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True)
-        )
-
-    def _image_edges() -> DataFrame:
-        spark.sparkContext.setJobDescription("mm-splits: image edges")
-        return (
-            imagededup.image_phash_dedup(spark, sf_dir)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True)
-        )
-
-    def _video_edges() -> DataFrame:
-        spark.sparkContext.setJobDescription("mm-splits: video edges")
-        return (
-            videodedup.video_sequence_dedup(spark, sf_dir)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True)
-        )
-
-    def _audio_edges() -> DataFrame:
-        spark.sparkContext.setJobDescription("mm-splits: audio edges")
-        return (
-            audiofp.audio_fingerprint_match(spark, sf_dir)
-            .select(
-                F.least("probe_id", "track_id").alias("id_a"),
-                F.greatest("probe_id", "track_id").alias("id_b"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        text_f = pool.submit(_text_edges)
-        image_f = pool.submit(_image_edges)
-        audio_f = pool.submit(_audio_edges)
-        video_f = pool.submit(_video_edges)
-        text = text_f.result()
-        image = image_f.result()
-        audio = audio_f.result()
-        video = video_f.result()
+    # the four modality edge builders are independent jobs; each pins
+    # only its near-dup EDGE LIST (O(duplicated docs) rows)
+    text, image, video, audio = run_branches(spark, {
+        "mm-splits/text": lambda: dedup.ngram_jaccard_pairs(
+            docs, n=3, threshold=0.8
+        ).select("id_a", "id_b").localCheckpoint(eager=True),
+        "mm-splits/image": lambda: imagededup.image_phash_dedup(
+            spark, sf_dir
+        ).select("id_a", "id_b").localCheckpoint(eager=True),
+        "mm-splits/video": lambda: videodedup.video_sequence_dedup(
+            spark, sf_dir
+        ).select("id_a", "id_b").localCheckpoint(eager=True),
+        "mm-splits/audio": lambda: audiofp.audio_fingerprint_match(
+            spark, sf_dir
+        ).select(
+            F.least("probe_id", "track_id").alias("id_a"),
+            F.greatest("probe_id", "track_id").alias("id_b"),
+        ).localCheckpoint(eager=True),
+    }).values()
     edges = text.unionByName(image).unionByName(video).unionByName(audio)
     comp = connected_components_twostar(edges).select(
         F.col("doc_id").alias("c_doc_id"), "component_id"

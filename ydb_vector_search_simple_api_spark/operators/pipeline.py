@@ -78,6 +78,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..artifacts import persisted
+from ..branches import run_branches
 from . import dedup
 from .curation import decontaminate_documents, pack_chunks
 from .sampling import _draw, _threshold_hex, document_splits
@@ -417,18 +418,9 @@ def incremental_snapshot_loop(
     docs = load_documents(spark, sf_dir)
     incoming = docs.filter(_draw(F.col("doc_id")) >= F.lit(thr))
 
-    # stages 1 + 2a + 2b — the three EXPENSIVE independent branches
-    # (the incremental screen, the benchmark-contamination probe, the
-    # quality gate) are materialized CONCURRENTLY from a small thread
-    # pool (optimization guide §2.6 — Spark happily runs several jobs
-    # at once inside one application; each branch's tiny tasks leave
-    # most executor slots idle, so the next branch's tasks back-fill
-    # them). The branches touch disjoint session caches, every
-    # materialization is delta- or flag-sized, and the joined rows are
-    # byte-identical to the sequential form — only the job schedule
-    # changes. Measured (round 12, isolated best-of-3 at sf0.1):
-    # incremental_snapshot_loop 8.64 s → 6.91 s with this + the pack
-    # pushdown below.
+    # stages 1, 1b, 1c, 2a and 2b are independent branches, each
+    # materialized at delta or flag size and run concurrently below
+    # (run_branches); the joined rows are the sequential form's.
     #
     # stage 1 — screen against the existing corpus; n_fps is the
     # doc's own fingerprint count (winnow arrays are distinct per doc
@@ -517,10 +509,7 @@ def incremental_snapshot_loop(
         # broadcast; the existing side streams through one keyed max —
         # no shuffle of the corpus, nothing corpus-sized collected.
         # Per-pair ROUND(6) before the max (order-free, oracle-exact).
-        # Round 12: a fourth POOLED branch (it depends only on the
-        # corpus tables + the loop's persisted centroids, independent
-        # of the other three), eagerly pinned at delta size instead of
-        # serialized into the screened-checkpoint job.
+        # Pinned eagerly at delta size.
         from ..functions.distance import l2_norm
 
         embs_all = load_embeddings(spark, sf_dir).select(
@@ -586,9 +575,7 @@ def incremental_snapshot_loop(
         # counts FOLD into the persisted store (ivf_upsert-style side
         # effect) and hotness reads the folded counts — equal to the
         # recompute when the store held the existing corpus (pinned).
-        # Round 12: a pooled branch — it depends only on the corpus
-        # tables / the line store, independent of the other branches;
-        # the result is pinned at delta size (one evidence row per
+        # The result is pinned at delta size (one evidence row per
         # incoming doc).
         from . import textual as textual_mod
 
@@ -666,23 +653,21 @@ def incremental_snapshot_loop(
             .localCheckpoint(eager=True)
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        screen_f = pool.submit(_screen_branch)
-        quality_f = pool.submit(_quality_branch)
-        contaminated_f = pool.submit(_contaminated_branch)
-        sem_f = (
-            pool.submit(_sem_branch)
-            if semantic_threshold is not None
-            else None
-        )
-        line_f = pool.submit(_line_branch) if line_screen else None
-        screen = screen_f.result()
-        quality = quality_f.result()
-        contaminated = contaminated_f.result()
-        sem = sem_f.result() if sem_f is not None else None
-        line_ev = line_f.result() if line_f is not None else None
+    branches = {
+        "snapshot-loop/screen": _screen_branch,
+        "snapshot-loop/quality": _quality_branch,
+        "snapshot-loop/contaminated": _contaminated_branch,
+    }
+    if semantic_threshold is not None:
+        branches["snapshot-loop/semantic"] = _sem_branch
+    if line_screen:
+        branches["snapshot-loop/lines"] = _line_branch
+    got = run_branches(spark, branches)
+    screen = got["snapshot-loop/screen"]
+    quality = got["snapshot-loop/quality"]
+    contaminated = got["snapshot-loop/contaminated"]
+    sem = got.get("snapshot-loop/semantic")
+    line_ev = got.get("snapshot-loop/lines")
     # canonical WITHIN the incoming batch: min doc_id per content hash
     canon = (
         incoming.select(

@@ -28,6 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..branches import run_branches
 from ..functions import text as TXT
 from ..sources.store import load_documents
 
@@ -415,12 +416,9 @@ def stream_snapshot_loop(
 
     # static probe tables, materialized ONCE (hash/fp columns only —
     # the existing corpus never re-scans per trigger). The builds are
-    # INDEPENDENT jobs over small data, so they run CONCURRENTLY from
-    # a thread pool together with the landing write (optimization
-    # guide §2.6 — back-fill idle executor slots with the next job's
-    # tasks); each build's result is byte-identical to the sequential
-    # form, only the job schedule changes. The landing write keeps
-    # its internal shard order (one pool task, sequential inside).
+    # independent jobs over small data, run concurrently with the
+    # landing write (run_branches). The landing write keeps its
+    # internal shard order (one branch, sequential inside).
     def _b_landing():
         write_shard_landing(incoming, landing, n_shards)
 
@@ -528,29 +526,24 @@ def stream_snapshot_loop(
             .localCheckpoint(eager=True)
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as _pool:
-        landing_f = _pool.submit(_b_landing)
-        ex_h_f = _pool.submit(_b_ex_h)
-        ex_f_f = _pool.submit(_b_ex_f)
-        contaminated_f = _pool.submit(_b_contaminated)
-        has_vec_f = _pool.submit(_b_has_vec)
-        sem_f = (
-            _pool.submit(_b_sem) if semantic_threshold is not None else None
-        )
-        quality_f = (
-            _pool.submit(_b_quality) if quality_gate == "production" else None
-        )
-        landing_f.result()
-        ex_h = ex_h_f.result()
-        ex_f = ex_f_f.result()
-        contaminated = contaminated_f.result()
-        has_vec = has_vec_f.result()
-        ex_vec = in_vec_all = None
-        if sem_f is not None:
-            ex_vec, in_vec_all = sem_f.result()
-        quality_static = quality_f.result() if quality_f is not None else None
+    branches = {
+        "stream-snapshot-loop/landing": _b_landing,
+        "stream-snapshot-loop/existing-hashes": _b_ex_h,
+        "stream-snapshot-loop/existing-fps": _b_ex_f,
+        "stream-snapshot-loop/contaminated": _b_contaminated,
+        "stream-snapshot-loop/has-vec": _b_has_vec,
+    }
+    if semantic_threshold is not None:
+        branches["stream-snapshot-loop/semantic"] = _b_sem
+    if quality_gate == "production":
+        branches["stream-snapshot-loop/quality"] = _b_quality
+    got = run_branches(spark, branches)
+    ex_h = got["stream-snapshot-loop/existing-hashes"]
+    ex_f = got["stream-snapshot-loop/existing-fps"]
+    contaminated = got["stream-snapshot-loop/contaminated"]
+    has_vec = got["stream-snapshot-loop/has-vec"]
+    ex_vec, in_vec_all = got.get("stream-snapshot-loop/semantic", (None, None))
+    quality_static = got.get("stream-snapshot-loop/quality")
 
     schema = incoming.schema
     sem_cols = (
