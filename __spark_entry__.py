@@ -783,9 +783,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
     # ============ oracle-backed entries (hash-match gate) ============
-    # O1/O4/O5/O8/O9: exact top-k; cosine in-cap, the other four
-    # strategy twins ride the overflow window (same code path, same
-    # oracle family — checked by tools/check_oracle.py)
+    # O1/O4/O5/O8/O9: exact top-k; the other four strategy twins ride
+    # the overflow window (same code path, same oracle family — checked
+    # by tools/check_oracle.py)
     q["topk_cosine"] = _mk_topk("CosineSimilarity", k=10)
     # O6: conjunctive equality filter (vendor == lang column)
     q["topk_cosine_filtered"] = _mk_topk(
@@ -799,9 +799,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     # batch kNN join (extension: similarity search at scale)
     q["knn_join_cosine"] = _mk_knn_join("CosineSimilarity", k=5, n_queries=8)
-    # O2/O3: ANN index at full search width == exact (strong oracle);
-    # the two-level tree is the YDB-shaped index, flat IVF is its
-    # overflow sibling (identical oracle SQL)
     # distributed-assignment ANN join at full width == exact (no driver
     # collect of the query side); same oracle as knn_join
     q["ivf_knn_join_dist"] = _mk_ivf_knn_join_dist("CosineSimilarity", k=5, n_queries=8, width=None)
@@ -810,391 +807,197 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kmeans_tree_full"] = _mk_tree("CosineSimilarity", k=10, width=None)
 
     # ---- north-star extensions: text analysis over documents
-    # round-6 rotation: unicode-script triage (per-script char counts
-    # + dominant-script router) in place of text_stats (driver-green
-    # r1-r5; per-doc profile family stays in-cap via quality_filter)
+    # unicode-script triage (per-script char counts + dominant-script
+    # router)
     q["script_profile"] = textual.script_profile
     q["quality_filter"] = textual.quality_filter
-    # round-5 rotation: served-from-postings BM25 (the persisted
-    # lexical index path) promoted in-cap in place of hybrid_rrf
-    # (driver-green r3/r4; overflow keeps the fusion covered)
+    # served-from-postings BM25 (the persisted lexical index path)
     q["bm25_topk_indexed"] = lambda s, d: ranking_mod.bm25_topk_indexed(
         s, _lex_index(s, d), k=10
     )
-    # incremental-ingest dedup composition — rotated in-cap round 3 in
-    # place of token_budget (sibling of in-cap source_token_budget);
-    # round-9 session-2 rotation: replaced by the COMPOSED snapshot
-    # loop below, which CONTAINS the screen (strictly stronger same-
-    # family entry; incremental_dedup rides overflow with its oracle)
-    # round-10 session-2 rotation: the SEMANTIC-screen loop, which
-    # CONTAINS the default loop (same stages + the embedding-cosine
-    # third screen; threshold 0.42 sits between the corpus's p90 and
-    # p99 max-cosines — 5/54 rejected, 11 admitted at sf0.01, never
-    # degenerate); the default loop rides overflow with its oracle
-    # round-11 session-2 rotation: the FULL-shape loop, which CONTAINS
-    # the semantic loop (same stages + the CCNet line evidence + the
-    # FineWeb production gate — every opt-in stage in ONE hash-checked
-    # CTE chain); the semantic loop rides overflow with its oracle
+    # the FULL-shape snapshot loop: every opt-in stage (embedding-cosine
+    # screen, CCNet line evidence, FineWeb production gate) in ONE
+    # hash-checked CTE chain. Threshold 0.42 sits between the corpus's
+    # p90 and p99 max-cosines (5/54 rejected, 11 admitted at sf0.01),
+    # so the semantic screen is never degenerate
     q["snapshot_loop_full"] = lambda s, d: pipeline_mod.incremental_snapshot_loop(
         s, d, semantic_threshold=0.42, line_screen=True,
         quality_gate="production",
     )
-    # round-5 rotation: the quantified leakage audit (cross-fence
-    # near-dup pair counts per split policy) in place of
-    # document_splits (driver-green r1-r4; split family stays covered
-    # in-cap by leakage_safe_splits)
+    # the quantified leakage audit (cross-fence near-dup pair counts per
+    # split policy)
     q["split_leakage_audit"] = curation.split_leakage_audit
-    # round-6 rotation: Misra-Gries heavy-hitter top-k (mergeable
-    # per-partition summaries -> broadcast candidate semi-join ->
-    # exact count; vocabulary-size-independent shuffle) in place of
-    # chunk_documents (driver-green r1-r5; the chunk grid stays
-    # covered by pack_chunks + sql_chunk_documents in overflow)
+    # Misra-Gries heavy-hitter top-k (mergeable per-partition summaries
+    # -> broadcast candidate semi-join -> exact count;
+    # vocabulary-size-independent shuffle)
     q["heavy_hitters_topk"] = lambda s, d: textual.heavy_hitters_topk(s, d, k=25)
-    # round-5 rotation: CCNet-style perplexity tiles (bigram LM + NLL
-    # tertiles) in place of winnowing_fingerprints (driver-green
-    # r1-r4; fingerprint family covered by duplicate_spans in-cap)
-    # round-6 rotation: interpolated Kneser-Ney bigram scoring
-    # (continuation-count smoothing, hash-exact float parity) in
-    # place of perplexity_buckets (driver-green r5)
-    # round-9 session-2 rotation: the PRODUCTION-order 5-gram KN
-    # (Chen-Goodman continuation cascade off one corpus 5-gram pass)
-    # in place of its bigram special case (driver-green r6-r8; the
-    # bigram twin rides overflow with its own oracle)
-    # round-10 rotation (VERDICT r9 #4): MODIFIED KN — the KenLM
-    # default (per-level D1/D2/D3+ from count-of-counts, count-class
-    # discount selection) — in place of the fixed-discount KN5
-    # (driver-green r9; it keeps its own oracle in overflow)
+    # MODIFIED KN — the KenLM default (per-level D1/D2/D3+ from
+    # count-of-counts, count-class discount selection)
     q["kneser_ney5_modified"] = textual.mkn5_scores_cached
 
     # ---- dedup family (exact forms)
-    # round-6 rotation: prefix-filtering similarity self-join
-    # (SSJoin/PPJoin; LOSSLESS, carries the exact n-gram Jaccard
-    # oracle) in place of dedup_exact_groups (driver-green r1-r5;
-    # content-hash family stays in-cap via the snapshot loop's
-    # screen — incremental_snapshot_loop contains it)
+    # prefix-filtering similarity self-join (SSJoin/PPJoin; LOSSLESS,
+    # carries the exact n-gram Jaccard oracle)
     q["dedup_ngram_prefix"] = lambda s, d: dedup.ngram_jaccard_prefix_pairs(
         load_documents(s, d), n=3, threshold=0.8
     )
-    # round-6 rotation: corpus snapshot diff (added/removed/changed
-    # via narrow digest projections + one full-outer join) in place
-    # of cdc_merge (driver-green r4/r5; the versioning family stays
-    # in-cap via this direct sibling)
+    # corpus snapshot diff (added/removed/changed via narrow digest
+    # projections + one full-outer join)
     q["snapshot_diff"] = curation.snapshot_diff_documents
-    # round-6 rotation: embedding-level semantic decontamination
-    # (cosine vs the broadcast benchmark slice — the paraphrase leak
-    # the 8-gram probe misses) in place of neardup_cosine
-    # (driver-green r1-r5; the cosine-pair family stays in-cap via
-    # semantic_dedup_blocked)
-    # round-10 rotation (VERDICT r9 #4): the GPT-3 appendix-C 13-gram
-    # collision decontamination config in place of
-    # semantic_decontaminate (driver-green r6-r9; the embedding-side
-    # probe keeps its own oracle in overflow and the snapshot loop's
-    # semantic screen exercises the same cosine machinery)
-    # round-11 rotation (VERDICT r10 #6): the fence-calibration SWEEP
-    # — flagged pair/doc counts per (n-gram order, containment
-    # threshold) config, the artifact the fence constant is CHOSEN
-    # from — in place of decontaminate_13gram (driver-green r10; its
-    # config is one row of this grid, it keeps its own oracle in
-    # overflow, and the decontam family stays in-cap here plus
-    # stream_decontaminate)
+    # the fence-calibration SWEEP — flagged pair/doc counts per (n-gram
+    # order, containment threshold) config, the artifact the fence
+    # constant is CHOSEN from
     q["decontamination_sweep"] = curation.decontamination_sweep
-    # late round-7 rotation: WEIGHTED TF-IDF cosine near-dup pairs
-    # (idf crushes boilerplate shingles — the score set Jaccard can't
-    # express) in place of dedup_minhash_md5 (driver-green r1-r6; the
-    # md5 banding family stays covered via neardup_edit_distance
-    # in overflow (rotated r9 s2),
-    # which runs on the same banding)
+    # WEIGHTED TF-IDF cosine near-dup pairs (idf crushes boilerplate
+    # shingles — the score set Jaccard can't express)
     q["tfidf_cosine_pairs"] = lambda s, d: sparse_sim_mod.tfidf_cosine_pairs(
         load_documents(s, d), n=3, threshold=0.6
     )
-    # DSIR flagship (round 5, promoted in-cap): hashed-n-gram
-    # importance weights vs the English target slice + Gumbel top-k
-    # weighted sample without replacement (Xie et al. 2023); displaces
-    # bm25_topk (driver-green r4; the lexical family stays in-cap via
-    # bm25_topk_indexed)
+    # DSIR: hashed-n-gram importance weights vs the English target slice
+    # + Gumbel top-k weighted sample without replacement (Xie et al.
+    # 2023)
     q["dsir_select"] = dsir_mod.dsir_select
 
     # ---- corpus curation (operators/curation.py)
-    # character-level near-dup flagship (round 5, promoted in-cap):
-    # md5-banded MinHash candidates -> exact Levenshtein verify;
-    # displaces decontaminate (driver-green r2-r4; the contamination
-    # family stays in-cap via semantic_decontaminate + wet_roundtrip's
-    # bloom twin in overflow, bit-identical oracle)
-    # round-9 session-2 rotation: CHARACTER-grain exact-substring
-    # dedup (Lee et al. 2022 unit below token grain, raw text, no
-    # tokenizer) in place of neardup_edit_distance (driver-green
-    # r5-r8; the banded-candidate + exact-verify family stays in-cap
-    # via dedup_ngram_prefix and the edit-distance twin rides
-    # overflow with its own oracle)
+    # CHARACTER-grain exact-substring dedup (Lee et al. 2022 unit below
+    # token grain, raw text, no tokenizer)
     q["duplicate_char_spans"] = lambda s, d: dedup.duplicate_char_spans(
         load_documents(s, d)
     )
-    # the assembled end-to-end curation flow (quality + dedup election
-    # + decontamination + splits), oracle-checked as ONE query — the
-    # flagship composition, promoted in-cap in round 3
-    # round-10 rotation (VERDICT r9 #4): the FineWeb/RefinedWeb-style
-    # PRODUCTION config (C4 line rules + KN5 perplexity tiles
-    # enforced, Gopher reported, canonical election + decontam fence +
-    # splits) in place of the generic-quality-score chain
-    # (driver-green r3-r9; curate_corpus keeps its oracle in overflow)
-    # round-11 rotation (VERDICT r10 #6): the production ABLATION
-    # FUNNEL — per-stage doc/token retention through the named
-    # production gates (c4, KN5 tiles, dedup election, decontam), the
-    # per-release artifact a pipeline owner publishes — in place of
-    # curate_corpus_production (driver-green r10; same flags chain,
-    # the per-doc grain keeps its own oracle in overflow and the
-    # production-config family stays in-cap here plus
-    # production_mix_report)
+    # the production ABLATION FUNNEL — per-stage doc/token retention
+    # through the named production gates (c4, KN5 tiles, dedup election,
+    # decontam), the per-release artifact a pipeline owner publishes
     q["production_funnel"] = curation.production_funnel
-    # late round-7 rotation: the LOSSLESS AllPairs prefix-indexed
-    # weighted-cosine twin at the near-dup threshold (shares the exact
-    # form's oracle) in place of export_curated (driver-green r4-r6;
-    # the sink family stays covered via curate_corpus in-cap and
-    # export_curated in overflow)
+    # the LOSSLESS AllPairs prefix-indexed weighted-cosine twin at the
+    # near-dup threshold (shares the exact form's oracle)
     q["tfidf_cosine_prefix"] = lambda s, d: sparse_sim_mod.tfidf_cosine_prefix_pairs(
         load_documents(s, d), n=3, threshold=0.9
     )
     # Gopher-style repetition quality signals
     q["repetition_signals"] = curation.repetition_signals
-    # round-6 rotation: OPQ learned-rotation PQ (Ge et al. 2013) at
-    # full shortlist == exact, in place of pq_rerank_full
-    # (driver-green r1-r5; the stock-PQ twin rides overflow)
+    # OPQ learned-rotation PQ (Ge et al. 2013) at full shortlist ==
+    # exact
     q["opq_rerank_full"] = _opq_rerank_full
     # stream-stream interval join (purchases x trailing clicks, both
     # sides watermarked => evictable join state)
     q["stream_interval_join"] = lambda s, d: streaming_events.purchase_click_interval_join_stream(
         s, d, lookback_sql="INTERVAL 6 HOUR"
     )
-    # round-9 rotation: SCD-2 dimension history (validity intervals
-    # from the event stream; run-compression before the versions
-    # window, no single-partition exchange) in place of
-    # snm_dedup_groups (driver-green r8; the SNM composition family
-    # stays in-cap via sorted_neighborhood + dedup_components_twostar
-    # — same blocking, same two-star graph, same oracles)
+    # SCD-2 dimension history (validity intervals from the event stream;
+    # run-compression before the versions window, no single-partition
+    # exchange)
     q["scd2_history"] = temporal.scd2_history
-    # sibling: dedup_components + document_splits (leakage-safe split:
-    # hash of the near-dup COMPONENT, so near-duplicates can never
-    # straddle the train/test fence)
+    # leakage-safe split: hash of the near-dup COMPONENT, so
+    # near-duplicates can never straddle the train/test fence
     q["leakage_safe_splits"] = curation.leakage_safe_splits
-    # late round-7 rotation: sorted-neighborhood blocking (the third
-    # blocking family; parallel rank decomposition, lossless verify
-    # screens) in place of graph_stats (driver-green r4-r6; the graph
-    # family stays in-cap via dedup_components + semantic_dedup_blocked)
+    # sorted-neighborhood blocking (the third blocking family; parallel
+    # rank decomposition, lossless verify screens)
     q["sorted_neighborhood"] = lambda s, d: blocking_mod.sorted_neighborhood_pairs(
         load_documents(s, d)
     )
-    # round-6 rotation: Deequ-style data-quality expectations (one
-    # fused aggregation pass; bounds declared once, imported by
-    # operator AND oracle) in place of source_token_budget
-    # (driver-green r1-r5; the mixing family stays in-cap via
-    # dsir_select)
-    # round-10 rotation (VERDICT r9 #4): the training-mix manifest
-    # (per-(split, source) doc/token mass + shares over the
-    # production-admitted set) in place of expectations_report
-    # (driver-green r6-r9; the expectations family stays in-cap via
-    # expectations_events, the report keeps its oracle in overflow)
+    # the training-mix manifest (per-(split, source) doc/token mass +
+    # shares over the production-admitted set)
     q["production_mix_report"] = pipeline_mod.production_mix_report
-    # round-8 session-2 rotation: Lloyd's k-means with the TRAINING
-    # LOOP oracle-backed (sequential-fold assignment, DECIMAL-mean
-    # centroid updates; the twin unrolls the iterations) in place of
-    # curation_reasons (driver-green r6-r7; the curation stages stay
-    # in-cap via curate_corpus — same CTE chain)
+    # Lloyd's k-means with the TRAINING LOOP oracle-backed
+    # (sequential-fold assignment, DECIMAL-mean centroid updates; the
+    # twin unrolls the iterations)
     q["kmeans_lloyd"] = lambda s, d: clustering_mod.kmeans_lloyd(s, d)
 
     # ---- multimodal payload metadata (the byte-hist digest twin rides
     # the overflow window — same attach_payload + Arrow-batch family)
     q["multimodal_meta"] = multimodal.multimodal_meta
 
-    # round-6 rotation: streaming decontamination on arrival (per-
-    # batch containment vs the static benchmark; drained == batch
-    # bit-for-bit) in place of events_hourly_stream (driver-green
-    # r1-r5; the streaming family keeps stream_interval_join,
-    # events_distinct_pairs, session_rollup, user_running_totals
-    # in-cap)
+    # streaming decontamination on arrival (per-batch containment vs
+    # the static benchmark; drained == batch bit-for-bit)
     q["stream_decontaminate"] = lambda s, d: streaming_curing.stream_decontaminate_ingest(
         s, d
     )
-    # round-7 rotation: corpus snapshot release-notes rollup (per-
-    # source added/removed/changed via the salted anti-join draw) in
-    # place of events_distinct_pairs (driver-green r1-r6; streaming
-    # stateful dedup family stays in-cap via stream_decontaminate +
-    # user_running_totals)
-    # round-8 rotation: large-star/small-star components (Kiveris et
-    # al. — O(log² n) rounds regardless of graph diameter; identical
-    # output => shares the dedup_components oracle verbatim) in place
-    # of snapshot_diff_summary (driver-green r7; the snapshot family
-    # stays in-cap via snapshot_diff)
+    # large-star/small-star components (Kiveris et al. — O(log² n)
+    # rounds regardless of graph diameter; identical output => shares
+    # the dedup_components oracle verbatim)
     q["dedup_components_twostar"] = lambda s, d: graph_mod.connected_components_twostar(
         dedup.ngram_jaccard_pairs(load_documents(s, d), n=3, threshold=0.8)
     )
-    # round-7 rotation: language-ID confusion matrix vs the labeled
-    # lang column (exact-integer recall shares — the router's
-    # evaluation artifact) in place of session_rollup (driver-green
-    # r1-r6; sessionization stays covered by stream_interval_join +
-    # user_sessions overflow)
-    # round-9 rotation: Snorkel-style label model (per-rule accuracy
-    # from majority agreement, ROUND(ln,9) log-odds per RULE, a
-    # DECIMAL-folded weighted revote) in place of
-    # dedup_ngram_containment (driver-green r8; the n-gram pair family
-    # stays in-cap via dedup_ngram_prefix — same shingle machinery,
-    # the containment twin rides overflow with its own oracle)
+    # Snorkel-style label model (per-rule accuracy from majority
+    # agreement, ROUND(ln,9) log-odds per RULE, a DECIMAL-folded
+    # weighted revote)
     q["label_model"] = textual.label_model
-    # round-8 session-2 rotation: retrieval-quality metrics (per-query
-    # precision/recall/MRR/nDCG@k under shared-label relevance; rank
-    # weights inlined as identical 9-digit literals on both engines)
-    # in place of user_running_totals (driver-green r2-r7; the
-    # stateful-streaming family stays in-cap via stream_decontaminate
-    # + stream_interval_join)
+    # retrieval-quality metrics (per-query precision/recall/MRR/nDCG@k
+    # under shared-label relevance; rank weights inlined as identical
+    # 9-digit literals on both engines)
     q["retrieval_quality"] = lambda s, d: retmetrics_mod.retrieval_quality(
         s, d, k=10, n_queries=16
     )
 
     # ---- relational coverage (joins/agg/window/rollup/anti/semi)
-    # round-7 rotation: LOSSLESS IVF cell pruning for cosine range
-    # search (angular triangle bound; carries the exact range search's
-    # oracle verbatim) in place of pricing_summary (driver-green
-    # r1-r6; TPC-H family keeps local_supplier_revenue +
-    # excess_supply_suppliers in-cap)
-    # round-8 session-2 rotation: KMV pairwise audience overlap (the
-    # set algebra HLL cannot do; unsaturated regime provably exact)
-    # in place of range_search_ivf (driver-green r7; the range family
-    # stays covered by range_search_cosine in overflow, which carries
-    # the same oracle the pruned form shares)
+    # KMV pairwise audience overlap (the set algebra HLL cannot do;
+    # unsaturated regime provably exact)
     q["kmv_user_overlap"] = lambda s, d: kmv_mod.kmv_user_overlap(s, d)
-    # round-7 rotation: PSI distribution-drift score (Laplace-smoothed
-    # exact-integer shares, decimal-summed terms) in place of
-    # revenue_by_nation (driver-green r1-r6; star-join family keeps
-    # local_supplier_revenue + top-k window via heavy_hitters_topk)
+    # PSI distribution-drift score (Laplace-smoothed exact-integer
+    # shares, decimal-summed terms)
     q["psi_drift"] = stats.psi_drift
-    # round-7 rotation: the expectations framework instantiated on the
-    # EVENTS table (stream-shaped invariants) in place of
-    # top_customers_per_nation (driver-green r1-r6; window-top-k
-    # family covered in overflow)
+    # the expectations framework instantiated on the EVENTS table
+    # (stream-shaped invariants)
     q["expectations_events"] = expectations_mod.expectations_report_events
-    # round-8 rotation: paragraph-grain exact dedup (Lee et al. 2022
-    # removal unit) in place of local_supplier_revenue (driver-green
-    # r4-r7; TPC-H family stays in-cap via excess_supply_suppliers).
-    # round-10 session-2 rotation: CCNet-style corpus-wide
-    # duplicated-LINE removal (the boilerplate filter — the line-grain
-    # op needing the corpus-wide aggregate) in place of
-    # paragraph_dedup (driver-green r8/r9; paragraph keeps its oracle
-    # in overflow and the sub-doc-grain family stays in-cap via
-    # duplicate_char_spans)
+    # CCNet-style corpus-wide duplicated-LINE removal (the boilerplate
+    # filter — the line-grain op needing the corpus-wide aggregate)
     q["line_dedup"] = textual.line_dedup
-    # round-5 rotation: TPC-H Q20 (the last missing TPC-H shape;
-    # observed bridge + deterministic availqty, TESTDATA.md) in place
-    # of customers_without_orders (driver-green r1-r4; anti-join
-    # family stays covered in overflow)
+    # TPC-H Q20 (the last missing TPC-H shape; observed bridge +
+    # deterministic availqty, TESTDATA.md)
     q["excess_supply_suppliers"] = relational.excess_supply_suppliers
-    # round-8 session-2 rotation: LSH banding-calibration report (the
-    # dedup family's parameter-tuning lens — even the banding's
-    # approximation error is oracle-checked through the md5 signature)
-    # in place of duplicate_spans (driver-green r4-r7; the span family
-    # stays via dedup_ngram_prefix in-cap + remove_duplicate_spans /
-    # duplicate_spans in overflow)
+    # LSH banding-calibration report (the dedup family's
+    # parameter-tuning lens — even the banding's approximation error is
+    # oracle-checked through the md5 signature)
     q["lsh_calibration"] = lambda s, d: dedup.lsh_calibration_report(s, d)
-    # round-5 rotation: IVF x SQ composition at full width+shortlist
-    # (partition pruning AND int8 codes in one layout; == exact) in
-    # place of customer_revenue_deciles (driver-green r3/r4; window
-    # family stays covered by user_running_totals in-cap)
-    # round-6 rotation: IVF x OPQ (directory pruning x rotated-ADC
-    # codes) at full width+rerank == exact, in place of
-    # ivfsq_rerank_full (driver-green r5; the IVF x SQ twin rides
-    # overflow)
-    # round-9 rotation: power-iteration PC1 (normalize(C·v) over the
-    # shared DECIMAL covariance cells — the iterative-algorithm
-    # flagship, all rounds oracle-unrolled) in place of
-    # ivfopq_rerank_full (driver-green r6-r8; the PQ-family rerank
-    # rung stays in-cap via opq_rerank_full — same codebook path)
+    # power-iteration PC1 (normalize(C·v) over the shared DECIMAL
+    # covariance cells — the iterative-algorithm flagship, all rounds
+    # oracle-unrolled)
     q["power_iteration_pc1"] = lambda s, d: embstats_mod.power_iteration_pc1(s, d)
-    # SQ8 exact-at-full-shortlist (the int8 compression rung) —
-    # promoted in-cap late round 4; user_event_pivot (driver-green
-    # r3/r4) rotated to overflow beside its unpivot twin
-    # round-6 rotation: Matryoshka-style prefix-dim shortlist ->
-    # exact rerank (zero-maintenance adaptive retrieval) at full
-    # shortlist == exact, in place of sq_rerank_full (driver-green
-    # r4/r5; the SQ8 twin rides overflow)
-    # round-9 rotation: exact-match phrase search (consecutive-token
-    # occurrences via one per-doc array lambda inside codegen — the
-    # zero-Exchange plan showcase, PLANS.md §phrase_search) in place
-    # of prefixdim_rerank_full (driver-green r6-r8; the shortlist->
-    # exact-rerank family stays in-cap via opq_rerank_full)
+    # exact-match phrase search (consecutive-token occurrences via one
+    # per-doc array lambda inside codegen — the zero-Exchange plan
+    # showcase, PLANS.md §phrase_search)
     q["phrase_search"] = lambda s, d: ranking_mod.phrase_search(s, d)
     # the SQL-string query surface: the reference's YQL template twin
     # (app.py:165-227) through Spark 4 SQL scalar UDFs (knn_* namespace)
     # + parameterized spark.sql binding — result-identical to the
     # library path, distinct execution surface (sql_surface.py)
     q["sql_topk_cosine"] = _mk_sql_topk("CosineSimilarity", k=10)
-    # round-5 rotation: the IVF-multi-probe blocked SemDeDup (the
-    # scale path now executed by the gate; bit-identical election =>
-    # shares the exact oracle) in place of purchase_attribution
-    # (driver-green r3/r4; as-of family covered in overflow)
+    # the IVF-multi-probe blocked SemDeDup (the scale path now executed
+    # by the gate; bit-identical election => shares the exact oracle)
     q["semantic_dedup_blocked"] = lambda s, d: curation.semantic_dedup_blocked(
         s, d, centroids=_ivf_index(s, d).centroids.tolist(), probes=3
     )
-    # round-5 rotation: graph-ANN full-beam (5th index shape; whole-
-    # graph traversal asserted + exact rerank) in place of
-    # surge_windows (driver-green r2-r4; temporal family keeps
-    # hourly_locf in-cap)
-    # round-6 rotation: FILTERED serving through the graph-ANN shape
-    # (non-strict filter lift; full beam == exact filtered) in place
-    # of graphann_rerank_full (driver-green r5; the unfiltered
-    # full-beam twin rides overflow)
+    # FILTERED serving through the graph-ANN shape (non-strict filter
+    # lift; full beam == exact filtered)
     q["topk_cosine_filtered_gann"] = _mk_gann_filtered(
         "CosineSimilarity", k=10, filter={"vendor": "fr"}, beam=None
     )
-    # round-5 rotation: Bloom-sketch decontamination admission
-    # (vectorized bitset probe; bit-identical => shared oracle) in
-    # place of events_in_surges (driver-green r2-r4; range-join family
-    # covered in overflow)
-    # round-9 rotation: WET/WARC archive round-trip (codegen writer ->
-    # lineSep record-split reader; equality proves writer and
-    # distributed parser are exact inverses) in place of
-    # decontaminate_bloom (driver-green r5-r8; decontamination family
-    # stays in-cap via semantic_decontaminate + stream_decontaminate,
-    # and the Bloom twin is bit-identical to the shared oracle)
+    # WET/WARC archive round-trip (codegen writer -> lineSep
+    # record-split reader; equality proves writer and distributed parser
+    # are exact inverses)
     q["wet_roundtrip"] = lambda s, d: warc_mod.wet_roundtrip(s, d)
-    # round-9 rotation: logreg reliability/calibration bins on the
-    # holdout (the read before model scores become admission
-    # probabilities; bucketed exact-integer counts, DECIMAL mean
-    # scores) in place of tfidf_related_docs (driver-green r7/r8; the
-    # sparse-lexical family stays in-cap via tfidf_cosine_pairs +
-    # tfidf_cosine_prefix)
+    # logreg reliability/calibration bins on the holdout (the read
+    # before model scores become admission probabilities; bucketed
+    # exact-integer counts, DECIMAL mean scores)
     q["logreg_calibration"] = lambda s, d: logreg_mod.logreg_calibration(s, d)
     # ---- distribution stats + set-op cohorts
-    # round-7 rotation: the MAINTAINED quantile form (persisted
-    # fixed-width bucket counts, integer-additive folds; quantiles
-    # served from the stored table with NO fact rescan — identical
-    # output => the same full SQL oracle) in place of
-    # histogram_quantiles (driver-green r4-r6; the one-shot twin rides
-    # overflow)
-    # round-8 session-2 rotation: the trained model-based filter
-    # (hashed-BoW logistic regression; the whole GD loop engine-exact
-    # and oracle-unrolled) in place of histogram_store_quantiles
-    # (driver-green r7; the quantile-store family stays covered by
-    # histogram_quantiles + tdigest_quantiles in overflow)
+    # the trained model-based filter (hashed-BoW logistic regression;
+    # the whole GD loop engine-exact and oracle-unrolled)
     q["logreg_report"] = lambda s, d: logreg_mod.logreg_report(s, d)
-    # round-8 rotation: per-domain doc/token caps (deterministic md5
-    # admission over the URL host — the first web-corpus curation
-    # step; salted local top-cap pre-filter) in place of
-    # ab_test_report (driver-green r4-r7; experimentation family
-    # stays covered by ab_test_cuped in overflow)
+    # per-domain doc/token caps (deterministic md5 admission over the
+    # URL host — the first web-corpus curation step; salted local
+    # top-cap pre-filter)
     q["domain_caps"] = lambda s, d: web_mod.domain_caps(s, d)
-    # round-8 rotation: two-sample KS drift (rank-based, binning-free
-    # second opinion beside psi_drift; exact-integer cumulative counts
-    # decomposed over value buckets — no single-partition sort) in
-    # place of source_divergence (driver-green r4-r7; source-mixture
-    # family stays covered in overflow)
+    # two-sample KS drift (rank-based, binning-free second opinion
+    # beside psi_drift; exact-integer cumulative counts decomposed over
+    # value buckets — no single-partition sort)
     q["ks_drift"] = lambda s, d: stats.ks_drift(s, d)
     # vector aggregation: per-label centroid (decimal-exact mean)
     q["label_centroids"] = curation.label_centroids
-    # rotated out of cap late round 4 (driver-green r3/r4 records):
     q["orders_rollup"] = relational.orders_rollup
     q["repeat_customers"] = relational.repeat_customers
     q["user_event_pivot"] = relational.user_event_pivot
     q["props_k_stats"] = stats.props_k_stats
-    # rotated out of cap round 7 (driver-green r1-r6 records; each
-    # family keeps an in-cap sibling, see the round-7 swap comments):
     q["events_distinct_pairs"] = streaming_events.distinct_user_event_pairs_stream
     q["session_rollup"] = streaming_sessions.session_rollup_batch
     q["pricing_summary"] = relational.pricing_summary
@@ -1205,461 +1008,386 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ======== oracle-backed overflow (past the driver's 50-entry cap;
     # each has an in-cap sibling exercising the same operator, and all
     # are validated by tools/check_oracle.py) ========================
-    # siblings: topk_cosine (same O5 code path and oracle family,
-    # remaining four strategies — rotated out in round 3 to make room
-    # for the flagship compositions above)
+    # same O5 code path and oracle family, remaining four strategies
     q["topk_inner_product"] = _mk_topk("InnerProductSimilarity", k=10)
     q["topk_cosine_distance"] = _mk_topk("CosineDistance", k=10)
     q["topk_euclidean"] = _mk_topk("EuclideanDistance", k=10)
     q["topk_manhattan"] = _mk_topk("ManhattanDistance", k=10)
-    # sibling: curated_pack (standalone token-budget packing)
+    # standalone token-budget packing
     q["pack_chunks"] = curation.pack_chunks
-    # sibling: document_splits (same deterministic md5-threshold
-    # sampling family; language-stratified rates)
+    # same deterministic md5-threshold sampling family;
+    # language-stratified rates
     q["stratified_sample"] = curation.stratified_sample_stats
-    # sibling: document_splits / quality_filter (importance sampling:
-    # keep-probability = quality^2 via the exact-integer md5 rule)
+    # importance sampling: keep-probability = quality^2 via the
+    # exact-integer md5 rule
     q["quality_weighted_sample"] = sampling.quality_weighted_sample
-    # sibling: source_token_budget / stratified_sample (training-mix
-    # control: relative token shares via the exact-integer md5
-    # admission rule — curation.mixture_resample)
+    # training-mix control: relative token shares via the exact-integer
+    # md5 admission rule — curation.mixture_resample
     q["mixture_resample"] = curation.mixture_resample
-    # sibling: multimodal_meta (same attach_payload + Arrow family;
-    # hex-nibble oracle reproduces the NumPy bin counts exactly)
+    # same attach_payload + Arrow family; hex-nibble oracle reproduces
+    # the NumPy bin counts exactly
     q["multimodal_byte_hist"] = lambda s, d: multimodal.byte_histogram_digests(
         multimodal.attach_payload(load_documents(s, d))
     )
-    # siblings: repeat_customers / distinct_users_by_type (set-op +
-    # conditional-agg family over the events table)
+    # set-op + conditional-agg family over the events table
     q["retention_cohorts"] = stats.retention_cohorts
-    # sibling: topk_cosine_filtered_ivf (same non-strict filtered-ANN
-    # contract routed through the two-level tree; full width == exact)
+    # same non-strict filtered-ANN contract routed through the two-level
+    # tree; full width == exact
     q["topk_cosine_filtered_tree"] = _mk_tree_filtered(
         "CosineSimilarity", k=10, filter={"vendor": "fr"}, width=None
     )
-    # siblings: ivf_knn_join_dist + topk_cosine_filtered_ivf (the
-    # filtered BATCH ANN join: corpus restricted to the filter's id
-    # set before the assignment join; full width == filtered knn_join)
+    # the filtered BATCH ANN join: corpus restricted to the filter's id
+    # set before the assignment join; full width == filtered knn_join
     q["ivf_knn_join_filtered"] = _mk_ivf_knn_join_filtered(
         "CosineSimilarity", k=5, n_queries=8, filter={"vendor": "fr"}, width=None
     )
-    # sibling: kmeans_tree_full (same full-width == exact oracle; the
-    # flat single-level IVF variant of the same index operator)
+    # same full-width == exact oracle; the flat single-level IVF variant
+    # of the same index operator
     q["ivf_cosine_full_width"] = _mk_ivf("CosineSimilarity", k=10, width=None)
-    # sibling: ivf_knn_join_dist (same ANN-join oracle; the driver-side
-    # routing variant is the serving path, dist is the batch path)
+    # same ANN-join oracle; the driver-side routing variant is the
+    # serving path, dist is the batch path
     q["ivf_knn_join_full"] = _mk_ivf_knn_join("CosineSimilarity", k=5, n_queries=8, width=None)
-    # sibling: ivf_knn_join_dist (same no-driver-collect batch join,
-    # routed through the two-level tree; full width == exact)
+    # same no-driver-collect batch join, routed through the two-level
+    # tree; full width == exact
     q["tree_knn_join_full"] = _mk_tree_knn_join("CosineSimilarity", k=5, n_queries=8, width=None)
-    # sibling: topk_cosine_filtered (same conjunctive-filter path)
+    # same conjunctive-filter path as topk_cosine_filtered
     q["topk_cosine_filtered2"] = _mk_topk(
         "CosineSimilarity", k=10, filter={"vendor": "de", "title": "src3"}
     )
-    # sibling: topk_cosine (same path; the k=4 default contract is
-    # also pinned in tests/test_api.py)
+    # the k=4 default contract, also pinned in tests/test_api.py
     q["topk_cosine_default_k"] = _mk_topk("CosineSimilarity", k=4)
-    # sibling: repeat_customers (EXCEPT vs INTERSECT, same partial-
-    # distinct Expand shape)
+    # EXCEPT vs repeat_customers' INTERSECT, same partial-distinct
+    # Expand shape
     q["lapsed_customers"] = relational.lapsed_customers
-    # sibling: tfidf_top_terms (same tokenize+count path)
+    # same tokenize+count path as tfidf_top_terms
     q["token_frequencies"] = textual.token_frequencies
-    # sibling: dedup_exact_groups (same md5 content fingerprint)
+    # same md5 content fingerprint as dedup_exact_groups
     q["fingerprints"] = textual.fingerprints
-    # sibling: text_stats (lang_profile aggregates its columns)
+    # aggregates text_stats' columns
     q["lang_profile"] = textual.lang_profile
-    # sibling: pii_redaction (same deterministic-augment + ordered
-    # regex-pass family: HTML/entity/case/whitespace normalization)
+    # same deterministic-augment + ordered regex-pass family:
+    # HTML/entity/case/whitespace normalization
     q["normalize_markup"] = textual.normalize_markup
-    # sibling: pii_redaction (regex extraction over the augmented
-    # corpus — the link-inventory primitive)
+    # regex extraction over the augmented corpus — the link-inventory
+    # primitive
     q["extract_urls"] = textual.extract_urls
-    # sibling: document_splits (split_sizes aggregates it)
+    # aggregates document_splits
     q["split_sizes"] = sampling.split_sizes
-    # sibling: orders_rollup (same Expand-based grouping-set agg)
+    # same Expand-based grouping-set agg as orders_rollup
     q["orders_cube"] = relational.orders_cube
-    # sibling: surge_windows (local-context rolling z-score variant of
-    # the same bucket series; exact-integer window sums)
+    # local-context rolling z-score variant of the same bucket series;
+    # exact-integer window sums
     q["bucket_anomalies"] = temporal.bucket_anomalies
-    # sibling: retention_cohorts (ordered event-sequence analytics:
-    # the signup->view->click->purchase conversion funnel)
+    # ordered event-sequence analytics: the
+    # signup->view->click->purchase conversion funnel
     q["funnel_conversion"] = temporal.funnel_conversion
-    # sibling: user_event_pivot (the unpivot/melt round-trip twin —
-    # rotated out of the cap in round 3 for the SQL-surface entry)
+    # the unpivot/melt round-trip twin of user_event_pivot
     q["user_event_unpivot"] = relational.user_event_unpivot
-    # sibling: sql_topk_cosine (same SQL-string surface, filtered
-    # template branch + filter-value parameter binding)
+    # same SQL-string surface, filtered template branch + filter-value
+    # parameter binding
     q["sql_topk_filtered"] = _mk_sql_topk(
         "CosineSimilarity", k=10, filter={"vendor": "fr"}
     )
-    # sibling: sql_topk_cosine (the scale-shaped CTE template: narrow
-    # score -> top-k -> metadata join, same plan as the library path)
+    # the scale-shaped CTE template: narrow score -> top-k -> metadata
+    # join, same plan as the library path
     q["sql_topk_narrow"] = _mk_sql_topk_narrow("CosineSimilarity", k=10)
-    # sibling: chunk_documents (same chunk grid through the SQL
-    # surface's Python UDTF — LATERAL chunk_text(...); sql_surface.py)
+    # same chunk grid through the SQL surface's Python UDTF — LATERAL
+    # chunk_text(...); sql_surface.py
     q["sql_chunk_documents"] = _sql_chunk_documents
-    # sibling: bm25_topk (the extension op through the PURE SQL-string
-    # surface with bound term parameters — bit-identical, same oracle)
+    # the extension op through the PURE SQL-string surface with bound
+    # term parameters — bit-identical, same oracle
     q["sql_bm25_topk"] = lambda s, d: sql_surface.sql_bm25_topk(
         s, d, ranking_mod.QUERY_TERMS
     )
-    # sibling: pq_rerank_full (same shortlist->exact-rerank family;
-    # this one's first pass is the pure-codegen sign-bit Hamming scan,
-    # operators/bq.py — full shortlist == exact)
+    # same shortlist->exact-rerank family; this one's first pass is the
+    # pure-codegen sign-bit Hamming scan, operators/bq.py — full
+    # shortlist == exact
     q["bq_rerank_full"] = _mk_bq_rerank("CosineSimilarity", k=10, shortlist=None)
-    # sibling: knn_join_cosine (batch join through the sign-bit domain;
-    # full shortlist == the exact kNN join)
+    # batch join through the sign-bit domain; full shortlist == the
+    # exact kNN join
     q["bq_knn_join_full"] = _mk_bq_knn_join(
         "CosineSimilarity", k=5, n_queries=8, shortlist=None
     )
-    # siblings: dedup_exact_groups + chunk_documents (this composes the
-    # two driver-checked pieces: md5-groupBy election at chunk grain)
+    # composes dedup_exact_groups and chunk_documents: md5-groupBy
+    # election at chunk grain
     q["chunk_dedup"] = lambda s, d: dedup.chunk_dedup_stats(s, d)
-    # sibling: duplicate_spans (the actionable form: strip everything
-    # but the corpus-wide first occurrence, digest the cleaned stream)
+    # the actionable form: strip everything but the corpus-wide first
+    # occurrence, digest the cleaned stream
     q["remove_duplicate_spans"] = lambda s, d: dedup.remove_duplicate_spans(
         load_documents(s, d)
     )
-    # rotated out round 9 session 2 in favor of duplicate_char_spans
-    # (banded-candidate + exact-verify family stays in-cap via
-    # dedup_ngram_prefix):
     q["neardup_edit_distance"] = lambda s, d: dedup.neardup_edit_distance(
         load_documents(s, d)
     )
-    # sibling: duplicate_char_spans (the actionable char-grain form:
-    # complement-segment fold reassembly, cleaned-stream md5 oracle)
+    # the actionable char-grain form: complement-segment fold
+    # reassembly, cleaned-stream md5 oracle
     q["remove_duplicate_char_spans"] = lambda s, d: dedup.remove_duplicate_char_spans(
         load_documents(s, d)
     )
-    # sibling: duplicate_char_spans (in-cap) — the xxhash64 cheap-hash
-    # scale twin (VERDICT r9 #3): 8-byte longs instead of 32-char md5
-    # hex in the densest exchange in the repo (~4-5× fewer shuffle
-    # bytes, measured in SCALING.md round 10); output hash-free and
-    # collision-free at gate scale, so it carries the SAME DuckDB
-    # twin as the md5 form (the duplicate_spans_arrow precedent);
-    # equality vs the md5 form also pinned in tests/test_dedup.py
-    q["duplicate_char_spans_xx"] = lambda s, d: dedup.duplicate_char_spans(
-        load_documents(s, d), hasher="xxhash64"
-    )
-    # same twin for the actionable removal form (the canonical
-    # election and cleaned-stream digest are hash-type-independent
-    # while collision-free — shares the md5 oracle)
-    q["remove_duplicate_char_spans_xx"] = (
-        lambda s, d: dedup.remove_duplicate_char_spans(
-            load_documents(s, d), hasher="xxhash64"
-        )
-    )
-    # sibling: duplicate_spans (Arrow factorize+rolling-hash shingling
-    # — same winnowing-style fast/oracle split; rows-only because the
-    # 64-bit hash differs from the md5 twin by design, equality with
-    # the md5 form pinned in tests/test_dedup.py)
-    q["duplicate_spans_arrow"] = lambda s, d: dedup.duplicate_spans_arrow(
-        load_documents(s, d)
-    )
-    # sibling: quality_filter (same per-doc quality-signal family;
-    # this one is corpus-statistical rather than surface-form)
+    # same per-doc quality-signal family; this one is corpus-statistical
+    # rather than surface-form
     q["unigram_logprob"] = textual.unigram_logprob
-    # sibling: perplexity_buckets (in-cap round 5) — per-doc winnowing
-    # digest, rotated to overflow (driver-green r1-r4)
+    # per-doc winnowing digest
     q["winnowing_fingerprints"] = textual.winnowing_digest
-    # sibling: unigram_logprob (the sequence-aware bigram step-up)
+    # the sequence-aware bigram step-up of unigram_logprob;
     # session-cached score table (pure function of the corpus files,
-    # like store.py's scan cache): perplexity_buckets shares it, so
-    # the corpus-sized explode+aggregate runs once per corpus
+    # like store.py's scan cache): perplexity_buckets shares it, so the
+    # corpus-sized explode+aggregate runs once per corpus
     q["bigram_logprob"] = textual.bigram_scores_cached
-    # sibling: pq_rerank_full (embedding-quantization family; int8
-    # symmetric digest beside the PQ codebook path)
+    # embedding-quantization family; int8 symmetric digest beside the PQ
+    # codebook path
     q["quantize_embeddings"] = curation.quantize_embeddings
-    # sibling: knn_join_cosine (same per-query ranked-window kNN shape;
-    # adds the broadcast label vote)
+    # same per-query ranked-window kNN shape; adds the broadcast label
+    # vote
     q["knn_classify"] = curation.knn_classify
-    # sibling: knn_join_cosine / knn_classify (contrastive-training
-    # prep: top-k nearest with a DIFFERENT label — hard negatives)
+    # contrastive-training prep: top-k nearest with a DIFFERENT label —
+    # hard negatives
     q["hard_negatives"] = lambda s, d: curation.hard_negatives(s, d, k=5, n_queries=8)
-    # sibling: events_distinct_pairs (same DISTINCT key-set oracle; this
-    # is the bounded-state dropDuplicatesWithinWatermark variant)
+    # same DISTINCT key-set oracle; this is the bounded-state
+    # dropDuplicatesWithinWatermark variant
     q["events_distinct_wm"] = streaming_events.distinct_pairs_within_watermark_stream
-    # siblings: ivf_knn_join_dist + events_hourly_stream (streaming
-    # query SERVING: checkpointed query-shard stream -> foreachBatch
-    # distributed ANN join -> results table; drained == exact batch
-    # kNN join, so it carries a full SQL oracle — streaming/serve.py)
+    # streaming query SERVING: checkpointed query-shard stream ->
+    # foreachBatch distributed ANN join -> results table; drained ==
+    # exact batch kNN join, so it carries a full SQL oracle —
+    # streaming/serve.py
     q["knn_serve_stream"] = lambda s, d: streaming_serve.knn_serve_stream(
         s, d, k=5, n_queries=8
     )
 
-    # sibling: pricing_summary / revenue_by_nation (TPC-H Q3 shape:
-    # date-bounded star join with broadcast dims + TakeOrdered)
+    # TPC-H Q3 shape: date-bounded star join with broadcast dims +
+    # TakeOrdered
     q["shipping_priority"] = relational.shipping_priority
-    # sibling: revenue_by_nation (TPC-H Q10 shape: returns-loss
-    # ranking with the customer dimension broadcast)
+    # TPC-H Q10 shape: returns-loss ranking with the customer dimension
+    # broadcast
     q["returned_items"] = relational.returned_items
-    # sibling: revenue_by_nation (TPC-H Q9 shape: five-way join,
-    # every dimension broadcast, yearly profit rollup)
+    # TPC-H Q9 shape: five-way join, every dimension broadcast, yearly
+    # profit rollup
     q["supplier_profit"] = relational.supplier_profit
-    # sibling: pricing_summary (TPC-H Q12: conditional counts after a
-    # date-pruned fact⋈orders join)
+    # TPC-H Q12: conditional counts after a date-pruned fact⋈orders join
     q["shipmode_priority"] = relational.shipmode_priority
-    # sibling: pricing_summary (TPC-H Q14: conditional revenue ratio)
+    # TPC-H Q14: conditional revenue ratio
     q["promo_revenue_share"] = relational.promo_revenue_share
-    # sibling: top_customers_per_nation (TPC-H Q2 shape: correlated
-    # min decorrelated into one window over the aggregated table)
+    # TPC-H Q2 shape: correlated min decorrelated into one window over
+    # the aggregated table
     q["cheapest_supplier_per_part"] = relational.cheapest_supplier_per_part
-    # sibling: customers_without_orders (TPC-H Q4 shape: EXISTS as a
-    # left-semi join, both predicates pushed)
+    # TPC-H Q4 shape: EXISTS as a left-semi join, both predicates pushed
     q["priority_with_returns"] = relational.priority_with_returns
-    # sibling: pricing_summary (TPC-H Q11 shape: HAVING vs a broadcast
-    # scalar subquery)
+    # TPC-H Q11 shape: HAVING vs a broadcast scalar subquery
     q["important_parts"] = relational.important_parts
-    # sibling: important_parts (TPC-H Q15 shape: revenue view + scalar
-    # max equality on decimal-summed doubles)
+    # TPC-H Q15 shape: revenue view + scalar max equality on
+    # decimal-summed doubles
     q["top_supplier_revenue"] = relational.top_supplier_revenue
-    # sibling: orders_rollup (TPC-H Q18 shape: HAVING on the grouped
-    # fact first, dimensions joined only for qualifying orders)
+    # TPC-H Q18 shape: HAVING on the grouped fact first, dimensions
+    # joined only for qualifying orders
     q["large_volume_customers"] = relational.large_volume_customers
-    # sibling: customers_without_orders (TPC-H Q22 shape: scalar-avg
-    # subquery + anti join + rollup; nation keys the group — the
-    # testdata has no phone column)
+    # TPC-H Q22 shape: scalar-avg subquery + anti join + rollup; nation
+    # keys the group — the testdata has no phone column
     q["idle_high_balance_customers"] = relational.idle_high_balance_customers
-    # sibling: pricing_summary (TPC-H Q6 shape: join-free what-if
-    # filter-aggregate, all predicates pushed to the scan)
+    # TPC-H Q6 shape: join-free what-if filter-aggregate, all predicates
+    # pushed to the scan
     q["forecast_revenue_change"] = relational.forecast_revenue_change
-    # sibling: revenue_by_nation (TPC-H Q7 shape: bilateral
-    # supplier-nation × customer-nation trade volume by year)
+    # TPC-H Q7 shape: bilateral supplier-nation × customer-nation trade
+    # volume by year
     q["volume_shipping"] = relational.volume_shipping
-    # sibling: promo_revenue_share (TPC-H Q8 shape: conditional-sum /
-    # total-sum market-share ratio in one aggregation pass)
+    # TPC-H Q8 shape: conditional-sum / total-sum market-share ratio in
+    # one aggregation pass
     q["national_market_share"] = relational.national_market_share
-    # sibling: customers_without_orders (TPC-H Q13 shape: left join
-    # keeps zero-order customers, double aggregation histogram)
+    # TPC-H Q13 shape: left join keeps zero-order customers, double
+    # aggregation histogram
     q["customer_order_distribution"] = relational.customer_order_distribution
-    # sibling: important_parts (TPC-H Q17 shape: correlated per-part
-    # AVG decorrelated into an aggregate joined back to the fact)
+    # TPC-H Q17 shape: correlated per-part AVG decorrelated into an
+    # aggregate joined back to the fact
     q["small_quantity_revenue"] = relational.small_quantity_revenue
-    # sibling: pricing_summary (TPC-H Q19 shape: OR of AND-group
-    # branches across the part ⋈ lineitem join)
+    # TPC-H Q19 shape: OR of AND-group branches across the part ⋈
+    # lineitem join
     q["disjunctive_branch_revenue"] = relational.disjunctive_branch_revenue
-    # sibling: large_volume_customers (TPC-H Q21 shape: the
-    # EXISTS / NOT-EXISTS self-join pair collapsed into one
-    # groupBy(orderkey) pass — see the docstring's 100 TB argument)
+    # TPC-H Q21 shape: the EXISTS / NOT-EXISTS self-join pair collapsed
+    # into one groupBy(orderkey) pass — see the docstring's 100 TB
+    # argument
     q["waiting_suppliers"] = relational.waiting_suppliers
-    # sibling: parts_ordered_by_brand (TPC-H Q16 shape: distinct-count
-    # over the OBSERVED part-supplier bridge with NOT IN exclusions —
-    # no partsupp table in this schema)
+    # TPC-H Q16 shape: distinct-count over the OBSERVED part-supplier
+    # bridge with NOT IN exclusions — no partsupp table in this schema
     q["parts_supplier_relationship"] = relational.parts_supplier_relationship
-    # sibling: excess_supply_suppliers (in-cap round 5) — NOT EXISTS
-    # anti-join shape, rotated to overflow (driver-green r1-r4)
+    # NOT EXISTS anti-join shape
     q["customers_without_orders"] = relational.customers_without_orders
-    # sibling: hourly_locf (gap-filled trailing moving average over
-    # the calendar grid)
+    # gap-filled trailing moving average over the calendar grid
     q["revenue_moving_avg"] = relational.revenue_moving_avg
-    # sibling: table_profile (pre-join sanity: per-side keys, coverage
-    # and actual join cardinality)
+    # pre-join sanity: per-side keys, coverage and actual join
+    # cardinality
     q["join_cardinality_report"] = relational.join_cardinality_report
-    # sibling: revenue_moving_avg (growth reporting: weekly revenue
-    # with lag-based percent change)
+    # growth reporting: weekly revenue with lag-based percent change
     q["revenue_wow_change"] = relational.revenue_wow_change
-    # sibling: table_profile (temporal data-quality drift: null rates
-    # first half vs second half per probed column)
+    # temporal data-quality drift: null rates first half vs second half
+    # per probed column
     q["null_rate_drift"] = stats.null_rate_drift
-    # sibling: funnel_conversion (ordered event-sequence analytics:
-    # first-order Markov transition probabilities per event type)
+    # ordered event-sequence analytics: first-order Markov transition
+    # probabilities per event type
     q["event_transitions"] = temporal.event_transitions
-    # sibling: text_stats / quality_filter (surface-form readability
-    # scoring — Flesch proxy, pure codegen projection)
+    # surface-form readability scoring — Flesch proxy, pure codegen
+    # projection
     q["readability"] = textual.readability
-    # sibling: text_stats (same tokenize+classify family; rotated out
-    # of the cap round 3 for hybrid_rrf)
+    # same tokenize+classify family as text_stats
     q["lang_id"] = textual.lang_id_pred
-    # sibling: source_token_budget (rotated out of the cap round 3
-    # for incremental_dedup)
     q["token_budget"] = textual.token_budget
-    # sibling: document_splits (the per-epoch reproducible global
-    # shuffle: md5(doc:epoch) mod n_shards, balance audit shape)
+    # the per-epoch reproducible global shuffle: md5(doc:epoch) mod
+    # n_shards, balance audit shape
     q["epoch_shards"] = sampling.epoch_shards
-    # sibling: document_splits / tfidf (deterministic per-group
-    # inspection sample via md5-draw rank)
+    # deterministic per-group inspection sample via md5-draw rank
     q["per_source_examples"] = sampling.per_source_examples
-    # sibling: token_frequencies (BPE tokenizer training step 1:
-    # adjacent char-pair frequencies inside tokens)
+    # BPE tokenizer training step 1: adjacent char-pair frequencies
+    # inside tokens
     q["bpe_pair_counts"] = textual.bpe_pair_counts
-    # sibling: distinct_users_by_type (heavy-hitter share report on
-    # the shuffle key — the pre-salting skew diagnosis)
+    # heavy-hitter share report on the shuffle key — the pre-salting
+    # skew diagnosis
     q["key_skew_report"] = lambda s, d: skew_mod.key_skew_report(s, d)
-    # sibling: bm25_topk (in-cap; per-doc top TF-IDF terms — same
-    # tokenize + document-frequency family; rotated out round 4)
     q["tfidf_top_terms"] = textual.tfidf_top_terms
-    # sibling: bm25_topk_indexed (in-cap round 5) — the BM25 ⊕ vector
-    # reciprocal-rank fusion, rotated to overflow (driver-green r3/r4)
+    # the BM25 ⊕ vector reciprocal-rank fusion
     q["hybrid_rrf"] = lambda s, d: ranking_mod.hybrid_rrf_topk(
         s, d, _query_vec(s, d)
     )
-    # siblings: bm25_topk_indexed + stream_curation_ingest (CONTINUOUS
-    # lexical-index ingest: per-batch postings appends + sealed stats;
-    # the streamed generation is bit-identical to the offline build,
-    # so querying it carries the full bm25 oracle)
+    # CONTINUOUS lexical-index ingest: per-batch postings appends +
+    # sealed stats; the streamed generation is bit-identical to the
+    # offline build, so querying it carries the full bm25 oracle
     q["stream_lexical_ingest"] = lambda s, d: ranking_mod.bm25_topk_indexed(
         s, streaming_ingest.stream_lexical_ingest(s, d)
     )
-    # siblings: curate_corpus + events_distinct_pairs (CONTINUOUS
-    # curation: per-micro-batch quality gate + dedup-on-arrival vs the
-    # accumulated hash table; drained == the batch first-occurrence
-    # election, full SQL oracle — streaming/curation_ingest.py)
+    # CONTINUOUS curation: per-micro-batch quality gate +
+    # dedup-on-arrival vs the accumulated hash table; drained == the
+    # batch first-occurrence election, full SQL oracle —
+    # streaming/curation_ingest.py
     q["stream_curation_ingest"] = lambda s, d: streaming_curing.stream_curation_ingest(
         s, d
     )
-    # sibling: heavy_hitters_topk (the STREAMING fold of the MG
-    # summary: per-batch snapshot state, replay-idempotent; drained
-    # candidates are a superset by the mergeable-summaries property,
-    # and the exact serving pass reproduces the batch top-k bit for
-    # bit -> shares the token-frequency oracle)
+    # the STREAMING fold of the MG summary: per-batch snapshot state,
+    # replay-idempotent; drained candidates are a superset by the
+    # mergeable-summaries property, and the exact serving pass
+    # reproduces the batch top-k bit for bit -> shares the
+    # token-frequency oracle
     q["stream_heavy_hitters"] = lambda s, d: streaming_sketch.stream_heavy_hitters(
         s, d, k=25
     )
-    # sibling: psi_drift (drift ON ARRIVAL: per-micro-batch PSI vs the
-    # static first-half reference window; stateless per batch,
-    # batch-id-keyed idempotent sink; drained == per-shard batch
-    # recompute pytest-pinned. Rows-only: shard cuts come from a
-    # percentile sketch, no SQL twin.)
+    # drift ON ARRIVAL: per-micro-batch PSI vs the static first-half
+    # reference window; stateless per batch, batch-id-keyed idempotent
+    # sink; drained == per-shard batch recompute pytest-pinned.
+    # Rows-only: shard cuts come from a percentile sketch, no SQL twin.
     q["stream_drift_monitor"] = lambda s, d: streaming_sketch.stream_drift_monitor(
         s, d, n_shards=3
     )
-    # sibling: tdigest_quantiles (the MAINTAINED-on-arrival form:
-    # first shard builds the store, later shards fold via
-    # tdigest_store_upsert — the ivf_upsert ingest pattern; weight
-    # conservation + rank accuracy after the drain pinned in
-    # tests/test_tdigest.py; rows-only like its batch twin)
+    # the MAINTAINED-on-arrival form: first shard builds the store,
+    # later shards fold via tdigest_store_upsert — the ivf_upsert ingest
+    # pattern; weight conservation + rank accuracy after the drain
+    # pinned in tests/test_tdigest.py; rows-only like its batch twin
     q["stream_tdigest_ingest"] = lambda s, d: streaming_sketch.stream_tdigest_ingest(
         s, d, n_shards=3
     )
-    # sibling: user_running_totals (the second applyInPandasWithState
-    # operator — session NUMBERING whose (last_ts, n_sessions) state
-    # genuinely spans micro-batches via one-shard-per-trigger arrival;
-    # drained == batch lag/cumsum sessionization at event grain)
+    # the second applyInPandasWithState operator — session NUMBERING
+    # whose (last_ts, n_sessions) state genuinely spans micro-batches
+    # via one-shard-per-trigger arrival; drained == batch lag/cumsum
+    # sessionization at event grain
     q["user_session_numbers"] = lambda s, d: streaming_sessions.user_session_numbers_stream(
         s, d
     )
-    # sibling: events_hourly_stream (sliding windows — overlapping
-    # size>slide state, vs the tumbling rollup; drained == batch)
+    # sliding windows — overlapping size>slide state, vs the tumbling
+    # rollup; drained == batch
     q["events_sliding_stream"] = streaming_events.sliding_type_counts_stream
-    # sibling: events_hourly_stream + revenue_by_nation (STREAM-STATIC
-    # join: the event stream enriched with the customer->nation
-    # dimension per micro-batch; drained == batch join+rollup)
+    # STREAM-STATIC join: the event stream enriched with the
+    # customer->nation dimension per micro-batch; drained == batch
+    # join+rollup
     q["stream_static_enrich"] = streaming_events.enriched_nation_counts_stream
-    # sibling: dedup_minhash_md5 (in-cap; the exact n-gram Jaccard
-    # verification the MinHash bands estimate; rotated out round 4
-    # for cdc_merge)
     q["dedup_ngram_jaccard"] = lambda s, d: dedup.ngram_jaccard_pairs(
         load_documents(s, d), n=3, threshold=0.8
     )
-    # sibling: sorted_neighborhood (in-cap; the standard recall fix:
-    # second pass on the reversed-text key, distinct-union of passes)
     q["sorted_neighborhood_2key"] = lambda s, d: blocking_mod.sorted_neighborhood_multi_key(
         load_documents(s, d)
     )
-    # rotated out of cap late round 7 (driver-green r1-r6 records;
-    # families keep in-cap siblings, see the rotation comments):
     q["dedup_minhash_md5"] = lambda s, d: dedup.minhash_lsh_pairs(
         load_documents(s, d), n=3, threshold=0.8, hasher="md5"
     )
     q["export_curated"] = lambda s, d: curation.export_curated(s, d)
     q["graph_stats"] = lambda s, d: graph_mod.graph_stats(s, d)
     q["hourly_locf"] = temporal.hourly_locf
-    # sibling: user_running_totals (two-phase salted groupBy == direct
-    # groupBy — the skewed-aggregation rewrite, gate-proven safe)
+    # two-phase salted groupBy == direct groupBy — the
+    # skewed-aggregation rewrite, gate-proven safe
     q["salted_user_rollup"] = lambda s, d: skew_mod.salted_user_rollup(s, d)
-    # sibling: user_running_totals / bucket_anomalies (point-in-time
-    # trailing RANGE-frame features per event — no future leakage)
+    # point-in-time trailing RANGE-frame features per event — no future
+    # leakage
     q["user_trailing_features"] = temporal.user_trailing_features
-    # sibling: text_stats (column-level ingest-QA profile of a whole
-    # table in one scan + unpivot)
+    # column-level ingest-QA profile of a whole table in one scan +
+    # unpivot
     q["table_profile"] = lambda s, d: stats.table_profile(s, d)
-    # sibling: revenue_by_nation / orders_rollup (in-cap; brand-level
-    # join+agg; rotated out round 4 for graph_stats)
     q["parts_ordered_by_brand"] = relational.parts_ordered_by_brand
-    # sibling: bucket_anomalies (metric-drift analytics: closed-form
-    # least-squares trend per event type from integer-exact sums)
+    # metric-drift analytics: closed-form least-squares trend per event
+    # type from integer-exact sums
     q["type_value_trends"] = stats.type_value_trends
-    # sibling: session_rollup + event_transitions (sequence mining:
-    # top 3-step event-type paths within 30-min-gap sessions)
+    # sequence mining: top 3-step event-type paths within 30-min-gap
+    # sessions
     q["session_paths"] = temporal.session_paths
-    # sibling: session_rollup + funnel_conversion (supervised label
-    # generation: purchase-within-horizon after each session — the
-    # leak-free propensity training-set shape)
+    # supervised label generation: purchase-within-horizon after each
+    # session — the leak-free propensity training-set shape
     q["session_labels"] = temporal.session_labels
-    # sibling: lang_id / quality_filter (weak supervision: regex
-    # labeling-function panel, majority vote + agreement diagnostics)
+    # weak supervision: regex labeling-function panel, majority vote +
+    # agreement diagnostics
     q["weak_labels"] = textual.weak_labels
-    # sibling: document_splits (deterministic augmentation: md5-drawn
-    # token dropout, digest output)
+    # deterministic augmentation: md5-drawn token dropout, digest output
     q["augment_dropout"] = lambda s, d: textual.augment_token_dropout(s, d)
-    # sibling: tfidf_top_terms (dictionary-NER: broadcast gazetteer
-    # join onto the token stream, keyed count)
+    # dictionary-NER: broadcast gazetteer join onto the token stream,
+    # keyed count
     q["gazetteer_entities"] = textual.gazetteer_entities
-    # sibling: gazetteer_entities (association mining: document-level
-    # entity pair support + lift)
+    # association mining: document-level entity pair support + lift
     q["entity_cooccurrence"] = textual.entity_cooccurrence
-    # sibling: type_value_trends (co-movement: hourly-volume Pearson
-    # correlation per type pair from integer-exact sums)
+    # co-movement: hourly-volume Pearson correlation per type pair from
+    # integer-exact sums
     q["type_correlations"] = stats.type_correlations
-    # sibling: lang_profile (the dataset card: the one-row corpus
-    # summary a pipeline publishes with a training set)
+    # the dataset card: the one-row corpus summary a pipeline publishes
+    # with a training set
     q["dataset_card"] = curation.dataset_card
-    # sibling: lang_profile (corpus-mix cross-tab: language x quality
-    # bucket with per-language shares)
+    # corpus-mix cross-tab: language x quality bucket with per-language
+    # shares
     q["lang_quality_matrix"] = textual.lang_quality_matrix
-    # sibling: retention_cohorts (engagement stickiness: exact DAU /
-    # trailing-7-day WAU from the user-day grain)
+    # engagement stickiness: exact DAU / trailing-7-day WAU from the
+    # user-day grain
     q["dau_wau"] = stats.dau_wau
-    # sibling: events_hourly_stream's batch family (diurnal profile)
+    # events_hourly_stream's batch family (diurnal profile)
     q["hour_of_day_profile"] = stats.hour_of_day_profile
-    # sibling: token_frequencies (grouped per-language top-k)
+    # grouped per-language top-k
     q["top_tokens_per_lang"] = textual.top_tokens_per_lang
-    # sibling: histogram_quantiles (in-cap; the percentile_disc exact
-    # readout; rotated out round 4 for the deterministic mergeable
-    # histogram path)
     q["value_percentiles"] = stats.value_percentiles
-    # sibling: events_distinct_pairs / ab_test_report (in-cap;
-    # count-distinct per type; rotated out round 4)
     q["distinct_users_by_type"] = stats.distinct_users_by_type
-    # sibling: ab_test_report (CUPED variance reduction: pre-period
-    # covariate adjustment, decimal-exact moments)
+    # CUPED variance reduction: pre-period covariate adjustment,
+    # decimal-exact moments
     q["ab_test_cuped"] = stats.ab_test_cuped
-    # siblings: chunk_documents + hard_negatives (self-supervised
-    # pair construction: adjacent-chunk positives + prime-shift
-    # derangement negatives, ids-only join)
+    # self-supervised pair construction: adjacent-chunk positives +
+    # prime-shift derangement negatives, ids-only join
     q["contrastive_pairs"] = lambda s, d: curation.contrastive_pairs(s, d)
-    # sibling: curate_corpus / export_curated (in-cap; token-budget
-    # packing over the curated survivor set; rotated out round 4)
     q["curated_pack"] = curation.curated_pack
-    # sibling: quality_filter + dedup_exact_groups (calibration: does
-    # the quality signal anticorrelate with duplication)
+    # calibration: does the quality signal anticorrelate with
+    # duplication
     q["quality_vs_dup_rate"] = curation.quality_vs_dup_rate
-    # siblings: label_centroids / knn_classify (seeded nearest-anchor
-    # assignment — pure relational math over the store, so the
-    # clustering itself is oracle-checkable; operators/clustering.py)
+    # seeded nearest-anchor assignment — pure relational math over the
+    # store, so the clustering itself is oracle-checkable;
+    # operators/clustering.py
     q["cluster_assign"] = lambda s, d: clustering_mod.cluster_assign(s, d)
-    # sibling: cluster_assign (occupancy + cohesion profile per
-    # cluster — the mixture-balancing readout)
+    # occupancy + cohesion profile per cluster — the mixture-balancing
+    # readout
     q["cluster_profile"] = lambda s, d: clustering_mod.cluster_profile(s, d)
-    # siblings: cluster_assign + tfidf_top_terms (class-based c-TF-IDF
-    # top terms per cluster — the topic-audit readout)
+    # class-based c-TF-IDF top terms per cluster — the topic-audit
+    # readout
     q["cluster_topics"] = lambda s, d: clustering_mod.cluster_topics(s, d)
-    # sibling: table_profile (vector-store ingest QA: per-label norm
-    # stats, dimension drift, zero vectors — the pre-index sanity sweep)
+    # vector-store ingest QA: per-label norm stats, dimension drift,
+    # zero vectors — the pre-index sanity sweep
     q["embedding_qa_report"] = lambda s, d: clustering_mod.embedding_qa_report(s, d)
-    # sibling: topk_cosine (the radius-query twin: every row clearing
-    # the score threshold — "all near-duplicates of this item" lookups
-    # where k is unknown; codegen predicate, no heap unless bounded)
+    # the radius-query twin: every row clearing the score threshold —
+    # "all near-duplicates of this item" lookups where k is unknown;
+    # codegen predicate, no heap unless bounded
     q["range_search_cosine"] = lambda s, d: search_mod.range_search(
         s, d, _query_vec(s, d), threshold=0.2
     )
-    # siblings: dedup_exact_groups + quality_filter (quality-aware
-    # canonical election: keep the BEST duplicate, not the first —
-    # the production-default election rule)
+    # quality-aware canonical election: keep the BEST duplicate, not the
+    # first — the production-default election rule
     q["dedup_best_quality"] = lambda s, d: dedup.best_quality_election(s, d)
-    # siblings: topk_cosine + curated_pack (RAG context assembly:
-    # top-k retrieval -> greedy token-budget cut in rank order — the
-    # serving step that turns retrieval into an LLM prompt)
+    # RAG context assembly: top-k retrieval -> greedy token-budget cut
+    # in rank order — the serving step that turns retrieval into an LLM
+    # prompt
     q["rag_context"] = lambda s, d: ranking_mod.rag_context(
         s, d, _query_vec(s, d)
     )
@@ -1677,13 +1405,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (BLAS summation order differs in the last ulp; equivalence is
     # asserted in tests/test_scale_paths.py)
     q["knn_join_blocked"] = _mk_knn_join_blocked("CosineSimilarity", k=5, n_queries=8)
-    # routed-blocked serving join: pruned cluster dirs x BLAS blocks
-    # (equivalence to ivf_knn_join_distributed pinned in
-    # tests/test_scale_paths.py; measured 25x in tools/scale_probe.py)
     # iterative centrality over the near-dup graph (Pregel-style
     # DataFrame loop; numpy replay + regular-graph fixpoint pinned in
     # tests/test_graph.py)
     q["neardup_pagerank"] = lambda s, d: graph_mod.neardup_pagerank(s, d)
+    # routed-blocked serving join: pruned cluster dirs x BLAS blocks
+    # (equivalence to ivf_knn_join_distributed pinned in
+    # tests/test_scale_paths.py; measured 25x in tools/scale_probe.py)
     q["ivf_knn_join_routed"] = _mk_ivf_knn_join_routed("CosineSimilarity", k=5, n_queries=8)
     # the tree twin of the routed-blocked serving join
     q["tree_knn_join_routed"] = _mk_tree_knn_join_routed("CosineSimilarity", k=5, n_queries=8)
@@ -1698,11 +1426,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["dedup_minhash_lsh"] = lambda s, d: dedup.minhash_lsh_pairs(
         load_documents(s, d), n=3, threshold=0.8
     )
-    # sibling: dedup_minhash_lsh (ONE-permutation signature, Li/Owen/
-    # Zhang 2012 + Shrivastava/Li densification: one string hash per
-    # shingle instead of num_hashes — the signature-stage scale path;
-    # same banding, same exact verify; recall/densification pinned in
-    # tests/test_dedup.py; xxhash64 => rows-only like its k-hash twin)
+    # ONE-permutation signature, Li/Owen/ Zhang 2012 + Shrivastava/Li
+    # densification: one string hash per shingle instead of num_hashes —
+    # the signature-stage scale path; same banding, same exact verify;
+    # recall/densification pinned in tests/test_dedup.py; xxhash64 =>
+    # rows-only like its k-hash twin
     q["dedup_minhash_oph"] = lambda s, d: dedup.oph_lsh_pairs(
         load_documents(s, d), n=3, threshold=0.8
     )
@@ -1714,14 +1442,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["neardup_cosine_lsh"] = lambda s, d: dedup.srp_cosine_pairs(
         load_embeddings(s, d), threshold=0.9, dim=64
     )
-    # sibling: neardup_cosine + dedup_components (SemDeDup: one
-    # representative per embedding-space component)
+    # SemDeDup: one representative per embedding-space component
     q["semantic_dedup"] = curation.semantic_dedup
-    # sibling: semantic_dedup_blocked (in-cap round 5) — the as-of
-    # attribution join, rotated to overflow (driver-green r3/r4)
+    # the as-of attribution join
     q["purchase_attribution"] = asof.purchase_attribution
-    # sibling: split_leakage_audit (in-cap round 5) — per-doc md5
-    # split assignment, rotated to overflow (driver-green r1-r4)
+    # per-doc md5 split assignment
     q["document_splits"] = sampling.document_splits
     # 1:N frame fan-out through mapInPandas (binary frames have no SQL
     # twin; invariants pinned in tests/test_multimodal.py)
@@ -1732,21 +1457,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the exact forms in tests/test_temporal_stats.py)
     q["approx_value_percentiles"] = stats.approx_value_percentiles
     q["approx_distinct_users"] = stats.approx_distinct_users
-    # sibling: approx_distinct_users (the MAINTAINED form: persisted
-    # per-(day, type) DataSketches HLL registers, folded on arrival
-    # (union = register-wise max: associative, idempotent), per-day
-    # answers served by UNIONING stored registers — register equality
-    # with the direct sketch, fold==rebuild, and the <=5% accuracy
-    # bound all pinned in tests/test_sketch_store.py. Rows-only:
-    # binary sketches are engine-specific.
+    # the MAINTAINED form: persisted per-(day, type) DataSketches HLL
+    # registers, folded on arrival (union = register-wise max:
+    # associative, idempotent), per-day answers served by UNIONING
+    # stored registers — register equality with the direct sketch,
+    # fold==rebuild, and the <=5% accuracy bound all pinned in
+    # tests/test_sketch_store.py. Rows-only: binary sketches are
+    # engine-specific.
     q["hll_daily_users"] = sketchstore_mod.daily_user_sketches
-    # sibling: histogram_store_quantiles (in-cap) — the UNKNOWN-range
-    # mergeable quantile rung: persisted t-digest centroid state per
-    # event type (Dunning & Ertl merging digest, k1 scale), folds
-    # need no bin geometry fixed at build time. Deterministic via
-    # hash-mod shards + sorted-concat merges (pure function of the
-    # data, pinned across partitionings); rank error <3% and n
-    # conservation pinned in tests/test_tdigest.py. Rows-only: no
+    # the UNKNOWN-range mergeable quantile rung: persisted t-digest
+    # centroid state per event type (Dunning & Ertl merging digest, k1
+    # scale), folds need no bin geometry fixed at build time.
+    # Deterministic via hash-mod shards + sorted-concat merges (pure
+    # function of the data, pinned across partitionings); rank error <3%
+    # and n conservation pinned in tests/test_tdigest.py. Rows-only: no
     # engine replays a t-digest.
     q["tdigest_quantiles"] = lambda s, d: tdigest_mod.tdigest_quantiles(s, d)
     # count-min sketch: fixed-memory token frequencies at a tight
@@ -1771,8 +1495,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # analogue of IVFADC; exactness at full width + pruned plan shape
     # pinned in tests/test_bq.py)
     q["ivfbq_topk_width2"] = _mk_ivfbq("CosineSimilarity", k=10, width=2, shortlist=64)
-    # sibling: ivfsq_rerank_full (in-cap round 5) — ntile deciles over
-    # the aggregated customer table, rotated to overflow (r3/r4 green)
+    # ntile deciles over the aggregated customer table
     q["customer_revenue_deciles"] = relational.customer_revenue_deciles
     # graph ANN (5th index shape: k-NN graph + beam search). Full beam
     # traverses the ENTIRE graph (visited==n_rows asserted — a live
@@ -1799,9 +1522,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["multimodal_png_stats"] = multimodal.png_stats
     # audio twin: PCM decode -> RMS/zero-crossing -> clip digest
     q["multimodal_pcm_stats"] = multimodal.pcm_stats
-    # sibling: multimodal_pcm_stats (the SPECTRAL stage: Hann/rfft
-    # band energies, dominant band, spectral flatness — the
-    # silence/noise filter's features; numpy kernel replay pinned)
+    # the SPECTRAL stage: Hann/rfft band energies, dominant band,
+    # spectral flatness — the silence/noise filter's features; numpy
+    # kernel replay pinned
     q["multimodal_pcm_spectral"] = lambda s, d: multimodal.pcm_spectral(s, d)
     # energy-based audio segmentation (islands over frame RMS; numpy
     # replay + well-formedness in tests/test_multimodal.py)
@@ -1810,57 +1533,50 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # k-bound candidate block is inherently sequential — serving-path
     # contract; selection invariants pinned in tests/test_ranking.py)
     q["mmr_rerank"] = lambda s, d: ranking_mod.mmr_rerank(s, d, _query_vec(s, d))
-    # xxhash64 winnowing (native-hash variant of the md5 oracle twin;
-    # guarantee tests in tests/test_text.py)
-    q["winnowing_digest64"] = textual.winnowing_digest64
     # Arrow-vectorized winnowing: numpy rolling hash + stride-tricks
     # sliding minima — the 100 TB fingerprinting path (103 s -> 6.8 s
     # at 1M docs vs the expression form; guarantee + determinism
     # pinned in tests/test_text.py)
     q["winnowing_arrow"] = textual.winnowing_digest_arrow
-    # Arrow-fingerprint incremental dedup (production twin of the
-    # in-cap md5 form; cross-variant agreement in tests/test_dedup.py)
+    # Arrow-fingerprint incremental dedup (production twin of the md5
+    # form; cross-variant agreement in tests/test_dedup.py)
     q["incremental_dedup_arrow"] = lambda s, d: dedup.incremental_dedup_arrow(s, d)
-    # sibling: snapshot_loop_semantic IN-CAP (round-10 session-2
-    # rotation) — the default loop it contains; retired driver-green
-    # r9/r10, keeps its own oracle here
+    # the default snapshot loop (screen + quality + contamination)
     q["incremental_snapshot_loop"] = pipeline_mod.incremental_snapshot_loop
-    # sibling: snapshot_loop_semantic — the IVF-ROUTED candidate
-    # exchange form of the same stage (the 100 TB swap the broadcast
-    # docstring promises): existing vectors route once to a home
-    # cluster, the delta probes 2 centroids, only same-cluster pairs
-    # verify. Round 11 (VERDICT r10 #1): the routing codebook is the
-    # SERVING index's persisted centroids (semantic_index) — no KMeans
-    # refit over the existing corpus per snapshot; the stage's cost is
-    # purely delta-driven. Rows-only: the blocked max is a documented
-    # LOWER BOUND of the exact max (admission-only); the provable
-    # endpoint (probes == n_clusters ⇒ identical manifest, fit-free
-    # with a supplied index) is pinned in tests/test_pipeline.py
+    # the IVF-ROUTED candidate exchange form of the same stage (the 100
+    # TB swap the broadcast docstring promises): existing vectors route
+    # once to a home cluster, the delta probes 2 centroids, only
+    # same-cluster pairs verify. The routing
+    # codebook is the SERVING index's persisted centroids
+    # (semantic_index) — no KMeans refit over the existing corpus per
+    # snapshot; the stage's cost is purely delta-driven. Rows-only: the
+    # blocked max is a documented LOWER BOUND of the exact max
+    # (admission-only); the provable endpoint (probes == n_clusters ⇒
+    # identical manifest, fit-free with a supplied index) is pinned in
+    # tests/test_pipeline.py
     q["snapshot_loop_semantic_blocked"] = (
         lambda s, d: pipeline_mod.incremental_snapshot_loop(
             s, d, semantic_threshold=0.42, semantic_probes=2,
             semantic_index=_ivf_index(s, d),
         )
     )
-    # sibling: incremental_snapshot_loop at the PRODUCTION quality
-    # gate (round 10): the FineWeb-recipe conjunction (C4 line rules
-    # AND KN5 perplexity tiles — curate_corpus_production's enforced
-    # gates) swapped in for the generic quality score, same manifest
-    # schema, same CTE-chain oracle with the quality CTE swapped —
-    # the whole modern curation recipe running as ONE incremental
-    # loop per crawl snapshot
+    # at the PRODUCTION quality gate: the FineWeb-recipe
+    # conjunction (C4 line rules AND KN5 perplexity tiles —
+    # curate_corpus_production's enforced gates) swapped in for the
+    # generic quality score, same manifest schema, same CTE-chain oracle
+    # with the quality CTE swapped — the whole modern curation recipe
+    # running as ONE incremental loop per crawl snapshot
     q["snapshot_loop_production"] = (
         lambda s, d: pipeline_mod.incremental_snapshot_loop(
             s, d, quality_gate="production"
         )
     )
-    # sibling: snapshot_loop_production served by the PERSISTED store
-    # chain (round 11, VERDICT r10 #2+#3): KN5 model store (built
-    # once, count-fold upsertable) -> gate verdict store (built once
-    # FROM the model store) -> the loop probes the verdict parquet.
-    # Store == recompute at gate scope, so it carries the SAME oracle;
-    # per-run gate cost is a 2-column scan + delta join instead of a
-    # corpus-wide C4+KN5 pass per snapshot
+    # served by the PERSISTED store chain:
+    # KN5 model store (built once, count-fold upsertable) -> gate
+    # verdict store (built once FROM the model store) -> the loop probes
+    # the verdict parquet. Store == recompute at gate scope, so it
+    # carries the SAME oracle; per-run gate cost is a 2-column scan +
+    # delta join instead of a corpus-wide C4+KN5 pass per snapshot
     q["snapshot_loop_production_store"] = (
         pipeline_mod.snapshot_loop_production_store
     )
@@ -1869,64 +1585,53 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ivf_upsert pattern for dedup state); must equal the recompute
     # form, so it shares incremental_dedup's oracle SQL
     q["incremental_dedup_store"] = lambda s, d: dedup.incremental_dedup_store(s, d)
-    # sibling: the snapshot loop with the CCNet boilerplate-LINE stage
-    # enabled (round 11): per incoming doc, corpus-hot-line occurrence
-    # count + boilerplate-stripped digest join the manifest as
+    # snapshot loop with the CCNet boilerplate-LINE stage enabled (round
+    # 11): per incoming doc, corpus-hot-line occurrence count +
+    # boilerplate-stripped digest join the manifest as
     # evidence/transform columns (admission untouched — CCNet strips
     # lines, keeps docs); oracle = the loop CTE chain + the line_dedup
     # CTEs restricted to incoming
     q["snapshot_loop_line"] = lambda s, d: pipeline_mod.incremental_snapshot_loop(
         s, d, line_screen=True
     )
-    # sibling: snapshot_loop_full IN-CAP (round-11 session-2
-    # rotation) — the SEMANTIC-screen loop the full shape contains;
-    # retired driver-green r10/r11, keeps its own oracle here
+    # the SEMANTIC-screen loop (the full shape minus the line and
+    # production stages)
     q["snapshot_loop_semantic"] = lambda s, d: pipeline_mod.incremental_snapshot_loop(
         s, d, semantic_threshold=0.42
     )
-    # sibling: line_dedup IN-CAP — the MAINTAINED-STATE path at LINE
-    # grain (round 11, VERDICT r10 #4): hot-line counts persist as a
-    # parquet store, built incrementally (existing build + incoming
-    # upsert — an associative exact count fold), the corpus screens
-    # against it; == batch recompute, so it shares line_dedup's oracle
+    # the MAINTAINED-STATE path at LINE grain: hot-line counts persist
+    # as a parquet store, built
+    # incrementally (existing build + incoming upsert — an associative
+    # exact count fold), the corpus screens against it; == batch
+    # recompute, so it shares line_dedup's oracle
     q["line_dedup_store"] = textual.line_dedup_store
-    # sibling: line_dedup with the xxhash64 line hash (round 11,
-    # VERDICT r10 #7 — the char-span cheap-hash-twin argument at line
-    # grain): 8-byte bigints through the densest exchange instead of
-    # 32-char hex. Rows-only (no SQL twin for xxhash64); equality vs
-    # the md5 form pinned in pytest, shuffle delta in SCALING.md
-    q["line_dedup_xx"] = lambda s, d: textual.line_dedup(
-        s, d, hasher="xxhash64"
-    )
-    # sibling: line_dedup ON ARRIVAL — shards fold their line-hash
-    # counts into the store per trigger; the drained screen equals
-    # batch (threshold-at-read over the folded counts), same oracle
+    # ON ARRIVAL — shards fold their line-hash counts into the store per
+    # trigger; the drained screen equals batch (threshold-at-read over
+    # the folded counts), same oracle
     q["stream_line_dedup"] = lambda s, d: streaming_curing.stream_line_hash_ingest(
         s, d
     )
-    # sibling: KN5 model TRAINING on arrival — shards fold their
-    # 5-gram counts into the persisted model store per trigger
-    # (associative exact fold ⇒ drained model == batch-built model);
-    # the corpus scores from the drained store, same oracle as the
-    # recompute scorer. Session-memoized (a pure function of the
-    # corpus files — the kn5_scores_cached contract): the drain+score
-    # is the heaviest entry in the suite (~47 s at sf0.1) and its
-    # honest cost stays recorded in BENCH_DETAIL cold_s and
-    # SCALING.md; repeats serve the pinned result
+    # KN5 model TRAINING on arrival — shards fold their 5-gram
+    # counts into the persisted model store per trigger (associative
+    # exact fold ⇒ drained model == batch-built model); the corpus
+    # scores from the drained store, same oracle as the recompute
+    # scorer. Session-memoized (a pure function of the corpus files —
+    # the kn5_scores_cached contract): the drain+score is the heaviest
+    # entry in the suite (~47 s at sf0.1) and its honest cost stays
+    # recorded in BENCH_DETAIL cold_s and SCALING.md; repeats serve the
+    # pinned result
     q["stream_kn5_ingest"] = lambda s, d: _stream_kn5_cached(s, d)
-    # rotated out round 9 session 2 in favor of the composed
-    # incremental_snapshot_loop (which contains this screen):
     q["incremental_dedup"] = lambda s, d: dedup.incremental_dedup(s, d)
-    # sibling: incremental_snapshot_loop ON ARRIVAL — the incoming
-    # batch drains shard-by-shard against static existing-corpus
-    # hash/fp tables; drained manifest == batch manifest row-for-row
-    # (ascending-shard min election), so it carries the SAME oracle
+    # ON ARRIVAL — the incoming batch drains shard-by-shard against
+    # static existing-corpus hash/fp tables; drained manifest == batch
+    # manifest row-for-row (ascending-shard min election), so it carries
+    # the SAME oracle
     q["stream_snapshot_loop"] = lambda s, d: streaming_curing.stream_snapshot_loop(
         s, d
     )
     # BPE tokenizer TRAINING (full Sennrich loop over the distinct-word
     # table; iterative, so rows-only — pure-Python replay pinned in
-    # tests/test_bpe.py; sibling of bpe_pair_counts, its single step)
+    # tests/test_bpe.py; bpe_pair_counts is its single step)
     q["bpe_train"] = lambda s, d: bpe_mod.bpe_train(s, d, n_merges=10)
     # BPE ENCODE digest with the learned merges (Arrow-batched greedy
     # lowest-rank-first merge; replay-pinned beside bpe_train). The
@@ -1935,13 +1640,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["bpe_encode"] = lambda s, d: bpe_mod.bpe_encode_digest(
         s, d, merges=_bpe_merges(s, d)
     )
-    # sibling: the trained tokenizer PERSISTED (round 11 — the
-    # lm_store discipline for the tokenizer family): the merge table
-    # (the GPT-2 vocab-file analogue) on disk, encode reads n_merges
-    # rows instead of re-training; == the in-session form (merges are
-    # deterministic), equality pinned in tests/test_bpe.py. Rows-only
-    # like its family. No upsert: merges are order-dependent greedy
-    # choices — refresh is retrain
+    # trained tokenizer PERSISTED (the lm_store discipline for the
+    # tokenizer family): the merge table (the GPT-2 vocab-file
+    # analogue) on disk, encode reads n_merges rows instead of
+    # re-training; == the in-session form (merges are deterministic),
+    # equality pinned in tests/test_bpe.py. Rows-only like its family.
+    # No upsert: merges are order-dependent greedy choices — refresh is
+    # retrain
     q["bpe_encode_store"] = bpe_mod.bpe_encode_store
     # SentencePiece-style unigram-LM trainer (Kudo 2018, hard-EM):
     # EM iterates over the WORD-FREQUENCY table, not the corpus;
@@ -1958,12 +1663,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["unigram_lm_encode"] = lambda s, d: sp_unigram_mod.unigram_lm_encode_digest(
         s, d, vocab=_unigram_vocab(s, d)
     )
-    # WordPiece (Schuster & Nakajima 2012 / the BERT tokenizer) —
-    # the THIRD tokenizer-training family: likelihood-gain merge
-    # choice count(pair)/(count(l)*count(r)) instead of BPE's raw
-    # count (the difference is pinned in tests/test_wordpiece.py),
-    # greedy longest-match encode with whole-word [UNK]. Iterative,
-    # so rows-only like its two siblings; pure-Python replay pinned.
+    # WordPiece (Schuster & Nakajima 2012 / the BERT tokenizer) — the
+    # THIRD tokenizer-training family: likelihood-gain merge choice
+    # count(pair)/(count(l)*count(r)) instead of BPE's raw count (the
+    # difference is pinned in tests/test_wordpiece.py), greedy
+    # longest-match encode with whole-word [UNK]. Iterative, so
+    # rows-only like the BPE trainers; pure-Python replay pinned.
     q["wordpiece_train"] = lambda s, d: wordpiece_mod.wordpiece_train(
         s, d, n_merges=10
     )
@@ -1989,12 +1694,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # recall@10 of pruned IVF widths vs exact, 8 stored queries
     # (monotonicity + exact-at-full-width pinned in tests/test_index.py)
     q["ann_recall_report"] = _ann_recall_report
-    # round-9 gap item (VERDICT r8 #5): the serving-side twin of
+    # the serving-side twin of
     # ann_recall_report — measures the IVF recall curve on the corpus
     # itself and emits a (layout, n_clusters, width) recommendation
     # per target recall, codifying SCALING.md's measured crossovers;
     # recommendation logic replay-pinned in tests/test_autoconfig.py
-    # round 10 (VERDICT r9 #6): the selection competes ALL SIX serving
+    # The selection competes ALL SIX serving
     # shapes — IVF width, tree width, BQ Hamming shortlist, PQ/OPQ ADC
     # rerank shortlists, SQ8 rerank shortlist, graph-ANN beam — on
     # estimated bytes touched per query (probe fraction alone
@@ -2004,22 +1709,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pq_idx=_pq_index(s, d), opq_idx=_opq_index(s, d),
         sq_idx=_sq_index(s, d), gann_idx=_gann_index(s, d),
     )
-    # sibling: ann_autoconfig (the measured-curve artifact it reads,
-    # as data: (layout, width, recall) over every serving shape, each
-    # exact endpoint provably 1.0; the measurement memoizes per
-    # (sf_dir, index paths) so autoconfig and this entry share ONE
-    # serving pass per session)
+    # the measured-curve artifact it reads, as data: (layout, width,
+    # recall) over every serving shape, each exact endpoint provably
+    # 1.0; the measurement memoizes per (sf_dir, index paths) so
+    # autoconfig and this entry share ONE serving pass per session
     q["ann_layout_curves"] = lambda s, d: autoconfig_mod.ann_layout_curves(
         s, d, _ivf_index(s, d), _kmt_index(s, d), _bq_index(s, d),
         pq_idx=_pq_index(s, d), opq_idx=_opq_index(s, d),
         sq_idx=_sq_index(s, d), gann_idx=_gann_index(s, d),
     )
-    # siblings: decontaminate_bloom + graphann_rerank_full (promoted
-    # round 5, both since rotated back to overflow) — the temporal
-    # gaps-and-islands pair, rotated to overflow (driver-green r2-r4)
+    # the temporal gaps-and-islands pair
     q["surge_windows"] = temporal.surge_windows
     q["events_in_surges"] = temporal.events_in_surges
-    # trained-filter step of the curation pipeline (round 5): weak
+    # trained-filter step of the curation pipeline: weak
     # rules -> distributed multinomial NB -> score every doc; the
     # report is the rules-vs-model confusion audit
     # contract-layer serving cache: the scored table is a pure
@@ -2030,7 +1732,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["nb_label_report"] = lambda s, d: classify_mod.nb_label_report(
         s, d, preds=_nb_scored_cached(s, d)
     )
-    # embedding-space QA (round 5): decimal-exact covariance cells
+    # embedding-space QA: decimal-exact covariance cells
     # (oracle twin) + cross-source exact-dup overlap matrix
     q["embedding_covariance"] = embstats_mod.embedding_covariance
     q["source_overlap_matrix"] = lambda s, d: dedup.source_overlap_matrix(
@@ -2045,83 +1747,65 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # semantic-space counterpart of textual.source_divergence: per-
     # source centroids + pairwise cosine/L2 drift (oracle-backed)
     q["source_embedding_drift"] = embstats_mod.source_embedding_drift
-    # DSIR per-doc weights (overflow; the Gumbel top-k selection twin
-    # is in-cap): decimal-exact folds over a broadcast λ table
+    # DSIR per-doc weights (the Gumbel top-k selection is dsir_select):
+    # decimal-exact folds over a broadcast λ table
     q["dsir_weights"] = dsir_mod.dsir_weights
-    # displaced by the round-5 in-cap promotions (driver-green r2-r4;
-    # families still in-cap via bm25_topk_indexed /
-    # semantic_decontaminate)
     q["bm25_topk"] = lambda s, d: ranking_mod.bm25_topk(s, d)
     q["decontaminate"] = curation.decontaminate_documents
     # rows-only: zlib compression-ratio quality proxy (no SQL twin —
     # DuckDB has no zlib; monotone-repetition behavior pytest-pinned)
     q["compression_signals"] = textual.compression_signals
-    # displaced by the round-6 in-cap promotions (all driver-green
-    # r5 or earlier; each family keeps an in-cap representative —
-    # see the rotation comments above):
     q["text_stats"] = textual.text_stats
     q["chunk_documents"] = textual.chunk_documents
     q["perplexity_buckets"] = textual.perplexity_buckets
-    # rotated out round 9 session 2 in favor of kneser_ney5_logprob
-    # (its order-2 special case; same machinery, own oracle):
     q["kneser_ney_logprob"] = lambda s, d: textual.kneser_ney_logprob(
         s, d, docpair=textual.docpair_cached(s, d)
     )
-    # sibling: perplexity_buckets re-pointed at the 5-gram KN score —
-    # the CCNet configuration (tiles per source, head+middle keep)
+    # re-pointed at the 5-gram KN score — the CCNet configuration (tiles
+    # per source, head+middle keep)
     q["perplexity_buckets_kn5"] = textual.perplexity_buckets_kn5
-    # sibling: the same 5-gram KN scores served from the PERSISTED
-    # model store (round 11, VERDICT r10 #3): build once
-    # (artifacts.persisted; only the top-order c5 count table
-    # persists — the whole continuation cascade re-derives from it,
-    # which is what makes the upsert a pure count fold), score the
-    # corpus FROM the store. Store == recompute, so it shares the
-    # recompute's oracle; upsert-fold equality pinned in pytest
+    # same 5-gram KN scores served from the PERSISTED model store: build
+    # once (artifacts.persisted; only the
+    # top-order c5 count table persists — the whole continuation cascade
+    # re-derives from it, which is what makes the upsert a pure count
+    # fold), score the corpus FROM the store. Store == recompute, so it
+    # shares the recompute's oracle; upsert-fold equality pinned in
+    # pytest
     q["kn5_store_scores"] = lm_store_mod.kn5_store_corpus_scores
-    # sibling: kneser_ney5_modified (in-cap) served from the SAME
-    # persisted c5 store — the per-level D1/D2/D3+ discounts are
-    # count-of-counts functions of c5, so one model store serves both
-    # scorers; == recompute, same oracle
+    # served from the SAME persisted c5 store — the per-level D1/D2/D3+
+    # discounts are count-of-counts functions of c5, so one model store
+    # serves both scorers; == recompute, same oracle
     q["mkn5_store_scores"] = lm_store_mod.mkn5_store_corpus_scores
-    # sibling: kneser_ney5_modified IN-CAP (round-10 rotation) — the
-    # fixed-discount production-order 5-gram KN it generalizes;
-    # retired driver-green r9, keeps its own oracle here
+    # the fixed-discount production-order 5-gram KN that
+    # kneser_ney5_modified generalizes
     q["kneser_ney5_logprob"] = lambda s, d: textual.kn5_scores_cached(s, d)
-    # named production filters (round 9): the Gopher rule panel
+    # named production filters: the Gopher rule panel
     # (Rae et al. 2021 A1) beside the generic quality_filter, and the
     # C4 line rules (Raffel et al. 2020) over the deterministic line
     # augmentation with a cleaned-stream md5
     q["gopher_quality"] = textual.gopher_quality_report
     q["c4_line_filter"] = textual.c4_line_filter
-    # sibling: line_dedup IN-CAP (round-10 session-2 rotation) —
-    # paragraph-grain keep-first exact dedup; retired driver-green
-    # r8/r9, keeps its own oracle here
+    # paragraph-grain keep-first exact dedup
     q["paragraph_dedup"] = dedup.paragraph_dedup_docs
-    # sibling: curate_corpus_production IN-CAP (round-10 rotation) —
-    # the generic-quality-score curation chain it modernizes; retired
-    # driver-green r3-r9, keeps its own oracle here
+    # the generic-quality-score curation chain
     q["curate_corpus"] = curation.curate_corpus
-    # sibling: curate_corpus (round 10) — the ablation FUNNEL: per
-    # cumulative stage of the same chain, surviving doc/token mass and
-    # retention fractions (the per-step removal table dedup papers
-    # publish); one flags pass + one conditional-sum aggregate
+    # the ablation FUNNEL: per cumulative stage of the same chain,
+    # surviving doc/token mass and retention fractions (the per-step
+    # removal table dedup papers publish); one flags pass + one
+    # conditional-sum aggregate
     q["curation_funnel"] = curation.curation_funnel
-    # sibling: decontamination_sweep IN-CAP (round-11 rotation) — the
-    # GPT-3 appendix-C 13-gram config, one row of the sweep's grid;
-    # retired driver-green r10, keeps its own oracle here
+    # the GPT-3 appendix-C 13-gram config, one row of
+    # decontamination_sweep's grid
     q["decontaminate_13gram"] = lambda s, d: curation.decontaminate_documents(
         s, d, n=13, min_containment=0.1
     )
-    # sibling: production_funnel IN-CAP (round-11 rotation) — the
-    # per-doc production flags the funnel aggregates; retired
-    # driver-green r10, keeps its own oracle here
+    # the per-doc production flags production_funnel aggregates
     q["curate_corpus_production"] = pipeline_mod.curate_corpus_production
-    # sibling: curate_corpus_production with the FULL Gopher
-    # conjunction ENFORCED (VERDICT r9 #7): the required-stopword rule
-    # binds via the corpus's own glue-word list at K=7 (the paper's
-    # rule SHAPE with the vocabulary this corpus actually has —
-    # ~55% stopword-pass at sf0.01, measured, so admission keeps real
-    # variance instead of rejecting everything)
+    # with the FULL Gopher conjunction ENFORCED: the
+    # required-stopword rule binds via the corpus's own glue-word list
+    # at K=7 (the paper's rule SHAPE with the vocabulary this corpus
+    # actually has — ~55% stopword-pass at sf0.01, measured, so
+    # admission keeps real variance instead of rejecting everything)
     q["curate_corpus_gopher_enforced"] = (
         lambda s, d: pipeline_mod.curate_corpus_production(
             s, d, enforce_gopher=True,
@@ -2129,13 +1813,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             gopher_min_stopwords=7,
         )
     )
-    # sibling: production_mix_report IN-CAP (round-10 rotation) —
-    # Deequ-style expectations; retired driver-green r6-r9, keeps its
-    # own oracle here (family in-cap via expectations_events)
+    # Deequ-style expectations over the documents table
     q["expectations_report"] = expectations_mod.expectations_report
-    # sibling: decontaminate_13gram IN-CAP (round-10 rotation) — the
-    # embedding-level semantic decontamination probe; retired
-    # driver-green r6-r9, keeps its own oracle here
+    # the embedding-level semantic decontamination probe
     q["semantic_decontaminate"] = curation.semantic_decontaminate
     q["dedup_exact_groups"] = lambda s, d: dedup.exact_dup_groups(load_documents(s, d))
     q["cdc_merge"] = lambda s, d: curation.cdc_merge_snapshot(s, d)
@@ -2151,197 +1831,161 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     q["sq_rerank_full"] = _mk_sq_rerank("CosineSimilarity", k=10, shortlist=None)
     q["graphann_rerank_full"] = _mk_gann("CosineSimilarity", k=10, beam=None)
-    # sibling: domain_caps (in-cap; the per-domain summary rollup)
     q["domain_profile"] = lambda s, d: web_mod.domain_profile(s, d)
-    # sibling: dedup_minhash_md5 / simhash_pairs (dedup extended to
-    # the IMAGE modality: dHash over the vendored decoders, banded
-    # 16-bit Hamming blocking — pigeonhole-lossless for radius ≤ 3 —
-    # exact bit_count verify on candidates. Rows-only: md5-keystream
-    # pixels have no SQL twin; planted recall + blocked==exact parity
-    # pinned in tests/test_imagededup.py)
+    # dedup extended to the IMAGE modality: dHash over the vendored
+    # decoders, banded 16-bit Hamming blocking — pigeonhole-lossless for
+    # radius ≤ 3 — exact bit_count verify on candidates. Rows-only:
+    # md5-keystream pixels have no SQL twin; planted recall +
+    # blocked==exact parity pinned in tests/test_imagededup.py
     q["image_phash_dedup"] = lambda s, d: imagededup_mod.image_phash_dedup(s, d)
-    # sibling: multimodal_pcm_spectral (the MATCH/dedup operator the
-    # spectral stage feeds: Shazam-style peak-pair constellation
-    # hashes, inverted-index key join, offset-histogram verify with a
-    # vote floor. Rows-only: md5-keystream audio has no SQL twin;
-    # planted track+offset recovery pinned in tests/test_audiofp.py)
+    # the MATCH/dedup operator the spectral stage feeds: Shazam-style
+    # peak-pair constellation hashes, inverted-index key join,
+    # offset-histogram verify with a vote floor. Rows-only:
+    # md5-keystream audio has no SQL twin; planted track+offset recovery
+    # pinned in tests/test_audiofp.py
     q["audio_fingerprint_match"] = lambda s, d: audiofp_mod.audio_fingerprint_match(s, d)
-    # sibling: image_phash_dedup / audio_fingerprint_match (the VIDEO
-    # modality: per-frame dHash -> k=4 frame-hash shingles ->
+    # the VIDEO modality: per-frame dHash -> k=4 frame-hash shingles ->
     # inverted-index self-join -> offset-consistency votes. Rows-only;
     # planted subsequence pair+offset recovery pinned in
-    # tests/test_videodedup.py)
+    # tests/test_videodedup.py
     q["video_sequence_dedup"] = lambda s, d: videodedup_mod.video_sequence_dedup(s, d)
-    # sibling: snm_dedup_groups (same composition shape, image
-    # modality: banded pHash pairs -> two-star components -> canonical
-    # image groups. Rows-only like its pair stage)
+    # same composition shape, image modality: banded pHash pairs ->
+    # two-star components -> canonical image groups. Rows-only like its
+    # pair stage
     q["image_dedup_groups"] = lambda s, d: graph_mod.connected_components_twostar(
         imagededup_mod.image_phash_dedup(s, d)
     )
-    # sibling: incremental_dedup_store (the image-modality twin: on-
-    # disk inverted BAND store partitioned by band — a screen reads
-    # only the probed posting lists, never the image corpus; screen ==
-    # pair-join recompute and upsert-membership pinned in
-    # tests/test_imagededup.py. Rows-only like its pair stage)
+    # the image-modality twin: on- disk inverted BAND store partitioned
+    # by band — a screen reads only the probed posting lists, never the
+    # image corpus; screen == pair-join recompute and upsert-membership
+    # pinned in tests/test_imagededup.py. Rows-only like its pair stage
     q["incremental_image_dedup"] = lambda s, d: imagededup_mod.incremental_image_dedup(s, d)
-    # sibling: stream_curation_ingest (image-modality dedup ON
-    # ARRIVAL: per-batch screen against the persisted pHash band
-    # store, within-batch greedy election, non-dups upserted; drained
-    # verdicts == driver greedy-prefix replay incl. best matches,
-    # pinned. Rows-only like the store it maintains)
+    # image-modality dedup ON ARRIVAL: per-batch screen against the
+    # persisted pHash band store, within-batch greedy election, non-dups
+    # upserted; drained verdicts == driver greedy-prefix replay incl.
+    # best matches, pinned. Rows-only like the store it maintains
     q["stream_image_dedup"] = lambda s, d: streaming_image_ingest.stream_image_dedup_ingest(
         s, d, n_shards=2
     )
-    # sibling: audio_fingerprint_match (the STORE-BACKED serving path:
-    # corpus fingerprinted once into the persisted posting index,
-    # probes screened against it — store == direct-match equivalence
-    # pinned incl. votes. Rows-only like its direct twin)
+    # the STORE-BACKED serving path: corpus fingerprinted once into the
+    # persisted posting index, probes screened against it — store ==
+    # direct-match equivalence pinned incl. votes. Rows-only like its
+    # direct twin
     q["audio_match_store"] = lambda s, d: audiofp_mod.audio_match_store(s, d)
-    # sibling: curation_reasons (the provenance report extended ACROSS
-    # MODALITIES: one admission verdict per doc from text quality +
-    # text/image/audio/video near-dup stages — keep-first convention
-    # throughout; flag-by-flag equality vs the individual operators
-    # pinned. Rows-only: the media stages have no SQL twins)
+    # the provenance report extended ACROSS MODALITIES: one admission
+    # verdict per doc from text quality + text/image/audio/video
+    # near-dup stages — keep-first convention throughout; flag-by-flag
+    # equality vs the individual operators pinned. Rows-only: the media
+    # stages have no SQL twins
     q["multimodal_curation"] = lambda s, d: mmcuration_mod.multimodal_curation_report(s, d)
-    # sibling: dedup_components / quality_vs_dup_rate (the cluster-
-    # SIZE diagnostic: pair vs template-family tail — decides whether
-    # keep-first suffices; recursive-CTE oracle rolled up)
+    # the cluster- SIZE diagnostic: pair vs template-family tail —
+    # decides whether keep-first suffices; recursive-CTE oracle rolled
+    # up
     q["dedup_cluster_sizes"] = lambda s, d: curation.dedup_cluster_sizes(s, d)
-    # sibling: token_frequencies / lang_profile (the corpus-health
-    # diagnostic: least-squares Zipf slope over the top-N token
-    # frequencies — natural text ≈ −1, boilerplate flattens; exact
-    # integer ranks, decimal-summed regression terms)
+    # the corpus-health diagnostic: least-squares Zipf slope over the
+    # top-N token frequencies — natural text ≈ −1, boilerplate flattens;
+    # exact integer ranks, decimal-summed regression terms
     q["zipf_fit"] = lambda s, d: textual.zipf_fit(s, d)
-    # sibling: zipf_fit (the vocabulary-GROWTH diagnostic: Heaps' law
-    # V ~ K·N^β from first-doc/token-mass integers — NO per-prefix
-    # rescans, two keyed aggregates + an n_points-row regression)
+    # the vocabulary-GROWTH diagnostic: Heaps' law V ~ K·N^β from
+    # first-doc/token-mass integers — NO per-prefix rescans, two keyed
+    # aggregates + an n_points-row regression
     q["heaps_fit"] = lambda s, d: textual.heaps_fit(s, d)
-    # sibling: leakage_safe_splits (the fence extended across EVERY
-    # modality: split keyed on the component of the UNION of all four
-    # near-dup graphs — a shared image/audio/video asset can no longer
-    # walk through the text-only fence; two-star resolution for the
-    # chained cross-modality components. Rows-only: media edges)
+    # the fence extended across EVERY modality: split keyed on the
+    # component of the UNION of all four near-dup graphs — a shared
+    # image/audio/video asset can no longer walk through the text-only
+    # fence; two-star resolution for the chained cross-modality
+    # components. Rows-only: media edges
     q["multimodal_safe_splits"] = lambda s, d: mmcuration_mod.multimodal_safe_splits(s, d)
-    # sibling: image_phash_dedup (its ORACLE surface: the identical
-    # dhash_pairs banding/hot-cap/verify machinery run over md5-prefix
-    # fingerprints both engines construct — the pixels stay rows-only,
-    # the blocking MATH goes under the hash-exact gate)
+    # its ORACLE surface: the identical dhash_pairs
+    # banding/hot-cap/verify machinery run over md5-prefix fingerprints
+    # both engines construct — the pixels stay rows-only, the blocking
+    # MATH goes under the hash-exact gate
     q["hamming_banded_pairs"] = lambda s, d: imagededup_mod.hamming_banded_pairs(s, d)
-    # sibling: expectations_report / expectations_events (the THIRD
-    # table: the invariants an ANN index build assumes — fixed dim,
-    # finite components, non-zero norms; same fused single-scan plan)
+    # the THIRD table: the invariants an ANN index build assumes — fixed
+    # dim, finite components, non-zero norms; same fused single-scan
+    # plan
     q["expectations_embeddings"] = expectations_mod.expectations_report_embeddings
-    # sibling: psi_drift / ks_drift (the classical Pearson statistic —
-    # third drift lens over the same cells as PSI; exact integer
-    # counts, fixed double association order, decimal-summed terms)
+    # the classical Pearson statistic — third drift lens over the same
+    # cells as PSI; exact integer counts, fixed double association
+    # order, decimal-summed terms
     q["chi2_drift"] = lambda s, d: stats.chi2_drift(s, d)
-    # sibling: domain_caps / dedup_exact_groups (URL-level dedup after
-    # canonicalization — tracking params/fragments/default ports/case
-    # noise collapse; keep-first via groupBy-min, no window)
+    # URL-level dedup after canonicalization — tracking
+    # params/fragments/default ports/case noise collapse; keep-first via
+    # groupBy-min, no window
     q["url_canonical_dedup"] = lambda s, d: web_mod.url_canonical_dedup(s, d)
-    # rotated out of cap round 8 (driver-green r4-r7 records; every
-    # family keeps an in-cap sibling, see the rotation comments):
     q["dedup_components"] = curation.dedup_components
     q["snapshot_diff_summary"] = curation.snapshot_diff_summary
     q["lang_id_confusion"] = textual.lang_id_confusion
     q["local_supplier_revenue"] = relational.local_supplier_revenue
     q["ab_test_report"] = stats.ab_test_report
     q["source_divergence"] = textual.source_divergence
-    # sibling: retrieval_quality IN-CAP (macro-averaged side-by-side
-    # of the cosine vs inner-product scorers — the report read before
-    # switching serving strategies)
+    # macro-averaged side-by-side of the cosine vs inner-product scorers
+    # — the report read before switching serving strategies
     q["retrieval_report"] = lambda s, d: retmetrics_mod.retrieval_quality_report(
         s, d, k=10, n_queries=16
     )
-    # sibling: logreg_report IN-CAP (per-doc scores of the
-    # DISCRIMINATIVE model-based filter — fastText-style hashed-BoW
-    # logistic regression beside nb_classify_docs, trained DISTRIBUTED
-    # by full-batch GD, engine-exact end to end)
+    # per-doc scores of the DISCRIMINATIVE model-based filter —
+    # fastText-style hashed-BoW logistic regression beside
+    # nb_classify_docs, trained DISTRIBUTED by full-batch GD,
+    # engine-exact end to end
     q["logreg_score"] = lambda s, d: logreg_mod.logreg_score(s, d)
-    # sibling: the trained classifier PERSISTED (round 11 — the
-    # lm_store discipline for the model-based filter family): exact
-    # integer nano-unit weights on disk, scoring reads <= N_BUCKETS
-    # rows instead of re-training per session; == recompute, same
-    # oracle. No upsert by design: GD folds aren't associative —
-    # refresh is retrain (the ivf rebuild analogy)
+    # trained classifier PERSISTED (the lm_store discipline for the
+    # model-based filter family): exact integer nano-unit
+    # weights on disk, scoring reads <= N_BUCKETS rows instead of
+    # re-training per session; == recompute, same oracle. No upsert by
+    # design: GD folds aren't associative — refresh is retrain (the ivf
+    # rebuild analogy)
     q["logreg_score_store"] = logreg_mod.logreg_score_store
-    # sibling: kmv_user_overlap IN-CAP (the KMV / bottom-k sketch —
-    # the distinct synopsis that also supports INTERSECTION;
-    # unsaturated at the gate SFs => provably exact vs COUNT(DISTINCT))
+    # the KMV / bottom-k sketch — the distinct synopsis that also
+    # supports INTERSECTION; unsaturated at the gate SFs => provably
+    # exact vs COUNT(DISTINCT)
     q["kmv_distinct_by_type"] = lambda s, d: kmv_mod.kmv_distinct_by_type(s, d)
-    # rotated out round-8 session 2 in favor of kmeans_lloyd (the
-    # curation stages stay in-cap via curate_corpus):
     q["curation_reasons"] = curation.curation_reasons
-    # sibling: embedding_covariance (the maintained-state treatment
-    # for the moment math: exact DECIMAL first/second-moment cells
-    # persisted, batch folds add integers — the store answers the
-    # covariance identically, shared oracle)
+    # the maintained-state treatment for the moment math: exact DECIMAL
+    # first/second-moment cells persisted, batch folds add integers —
+    # the store answers the covariance identically, shared oracle
     q["covariance_store"] = lambda s, d: embstats_mod.covariance_store(s, d)
-    # rotated out round 9 in favor of power_iteration_pc1 (the PQ
-    # rerank rung stays in-cap via opq_rerank_full; IVF x OPQ twin
-    # keeps its own oracle here):
     q["ivfopq_rerank_full"] = _ivfopq_rerank_full
-    # rotated out round 9 in favor of logreg_calibration (sparse
-    # lexical family stays in-cap via tfidf_cosine_pairs +
-    # tfidf_cosine_prefix):
     q["tfidf_related_docs"] = lambda s, d: sparse_sim_mod.tfidf_related_docs(
         load_documents(s, d), n=3, k=3
     )
-    # sibling: logreg_calibration (uncertainty sampling: the
-    # lowest-margin holdout docs a labeling loop annotates next;
-    # TakeOrderedAndProject cut)
+    # uncertainty sampling: the lowest-margin holdout docs a labeling
+    # loop annotates next; TakeOrderedAndProject cut
     q["active_learning_batch"] = lambda s, d: logreg_mod.active_learning_batch(s, d)
-    # rotated out round 9 in favor of label_model (n-gram pair family
-    # stays in-cap via dedup_ngram_prefix):
     q["dedup_ngram_containment"] = lambda s, d: dedup.ngram_containment_pairs(
         load_documents(s, d), n=3, threshold=0.8
     )
-    # sibling: logreg_report IN-CAP (model-based filtering ON ARRIVAL:
-    # each micro-batch scored with the broadcast session-trained
-    # model; scoring is a pure per-doc function of the model, so
-    # drained == batch row-for-row — shared oracle)
+    # model-based filtering ON ARRIVAL: each micro-batch scored with the
+    # broadcast session-trained model; scoring is a pure per-doc
+    # function of the model, so drained == batch row-for-row — shared
+    # oracle
     q["stream_logreg_score"] = lambda s, d: streaming_curing.stream_logreg_score(
         s, d
     )
-    # sibling: pack_chunks (the padding-waste report across context
-    # budgets — how a trainer fixes the sequence length; pad counts
-    # under-budget bins, overflow the bounded one-chunk overshoot)
+    # the padding-waste report across context budgets — how a trainer
+    # fixes the sequence length; pad counts under-budget bins, overflow
+    # the bounded one-chunk overshoot
     q["packing_efficiency"] = lambda s, d: curation.packing_efficiency(s, d)
-    # rotated out round-8 session 2 in favor of lsh_calibration (span
-    # family stays in-cap via dedup_ngram_prefix):
     q["duplicate_spans"] = lambda s, d: dedup.duplicate_spans(
         load_documents(s, d)
     )
-    # rotated out round 9 in favor of phrase_search (shortlist->exact
-    # rerank family stays in-cap via opq_rerank_full; the Matryoshka
-    # twin keeps its own oracle here):
     q["prefixdim_rerank_full"] = _prefixdim_rerank_full
-    # sibling: phrase_search (the SERVING form: positional postings
-    # store read only at the phrase terms' row groups — store path ==
-    # scan path by the shared oracle, the bm25_topk_indexed contract)
+    # the SERVING form: positional postings store read only at the
+    # phrase terms' row groups — store path == scan path by the shared
+    # oracle, the bm25_topk_indexed contract
     q["phrase_search_store"] = lambda s, d: ranking_mod.phrase_search_store(s, d)
-    # rotated out round 9 in favor of wet_roundtrip (decontamination
-    # family stays in-cap via semantic_decontaminate +
-    # stream_decontaminate; the Bloom twin is bit-identical to the
-    # shared oracle):
     q["decontaminate_bloom"] = curation.decontaminate_bloom_documents
-    # rotated out round 9 in favor of scd2_history (SNM composition
-    # family stays in-cap via sorted_neighborhood +
-    # dedup_components_twostar):
     q["snm_dedup_groups"] = lambda s, d: graph_mod.connected_components_twostar(
         blocking_mod.sorted_neighborhood_pairs(load_documents(s, d))
     )
-    # sibling: kmv_user_overlap IN-CAP (the persisted-store path:
-    # build from the first half, kmv_store_upsert the second, serve
-    # from stored sketches — the k-min merge is LOSSLESS so the store
-    # shares the recompute oracle verbatim)
+    # the persisted-store path: build from the first half,
+    # kmv_store_upsert the second, serve from stored sketches — the
+    # k-min merge is LOSSLESS so the store shares the recompute oracle
+    # verbatim
     q["kmv_store_overlap"] = lambda s, d: kmv_mod.kmv_store_overlap(s, d)
-    # sibling: kmv_store_overlap (the same store maintained ON ARRIVAL
-    # via checkpointed foreachBatch folds — drained == batch by exact
-    # array equality, shared oracle)
+    # the same store maintained ON ARRIVAL via checkpointed foreachBatch
+    # folds — drained == batch by exact array equality, shared oracle
     q["stream_kmv_ingest"] = lambda s, d: streaming_sketch.stream_kmv_ingest(s, d)
-    # rotated out of cap round-8 session 2 (driver-green records;
-    # every family keeps an in-cap sibling, see rotation comments):
     q["user_running_totals"] = streaming_sessions.user_running_totals_stream
     q["range_search_ivf"] = lambda s, d: ivf.ivf_range_search(
         s, _ivf_index(s, d), _query_vec(s, d), threshold=0.2, round_digits=ROUND
@@ -2427,19 +2071,8 @@ def oracle_sql() -> dict[str, str]:
     o["dedup_exact_groups"] = oracles_text.DEDUP_EXACT
     o["chunk_dedup"] = oracles_text.chunk_dedup_sql()
     o["duplicate_spans"] = oracles_text.duplicate_spans_sql(8)
-    # the Arrow twin's 64-bit rolling hash differs from md5 by design,
-    # but the SPAN ROLLUP it emits depends only on which shingles are
-    # duplicated (collision-free at gate scale, equality pinned in
-    # tests/test_dedup.py) — so it carries the SAME oracle
-    o["duplicate_spans_arrow"] = oracles_text.duplicate_spans_sql(8)
     o["remove_duplicate_spans"] = oracles_text.remove_duplicate_spans_sql(8)
     o["duplicate_char_spans"] = oracles_text.duplicate_char_spans_sql(40)
-    # the xxhash64 twin's output carries no hash column and 64-bit
-    # collisions are absent at gate scale => shares the md5 twin
-    o["duplicate_char_spans_xx"] = oracles_text.duplicate_char_spans_sql(40)
-    o["remove_duplicate_char_spans_xx"] = (
-        oracles_text.remove_duplicate_char_spans_sql(40)
-    )
     o["remove_duplicate_char_spans"] = (
         oracles_text.remove_duplicate_char_spans_sql(40)
     )
@@ -2453,7 +2086,7 @@ def oracle_sql() -> dict[str, str]:
     o["c4_line_filter"] = oracles_text.c4_line_filter_sql()
     o["line_dedup"] = oracles_text.line_dedup_sql()
     # store-served / drained line screens == batch recompute -> same
-    # oracle (line_dedup_xx is rows-only: xxhash64 has no SQL twin)
+    # oracle
     o["line_dedup_store"] = oracles_text.line_dedup_sql()
     o["stream_line_dedup"] = oracles_text.line_dedup_sql()
     o["curate_corpus_production"] = (
@@ -2818,11 +2451,11 @@ SELECT window_start, event_type, count(*)::BIGINT AS n_events FROM (
         25, logreg_mod.N_BUCKETS, logreg_mod.N_ITER, logreg_mod.LR
     )
     o["kmeans_lloyd"] = oracles.kmeans_lloyd_sql(8, 3)
-    # upgraded from rows-only (round-8 session 2): the fixed-iteration
-    # loop was already decimal-deterministic; the twin unrolls it
+    # the fixed-iteration loop is decimal-deterministic; the twin
+    # unrolls it
     o["neardup_pagerank"] = oracles_text.neardup_pagerank_sql(3, 0.8, 10, 0.85)
-    # upgraded from rows-only (round-8 session 2): the greedy loop's
-    # pool sims now use the sequential fold, so the twin unrolls it
+    # the greedy loop's pool sims use the sequential fold, so the twin
+    # unrolls it
     o["mmr_rerank"] = oracles.mmr_rerank_sql(10, 50, 0.7)
     o["power_iteration_pc1"] = oracles.power_iteration_sql(8)
     # exact decimal fold => the store path answers identically

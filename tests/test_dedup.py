@@ -498,40 +498,6 @@ def test_duplicate_char_spans_planted(spark):
         assert r.n_dup_spans == 0
 
 
-def test_duplicate_char_spans_xx_equals_md5(spark):
-    """The xxhash64 cheap-hash twin (8-byte longs in the densest
-    exchange in the repo instead of 32-char md5 hex) must reproduce
-    the md5 form row-for-row at sf0.01 — the output carries no hash
-    column and 64-bit collisions are absent at this scale, which is
-    what lets it share the md5 DuckDB twin in the gate."""
-    from ydb_vector_search_simple_api_spark.sources.store import load_documents
-
-    docs = load_documents(spark, "/root/testdata/sf0.01")
-    a = sorted(
-        dedup.duplicate_char_spans(docs, k=40).collect(),
-        key=lambda r: r.doc_id,
-    )
-    b = sorted(
-        dedup.duplicate_char_spans(docs, k=40, hasher="xxhash64").collect(),
-        key=lambda r: r.doc_id,
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert any(r.n_dup_spans > 0 for r in a)  # non-degenerate corpus
-
-    ra = sorted(
-        dedup.remove_duplicate_char_spans(docs, k=40).collect(),
-        key=lambda r: r.doc_id,
-    )
-    rb = sorted(
-        dedup.remove_duplicate_char_spans(
-            docs, k=40, hasher="xxhash64"
-        ).collect(),
-        key=lambda r: r.doc_id,
-    )
-    assert [tuple(r) for r in ra] == [tuple(r) for r in rb]
-    assert any(r.removed_chars > 0 for r in ra)
-
-
 def test_remove_duplicate_char_spans_keeps_first_occurrence(spark):
     """Keep-first semantics at char grain, and the complement-segment
     fold reassembly digest equals md5 of the expected surviving
@@ -577,40 +543,52 @@ def test_remove_duplicate_char_spans_keeps_first_occurrence(spark):
     assert o[11].removed_chars == 49 and o[11].kept_md5 == md5("")
 
 
-def test_duplicate_spans_arrow_matches_md5_form(spark):
-    """The Arrow shingling path must reproduce the md5 expression form
-    row-for-row (hash collisions aside) on the real corpus and on the
-    planted cases."""
-    a = {
-        r.doc_id: r
-        for r in dedup.duplicate_spans_arrow(
-            load_documents(spark, SF_SMALL)
-        ).collect()
-    }
-    b = {
-        r.doc_id: r
-        for r in dedup.duplicate_spans(load_documents(spark, SF_SMALL)).collect()
-    }
-    assert set(a) == set(b)
-    for doc_id in a:
-        ra, rb = a[doc_id], b[doc_id]
-        assert (
-            ra.total_tokens, ra.n_dup_spans, ra.dup_tokens, ra.dup_frac
-        ) == (rb.total_tokens, rb.n_dup_spans, rb.dup_tokens, rb.dup_frac)
+def test_span_ops_every_shingle_hot_at_two_partitions(spark):
+    """Worst case for the span family: N identical docs plus one clean
+    doc, so every shingle of the identical docs is hot, all N copies of
+    each window share one hash key and the hot set is as large as the
+    stream. At two shuffle partitions the detection ops must cover the
+    identical docs whole, the removal ops must keep the lowest doc_id
+    whole and empty the rest, and the clean doc stays untouched."""
+    import hashlib
 
-    passage = " ".join(f"p{i}" for i in range(10))
+    md5 = lambda s: hashlib.md5(s.encode()).hexdigest()
+    n = 40
+    dup_text = " ".join(f"w{i}" for i in range(30))
+    clean_text = " ".join(f"c{i}" for i in range(30))
     docs = spark.createDataFrame(
-        [
-            (1, f"a1 a2 a3 {passage} a4 a5"),
-            (2, f"b1 b2 {passage} b3 b4 b5 b6"),
-            (3, "c1 c2 c3 c4 c5 c6 c7 c8 c9 c10 c11 c12"),
-        ],
+        [(i, dup_text) for i in range(1, n + 1)] + [(n + 1, clean_text)],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in dedup.duplicate_spans_arrow(docs, k=8).collect()}
-    assert out[1].n_dup_spans == 1 and out[1].dup_tokens == 10
-    assert out[2].n_dup_spans == 1 and out[2].dup_tokens == 10
-    assert out[3].n_dup_spans == 0
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        for op, k, unit in (
+            (dedup.duplicate_spans, 8, "tokens"),
+            (dedup.duplicate_char_spans, 40, "chars"),
+        ):
+            out = {r.doc_id: r for r in op(docs, k=k).collect()}
+            assert len(out) == n + 1
+            for i in range(1, n + 1):
+                assert out[i].dup_frac == 1.0, (op.__name__, i)
+                assert out[i].n_dup_spans == 1
+                assert out[i][f"dup_{unit}"] == out[i][f"total_{unit}"]
+            assert out[n + 1].n_dup_spans == 0 and out[n + 1].dup_frac == 0.0
+        for op, k, unit in (
+            (dedup.remove_duplicate_spans, 8, "tokens"),
+            (dedup.remove_duplicate_char_spans, 40, "chars"),
+        ):
+            out = {r.doc_id: r for r in op(docs, k=k).collect()}
+            assert len(out) == n + 1
+            assert out[1][f"removed_{unit}"] == 0
+            assert out[1].kept_md5 == md5(dup_text)
+            for i in range(2, n + 1):
+                assert out[i].kept_md5 == md5(""), (op.__name__, i)
+                assert out[i][f"removed_{unit}"] == out[i][f"total_{unit}"]
+            assert out[n + 1][f"removed_{unit}"] == 0
+            assert out[n + 1].kept_md5 == md5(clean_text)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_neardup_edit_distance_planted_pairs(spark, docs, exact_pairs):

@@ -159,14 +159,14 @@ def test_tfidf_top_terms_contract(spark):
 
 
 def test_winnowing_flat_keeps_hash_below_barrier_only(spark):
-    """Regression pin: Catalyst's InferFiltersFromGenerate must not
-    push a size(fps)>0 filter below the repartition barrier — that
-    re-inlines the winnowing fold into the scan stage (40x slowdown).
-    Below the Exchange only the k-gram hashing may appear."""
+    """Regression pin: no filter may be pushed below the repartition
+    barrier — that re-inlines the winnowing fold into the scan stage
+    (40x slowdown). Below the Exchange only the k-gram hashing may
+    appear."""
     from ydb_vector_search_simple_api_spark.operators import textual as T
 
     plan = (
-        T.winnowing_fingerprints_flat(spark, SF_SMALL)
+        T.winnowing_digest(spark, SF_SMALL)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -179,43 +179,42 @@ def test_winnowing_flat_keeps_hash_below_barrier_only(spark):
     assert "Filter (" not in below
 
 
-def test_winnowing64_shared_substring_guarantee(spark):
-    """The winnowing guarantee is hash-agnostic: the xxhash64 variant
-    must also yield a shared fingerprint for a shared substring of
-    length >= k + window - 1."""
-    from pyspark.sql import functions as F
+def test_winnow_fingerprints_kernel_guarantees():
+    """The numpy winnowing kernel behind winnowing_digest_arrow and
+    incremental_dedup_arrow, without Spark: a shared substring of at
+    least k+w-1 bytes yields a shared fingerprint; input shorter than
+    k yields nothing; with fewer than ``window`` k-grams the result is
+    their single minimum."""
+    import numpy as np
+
+    from ydb_vector_search_simple_api_spark.operators.textual import (
+        winnow_fingerprints,
+    )
 
     k, w = 8, 4
-    shared = "abcdefghijklmnop"  # len 16 >= k + w - 1 = 11
-    df = spark.createDataFrame(
-        [(1, "xxxx " + shared + " yyyy"), (2, "zz " + shared + " qqqq")],
-        "doc_id long, text string",
-    )
-    hashed = df.select("doc_id", TXT.char_kgram_hashes64("text", k).alias("h")).repartition(2, "doc_id")
-    fps = {
-        r.doc_id: set(r.fps)
-        for r in hashed.select(
-            "doc_id", TXT.winnow_mins(F.col("h"), w).alias("fps")
-        ).collect()
-    }
-    assert fps[1] & fps[2]
+    rng = np.random.default_rng(7)
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz "))
+    rand = lambda n: "".join(rng.choice(letters, n))
+    for _ in range(50):
+        shared = rand(k + w - 1)
+        a = rand(int(rng.integers(0, 40))) + shared + rand(int(rng.integers(0, 40)))
+        b = rand(int(rng.integers(0, 40))) + shared + rand(int(rng.integers(0, 40)))
+        fa, fb = winnow_fingerprints(a, k, w), winnow_fingerprints(b, k, w)
+        assert np.intersect1d(fa, fb).size > 0, (a, b)
+        assert fa.dtype == np.uint64 and np.all(np.diff(fa.astype(object)) > 0)
 
+    empty = winnow_fingerprints("a" * (k - 1), k, w)
+    assert empty.size == 0 and empty.dtype == np.uint64
 
-def test_winnowing64_digest_shape(spark):
-    from ydb_vector_search_simple_api_spark.operators import textual as TX
-
-    a = TX.winnowing_digest(spark, SF_SMALL).collect()
-    b = TX.winnowing_digest64(spark, SF_SMALL).collect()
-    na = {r.doc_id: r.n_fps for r in a}
-    nb = {r.doc_id: r.n_fps for r in b}
-    assert set(na) == set(nb)
-    # fingerprint-count distributions are comparable (same winnowing
-    # geometry; different hash only perturbs which minima are distinct)
-    import statistics
-
-    assert abs(statistics.mean(na.values()) - statistics.mean(nb.values())) < 0.1 * max(
-        1, statistics.mean(na.values())
-    )
+    text = "abcdefghij"  # 3 k-grams < window
+    grams = []
+    for i in range(len(text) - k + 1):
+        h = 0
+        for byte in text[i : i + k].encode():
+            h = (h * 1099511628211 + byte) % 2**64
+        grams.append(h)
+    got = winnow_fingerprints(text, k, w)
+    assert got.tolist() == [min(grams)]
 
 
 def test_winnowing_arrow_guarantee_and_speed_shape(spark):

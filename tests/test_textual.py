@@ -827,23 +827,6 @@ def test_line_dedup_brute_force(spark):
     assert any(r.n_dup_lines == 0 for r in out.values())
 
 
-def test_line_dedup_xx_twin_equals_md5(spark):
-    """The xxhash64 line-hash twin (round 11): identical output table
-    to the md5 form — equality classes are all the algorithm consumes,
-    so any collision-sparse hash yields the same removal set (and the
-    kept_md5 digest stays md5 on both, so rows compare exactly)."""
-    from ydb_vector_search_simple_api_spark.operators.textual import (
-        line_dedup,
-    )
-
-    md = {r.doc_id: tuple(r) for r in line_dedup(spark, SF_SMALL).collect()}
-    xx = {
-        r.doc_id: tuple(r)
-        for r in line_dedup(spark, SF_SMALL, hasher="xxhash64").collect()
-    }
-    assert md == xx and len(md) > 0
-
-
 def test_line_dedup_store_equals_batch(spark, tmp_path):
     """VERDICT r10 #4: build(existing) + upsert(incoming) then screen
     the corpus against the store == batch line_dedup — the count fold

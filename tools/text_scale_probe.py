@@ -141,12 +141,6 @@ def main():
         .agg(F.sum("dup_tokens"))
         .collect(),
     )
-    probe(
-        "duplicate_spans_arrow (k=8)",
-        lambda: dedup.duplicate_spans_arrow(load_documents(spark, corpus))
-        .agg(F.sum("dup_tokens"))
-        .collect(),
-    )
     # decontamination at the 100 TB asymmetry: benchmark = the src0
     # ORIGINALS only (fixed size), training side = the multiplied
     # corpus. Replicas of bench docs contain their shingles, so this

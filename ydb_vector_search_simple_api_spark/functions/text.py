@@ -208,8 +208,7 @@ def winnow_mins(hashes_col, window: int = 4) -> Column:
     >= k + window - 1 yields a shared fingerprint. ``hashes_col`` must
     be a MATERIALIZED array column (every window slices it; Catalyst
     has no let-binding, so an unmaterialized expression would re-hash
-    the document once per window). Element-type agnostic (string md5s
-    or int64 xxhashes)."""
+    the document once per window)."""
     h = _c(hashes_col)
     mins = F.transform(
         F.sequence(F.lit(1), F.size(h) - window + 1),
@@ -225,19 +224,3 @@ def winnow_mins(hashes_col, window: int = 4) -> Column:
         )
     )
 
-
-def char_kgram_hashes64(col, k: int = 8) -> Column:
-    """xxhash64 variant of :func:`char_kgram_hashes` — the PRODUCTION
-    fingerprint layer: a native 64-bit hash instead of an md5 hex
-    string (measured ~20x cheaper over a 1M-doc corpus; see
-    tools/text_scale_probe.py). No DuckDB twin, so oracle-backed gate
-    entries keep the md5 form — same split as MinHash's md5/xxhash64
-    pair."""
-    t = _c(col)
-    return F.when(
-        F.length(t) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.length(t) - k + 1),
-            lambda i: F.xxhash64(F.substring(t, i, F.lit(k))),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))

@@ -1293,7 +1293,7 @@ def incremental_dedup(
     fps = tagged.select(
         "doc_id", "side", TXT.char_kgram_hashes("text", k).alias("h")
     )
-    # same let-binding barrier as winnowing_fingerprints: without it
+    # same let-binding barrier as textual.winnowing_digest: without it
     # the per-window minima would re-inline the whole hash expression
     fps = fps.repartition(spark.sparkContext.defaultParallelism, "doc_id").select(
         "doc_id", "side", TXT.winnow_mins(F.col("h"), window).alias("fps")
@@ -1610,6 +1610,167 @@ def best_quality_election(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _shingle_stream(d: DataFrame, n_col: str, k: int, window) -> DataFrame:
+    """Pinned (doc_id, start, h bigint) rows, one per k-window of every
+    doc in ``d`` with ``n_col >= k`` (1-based ``start``); ``window(i)``
+    is the window at ``i`` (a substring, or an array slice of tokens),
+    hashed here with ``xxhash64``. The only corpus-sized structure of
+    the span family: the text itself never shuffles.
+
+    A 64-bit collision can only merge two cold windows into one
+    false-hot window; no true duplicate is lost (~10^9+ distinct
+    windows before birthday collisions bite).
+
+    The stream feeds both the hot-hash aggregate and its join-back, so
+    it is pinned with a lazy ``localCheckpoint``: each window is hashed
+    once, at the cost of holding the rows as deserialized
+    MEMORY_AND_DISK blocks (not the serialized, compressed bytes one
+    exchange of them would spill), and losing an executor fails the
+    job instead of recomputing it."""
+    return (
+        d.filter(F.col(n_col) >= k)
+        .select(
+            "doc_id",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.col(n_col) - (k - 1)),
+                    lambda i: F.struct(
+                        i.alias("start"), F.xxhash64(window(i)).alias("h")
+                    ),
+                )
+            ).alias("s"),
+        )
+        .select("doc_id", "s.start", "s.h")
+        .localCheckpoint(eager=False)
+    )
+
+
+def _token_shingles(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, toks, n) per doc and its pinned k-token window stream."""
+    t = TXT.tokens(text_col)
+    d = df.select(F.col(id_col).alias("doc_id"), t.alias("toks"), F.size(t).alias("n"))
+    # the slice is hashed as an array: no per-window concat_ws string
+    return d, _shingle_stream(d, "n", k, lambda i: F.slice(F.col("toks"), i, k))
+
+
+def _char_shingles(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, txt, n) per doc and its pinned k-char window stream."""
+    d = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.col(text_col).alias("txt"),
+        F.length(text_col).cast("int").alias("n"),
+    )
+    return d, _shingle_stream(d, "n", k, lambda i: F.col("txt").substr(i, F.lit(k)))
+
+
+def _islands(win: DataFrame, k: int) -> DataFrame:
+    """(doc_id, start) windows [start, start+k) -> one (doc_id, s, e)
+    row per maximal run of overlapping or adjacent windows.
+
+    Two windows over the SAME (doc_id, start) ordering share one sort.
+    groupBy + collect_list + sort_array + a codegen fold was measured
+    40% slower on a corpus where every shingle is hot: the per-group
+    list costs more than the second window pass saves."""
+    w = Window.partitionBy("doc_id").orderBy("start")
+    return (
+        win.withColumn("end", F.col("start") + F.lit(k - 1))
+        .withColumn(
+            "prev_max_end",
+            F.max("end").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        )
+        .withColumn(
+            "island",
+            F.sum(
+                (
+                    F.col("prev_max_end").isNull()
+                    | (F.col("start") > F.col("prev_max_end") + 1)
+                ).cast("int")
+            ).over(w),
+        )
+        .groupBy("doc_id", "island")
+        .agg(F.min("start").alias("s"), F.max("end").alias("e"))
+    )
+
+
+def _dup_span_rollup(d: DataFrame, sh: DataFrame, k: int, unit: str) -> DataFrame:
+    """Detection tail: windows whose hash occurs >= 2 times in the
+    corpus ("hot"), island-merged and rolled up per doc. Output
+    (doc_id, total_<unit>, n_dup_spans, dup_<unit>, dup_frac) for every
+    doc of ``d`` (doc_id, n).
+
+    The hot set is a hash AGGREGATE (map-side partial combine: a
+    boilerplate window repeated in millions of docs never piles into
+    one task, as it did under a window over ``h``), attached back with
+    a semi-join that AQE may broadcast or skew-split."""
+    hot = (
+        sh.groupBy("h")
+        .agg(F.count(F.lit(1)).alias("n_occ"))
+        .filter(F.col("n_occ") >= 2)
+        .select("h")
+    )
+    per_doc = (
+        _islands(sh.join(hot, "h", "left_semi"), k)
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_dup_spans"),
+            F.sum(F.col("e") - F.col("s") + 1).cast("bigint").alias("dup"),
+        )
+    )
+    dup = F.coalesce("dup", F.lit(0)).cast("bigint")
+    return d.join(per_doc, "doc_id", "left").select(
+        "doc_id",
+        F.col("n").cast("bigint").alias(f"total_{unit}"),
+        F.coalesce("n_dup_spans", F.lit(0)).cast("bigint").alias("n_dup_spans"),
+        dup.alias(f"dup_{unit}"),
+        (
+            F.round(dup.cast("double") / F.col("n").cast("double"), 6)
+            + F.lit(0.0)
+        ).alias("dup_frac"),
+    )
+
+
+def _removal_spans(d: DataFrame, sh: DataFrame, k: int) -> DataFrame:
+    """Removal tail: ``d`` plus ``spans`` array<struct<s,e>>, the merged
+    islands of every hot window EXCEPT its corpus-wide first occurrence
+    (canonical = min (doc_id, start) per hash, the keep-first rule of
+    the exact-dedup election; empty for untouched docs), and their
+    total length ``removed``."""
+    per_hash = sh.groupBy("h").agg(
+        F.count(F.lit(1)).alias("n_occ"),
+        F.min(F.struct("doc_id", "start")).alias("canon"),
+    )
+    removable = (
+        sh.join(per_hash.filter(F.col("n_occ") >= 2), "h")
+        .filter(
+            (F.col("doc_id") != F.col("canon.doc_id"))
+            | (F.col("start") != F.col("canon.start"))
+        )
+        .select("doc_id", "start")
+    )
+    spans = (
+        _islands(removable, k)
+        .groupBy("doc_id")
+        .agg(F.collect_list(F.struct("s", "e")).alias("spans"))
+    )
+    return (
+        d.join(spans, "doc_id", "left")
+        .withColumn(
+            "spans",
+            F.coalesce("spans", F.array().cast("array<struct<s:int,e:int>>")),
+        )
+        .withColumn(
+            "removed",
+            F.aggregate(
+                "spans", F.lit(0), lambda acc, sp: acc + (sp["e"] - sp["s"] + 1)
+            ).cast("bigint"),
+        )
+    )
+
+
 def duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1622,14 +1783,13 @@ def duplicate_spans(
     spans covered by some ``k``-token window that appears at least
     twice in the corpus (across docs OR repeated within one doc).
 
-    Pipeline: k-token shingles with positions → md5 per shingle →
-    shingle hashes with total occurrence ≥ 2 ("hot") → semi-join
-    positions to hot hashes → merge overlapping/adjacent [i, i+k)
-    windows into islands per doc (gaps-and-islands window) → per-doc
-    rollup.
+    Pipeline: k-token window hashes with positions → hashes with total
+    occurrence ≥ 2 ("hot") → semi-join positions to hot hashes → merge
+    overlapping/adjacent [i, i+k) windows into islands per doc →
+    per-doc rollup.
 
     100 TB shape: the only corpus-sized structures are the shingle
-    stream (narrow: id + int + 32-byte hash, NOT the text) and its
+    stream (narrow: id + int + 8-byte hash, NOT the text) and its
     hash-keyed count with map-side combine; the hot-hash set is
     ``O(duplicated shingles)`` and the island merge is one window per
     doc over already-filtered rows. No self-join, no all-pairs.
@@ -1641,204 +1801,8 @@ def duplicate_spans(
     Output: (doc_id, total_tokens, n_dup_spans, dup_tokens, dup_frac)
     for every input document (zero rows included).
     """
-    t = TXT.tokens(text_col)
-    d = df.select(
-        F.col(id_col).alias("doc_id"),
-        t.alias("toks"),
-        F.size(t).alias("total_tokens"),
-    )
-    # (doc_id, start, hash) for every k-window; 1-based starts
-    sh = d.filter(F.col("total_tokens") >= k).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("total_tokens") - (k - 1)),
-                lambda i: F.struct(
-                    i.alias("start"),
-                    F.md5(
-                        F.concat_ws(" ", F.slice(F.col("toks"), i, k))
-                    ).alias("h"),
-                ),
-            )
-        ).alias("s"),
-    ).select("doc_id", F.col("s.start").alias("start"), F.col("s.h").alias("h"))
-    return _rollup_hot_spans(d.select("doc_id", "total_tokens"), sh, k)
-
-
-def _rollup_hot_spans(d: DataFrame, sh: DataFrame, k: int) -> DataFrame:
-    """Shared tail of the duplicate-span ops: hot-hash filter (total
-    occurrences >= 2) -> per-doc island merge of [start, start+k)
-    windows -> per-doc rollup. ``d`` = (doc_id, total_tokens);
-    ``sh`` = (doc_id, start, h) with any hash type.
-
-    The island merge deliberately uses two windows over the SAME
-    (doc_id, start) ordering: Spark plans them over one shared sort of
-    the hot-row stream. The tempting groupBy + collect_list +
-    sort_array + codegen-fold alternative was measured 40% SLOWER on
-    a worst-case corpus (every shingle hot) — the per-group list
-    materialization costs more than the second window pass saves.
-
-    Round 13 (guide §2.5 — skew): the round-12 form computed the
-    count as a WINDOW over ``Window.partitionBy("h")``, which shuffles
-    the FULL shingle stream by ``h`` and buffers each hash group in
-    ONE task's sort buffer — a boilerplate shingle repeated across
-    millions of docs (exactly what this operator hunts) serializes
-    into one straggler task at corpus scale, and windows get no AQE
-    skew handling. This form keeps round 12's
-    single-shingle-computation win a different way: the stream is
-    PINNED once (lazy localCheckpoint — one materialization of the
-    narrow (doc_id, start, h) rows, the same bytes one exchange of it
-    would spill), then the hot set comes from a hash AGGREGATE (map-
-    side partial combine: each map task emits one row per distinct
-    ``h``, so hot hashes never pile into one task) and is attached
-    back with a semi-join — broadcast when small, AQE-skew-split SMJ
-    on pathological corpora (no hint: the hot table is O(duplicated
-    shingles), tiny on clean corpora, corpus-sized on degenerate
-    ones). Rows identical: every (doc_id, start, h) whose hash has
-    total count >= 2 survives, exactly the window-filter set."""
-    sh = sh.localCheckpoint(eager=False)
-    hot = (
-        sh.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .filter(F.col("n_occ") >= 2)
-        .select("h")
-    )
-    dup = sh.join(hot, "h", "left_semi").withColumn(
-        "end", F.col("start") + F.lit(k - 1)
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("start")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    islands = (
-        dup.withColumn("prev_max_end", F.max("end").over(w))
-        .withColumn(
-            "new_island",
-            (
-                F.col("prev_max_end").isNull()
-                | (F.col("start") > F.col("prev_max_end") + 1)
-            ).cast("int"),
-        )
-        .withColumn(
-            "island",
-            F.sum("new_island").over(
-                Window.partitionBy("doc_id").orderBy("start")
-            ),
-        )
-        .groupBy("doc_id", "island")
-        .agg((F.max("end") - F.min("start") + 1).alias("span_len"))
-    )
-    per_doc = islands.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_dup_spans"),
-        F.sum("span_len").cast("bigint").alias("dup_tokens"),
-    )
-    return (
-        d.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("total_tokens").cast("bigint").alias("total_tokens"),
-            F.coalesce("n_dup_spans", F.lit(0)).cast("bigint").alias("n_dup_spans"),
-            F.coalesce("dup_tokens", F.lit(0)).cast("bigint").alias("dup_tokens"),
-            (
-                F.round(
-                    F.coalesce("dup_tokens", F.lit(0)).cast("double")
-                    / F.col("total_tokens").cast("double"),
-                    6,
-                )
-                + F.lit(0.0)
-            ).alias("dup_frac"),
-        )
-    )
-
-
-def duplicate_spans_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-) -> DataFrame:
-    """Arrow-vectorized twin of :func:`duplicate_spans` — the 100 TB
-    shingling path (the same fast/oracle split as winnowing: md5
-    expression form carries the SQL oracle, this one carries the
-    throughput). The expression form pays O(n_tok · k) per doc in
-    array slices + string concat + md5; here each Arrow batch (a)
-    factorizes the batch's tokens so every DISTINCT token is hashed
-    once (FNV-1a), then (b) combines k-token windows as 8 vectorized
-    uint64 slice-multiply-adds (polynomial rolling hash, wraparound
-    mod 2^64) — O(n_tok) per doc at C speed, and the shingle stream
-    ships 8-byte ints instead of 32-char md5 strings. Hot-filter,
-    island merge and rollup are the SHARED DataFrame tail
-    (:func:`_rollup_hot_spans`), so results are identical to the md5
-    form absent a 64-bit hash collision (pinned in tests).
-    Output: (doc_id, total_tokens, n_dup_spans, dup_tokens, dup_frac).
-    """
-    from itertools import chain
-
-    t = TXT.tokens(text_col)
-    d = df.select(
-        F.col(id_col).alias("doc_id"), F.size(t).alias("total_tokens")
-    )
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"doc_id {id_type}, start int, h long"
-    P = np.uint64(1099511628211)  # FNV prime; wraparound mod 2^64
-
-    def fnv1a(b: bytes) -> np.uint64:
-        h = np.uint64(14695981039346656037)
-        for byte in b:
-            h = (h ^ np.uint64(byte)) * P
-        return h
-
-    # tokenizer parity with the md5 twin (TXT.tokens = Spark
-    # trim/lower + '\s+' split): Spark's trim strips SPACES only and
-    # Java \s is ASCII [ \t\n\x0B\f\r] — Python str.strip()/.split()
-    # would also eat Unicode whitespace and could disagree on exotic
-    # inputs, breaking the 'identical to the md5 form' contract
-    import re
-
-    _ws = re.compile(r"[ \t\n\x0B\f\r]+")
-
-    def batches(it):
-        pw = P ** np.arange(k - 1, -1, -1, dtype=np.uint64)
-        import warnings
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            toks_per_doc = [
-                _ws.split(t.strip(" ").lower()) for t in pdf[text_col]
-            ]
-            lens = np.array([len(ts) for ts in toks_per_doc])
-            flat = list(chain.from_iterable(toks_per_doc))
-            out_doc, out_start, out_h = [], [], []
-            if flat:
-                codes, uniques = pd.factorize(np.asarray(flat, dtype=object))
-                with warnings.catch_warnings():
-                    warnings.simplefilter("ignore")  # uint64 overflow is the modulus
-                    uh = np.array(
-                        [fnv1a(u.encode("utf-8")) for u in uniques],
-                        dtype=np.uint64,
-                    )
-                    th_all = uh[codes]
-                    offset = 0
-                    for doc_id, n in zip(pdf[id_col], lens):
-                        th = th_all[offset : offset + n]
-                        offset += n
-                        L = n - k + 1
-                        if L <= 0:
-                            continue
-                        H = np.zeros(L, dtype=np.uint64)
-                        for j in range(k):
-                            H += th[j : j + L] * pw[j]
-                        out_doc.extend([doc_id] * L)
-                        out_start.extend(range(1, L + 1))
-                        out_h.extend(H.view(np.int64))
-            yield pd.DataFrame(
-                {"doc_id": out_doc, "start": out_start, "h": out_h}
-            )
-
-    sh = df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
-    return _rollup_hot_spans(d, sh, k)
+    d, sh = _token_shingles(df, id_col, text_col, k)
+    return _dup_span_rollup(d, sh, k, "tokens")
 
 
 def remove_duplicate_spans(
@@ -1848,99 +1812,24 @@ def remove_duplicate_spans(
     k: int = 8,
 ) -> DataFrame:
     """The actionable form of :func:`duplicate_spans`: strip every
-    duplicated k-token window EXCEPT its corpus-wide first occurrence
-    (canonical = minimal (doc_id, start) per shingle hash — the same
-    keep-first rule the exact-dedup election uses), and emit a digest
-    of the cleaned token stream.
+    duplicated k-token window EXCEPT its corpus-wide first occurrence,
+    and emit a digest of the cleaned token stream.
 
     Per doc, the removed region is the union (island merge) of its
     non-canonical hot windows; tokens outside it survive in order.
     A doc whose every token sits under removed windows cleans to the
     empty string (md5('') — same on both engines).
 
-    Scale shape: identical to :func:`duplicate_spans` (narrow shingle
-    stream, hash-keyed count, no self-join) plus one min-aggregate per
-    hot hash and a per-doc spans array (``O(spans)``, bounded by
-    total_tokens/k per doc) applied to the token array in pure codegen
-    — no Python boundary, no re-tokenize.
+    Scale shape: identical to :func:`duplicate_spans` plus one
+    min-aggregate per hot hash and a per-doc spans array (``O(spans)``,
+    bounded by total_tokens/k per doc) applied to the token array in
+    pure codegen — no Python boundary, no re-tokenize.
 
     Output: (doc_id, total_tokens, removed_tokens, kept_md5).
     """
-    t = TXT.tokens(text_col)
-    d = df.select(
-        F.col(id_col).alias("doc_id"),
-        t.alias("toks"),
-        F.size(t).alias("total_tokens"),
-    )
-    sh = d.filter(F.col("total_tokens") >= k).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("total_tokens") - (k - 1)),
-                lambda i: F.struct(
-                    i.alias("start"),
-                    F.md5(
-                        F.concat_ws(" ", F.slice(F.col("toks"), i, k))
-                    ).alias("h"),
-                ),
-            )
-        ).alias("s"),
-    ).select("doc_id", F.col("s.start").alias("start"), F.col("s.h").alias("h"))
-    # canonical occurrence per hot hash = min (doc_id, start).
-    # Round 13 (guide §2.5): the round-12 window-by-h form serialized
-    # every occurrence of a hot hash into one task; keep its
-    # single-shingle-computation win via a PINNED stream + hash
-    # aggregate (map-side combine, skew-free) + join-back (no
-    # broadcast hint: AQE picks, and skew-splits pathological hashes
-    # — see _rollup_hot_spans).
-    sh = sh.localCheckpoint(eager=False)
-    per_hash = sh.groupBy("h").agg(
-        F.count(F.lit(1)).alias("n_occ"),
-        F.min(F.struct("doc_id", "start")).alias("canon"),
-    )
-    removable = (
-        sh.join(per_hash.filter(F.col("n_occ") >= 2), "h")
-        .filter(
-            ~(
-                (F.col("doc_id") == F.col("canon.doc_id"))
-                & (F.col("start") == F.col("canon.start"))
-            )
-        )
-        .select("doc_id", "start", (F.col("start") + F.lit(k - 1)).alias("end"))
-    )
-    w_prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("start")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    spans = (
-        removable.withColumn("prev_max_end", F.max("end").over(w_prev))
-        .withColumn(
-            "new_island",
-            (
-                F.col("prev_max_end").isNull()
-                | (F.col("start") > F.col("prev_max_end") + 1)
-            ).cast("int"),
-        )
-        .withColumn(
-            "island",
-            F.sum("new_island").over(
-                Window.partitionBy("doc_id").orderBy("start")
-            ),
-        )
-        .groupBy("doc_id", "island")
-        .agg(F.min("start").alias("s"), F.max("end").alias("e"))
-        .groupBy("doc_id")
-        .agg(F.collect_list(F.struct("s", "e")).alias("spans"))
-    )
-    joined = d.join(spans, "doc_id", "left").withColumn(
-        "spans",
-        F.coalesce(
-            "spans", F.array().cast("array<struct<s:int,e:int>>")
-        ),
-    )
+    d, sh = _token_shingles(df, id_col, text_col, k)
     idx = F.transform(
-        F.sequence(F.lit(1), F.col("total_tokens")),
+        F.sequence(F.lit(1), F.col("n")),
         lambda i: F.struct(
             i.alias("i"), F.element_at(F.col("toks"), i).alias("tok")
         ),
@@ -1952,15 +1841,10 @@ def remove_duplicate_spans(
             lambda sp: (p["i"] >= sp["s"]) & (p["i"] <= sp["e"]),
         ),
     )
-    removed_len = F.aggregate(
-        F.col("spans"),
-        F.lit(0),
-        lambda acc, sp: acc + (sp["e"] - sp["s"] + F.lit(1)),
-    )
-    return joined.select(
+    return _removal_spans(d, sh, k).select(
         "doc_id",
-        F.col("total_tokens").cast("bigint").alias("total_tokens"),
-        removed_len.cast("bigint").alias("removed_tokens"),
+        F.col("n").cast("bigint").alias("total_tokens"),
+        F.col("removed").alias("removed_tokens"),
         F.md5(
             F.concat_ws(" ", F.transform(kept, lambda p: p["tok"]))
         ).alias("kept_md5"),
@@ -1972,7 +1856,6 @@ def duplicate_char_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 40,
-    hasher: str = "md5",
 ) -> DataFrame:
     """CHARACTER-grain exact-substring duplicate detection — the Lee
     et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -1990,58 +1873,19 @@ def duplicate_char_spans(
     threshold is 50 chars; default k=40 matches the token twin's
     ~8-token footprint on this corpus.
 
-    100 TB shape — identical to the token form, deliberately: the
-    only corpus-sized structures are the (doc_id, int, hash) shingle
-    stream (the text itself never shuffles) and its hash-keyed count
-    with map-side combine; hot windows then island-merge per doc. The
+    100 TB shape — identical to the token form, deliberately. The
     char stream is ~5× denser than the token stream (one window per
     CHARACTER), which is the honest cost of sub-token grain —
-    SCALING.md records the measured ratio. No self-join, no
-    suffix-array construction (the sequential O(n log n) build
-    doesn't distribute; the hot-window form is the standard scalable
-    equivalent at fixed threshold).
-
-    ``hasher``: ``"md5"`` (default — the DuckDB-twin form: 32-char
-    hex, the densest exchange in the repo) or ``"xxhash64"`` (the
-    cheap-hash scale twin, ``incremental_dedup_arrow`` precedent: an
-    8-byte long per window cuts the shingle-stream shuffle bytes
-    ~4-5×; identical output while collision-free — equality-pinned
-    vs the md5 form in pytest, measured deltas in SCALING.md round
-    10). At 64 bits a corpus needs ~10⁹⁺ distinct windows before
-    birthday collisions bite; a collision can only MERGE two cold
-    windows into a false-hot one, never lose a true duplicate.
+    SCALING.md records the measured ratio. No suffix-array
+    construction (the sequential O(n log n) build doesn't distribute;
+    the hot-window form is the standard scalable equivalent at fixed
+    threshold).
 
     Output: (doc_id, total_chars, n_dup_spans, dup_chars, dup_frac)
     for every input document (zero-span docs included).
     """
-    hfn = F.xxhash64 if hasher == "xxhash64" else F.md5
-    d = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("txt"),
-        F.length(text_col).cast("int").alias("total_chars"),
-    )
-    sh = d.filter(F.col("total_chars") >= k).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("total_chars") - (k - 1)),
-                lambda i: F.struct(
-                    i.alias("start"),
-                    hfn(F.col("txt").substr(i, F.lit(k))).alias("h"),
-                ),
-            )
-        ).alias("s"),
-    ).select("doc_id", F.col("s.start").alias("start"), F.col("s.h").alias("h"))
-    out = _rollup_hot_spans(
-        d.select("doc_id", F.col("total_chars").alias("total_tokens")), sh, k
-    )
-    return out.select(
-        "doc_id",
-        F.col("total_tokens").alias("total_chars"),
-        "n_dup_spans",
-        F.col("dup_tokens").alias("dup_chars"),
-        "dup_frac",
-    )
+    d, sh = _char_shingles(df, id_col, text_col, k)
+    return _dup_span_rollup(d, sh, k, "chars")
 
 
 def remove_duplicate_char_spans(
@@ -2049,14 +1893,11 @@ def remove_duplicate_char_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 40,
-    hasher: str = "md5",
 ) -> DataFrame:
     """The actionable form of :func:`duplicate_char_spans`, sharing
     :func:`remove_duplicate_spans`'s island/removal contract at char
-    grain: strip every duplicated k-char window EXCEPT its corpus-wide
-    first occurrence (canonical = min (doc_id, start) per window md5),
-    and digest the surviving character stream — the cleaned-stream md5
-    the oracle verifies byte-for-byte.
+    grain, and digesting the surviving character stream — the
+    cleaned-stream md5 the oracle verifies byte-for-byte.
 
     The reassembly differs from the token form on purpose: instead of
     enumerating positions (one struct PER CHARACTER — fine for tokens,
@@ -2065,89 +1906,14 @@ def remove_duplicate_char_spans(
     of the original string with ``substr`` — O(islands) codegen string
     ops per doc, no per-char explode, no Python.
 
-    ``hasher``: the :func:`duplicate_char_spans` contract — the
-    window hash only names equality classes (the canonical election
-    and the output digest are hash-type-independent while
-    collision-free), so the ``"xxhash64"`` twin cuts the same
-    shingle-exchange bytes and shares the md5 oracle (equality pinned
-    in pytest).
-
     Output: (doc_id, total_chars, removed_chars, kept_md5).
     """
-    hfn = F.xxhash64 if hasher == "xxhash64" else F.md5
-    d = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("txt"),
-        F.length(text_col).cast("int").alias("total_chars"),
-    )
-    sh = d.filter(F.col("total_chars") >= k).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("total_chars") - (k - 1)),
-                lambda i: F.struct(
-                    i.alias("start"),
-                    hfn(F.col("txt").substr(i, F.lit(k))).alias("h"),
-                ),
-            )
-        ).alias("s"),
-    ).select("doc_id", F.col("s.start").alias("start"), F.col("s.h").alias("h"))
-    # round 13 (guide §2.5): pinned stream + hash aggregate +
-    # join-back instead of the round-12 window-by-h (which serialized
-    # hot hashes into one task) — same rewrite as _rollup_hot_spans /
-    # remove_duplicate_spans, rows identical, per-char hashing still
-    # runs exactly once
-    sh = sh.localCheckpoint(eager=False)
-    per_hash = sh.groupBy("h").agg(
-        F.count(F.lit(1)).alias("n_occ"),
-        F.min(F.struct("doc_id", "start")).alias("canon"),
-    )
-    removable = (
-        sh.join(per_hash.filter(F.col("n_occ") >= 2), "h")
-        .filter(
-            ~(
-                (F.col("doc_id") == F.col("canon.doc_id"))
-                & (F.col("start") == F.col("canon.start"))
-            )
-        )
-        .select("doc_id", "start", (F.col("start") + F.lit(k - 1)).alias("end"))
-    )
-    w_prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("start")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    spans = (
-        removable.withColumn("prev_max_end", F.max("end").over(w_prev))
-        .withColumn(
-            "new_island",
-            (
-                F.col("prev_max_end").isNull()
-                | (F.col("start") > F.col("prev_max_end") + 1)
-            ).cast("int"),
-        )
-        .withColumn(
-            "island",
-            F.sum("new_island").over(
-                Window.partitionBy("doc_id").orderBy("start")
-            ),
-        )
-        .groupBy("doc_id", "island")
-        .agg(F.min("start").alias("s"), F.max("end").alias("e"))
-        .groupBy("doc_id")
-        .agg(F.collect_list(F.struct("s", "e")).alias("spans"))
-    )
-    joined = d.join(spans, "doc_id", "left").withColumn(
-        "spans",
-        F.sort_array(
-            F.coalesce("spans", F.array().cast("array<struct<s:int,e:int>>"))
-        ),
-    )
+    d, sh = _char_shingles(df, id_col, text_col, k)
     # complement-segment fold: accumulator = (next uncut position,
     # kept-so-far); each island appends the gap before it, the final
     # lambda appends the tail after the last island
     kept_str = F.aggregate(
-        F.col("spans"),
+        F.sort_array(F.col("spans")),
         F.struct(F.lit(1).alias("pos"), F.lit("").alias("acc")),
         lambda acc, sp: F.struct(
             (sp["e"] + F.lit(1)).alias("pos"),
@@ -2157,20 +1923,13 @@ def remove_duplicate_char_spans(
         ),
         lambda acc: F.concat(
             acc["acc"],
-            F.col("txt").substr(
-                acc["pos"], F.col("total_chars") - acc["pos"] + F.lit(1)
-            ),
+            F.col("txt").substr(acc["pos"], F.col("n") - acc["pos"] + F.lit(1)),
         ),
     )
-    removed_len = F.aggregate(
-        F.col("spans"),
-        F.lit(0),
-        lambda acc, sp: acc + (sp["e"] - sp["s"] + F.lit(1)),
-    )
-    return joined.select(
+    return _removal_spans(d, sh, k).select(
         "doc_id",
-        F.col("total_chars").cast("bigint").alias("total_chars"),
-        removed_len.cast("bigint").alias("removed_chars"),
+        F.col("n").cast("bigint").alias("total_chars"),
+        F.col("removed").alias("removed_chars"),
         F.md5(kept_str).alias("kept_md5"),
     )
 

@@ -617,34 +617,20 @@ def incremental_snapshot_loop(
                 folded.append(snap_key)
                 with open(ledger, "w") as f:
                     _json.dump(folded, f)
-            with open(_os.path.join(line_store, "_line_meta.json")) as f:
-                line_hasher = _json.load(f)["hasher"]
             hot = (
                 spark.read.parquet(_os.path.join(line_store, "counts"))
                 .filter(F.col("n_occ") >= line_min_occ)
                 .select("h")
             )
         else:
-            line_hasher = "md5"
             hot = (
-                textual_mod._line_hash_counts(docs, line_hasher)
+                textual_mod._line_hash_counts(docs)
                 .filter(F.col("n_occ") >= line_min_occ)
                 .select("h")
             )
-        d_in = textual_mod.attach_lines(
-            incoming.select("doc_id", "text")
-        ).select("doc_id", F.split(F.col("ltext"), "\n").alias("lines"))
-        hs_in = d_in.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    "lines",
-                    lambda l: textual_mod._line_hash_expr(l, line_hasher),
-                )
-            ).alias("h"),
-        )
+        d_in, hs_in = textual_mod._doc_lines(incoming.select("doc_id", "text"))
         return (
-            textual_mod._line_dedup_assemble(d_in, hs_in, hot, line_hasher)
+            textual_mod._line_dedup_assemble(d_in, hs_in, hot)
             .select(
                 "doc_id",
                 F.col("n_dup_lines").alias("n_hot_lines"),

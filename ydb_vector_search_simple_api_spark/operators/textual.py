@@ -222,32 +222,6 @@ def token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def winnowing_fingerprints(
-    spark: SparkSession, sf_dir: str, k: int = 8, window: int = 4
-) -> DataFrame:
-    """Rolling-hash document fingerprints (winnowing): per doc, the
-    sorted distinct minima of a sliding window over char-k-gram md5s.
-    Any shared substring of length >= k+window-1 between two docs
-    yields a shared fingerprint — the copy-detection primitive.
-
-    The k-gram hash array is materialized behind a repartition barrier
-    before windowing: each of the ~len(text) window slices references
-    the array, and without the barrier Catalyst's expression inlining
-    would re-hash the document once per window (no let-binding).
-    Output: (doc_id, fps array<string>); arrays sorted for stable
-    comparison."""
-    d = load_documents(spark, sf_dir).select("doc_id", "text")
-    # defaultParallelism alone: a driver-side constant — df.rdd
-    # .getNumPartitions() would materialize the RDD conversion plan
-    # just to read a number that the repartition target never needs
-    # to undercut (the barrier exists for let-binding, not sizing)
-    target = spark.sparkContext.defaultParallelism
-    hashed = d.select(
-        "doc_id", TXT.char_kgram_hashes("text", k).alias("h")
-    ).repartition(target, "doc_id")
-    return hashed.select("doc_id", TXT.winnow_mins(F.col("h"), window).alias("fps"))
-
-
 def tfidf_top_terms(
     spark: SparkSession, sf_dir: str, top_n: int = 3
 ) -> DataFrame:
@@ -287,40 +261,32 @@ def tfidf_top_terms(
     )
 
 
-def winnowing_fingerprints_flat(
-    spark: SparkSession, sf_dir: str, k: int = 8, window: int = 4
-) -> DataFrame:
-    """Gate-friendly exploded form of :func:`winnowing_fingerprints`:
-    one (doc_id, fp) row per distinct fingerprint. Docs with no
-    fingerprints (len(text) < k) emit no rows — the oracle's ``unnest``
-    over an empty list behaves identically.
-
-    ``explode_outer`` + post-explode NULL filter, NOT plain
-    ``explode``: for the latter, Catalyst's InferFiltersFromGenerate
-    derives ``size(fps) > 0`` and pushes it BELOW the repartition
-    barrier, re-inlining the whole winnowing expression into the scan
-    stage — the O(len^2) re-hashing the barrier exists to prevent
-    (observed 40x slowdown). The NULL filter references the generator
-    output, so it cannot sink below the Generate."""
-    arr = winnowing_fingerprints(spark, sf_dir, k=k, window=window)
-    return (
-        arr.select("doc_id", F.explode_outer("fps").alias("fp"))
-        .filter(F.col("fp").isNotNull())
-    )
-
-
 def winnowing_digest(
     spark: SparkSession, sf_dir: str, k: int = 8, window: int = 4
 ) -> DataFrame:
-    """Per-doc digest of :func:`winnowing_fingerprints`: (doc_id,
-    n_fps, fps_md5) where fps_md5 = md5 of the sorted fingerprints
-    concatenated. Carries the full fingerprint computation but emits
-    one scalar row per document — the gate/bench shape (the flat form
-    moves ~len(text)/window rows per doc through collect; the digest
-    proves the same set equality in 1 row). md5('') for docs shorter
-    than k, matching the oracle's array_to_string([]) = ''."""
-    arr = winnowing_fingerprints(spark, sf_dir, k=k, window=window)
-    return arr.select(
+    """Rolling-hash document fingerprints (winnowing), one digest row
+    per doc: the fingerprints are the sorted distinct minima of a
+    sliding window over char-k-gram md5s, so any shared substring of
+    length >= k+window-1 between two docs yields a shared fingerprint
+    — the copy-detection primitive. Output (doc_id, n_fps, fps_md5)
+    with fps_md5 = md5 of the sorted fingerprints concatenated
+    (md5('') for docs shorter than k, matching the oracle's
+    array_to_string([]) = '').
+
+    The k-gram hash array is materialized behind a repartition barrier
+    before windowing: each of the ~len(text) window slices references
+    the array, and without the barrier Catalyst's expression inlining
+    would re-hash the document once per window (no let-binding). The
+    barrier's width is ``defaultParallelism``, a driver-side constant:
+    it exists for let-binding, not sizing."""
+    d = load_documents(spark, sf_dir).select("doc_id", "text")
+    target = spark.sparkContext.defaultParallelism
+    fps = (
+        d.select("doc_id", TXT.char_kgram_hashes("text", k).alias("h"))
+        .repartition(target, "doc_id")
+        .select("doc_id", TXT.winnow_mins(F.col("h"), window).alias("fps"))
+    )
+    return fps.select(
         "doc_id",
         F.size("fps").cast("bigint").alias("n_fps"),
         F.md5(F.concat_ws("", F.col("fps"))).alias("fps_md5"),
@@ -745,29 +711,6 @@ def augment_token_dropout(
     )
 
 
-def winnowing_digest64(
-    spark: SparkSession, sf_dir: str, k: int = 8, window: int = 4
-) -> DataFrame:
-    """Production twin of :func:`winnowing_digest`: xxhash64 k-gram
-    hashes instead of md5 hex strings (same winnowing guarantee — it
-    holds for any hash — measured ~20x cheaper at 1M docs; rows-only
-    in the gate, the md5 form carries the oracle). Output (doc_id,
-    n_fps, fps_md5)."""
-    d = load_documents(spark, sf_dir).select("doc_id", "text")
-    target = spark.sparkContext.defaultParallelism
-    hashed = d.select(
-        "doc_id", TXT.char_kgram_hashes64("text", k).alias("h")
-    ).repartition(target, "doc_id")
-    arr = hashed.select("doc_id", TXT.winnow_mins(F.col("h"), window).alias("fps"))
-    return arr.select(
-        "doc_id",
-        F.size("fps").cast("bigint").alias("n_fps"),
-        F.md5(
-            F.concat_ws(",", F.transform("fps", lambda x: x.cast("string")))
-        ).alias("fps_md5"),
-    )
-
-
 def winnow_fingerprints(text: str, k: int, window: int) -> np.ndarray:
     """Sorted unique ``uint64`` winnowing fingerprints of ``text``'s
     UTF-8 bytes: the minimum of every ``window`` consecutive k-gram
@@ -791,13 +734,14 @@ def winnowing_digest_arrow(
     spark: SparkSession, sf_dir: str, k: int = 8, window: int = 4
 ) -> DataFrame:
     """Arrow-vectorized winnowing — the 100 TB fingerprinting path.
-    The SQL-expression form (:func:`winnowing_digest`) pays O(len·w)
-    per doc in per-window array slices; this variant runs
+    The SQL-expression form (:func:`winnowing_digest`, kept because
+    its md5 fingerprints have a DuckDB twin) pays O(len·w) per doc in
+    per-window array slices; this variant runs
     :func:`winnow_fingerprints` per doc inside ``mapInPandas`` — O(len)
     per doc at C speed (measured ~40x over the expression form at 1M
     docs; tools/text_scale_probe).
     The winnowing guarantee (shared substring of length >= k+window-1
-    ⇒ shared fingerprint) holds for any hash, pinned in
+    ⇒ shared fingerprint) holds for any hash, pinned on the kernel in
     tests/test_text.py. Rows-only (hash differs from the md5 oracle
     twin by design). Output (doc_id, n_fps, fps_md5)."""
     import hashlib
@@ -2033,27 +1977,26 @@ def attach_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _line_hash_expr(l, hasher: str):
-    """Per-line hash for the CCNet line-dedup family. ``md5``: hex
-    string, byte-identical cross-engine (the oracle form).
-    ``xxhash64``: JVM-native 8-byte bigint — the cheap production twin
-    (the ``dedup._sig_element`` hasher-knob precedent): equality
-    classes are what the algorithm consumes, so any collision-sparse
-    hash yields the same removal set; rows-only, equality vs the md5
-    form pinned in pytest, shuffle-byte delta measured in SCALING.md."""
-    if hasher == "md5":
-        return F.md5(l)
-    if hasher == "xxhash64":
-        return F.xxhash64(l)
-    raise ValueError(f"unknown hasher {hasher!r}; use 'md5' or 'xxhash64'")
+def _line_hash(line):
+    """The one line hash of the CCNet line-dedup family (recompute,
+    store and snapshot-loop forms): xxhash64, an 8-byte bigint instead
+    of 32-char md5 hex through the densest exchange (A/B in SCALING.md,
+    "One implementation per dedup family"). Only equality classes are
+    consumed, so the outputs are hash-free and share the md5 oracle."""
+    return F.xxhash64(line)
 
 
-def _line_hash_type(hasher: str) -> str:
-    return "array<string>" if hasher == "md5" else "array<bigint>"
+def _doc_lines(docs_df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, lines) over the line augmentation of ``docs_df`` and
+    its (doc_id, h) line-hash stream."""
+    d = attach_lines(docs_df).select(
+        "doc_id", F.split(F.col("ltext"), "\n").alias("lines")
+    )
+    return d, d.select("doc_id", F.explode(F.transform("lines", _line_hash)).alias("h"))
 
 
 def line_dedup(
-    spark: SparkSession, sf_dir: str, min_occ: int = 2, hasher: str = "md5"
+    spark: SparkSession, sf_dir: str, min_occ: int = 2
 ) -> DataFrame:
     """CCNet-style corpus-wide duplicated-LINE removal (Wenzek et al.
     2020 §3.1 — "deduplicating lines removes boilerplate": headers,
@@ -2075,42 +2018,29 @@ def line_dedup(
     each doc's removal set returns as one collect_set row joined on
     doc_id; reassembly is a per-doc array filter in codegen against
     the doc's own hot-hash array. The exploded hash stream is
-    checkpointed ONCE (round 11 — it feeds BOTH the hot count and the
-    per-doc hot-set join; without the barrier the explode ran per
-    consumer): a hash-only stream, ~40 bytes/line on executor-local
-    disk. The cleaned stream is digested (``kept_md5``) so the oracle
-    verifies the reconstruction byte-for-byte. ``hasher`` picks the
-    line-hash function (see :func:`_line_hash_expr` — xxhash64 ships
-    8-byte bigints through the densest exchange instead of 32-char
-    hex, the char-span-twin argument).
+    checkpointed ONCE (it feeds BOTH the hot count and the per-doc
+    hot-set join; without the barrier the explode ran per consumer):
+    a hash-only stream, (doc_id, 8-byte hash) per line. The cleaned stream is digested (``kept_md5``) so the oracle
+    verifies the reconstruction byte-for-byte.
 
     Output: (doc_id, n_lines, n_dup_lines, kept_md5) for every doc
     (zero-removal docs included; ``n_dup_lines`` counts occurrences).
     """
-    hfn = lambda l: _line_hash_expr(l, hasher)
-    d = attach_lines(load_documents(spark, sf_dir)).select(
-        "doc_id", F.split(F.col("ltext"), "\n").alias("lines")
-    )
-    hs = d.select(
-        "doc_id",
-        F.explode(F.transform("lines", hfn)).alias("h"),
-    ).localCheckpoint(eager=True)
+    d, hs = _doc_lines(load_documents(spark, sf_dir))
+    hs = hs.localCheckpoint(eager=True)
     hot = (
         hs.groupBy("h")
         .agg(F.count(F.lit(1)).alias("n_occ"))
         .filter(F.col("n_occ") >= min_occ)
         .select("h")
     )
-    return _line_dedup_assemble(d, hs, hot, hasher)
+    return _line_dedup_assemble(d, hs, hot)
 
 
-def _line_dedup_assemble(
-    d: DataFrame, hs: DataFrame, hot: DataFrame, hasher: str
-) -> DataFrame:
+def _line_dedup_assemble(d: DataFrame, hs: DataFrame, hot: DataFrame) -> DataFrame:
     """Shared reassembly for the recompute and store-served forms:
     per-doc hot-hash sets join back on doc_id; the kept-line filter
     and digest run in per-doc codegen — no text ever shuffles."""
-    hfn = lambda l: _line_hash_expr(l, hasher)
     doc_hot = (
         hs.join(hot, "h", "left_semi")
         .groupBy("doc_id")
@@ -2118,11 +2048,11 @@ def _line_dedup_assemble(
     )
     joined = d.join(doc_hot, "doc_id", "left").withColumn(
         "hot_hs",
-        F.coalesce("hot_hs", F.array().cast(_line_hash_type(hasher))),
+        F.coalesce("hot_hs", F.array().cast("array<bigint>")),
     )
     kept = F.filter(
         F.col("lines"),
-        lambda l: ~F.array_contains(F.col("hot_hs"), hfn(l)),
+        lambda l: ~F.array_contains(F.col("hot_hs"), _line_hash(l)),
     )
     return joined.select(
         "doc_id",
@@ -2132,39 +2062,26 @@ def _line_dedup_assemble(
     )
 
 
-def _line_hash_counts(docs_df: DataFrame, hasher: str) -> DataFrame:
+def _line_hash_counts(docs_df: DataFrame) -> DataFrame:
     """(h, n_occ) line-hash occurrence counts over ``docs_df`` (raw
     documents; the deterministic line augmentation is applied here) —
     the mergeable statistic the hot-line store persists."""
-    hfn = lambda l: _line_hash_expr(l, hasher)
-    return (
-        attach_lines(docs_df)
-        .select(
-            F.explode(
-                F.transform(F.split(F.col("ltext"), "\n"), hfn)
-            ).alias("h")
-        )
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-    )
+    return _doc_lines(docs_df)[1].groupBy("h").agg(F.count(F.lit(1)).alias("n_occ"))
 
 
-def line_hash_store_build(
-    spark: SparkSession, docs_df: DataFrame, path: str, hasher: str = "md5"
-) -> dict:
-    """Persist the corpus line-hash counts (VERDICT r10 #4 — the
-    fingerprint-store pattern at LINE grain): one parquet of
-    (h, n_occ) plus meta. Occurrence counts (not just the hot set)
-    persist because hotness is threshold-at-read and counts must keep
-    folding: a line that occurs once in each of two snapshots is hot
-    only after BOTH have been ingested. Returns the row count."""
-    import json as _json
+def line_hash_store_build(spark: SparkSession, docs_df: DataFrame, path: str) -> dict:
+    """Persist the corpus line-hash counts (the fingerprint-store
+    pattern at LINE grain): one parquet of (h, n_occ) under
+    ``counts/``, whose committer-written ``_SUCCESS`` marks a built
+    store. Occurrence counts (not just the hot set) persist because
+    hotness is threshold-at-read and counts must keep folding: a line
+    that occurs once in each of two snapshots is hot only after BOTH
+    have been ingested. Returns the row count."""
     import os as _os
 
-    counts = _line_hash_counts(docs_df, hasher)
-    counts.write.mode("overwrite").parquet(_os.path.join(path, "counts"))
-    with open(_os.path.join(path, "_line_meta.json"), "w") as f:
-        _json.dump({"hasher": hasher}, f)
+    _line_hash_counts(docs_df).write.mode("overwrite").parquet(
+        _os.path.join(path, "counts")
+    )
     return {
         "n_hashes": spark.read.parquet(_os.path.join(path, "counts")).count()
     }
@@ -2176,12 +2093,9 @@ def line_hash_store_upsert(
     """Fold a new snapshot's line-hash counts into the store — an
     associative exact count fold (the KN5-store/KMV argument), so
     build(existing) + upsert(delta) == build(union) byte-for-byte."""
-    import json as _json
     import os as _os
 
-    with open(_os.path.join(path, "_line_meta.json")) as f:
-        hasher = _json.load(f)["hasher"]
-    delta = _line_hash_counts(docs_df, hasher)
+    delta = _line_hash_counts(docs_df)
     merged = (
         spark.read.parquet(_os.path.join(path, "counts"))
         .unionByName(delta)
@@ -2207,24 +2121,15 @@ def line_dedup_from_store(
     the batch recompute exactly (shared oracle). Per-call cost is the
     batch's own line pass + one hash-keyed join against the store
     scan; the corpus never re-hashes. Same output contract."""
-    import json as _json
     import os as _os
 
-    with open(_os.path.join(path, "_line_meta.json")) as f:
-        hasher = _json.load(f)["hasher"]
-    hfn = lambda l: _line_hash_expr(l, hasher)
     hot = (
         spark.read.parquet(_os.path.join(path, "counts"))
         .filter(F.col("n_occ") >= min_occ)
         .select("h")
     )
-    d = attach_lines(docs_df).select(
-        "doc_id", F.split(F.col("ltext"), "\n").alias("lines")
-    )
-    hs = d.select(
-        "doc_id", F.explode(F.transform("lines", hfn)).alias("h")
-    )
-    return _line_dedup_assemble(d, hs, hot, hasher)
+    d, hs = _doc_lines(docs_df)
+    return _line_dedup_assemble(d, hs, hot)
 
 
 def line_dedup_store(

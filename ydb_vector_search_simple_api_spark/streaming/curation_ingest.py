@@ -808,7 +808,6 @@ def stream_line_hash_ingest(
     sf_dir: str,
     n_shards: int = 4,
     min_occ: int = 2,
-    hasher: str = "md5",
 ) -> DataFrame:
     """CCNet line-dedup ON ARRIVAL (round 11, VERDICT r10 #4): the
     corpus arrives as shard drops; each trigger folds ITS shard's
@@ -841,8 +840,8 @@ def stream_line_hash_ingest(
         docs,
         n_shards,
         "svs_lineing",
-        "_line_meta.json",
-        lambda ss, b, st: line_hash_store_build(ss, b, st, hasher=hasher),
+        os.path.join("counts", "_SUCCESS"),
+        line_hash_store_build,
         line_hash_store_upsert,
     )
     return line_dedup_from_store(spark, docs, store, min_occ=min_occ)
