@@ -47,3 +47,35 @@ def spark_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def py4j_commands(spark, fn):
+    """Run ``fn()``; return (its result, the number of py4j commands
+    the calling thread sent to the JVM). The cyclic collector is off
+    while counting, so proxy deletes it would schedule do not land in
+    the count; deletes that py4j's finalizer thread sends are not the
+    caller's and are not counted."""
+    import gc
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    caller = threading.get_ident()
+    send = client.send_command
+    n = 0
+
+    def counting(*args, **kwargs):
+        nonlocal n
+        if threading.get_ident() == caller:
+            n += 1
+        return send(*args, **kwargs)
+
+    was_enabled = gc.isenabled()
+    gc.disable()
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        del client.send_command
+        if was_enabled:
+            gc.enable()
+    return out, n

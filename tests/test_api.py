@@ -717,3 +717,48 @@ def test_result_cache_threads_match_uncached_search(spark, qvec):
     assert not errors, errors[:3]
     for qi, replies in seen.items():
         assert all(r == want[qi] for r in replies), qi
+
+
+# ------------------------------------------------ plan-build round trips
+
+
+def _ivf_engine_at_dim(spark, tmp_path, dim):
+    """A warm IVF engine over the SF_SMALL documents whose vectors are
+    ``dim``-dimensional (seeded Gaussian), with one of its vectors as
+    the query."""
+    import numpy as np
+
+    ids = [r.doc_id for r in spark.read.parquet(f"{SF_SMALL}/documents.parquet").collect()]
+    vecs = np.random.default_rng(dim).standard_normal((len(ids), dim)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)],
+        "id long, embedding array<float>",
+    )
+    idx = ivf.build_ivf_index(spark, df, str(tmp_path / f"ivf{dim}"), n_clusters=8)
+    eng = api.VectorSearchEngine(
+        spark, SF_SMALL, config=SearchConfig(index_enabled=True), index=idx
+    )
+    q = [float(x) for x in vecs[5]]
+    eng.search_df(q, k=10, search_top_size=3)
+    return eng, q
+
+
+#: py4j commands of one warm ``search_df`` at dim 64 in the setup
+#: above when every score was built through the Column API
+COLUMN_API_COMMANDS_DIM64 = 814
+
+
+def test_ivf_search_df_round_trips_flat_in_dim(spark, tmp_path):
+    """Building the /search plan costs the same number of py4j round
+    trips at dim 8, 64 and 512 — the score is one SQL string — and at
+    most 40% of what the Column API form cost at dim 64."""
+    from conftest import py4j_commands
+
+    counts = {}
+    for dim in (8, 64, 512):
+        eng, q = _ivf_engine_at_dim(spark, tmp_path, dim)
+        _, counts[dim] = py4j_commands(
+            spark, lambda: eng.search_df(q, k=10, search_top_size=3)
+        )
+    assert counts[8] == counts[64] == counts[512], counts
+    assert counts[64] <= 0.4 * COLUMN_API_COMMANDS_DIM64, counts

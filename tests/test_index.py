@@ -213,7 +213,7 @@ def test_ivf_upsert_appends_and_stays_exact_at_full_width(spark, tmp_path_factor
     ]
     from ydb_vector_search_simple_api_spark.functions.distance import score_expr
 
-    score = F.round(score_expr("CosineSimilarity", F.col("embedding"), qvec), 6) + F.lit(0.0)
+    score = F.round(score_expr("CosineSimilarity", "embedding", qvec), 6) + F.lit(0.0)
     want = [
         (r.id, r.score)
         for r in embs.withColumn("score", score)

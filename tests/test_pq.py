@@ -51,7 +51,7 @@ def _exact_topk(spark, strategy, k):
     from ydb_vector_search_simple_api_spark.config import sort_descending
 
     df = _corpus(spark)
-    score = F.round(score_expr(strategy, F.col("embedding"), _qvec(spark)), ROUND) + F.lit(0.0)
+    score = F.round(score_expr(strategy, "embedding", _qvec(spark)), ROUND) + F.lit(0.0)
     direction = (
         F.col("score").desc_nulls_last()
         if sort_descending(strategy)
@@ -156,7 +156,7 @@ def test_adc_exact_on_bounded_vocabulary(spark):
     exact = {
         r.id: r.score
         for r in df.withColumn(
-            "score", score_expr("InnerProductSimilarity", F.col("embedding"), q)
+            "score", score_expr("InnerProductSimilarity", "embedding", q)
         ).select("id", "score").collect()
     }
     assert set(adc) == set(exact)

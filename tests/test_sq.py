@@ -71,7 +71,7 @@ def test_full_shortlist_is_exact(spark, sq_index, strategy):
     ).collect()
     exact = (
         _src(spark)
-        .withColumn("score", score_expr(strategy, F.col("embedding"), q))
+        .withColumn("score", score_expr(strategy, "embedding", q))
         .orderBy(*_order_cols(strategy))
         .limit(10)
         .collect()
@@ -119,7 +119,7 @@ def test_filter_contract(spark, sq_index):
         _src(spark)
         .filter(F.col("id") % 3 == 0)
         .withColumn(
-            "score", score_expr("CosineSimilarity", F.col("embedding"), q)
+            "score", score_expr("CosineSimilarity", "embedding", q)
         )
         .orderBy(*_order_cols("CosineSimilarity"))
         .limit(10)

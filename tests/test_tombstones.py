@@ -229,3 +229,41 @@ def test_lexical_index_tombstones(spark, tmp_path):
     )
     restored = [tuple(r) for r in RK.bm25_topk_indexed(spark, lex, k=5).collect()]
     assert restored == before
+
+
+def test_tombstone_read_infers_no_schema(spark, tmp_path):
+    """The tombstone set is read with its fixed schema: a warm
+    full-width IVF search over a tombstoned index adds only the jobs
+    that broadcast the set (two), where inferring the schema from the
+    parquet footers cost one more job per search. The rows are the
+    exact top-k of the live rows."""
+    from ydb_vector_search_simple_api_spark import api
+    from ydb_vector_search_simple_api_spark.config import SearchConfig
+
+    from conftest import spark_jobs
+
+    idx = ivf.build_ivf_index(spark, _src(spark), str(tmp_path / "ivf"), n_clusters=4)
+    eng = api.VectorSearchEngine(
+        spark, SF_SMALL, config=SearchConfig(index_enabled=True), index=idx
+    )
+    q = _qvec(spark)
+
+    def search():
+        return [r["id"] for r in eng.search(q, k=5, search_top_size=4)[0]]
+
+    search()
+    _, live_jobs = spark_jobs(spark, search)
+    tombstones.delete_ids(spark, idx.path, [0, 1])
+    search()
+    got, jobs = spark_jobs(spark, search)
+    assert jobs == live_jobs + 2
+    assert got == [i for i in _exact_ids(spark, q, k=7) if i not in (0, 1)][:5]
+
+
+def test_tombstones_from_int_ids_read_as_long(spark, tmp_path):
+    """An int id column is stored as the set's long ids."""
+    path = str(tmp_path / "idx")
+    tombstones.delete_ids(spark, path, spark.createDataFrame([(3,), (4,)], "x int"))
+    t = tombstones.load_tombstones(spark, path)
+    assert t.schema.simpleString() == "struct<id:bigint>"
+    assert sorted(r.id for r in t.collect()) == [3, 4]

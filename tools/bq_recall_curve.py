@@ -12,10 +12,11 @@ Usage: python tools/bq_recall_curve.py [sf_dir] [n_queries] [k]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SHORTLISTS = (32, 64, 128, 256, 512, 1024, 2048)
 

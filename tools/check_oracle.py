@@ -18,12 +18,13 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from ydb_vector_search_simple_api_spark.sources.store import TABLES

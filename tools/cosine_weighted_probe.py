@@ -34,11 +34,12 @@ Usage: python tools/cosine_weighted_probe.py [--header] [--rare-tail]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADER = (
     "this dataset is released under the creative commons attribution"

@@ -15,10 +15,11 @@ The sf0.1 output is recorded in README.md ("Recall vs beam").
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 M = 8
 BEAMS = (8, 16, 32, 64, 128)

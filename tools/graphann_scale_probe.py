@@ -18,11 +18,12 @@ Usage: python tools/graphann_scale_probe.py [n_rows] [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def timed(fn, runs: int = 3) -> float:
@@ -87,7 +88,7 @@ def main():
     queries = {int(r.id): [float(x) for x in r.embedding] for r in qrows}
 
     def brute(qv):
-        score = score_expr("CosineSimilarity", F.col("embedding"), qv)
+        score = score_expr("CosineSimilarity", "embedding", qv)
         return (
             big.withColumn("score", score)
             .select("id", "score")

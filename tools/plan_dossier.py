@@ -10,9 +10,11 @@ is plan-shape-tested in tests/ (plans/checks.py assertions).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 #: query -> the plan property a reviewer should look for
 HEADLINERS = {
@@ -189,7 +191,7 @@ def main() -> None:
             "```",
             "",
         ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(HEADLINERS)} plans)")
     spark.stop()

@@ -14,10 +14,11 @@ The sf0.1 output is recorded in README.md ("Recall vs width").
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_CLUSTERS = 16
 WIDTHS = (1, 2, 3, 4, 6, 8, 12, 16)

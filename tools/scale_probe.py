@@ -20,11 +20,12 @@ Usage: python tools/scale_probe.py [n_rows] [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def timed(fn, runs: int = 3) -> float:
@@ -94,7 +95,7 @@ def main():
     results: list[tuple[str, float, str]] = []
 
     def brute():
-        score = score_expr("CosineSimilarity", F.col("embedding"), qvec)
+        score = score_expr("CosineSimilarity", "embedding", qvec)
         return (
             big.withColumn("score", score)
             .select("id", "score")

@@ -20,11 +20,12 @@ Defaults 20000 / 64 / 3. Output recorded in SCALING.md.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def timed(fn, runs: int = 2) -> float:

@@ -232,7 +232,7 @@ def main() -> None:
         )
         topk = (
             embs.withColumn(
-                "score", score_expr("CosineSimilarity", F.col("embedding"), qvec)
+                "score", score_expr("CosineSimilarity", "embedding", qvec)
             )
             .select("id", "score")
             .orderBy(*_order_cols("CosineSimilarity"))

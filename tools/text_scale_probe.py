@@ -20,11 +20,12 @@ Usage: python tools/text_scale_probe.py [n_docs]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def timed(fn, runs: int = 2) -> float:
@@ -49,11 +50,14 @@ def main():
     from ydb_vector_search_simple_api_spark.operators import dedup, ranking, textual
     from ydb_vector_search_simple_api_spark.sources.store import load_documents
 
+    # all of this host's cores, and a driver of half its memory
+    cpus = os.cpu_count() or 1
+    mem_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("text-scale-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.driver.memory", f"{max(1, mem_gb // 2)}g")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -203,7 +207,7 @@ def main():
     )
 
     print(f"\nText probe: {n_actual:,} docs / {tok_total:,} tokens "
-          f"(generated in {gen_s:.1f}s, local[32])\n")
+          f"(generated in {gen_s:.1f}s, local[{cpus}])\n")
     print("| operator | best wall (s) | M docs/s |")
     print("|---|---|---|")
     for name, sec, mps in rows:

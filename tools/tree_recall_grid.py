@@ -16,10 +16,11 @@ The sf0.1 output is recorded in README.md ("Tree recall grid").
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_L1 = 4
 FANOUT = 4

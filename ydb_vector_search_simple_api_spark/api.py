@@ -30,14 +30,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .config import DEFAULT_SEARCH_TOP_SIZE, SearchConfig, sort_descending
+from .config import DEFAULT_SEARCH_TOP_SIZE, SearchConfig
 from .operators import bq as bq_mod
 from .operators import graphann as gann_mod
 from .operators import opq as opq_mod
 from .operators import sq as sq_mod
 from .operators import index as ivf_mod
 from .operators import tree as tree_mod
-from .operators.search import exact_search, filtered_doc_ids
+from .operators.search import _order_cols, exact_search, filtered_doc_ids
 from .sources.store import load_documents, load_embeddings
 
 
@@ -265,16 +265,11 @@ class VectorSearchEngine:
                     filter_ids=flt_ids,
                 )
             m = self.config.columns
-            docs = load_documents(self.spark, self.sf_dir).select(
-                F.col(m.id).alias("id"),
-                F.col(m.title).alias("title"),
-                F.col(m.vendor).alias("vendor"),
-                F.col(m.description).alias("description"),
-            )
-            direction = (
-                F.col("score").desc_nulls_last()
-                if sort_descending(self.config.strategy)
-                else F.col("score").asc_nulls_last()
+            docs = load_documents(self.spark, self.sf_dir).selectExpr(
+                f"`{m.id}` AS id",
+                f"`{m.title}` AS title",
+                f"`{m.vendor}` AS vendor",
+                f"`{m.description}` AS description",
             )
             # re-sort after the metadata join (k rows, trivial):
             # ranked order must not rely on the join preserving
@@ -288,7 +283,7 @@ class VectorSearchEngine:
             df = (
                 F.broadcast(topk).join(docs, "id", "inner")
                 .select("id", "title", "vendor", "description", "score")
-                .orderBy(direction, F.col("id").asc())
+                .orderBy(*_order_cols(self.config.strategy))
                 .limit(k)
             )
         else:

@@ -368,11 +368,7 @@ def ann_layout_curves(
             .withColumn(
                 "score",
                 F.round(
-                    score_expr(
-                        "CosineSimilarity",
-                        F.col("embedding"),
-                        F.col("query_vec"),
-                    ),
+                    score_expr("CosineSimilarity", "embedding", "query_vec"),
                     round_digits,
                 )
                 + F.lit(0.0),

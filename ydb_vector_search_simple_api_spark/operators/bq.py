@@ -486,7 +486,7 @@ def bq_knn_join(
     scored = (
         cand.join(vecs, id_col, "inner")
         .join(F.broadcast(qv), "query_id", "inner")
-        .withColumn("score", score_expr(strategy, F.col(vec_col), F.col("query_vec")))
+        .withColumn("score", score_expr(strategy, vec_col, "query_vec"))
     )
     if round_digits is not None:
         scored = scored.withColumn(
@@ -554,7 +554,7 @@ def bq_search_rerank(
     # vector table so the rerank reads only matching row groups
     joined = vecs.join(F.broadcast(cand.select(id_col)), id_col, "inner")
 
-    score = score_expr(strategy, F.col(vec_col), query_vec)
+    score = score_expr(strategy, vec_col, query_vec)
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     return (
@@ -654,7 +654,7 @@ def ivfbq_search(
         )
     )
     joined = vecs.join(F.broadcast(cand.select("id")), "id", "inner")
-    score = score_expr(strategy, F.col("embedding"), query_vec)
+    score = score_expr(strategy, "embedding", query_vec)
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     return (

@@ -59,7 +59,7 @@ def cluster_assign(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
     )
     dist = F.coalesce(
         F.round(
-            score_expr("CosineDistance", F.col("embedding"), F.col("seed")), 6
+            score_expr("CosineDistance", "embedding", "seed"), 6
         )
         + F.lit(0.0),
         F.lit(NULL_DIST),

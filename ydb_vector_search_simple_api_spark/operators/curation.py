@@ -1082,7 +1082,7 @@ def hard_negatives(
         .withColumn(
             "score",
             F.round(
-                score_expr(strategy, F.col("embedding"), F.col("query_vec")), ROUND
+                score_expr(strategy, "embedding", "query_vec"), ROUND
             )
             + F.lit(0.0),
         )
@@ -1908,16 +1908,16 @@ def semantic_decontaminate(
     bench = joined.filter(F.col("source") == "src0").select(
         F.col("vec_id").alias("bench_id"),
         F.col("embedding").alias("vb"),
-        l2_norm(F.col("embedding")).alias("nb"),
+        l2_norm("embedding").alias("nb"),
     )
     train = joined.filter(F.col("source") != "src0").select(
         F.col("vec_id").alias("doc_id"),
         F.col("embedding").alias("va"),
-        l2_norm(F.col("embedding")).alias("na"),
+        l2_norm("embedding").alias("na"),
     )
     denom = F.col("na") * F.col("nb")
     sim = F.when(denom == 0.0, F.lit(None).cast("double")).otherwise(
-        dot(F.col("va"), F.col("vb")) / denom
+        dot("va", "vb") / denom
     )
     sim = F.round(sim, ROUND) + F.lit(0.0)
     return (

@@ -877,16 +877,16 @@ def neardup_cosine_pairs(
     a = src.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
-        l2_norm(F.col(vec_col)).alias("na"),
+        l2_norm(vec_col).alias("na"),
     )
     b = src.select(
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("vb"),
-        l2_norm(F.col(vec_col)).alias("nb"),
+        l2_norm(vec_col).alias("nb"),
     )
     denom = F.col("na") * F.col("nb")
     sim = F.when(denom == 0.0, F.lit(None).cast("double")).otherwise(
-        dot(F.col("va"), F.col("vb")) / denom
+        dot("va", "vb") / denom
     )
     if round_digits is not None:
         sim = F.round(sim, round_digits) + F.lit(0.0)
@@ -914,17 +914,17 @@ def neardup_cosine_blocked(
         F.col(cluster_col).alias("c"),
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
-        l2_norm(F.col(vec_col)).alias("na"),
+        l2_norm(vec_col).alias("na"),
     )
     b = src.select(
         F.col(cluster_col).alias("c"),
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("vb"),
-        l2_norm(F.col(vec_col)).alias("nb"),
+        l2_norm(vec_col).alias("nb"),
     )
     denom = F.col("na") * F.col("nb")
     sim = F.when(denom == 0.0, F.lit(None).cast("double")).otherwise(
-        dot(F.col("va"), F.col("vb")) / denom
+        dot("va", "vb") / denom
     )
     if round_digits is not None:
         sim = F.round(sim, round_digits) + F.lit(0.0)
@@ -1014,7 +1014,7 @@ def neardup_cosine_multiprobe(
     vecs = src.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
+        l2_norm(vec_col).alias("nrm"),
     )
     va = vecs.select(
         F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("nrm").alias("nrm_a")
@@ -1024,7 +1024,7 @@ def neardup_cosine_multiprobe(
     )
     denom = F.col("nrm_a") * F.col("nrm_b")
     sim = F.when(denom == 0.0, F.lit(None).cast("double")).otherwise(
-        dot(F.col("v_a"), F.col("v_b")) / denom
+        dot("v_a", "v_b") / denom
     )
     if round_digits is not None:
         sim = F.round(sim, round_digits) + F.lit(0.0)
@@ -1147,7 +1147,7 @@ def srp_cosine_pairs(
     vecs = src.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
+        l2_norm(vec_col).alias("nrm"),
     )
     va = vecs.select(
         F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("nrm").alias("nrm_a")
@@ -1157,7 +1157,7 @@ def srp_cosine_pairs(
     )
     denom = F.col("nrm_a") * F.col("nrm_b")
     sim = F.when(denom == 0.0, F.lit(None).cast("double")).otherwise(
-        dot(F.col("v_a"), F.col("v_b")) / denom
+        dot("v_a", "v_b") / denom
     )
     if round_digits is not None:
         sim = F.round(sim, round_digits) + F.lit(0.0)

@@ -229,7 +229,7 @@ def expectations_report_embeddings(
         (
             # per-row ROUND(9) norm -> decimal sum (the float contract)
             F.round(
-                F.sum(F.round(l2_norm(emb), 9).cast("decimal(28,9)")).cast(
+                F.sum(F.round(l2_norm("embedding"), 9).cast("decimal(28,9)")).cast(
                     "double"
                 )
                 / n.cast("double"),

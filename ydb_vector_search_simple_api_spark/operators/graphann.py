@@ -223,7 +223,7 @@ def build_knn_graph(
     ]
     medoid = (
         src.withColumn(
-            "d", score_expr("EuclideanDistance", F.col("embedding"), mean_vec)
+            "d", score_expr("EuclideanDistance", "embedding", mean_vec)
         )
         .orderBy(F.col("d").asc_nulls_last(), F.col("id").asc())
         .select("id")
@@ -490,7 +490,7 @@ def _nn_descent_round(
     scored = (
         cand.join(va, "a")
         .join(vb, "b")
-        .withColumn("s", score_expr(strategy, F.col("ea"), F.col("eb")))
+        .withColumn("s", score_expr(strategy, "ea", "eb"))
     )
     direction = (
         F.col("s").desc_nulls_last()
@@ -866,7 +866,7 @@ def graphann_search(
             "id",
             "left_semi",
         )
-    score = score_expr(strategy, F.col("embedding"), list(query_vec))
+    score = score_expr(strategy, "embedding", list(query_vec))
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     return (
@@ -897,7 +897,7 @@ def _beam_search_distributed(
 
     adj = _adjacency_with_delta(spark, index)
     sgn = 1.0 if sort_descending(strategy) else -1.0
-    score = score_expr(strategy, F.col("embedding"), list(query_vec))
+    score = score_expr(strategy, "embedding", list(query_vec))
 
     def score_ids(id_list):
         rows = (

@@ -54,6 +54,7 @@ from pyspark.sql import types as T
 from . import tombstones
 from ..config import DEFAULT_K, DEFAULT_SEARCH_TOP_SIZE, sort_descending, validate_strategy
 from ..functions.distance import score_expr
+from .search import _order_cols
 
 _CENTROIDS_FILE = "_ivf_centroids.json"
 
@@ -97,15 +98,16 @@ def _read_clusters(spark: SparkSession, index, keep=None) -> DataFrame:
         os.path.join(index.path, *(f"{c}={v}" for c, v in zip(cols, key)))
         for key in keys
     ]
-    if len(cols) == 1:
-        cond = F.col(cols[0]).isin([key[0] for key in keys])
-    else:  # OR of conjunctions; Catalyst drops the literal seeds
-        cond = F.lit(False)
+    # one SQL string (one JVM call): an IN list, or a left-deep OR of
+    # conjunctions (explicit parentheses: the parser would balance a
+    # bare OR chain, and the optimizer then factors it differently)
+    cond = "false"
+    if len(cols) == 1 and keys:
+        cond = f"`{cols[0]}` IN ({', '.join(str(int(key[0])) for key in keys)})"
+    elif len(cols) > 1:
         for key in keys:
-            conj = F.lit(True)
-            for c, v in zip(cols, key):
-                conj = conj & (F.col(c) == v)
-            cond = cond | conj
+            conj = " AND ".join(f"`{c}` = {int(v)}" for c, v in zip(cols, key))
+            cond = f"({cond} OR ({conj}))"
     return reader.parquet(*[d for d in dirs if os.path.isdir(d)]).filter(cond)
 
 
@@ -257,18 +259,13 @@ def ivf_search(
         pruned = pruned.join(filter_ids, "id", "left_semi")
 
     # plain vector (not vector_lit) so cosine's query-norm literal fold applies
-    score = score_expr(strategy, F.col("embedding"), query_vec)
+    score = score_expr(strategy, "embedding", query_vec)
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
-    )
     return (
         pruned.withColumn("score", score)
         .select("id", "score")
-        .orderBy(direction, F.col("id").asc())
+        .orderBy(*_order_cols(strategy))
         .limit(k)
     )
 
@@ -361,9 +358,7 @@ def ivf_range_search(
     pruned = tombstones.apply_tombstones(
         spark, index.path, _read_clusters(spark, index, keep)
     )
-    from .search import _order_cols
-
-    score = score_expr("CosineSimilarity", F.col("embedding"), list(query_vec))
+    score = score_expr("CosineSimilarity", "embedding", list(query_vec))
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     return (
@@ -474,7 +469,7 @@ def ivf_knn_join_distributed(
     if filter_ids is not None:
         corpus = corpus.join(filter_ids, "id", "left_semi")
     scored = corpus.join(assignment, "cluster_id", "inner").withColumn(
-        "score", score_expr(strategy, F.col("embedding"), F.col("query_vec"))
+        "score", score_expr(strategy, "embedding", "query_vec")
     )
     if round_digits is not None:
         scored = scored.withColumn(
@@ -566,7 +561,7 @@ def ivf_knn_join(
     scored = corpus.join(
         F.broadcast(assignment), "cluster_id", "inner"
     ).withColumn(
-        "score", score_expr(strategy, F.col("embedding"), F.col("query_vec"))
+        "score", score_expr(strategy, "embedding", "query_vec")
     )
     score = F.col("score")
     if round_digits is not None:

@@ -42,10 +42,11 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import sort_descending, validate_strategy
+from ..config import validate_strategy
 from ..functions.distance import score_expr
 from .index import _read_clusters
 from .pq import PqIndex, build_pq_index, load_pq_index, pq_adc_topk
+from .search import _order_cols
 
 _META_FILE = "_opq_meta.json"
 
@@ -215,18 +216,13 @@ def opq_search_rerank(
         F.col(index.pq.vec_col).alias("embedding"),
     )
     hit = src.join(F.broadcast(ids), "id", "left_semi")
-    score = score_expr(strategy, F.col("embedding"), [float(v) for v in q])
+    score = score_expr(strategy, "embedding", [float(v) for v in q])
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
-    )
     return (
         hit.withColumn("score", score)
         .select("id", "score")
-        .orderBy(direction, F.col("id").asc())
+        .orderBy(*_order_cols(strategy))
         .limit(k)
     )
 

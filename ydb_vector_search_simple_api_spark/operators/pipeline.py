@@ -201,7 +201,7 @@ def pair_cosine_col():
     den = F.col("ni") * F.col("nx")
     return F.round(
         F.when(den == 0.0, F.lit(None).cast("double")).otherwise(
-            dot(F.col("vi"), F.col("vx")) / den
+            dot("vi", "vx") / den
         ),
         6,
     ) + F.lit(0.0)
@@ -522,14 +522,14 @@ def incremental_snapshot_loop(
             embs_all["vec_id"] == F.col("doc_id"),
         ).select(
             F.col("embedding").alias("vx"),
-            l2_norm(F.col("embedding")).alias("nx"),
+            l2_norm("embedding").alias("nx"),
         )
         in_vec = embs_all.join(
             incoming.select("doc_id"), embs_all["vec_id"] == F.col("doc_id")
         ).select(
             "doc_id",
             F.col("embedding").alias("vi"),
-            l2_norm(F.col("embedding")).alias("ni"),
+            l2_norm("embedding").alias("ni"),
         )
         cs = pair_cosine_col()
         if semantic_probes is None:

@@ -62,6 +62,7 @@ from . import tombstones
 from ..config import DEFAULT_K, sort_descending, validate_strategy
 from ..functions.distance import score_expr
 from .index import _read_clusters
+from .search import _order_cols
 from .tree import _lloyd
 
 _META_FILE = "_pq_meta.json"
@@ -490,18 +491,13 @@ def pq_search_rerank(
     )
     # shortlist is small (<= shortlist rows): broadcast the semi-join
     hit = src.join(F.broadcast(ids), "id", "left_semi")
-    score = score_expr(strategy, F.col("embedding"), list(query_vec))
+    score = score_expr(strategy, "embedding", list(query_vec))
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
-    )
     return (
         hit.withColumn("score", score)
         .select("id", "score")
-        .orderBy(direction, F.col("id").asc())
+        .orderBy(*_order_cols(strategy))
         .limit(k)
     )
 
@@ -708,17 +704,12 @@ def ivfpq_search(
         )
     )
     hit = full.join(F.broadcast(cand.select("id")), "id", "left_semi")
-    score = score_expr(strategy, F.col("embedding"), list(query_vec))
+    score = score_expr(strategy, "embedding", list(query_vec))
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
-    )
     return (
         hit.withColumn("score", score)
         .select("id", "score")
-        .orderBy(direction, F.col("id").asc())
+        .orderBy(*_order_cols(strategy))
         .limit(k)
     )

@@ -338,7 +338,7 @@ def hybrid_rrf_topk(
             "doc_id", F.col("rk").alias("r_bm")
         )
     score = F.round(
-        score_expr(strategy, F.col("embedding"), list(query_vec)), 9
+        score_expr(strategy, "embedding", list(query_vec)), 9
     )
     direction = (
         F.col("vscore").desc_nulls_last()
@@ -410,7 +410,7 @@ def mmr_rerank(
     if not 0.0 <= lam <= 1.0:
         raise ValueError("lam must be in [0, 1]")
     score = F.round(
-        score_expr(strategy, F.col("embedding"), list(query_vec)), 6
+        score_expr(strategy, "embedding", list(query_vec)), 6
     ) + F.lit(0.0)
     direction = (
         F.col("rel").desc_nulls_last()
@@ -507,7 +507,7 @@ def rag_context(
 
     validate_strategy(strategy)
     score = F.round(
-        score_expr(strategy, F.col("embedding"), list(query_vec)), 6
+        score_expr(strategy, "embedding", list(query_vec)), 6
     ) + F.lit(0.0)
     direction = (
         F.col("score").desc_nulls_last()

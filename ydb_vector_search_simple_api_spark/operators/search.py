@@ -53,11 +53,8 @@ def _order_cols(strategy: str, id_col: str = "id") -> list[Column]:
     surface mismatched-dimension rows FIRST. Returning garbage rows
     ahead of real neighbors is an artifact, not a contract, so this
     engine keeps nulls-last everywhere (see README parity notes)."""
-    score = F.col("score")
-    direction = (
-        score.desc_nulls_last() if sort_descending(strategy) else score.asc_nulls_last()
-    )
-    return [direction, F.col(id_col).asc()]
+    direction = F.desc_nulls_last if sort_descending(strategy) else F.asc_nulls_last
+    return [direction("score"), F.asc(id_col)]
 
 
 def _validate_filter(filter: Mapping[str, str] | None) -> dict[str, str]:
@@ -149,8 +146,8 @@ def exact_search(
 
     # pass the PLAIN vector so cosine folds the query norm to a literal
     # driver-side (Catalyst won't constant-fold a HOF over a literal
-    # array, so handing it a Column would re-fold the norm per row)
-    score = score_expr(strategy, F.col("embedding"), query_vec)
+    # array, so a query column would re-fold the norm per row)
+    score = score_expr(strategy, "embedding", query_vec)
     if round_digits is not None:
         # + 0.0 canonicalizes IEEE -0.0 to 0.0 (oracle bit-parity)
         score = F.round(score, round_digits) + F.lit(0.0)
@@ -201,7 +198,7 @@ def knn_join(
     c = corpus_df.select(
         F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("embedding")
     )
-    score = score_expr(strategy, F.col("embedding"), F.col("query_vec"))
+    score = score_expr(strategy, "embedding", "query_vec")
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     scored = c.crossJoin(F.broadcast(q)).withColumn("score", score)
@@ -376,7 +373,7 @@ def range_search(
     embs = load_embeddings(spark, sf_dir).select(
         F.col("vec_id").alias("id"), F.col(m.embedding).alias("embedding")
     )
-    score = score_expr(strategy, F.col("embedding"), list(query_vec))
+    score = score_expr(strategy, "embedding", list(query_vec))
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     scored = embs.withColumn("score", score).select("id", "score")
@@ -434,17 +431,15 @@ def prefix_dim_search_rerank(
     n_short = None if shortlist is None else int(shortlist)
     if n_short is not None:
         q_pre = q_full[:prefix_dims]
-        pre_score = score_expr(
-            strategy, F.slice(F.col("embedding"), 1, prefix_dims), q_pre
-        )
         cand = (
-            vecs.select("id", pre_score.alias("score"))
+            vecs.select("id", F.slice("embedding", 1, prefix_dims).alias("prefix"))
+            .select("id", score_expr(strategy, "prefix", q_pre).alias("score"))
             .orderBy(*_order_cols(strategy))
             .limit(n_short)
             .select("id")
         )
         vecs = vecs.join(F.broadcast(cand), "id", "left_semi")
-    score = score_expr(strategy, F.col("embedding"), q_full)
+    score = score_expr(strategy, "embedding", q_full)
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     return (

@@ -58,7 +58,14 @@ from pyspark.sql import functions as F
 
 from . import tombstones
 from ..config import validate_strategy
-from ..functions.distance import score_expr
+from ..functions.distance import (
+    _py_l2_norm,
+    double_sql,
+    fold_sql,
+    operand_sql,
+    score_expr,
+    score_sql,
+)
 from .index import _read_clusters
 from .search import _order_cols
 
@@ -187,40 +194,30 @@ def _approx_score(strategy: str, q: Sequence[float]) -> Column:
     inner product is the integer dot times one per-row scalar; the
     distance metrics fold ``c·s/127 − q_i`` in a single zip_with
     pass. All pure codegen, one array traversal each."""
-    from ..functions.distance import _py_l2_norm, dot
-
-    qlist = [float(x) for x in q]
-    codes = F.col("codes")
-    scale = F.col("qscale") / F.lit(127.0)
+    dot = score_sql("InnerProductSimilarity", "codes", q)
+    scale = "(`qscale` / 127.0D)"
+    qn = _py_l2_norm(q)
     if strategy in ("CosineSimilarity", "CosineDistance"):
         # scale-invariant (the per-vector s/127 cancels), and the row
         # norm is the stored cnorm — ONE dot fold per row; try_divide
         # nulls zero vectors like the library cosine
-        cos = F.try_divide(
-            dot(codes, qlist), F.col("cnorm") * F.lit(_py_l2_norm(qlist))
-        )
-        return F.lit(1.0) - cos if strategy == "CosineDistance" else cos
-    if strategy == "InnerProductSimilarity":
-        return dot(codes, qlist) * scale
-    if strategy == "EuclideanDistance":
+        cos = f"try_divide({dot}, `cnorm` * {double_sql(qn)})"
+        sql = f"1.0D - {cos}" if strategy == "CosineDistance" else cos
+    elif strategy == "InnerProductSimilarity":
+        sql = f"{dot} * {scale}"
+    elif strategy == "EuclideanDistance":
         # ||v - q||² = ||v||² − 2⟨v,q⟩ + ||q||² with v = codes·s/127:
         # one dot fold + stored norms (max(0,·) absorbs rounding)
-        qn = _py_l2_norm(qlist)
-        vnorm = F.col("cnorm") * scale
-        return F.sqrt(
-            F.greatest(
-                vnorm * vnorm
-                - F.lit(2.0) * scale * dot(codes, qlist)
-                + F.lit(qn * qn),
-                F.lit(0.0),
-            )
+        vnorm = f"(`cnorm` * {scale})"
+        sql = (
+            f"sqrt(greatest({vnorm} * {vnorm} - 2.0D * {scale} * {dot}"
+            f" + {double_sql(qn * qn)}, 0.0D))"
         )
-    # ManhattanDistance: no norm identity — a single zip_with fold
-    qcol = F.lit(qlist).cast("array<double>")
-    diffs = F.zip_with(
-        codes, qcol, lambda c, qx: c.cast("double") * scale - qx
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + F.abs(x))
+    else:  # ManhattanDistance: no norm identity — a single zip_with fold
+        sql = fold_sql(
+            "`codes`", operand_sql(q), f"abs(CAST(x AS DOUBLE) * {scale} - y)"
+        )
+    return F.expr(sql)
 
 
 def sq_search_rerank(
@@ -267,7 +264,7 @@ def sq_search_rerank(
     )
     vecs = src.select(F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col))
     joined = vecs.join(F.broadcast(cand.select(id_col)), id_col, "inner")
-    score = score_expr(strategy, F.col(vec_col), list(query_vec))
+    score = score_expr(strategy, vec_col, list(query_vec))
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     return (
@@ -457,7 +454,7 @@ def ivfsq_search(
         )
     )
     joined = vecs.join(F.broadcast(cand.select("id")), "id", "inner")
-    score = score_expr(strategy, F.col("embedding"), list(query_vec))
+    score = score_expr(strategy, "embedding", list(query_vec))
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     return (

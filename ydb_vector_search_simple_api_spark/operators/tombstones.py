@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _DIR = "_tombstones"
+_SCHEMA = "id long"
 
 
 def tombstone_path(index_path: str) -> str:
@@ -40,19 +41,21 @@ def has_tombstones(index_path: str) -> bool:
 
 
 def load_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
-    """The distinct tombstoned id set, or None when there is none."""
+    """The distinct tombstoned id set, or None when there is none. The
+    set's schema is fixed, so reading it launches no footer-inference
+    job while a search plan is built."""
     if not has_tombstones(index_path):
         return None
-    return spark.read.parquet(tombstone_path(index_path)).select("id").distinct()
+    return spark.read.schema(_SCHEMA).parquet(tombstone_path(index_path)).distinct()
 
 
 def delete_ids(spark: SparkSession, index_path: str, ids: DataFrame | list) -> int:
     """Append ids to the tombstone set. ``ids``: a 1-column DataFrame
     (any column name) or a plain list. Returns the number appended."""
     if isinstance(ids, DataFrame):
-        df = ids.select(F.col(ids.columns[0]).alias("id"))
+        df = ids.select(F.col(ids.columns[0]).cast("long").alias("id"))
     else:
-        df = spark.createDataFrame([(int(i),) for i in ids], "id long")
+        df = spark.createDataFrame([(int(i),) for i in ids], _SCHEMA)
     df = df.distinct()
     n = df.count()
     if n:
@@ -68,9 +71,7 @@ def apply_tombstones(
     t = load_tombstones(spark, index_path)
     if t is None:
         return df
-    return df.join(
-        F.broadcast(t.select(F.col("id").alias(id_col))), id_col, "left_anti"
-    )
+    return df.join(F.broadcast(t.withColumnRenamed("id", id_col)), id_col, "left_anti")
 
 
 def resurrect_ids(spark: SparkSession, index_path: str, ids_df: DataFrame, id_col: str) -> None:

@@ -63,6 +63,7 @@ from . import tombstones
 from .index import _read_clusters, _stored_schema
 from ..config import DEFAULT_K, sort_descending, validate_strategy
 from ..functions.distance import score_expr
+from .search import _order_cols
 
 _META_FILE = "_kmeans_tree.json"
 
@@ -353,18 +354,13 @@ def tree_search(
     if filter_ids is not None:
         pruned = pruned.join(filter_ids, "id", "left_semi")
 
-    score = score_expr(strategy, F.col("embedding"), query_vec)
+    score = score_expr(strategy, "embedding", query_vec)
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
-    )
     return (
         pruned.withColumn("score", score)
         .select("id", "score")
-        .orderBy(direction, F.col("id").asc())
+        .orderBy(*_order_cols(strategy))
         .limit(k)
     )
 
@@ -572,7 +568,7 @@ def tree_knn_join_distributed(
     if filter_ids is not None:
         corpus = corpus.join(filter_ids, "id", "left_semi")
     scored = corpus.join(assignment, ["l1", "l2"], "inner").withColumn(
-        "score", score_expr(strategy, F.col("embedding"), F.col("query_vec"))
+        "score", score_expr(strategy, "embedding", "query_vec")
     )
     if round_digits is not None:
         scored = scored.withColumn(

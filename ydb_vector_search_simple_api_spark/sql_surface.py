@@ -54,23 +54,8 @@ from .config import (
     sort_descending,
     validate_strategy,
 )
+from .functions.distance import score_sql
 from .sources.store import load_store_df
-
-
-def _dot_sql(a: str, b: str) -> str:
-    """Sum_i a[i]*b[i], double-promoted, left-to-right fold — the SQL
-    text twin of ``functions/distance.py:dot`` (same op sequence, so
-    scores agree bit-for-bit with the library path and the oracles).
-    ``zip_with`` pads a shorter array with NULL, poisoning the fold to
-    NULL on dimension mismatch — the YDB ``Knn::*`` behavior."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _norm_sql(a: str) -> str:
-    return f"sqrt({_dot_sql(a, a)})"
 
 
 #: strategy name (reference env.example:15-17) -> SQL function name.
@@ -83,44 +68,20 @@ KNN_FUNCTION_NAMES: dict[str, str] = {
 }
 
 
-def _knn_function_bodies() -> dict[str, str]:
-    """SQL expression bodies for the 5 ``Knn::`` strategies
-    (reference ``app.py:222``; semantics of ``functions/distance.py``).
-
-    ``try_divide`` is the zero-norm guard for cosine: NULL on a
-    zero-norm vector instead of a division error, identical to
-    ``distance.py:cosine_similarity``."""
-    cos = f"try_divide({_dot_sql('a', 'b')}, {_norm_sql('a')} * {_norm_sql('b')})"
-    eucl = (
-        "sqrt(aggregate(zip_with(a, b, (x, y) -> "
-        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        "0.0D, (acc, v) -> acc + v))"
-    )
-    manh = (
-        "aggregate(zip_with(a, b, (x, y) -> "
-        "abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        "0.0D, (acc, v) -> acc + v)"
-    )
-    return {
-        "knn_cosine_similarity": cos,
-        "knn_inner_product_similarity": _dot_sql("a", "b"),
-        "knn_cosine_distance": f"1.0D - ({cos})",
-        "knn_euclidean_distance": eucl,
-        "knn_manhattan_distance": manh,
-    }
-
-
 def register_knn_functions(spark: SparkSession) -> None:
     """Register the ``knn_*`` SQL function namespace (idempotent).
 
     Each is a Spark SQL scalar UDF over two ``ARRAY<FLOAT>`` args
-    returning DOUBLE; Catalyst inlines the body, so calls stay inside
+    returning DOUBLE, whose body is the library path's own score text
+    (``functions/distance.py:score_sql``), so both surfaces score with
+    one formulation. Catalyst inlines the body, so calls stay inside
     whole-stage codegen (verified by ``tests/test_sql_surface.py``'s
     plan assertions)."""
-    for name, body in _knn_function_bodies().items():
+    for strategy, name in KNN_FUNCTION_NAMES.items():
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}"
-            f"(a ARRAY<FLOAT>, b ARRAY<FLOAT>) RETURNS DOUBLE RETURN {body}"
+            f"(a ARRAY<FLOAT>, b ARRAY<FLOAT>) RETURNS DOUBLE"
+            f" RETURN {score_sql(strategy, 'a', 'b')}"
         )
 
 

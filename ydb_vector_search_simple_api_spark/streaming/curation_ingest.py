@@ -486,7 +486,7 @@ def stream_snapshot_loop(
             )
             .select(
                 F.col("embedding").alias("vx"),
-                l2_norm(F.col("embedding")).alias("nx"),
+                l2_norm("embedding").alias("nx"),
             )
             .localCheckpoint(eager=True)
         )
@@ -498,7 +498,7 @@ def stream_snapshot_loop(
             .select(
                 "doc_id",
                 F.col("embedding").alias("vi"),
-                l2_norm(F.col("embedding")).alias("ni"),
+                l2_norm("embedding").alias("ni"),
             )
             .localCheckpoint(eager=True)
         )
