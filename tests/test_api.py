@@ -762,3 +762,29 @@ def test_ivf_search_df_round_trips_flat_in_dim(spark, tmp_path):
         )
     assert counts[8] == counts[64] == counts[512], counts
     assert counts[64] <= 0.4 * COLUMN_API_COMMANDS_DIM64, counts
+
+
+#: py4j commands of one warm exact ``search_df`` (k=10, no filter) over
+#: SF_SMALL when its projections were built from ``F.col(...).alias``
+COLUMN_API_EXACT_COMMANDS = 242
+
+
+def test_exact_search_df_projects_in_sql_text(spark, engine, qvec):
+    """The exact /search plan projects the embeddings and documents in
+    SQL text: a warm ``search_df`` sends well under the py4j commands
+    of the Column API form, and its rows are the brute-force top-k."""
+    import numpy as np
+
+    from conftest import py4j_commands
+
+    engine.search_df(qvec, k=10)
+    df, n = py4j_commands(spark, lambda: engine.search_df(qvec, k=10))
+    assert n <= 0.5 * COLUMN_API_EXACT_COMMANDS, n
+    rows = load_embeddings(spark, SF_SMALL).collect()
+    E = np.array([r.embedding for r in rows], dtype=np.float64)
+    q = np.asarray(qvec)
+    cos = E @ q / (np.linalg.norm(E, axis=1) * np.linalg.norm(q))
+    want = sorted(zip(-cos, [r.vec_id for r in rows]))[:10]
+    got = df.collect()
+    assert [r.id for r in got] == [i for _, i in want]
+    assert [r.score for r in got] == pytest.approx([-c for c, _ in want], abs=1e-12)

@@ -203,10 +203,8 @@ class VectorSearchEngine:
                 # int8, rotated-ADC OPQ) the search width IS the
                 # rerank shortlist (>= corpus => exact); candidates
                 # rerank against the full-precision store vectors
-                from .sources.store import load_embeddings
-
-                src = load_embeddings(self.spark, self.sf_dir).select(
-                    F.col("vec_id").alias("id"), "embedding"
+                src = load_embeddings(self.spark, self.sf_dir).selectExpr(
+                    "vec_id AS id", "embedding"
                 )
                 rerank = (
                     sq_mod.sq_search_rerank
@@ -229,10 +227,8 @@ class VectorSearchEngine:
                 # graph shape: the width knob is the BEAM (>= corpus
                 # => exact, the shared O3 contract); candidates
                 # re-rank exactly against the store vectors
-                from .sources.store import load_embeddings
-
-                src = load_embeddings(self.spark, self.sf_dir).select(
-                    F.col("vec_id").alias("id"), "embedding"
+                src = load_embeddings(self.spark, self.sf_dir).selectExpr(
+                    "vec_id AS id", "embedding"
                 )
                 topk = gann_mod.graphann_search(
                     self.spark,
@@ -264,13 +260,7 @@ class VectorSearchEngine:
                     search_top_size=width,
                     filter_ids=flt_ids,
                 )
-            m = self.config.columns
-            docs = load_documents(self.spark, self.sf_dir).selectExpr(
-                f"`{m.id}` AS id",
-                f"`{m.title}` AS title",
-                f"`{m.vendor}` AS vendor",
-                f"`{m.description}` AS description",
-            )
+            docs = self._documents("id")
             # re-sort after the metadata join (k rows, trivial):
             # ranked order must not rely on the join preserving
             # stream-side order — mirrors exact_search. Broadcast the
@@ -340,25 +330,15 @@ class VectorSearchEngine:
             strategy=self.config.strategy,
             lexical_index=self.lexical_index,
         )
-        m = self.config.columns
-        docs = load_documents(self.spark, self.sf_dir).select(
-            F.col(m.id).alias("doc_id"),
-            F.col(m.title).alias("title"),
-            F.col(m.vendor).alias("vendor"),
-            F.col(m.description).alias("description"),
-        )
+        docs = self._documents("doc_id")
         # broadcast the k-row fused list, stream the corpus metadata
         # (same build-side contract as search_df)
         return (
             F.broadcast(fused).join(docs, "doc_id", "inner")
-            .select(
-                F.col("doc_id").alias("id"),
-                "title",
-                "vendor",
-                "description",
-                F.col("rrf").alias("score"),
+            .selectExpr(
+                "doc_id AS id", "title", "vendor", "description", "rrf AS score"
             )
-            .orderBy(F.col("score").desc(), F.col("id").asc())
+            .orderBy(F.desc("score"), F.asc("id"))
         )
 
     def search_batch(
@@ -400,49 +380,45 @@ class VectorSearchEngine:
         search_top_size: int | None = None,
     ):
         """The un-collected (query_id, id, title, vendor, description,
-        score, rank) DataFrame behind :meth:`search_batch`. IVF-indexed
-        engines route through the pruned routed-blocked join; otherwise
-        the exact ranked join runs. Metadata joins in AFTER the per-
+        score, rank) DataFrame behind :meth:`search_batch`. IVF- and
+        tree-indexed engines hand the batch, as one matrix, to the
+        pruned routed-blocked join; otherwise the exact ranked join
+        runs over a query DataFrame. Metadata joins in AFTER the per-
         query top-k with the (n_queries x k)-row side broadcast — the
         same build-side contract as the single-query path."""
+        from pyspark.sql import types as T
+
         from .operators.search import knn_join
 
-        queries_df = self.spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(embeddings)],
-            "query_id bigint, query_vec array<double>",
-        )
-        corpus = load_embeddings(self.spark, self.sf_dir).select(
-            F.col("vec_id").alias("id"), "embedding"
-        )
-        if (
-            self.config.index_enabled
-            and self.index is not None
-            and isinstance(self.index, ivf_mod.IvfIndex)
-        ):
-            width = search_top_size or self.config.search_top_size
-            res = ivf_mod.ivf_knn_join_routed_blocked(
-                self.spark,
-                self.index,
-                queries_df,
-                k=k,
-                strategy=self.config.strategy,
-                search_top_size=width,
+        index = self.index if self.config.index_enabled else None
+        if isinstance(index, (ivf_mod.IvfIndex, tree_mod.KmeansTreeIndex)):
+            # the batch stays on the driver: the routed-blocked join
+            # takes the vectors as one matrix, and a vector of another
+            # dimension than the index's gets no rows
+            pos, Q = ivf_mod.query_matrix(embeddings, index.dim)
+            join = (
+                ivf_mod.ivf_knn_join_routed_blocked_arrays
+                if isinstance(index, ivf_mod.IvfIndex)
+                else tree_mod.tree_knn_join_routed_blocked_arrays
             )
-        elif (
-            self.config.index_enabled
-            and self.index is not None
-            and isinstance(self.index, tree_mod.KmeansTreeIndex)
-        ):
-            width = search_top_size or self.config.search_top_size
-            res = tree_mod.tree_knn_join_routed_blocked(
+            res = join(
                 self.spark,
-                self.index,
-                queries_df,
+                index,
+                pos,
+                Q,
                 k=k,
                 strategy=self.config.strategy,
-                search_top_size=width,
+                search_top_size=search_top_size or self.config.search_top_size,
+                query_id_type=T.LongType(),
             )
         else:
+            queries_df = self.spark.createDataFrame(
+                [(i, [float(x) for x in v]) for i, v in enumerate(embeddings)],
+                "query_id bigint, query_vec array<double>",
+            )
+            corpus = load_embeddings(self.spark, self.sf_dir).selectExpr(
+                "vec_id AS id", "embedding"
+            )
             res = knn_join(
                 self.spark,
                 queries_df,
@@ -450,19 +426,19 @@ class VectorSearchEngine:
                 k=k,
                 strategy=self.config.strategy,
             )
-        m = self.config.columns
-        docs = load_documents(self.spark, self.sf_dir).select(
-            F.col(m.id).alias("id"),
-            F.col(m.title).alias("title"),
-            F.col(m.vendor).alias("vendor"),
-            F.col(m.description).alias("description"),
+        return F.broadcast(res).join(self._documents("id"), "id", "inner").select(
+            "query_id", "id", "title", "vendor", "description", "score", "rank"
         )
-        return (
-            F.broadcast(res).join(docs, "id", "inner")
-            .select(
-                "query_id", "id", "title", "vendor", "description",
-                "score", "rank",
-            )
+
+    def _documents(self, id_name: str):
+        """The documents' metadata columns under the reference's names,
+        projected in one SQL call; the id column is named ``id_name``."""
+        m = self.config.columns
+        return load_documents(self.spark, self.sf_dir).selectExpr(
+            f"`{m.id}` AS `{id_name}`",
+            f"`{m.title}` AS title",
+            f"`{m.vendor}` AS vendor",
+            f"`{m.description}` AS description",
         )
 
     def healthy(self) -> bool:

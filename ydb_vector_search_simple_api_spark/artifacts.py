@@ -34,7 +34,8 @@ from pyspark.sql import SparkSession
 
 _LOCKS: dict[object, threading.Lock] = {}
 _LOCKS_GUARD = threading.Lock()
-_MEMO: dict[tuple[str, str], Any] = {}
+#: (kind, sf_dir, params) -> (full key, value): one live entry per slot
+_MEMO: dict[tuple[str, str, str], tuple[tuple[str, str], Any]] = {}
 
 
 @functools.cache
@@ -123,10 +124,18 @@ def session_memo(
 ) -> Any:
     """``fn()``, computed once per Spark application and key (the
     :func:`persisted` key, held in memory). The application id keeps a
-    restarted session from seeing a dead one's checkpoints."""
+    restarted session from seeing a dead one's checkpoints.
+
+    One entry is kept per (``kind``, ``sf_dir``, ``params``): a key
+    that differs only in the input listing, the builder source or the
+    application replaces the entry it supersedes, so a directory
+    rewritten between calls does not pile up stale values."""
     key = (spark.sparkContext.applicationId, _key(kind, sf_dir, params, fn))
-    if key not in _MEMO:
-        with _lock(key):
-            if key not in _MEMO:
-                _MEMO[key] = fn()
-    return _MEMO[key]
+    slot = (kind, sf_dir, json.dumps(params, sort_keys=True, default=str))
+    hit = _MEMO.get(slot)
+    if hit is None or hit[0] != key:
+        with _lock(slot):
+            hit = _MEMO.get(slot)
+            if hit is None or hit[0] != key:
+                hit = _MEMO[slot] = (key, fn())
+    return hit[1]

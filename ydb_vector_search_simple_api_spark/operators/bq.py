@@ -538,7 +538,7 @@ def bq_search_rerank(
     )
     if filter_ids is not None:
         bits = bits.join(
-            filter_ids.select(F.col(filter_ids.columns[0]).alias(id_col)),
+            filter_ids.selectExpr(f"`{filter_ids.columns[0]}` AS `{id_col}`"),
             id_col,
             "left_semi",
         )
@@ -546,10 +546,10 @@ def bq_search_rerank(
     cand = (
         bits.withColumn("hamming", hamming_expr("bits", qw))
         .select(id_col, "hamming")
-        .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
+        .orderBy(F.asc("hamming"), F.asc(id_col))
         .limit(int(n_short))
     )
-    vecs = src.select(F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col))
+    vecs = src.selectExpr(f"`{id_col}`", f"`{vec_col}`")
     # shortlist rows are few by construction: broadcast them into the
     # vector table so the rerank reads only matching row groups
     joined = vecs.join(F.broadcast(cand.select(id_col)), id_col, "inner")
@@ -559,7 +559,7 @@ def bq_search_rerank(
         score = F.round(score, round_digits) + F.lit(0.0)
     return (
         joined.withColumn("score", score)
-        .select(F.col(id_col).alias("id"), "score")
+        .selectExpr(f"`{id_col}` AS id", "score")
         .orderBy(*_order_cols(strategy))
         .limit(k)
     )

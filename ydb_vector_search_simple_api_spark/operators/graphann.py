@@ -853,16 +853,17 @@ def graphann_search(
             "— the graph is not connected; rebuild the index"
         )
 
-    vecs = src.select(
-        F.col(index.id_col).alias("id"), F.col(index.vec_col).alias("embedding")
+    vecs = src.selectExpr(
+        f"`{index.id_col}` AS id", f"`{index.vec_col}` AS embedding"
     )
     if beam is not None:
         # beam-sized id list: rides the plan as an IN literal, same
         # bounded-driver contract as IVF's pruned cluster list
-        vecs = vecs.filter(F.col("id").isin([int(i) for i in cand_ids]))
+        ids = ", ".join(str(int(i)) for i in cand_ids)
+        vecs = vecs.filter(f"id IN ({ids})" if ids else "false")
     if filter_ids is not None:
         vecs = vecs.join(
-            filter_ids.select(F.col(filter_ids.columns[0]).alias("id")),
+            filter_ids.selectExpr(f"`{filter_ids.columns[0]}` AS id"),
             "id",
             "left_semi",
         )

@@ -18,18 +18,17 @@ Spark-native design (no custom Catalyst rule needed):
   cluster becomes a *physical partition directory*.
 * **Search**: the driver ranks the (tiny) centroid table against the
   query vector in NumPy, keeps the ``search_top_size`` nearest
-  cluster ids, and reads ONLY those ``cluster_id=<c>`` directories,
-  named explicitly, with the layout schema stored beside the
-  centroids (:func:`_read_clusters`). Scanned bytes shrink by
-  ~``search_top_size / n_clusters``, and planning launches no Spark
-  job: a known schema skips the footer-inference job, and a handful
-  of paths (under Spark's 32-path parallel-discovery threshold) is
-  listed in-process, where reading the table root made Spark list
-  every cluster directory in a job. The listing runs per request, so
-  directories that ``ivf_upsert`` creates are seen at once. The
-  ``cluster_id IN (...)`` list also stays on the scan as its
-  PartitionFilters. Candidates are re-ranked exactly (same
-  TakeOrderedAndProject shape as exact_search).
+  cluster ids, and prunes the layout to those ``cluster_id=<c>``
+  directories with a ``cluster_id IN (...)`` filter, which the plan
+  shows as PartitionFilters (:func:`_read_clusters`). Scanned bytes
+  shrink by ~``search_top_size / n_clusters``. The whole layout is
+  listed once per index generation: its reader is a session memo
+  keyed by the layout's file listing, so the files an ``ivf_upsert``
+  adds give a new reader, and a search plan over a known generation
+  launches no Spark job (no partition-discovery job past Spark's
+  32-path threshold, no footer-inference job: the layout schema is
+  stored beside the centroids). Candidates are re-ranked exactly
+  (same TakeOrderedAndProject shape as exact_search).
 * Recall contract (SURVEY.md §4.3): recall is monotone in
   ``search_top_size`` and the search is EXACT when
   ``search_top_size >= n_clusters`` (all partitions read).
@@ -52,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import tombstones
+from ..artifacts import session_memo
 from ..config import DEFAULT_K, DEFAULT_SEARCH_TOP_SIZE, sort_descending, validate_strategy
 from ..functions.distance import score_expr
 from .search import _order_cols
@@ -71,6 +71,10 @@ class IvfIndex:
 
     partition_cols: ClassVar[tuple[str, ...]] = ("cluster_id",)
 
+    @property
+    def dim(self) -> int:
+        return self.centroids.shape[1]
+
 
 def _infer_schema(spark: SparkSession, path: str) -> T.StructType:
     """Spark's own schema inference for a layout: a job that lists the
@@ -78,26 +82,37 @@ def _infer_schema(spark: SparkSession, path: str) -> T.StructType:
     return spark.read.parquet(path).schema
 
 
+def _layout(spark: SparkSession, index) -> DataFrame:
+    """The whole partitioned layout of ``index``, one reader per index
+    generation. Creating a reader lists every partition directory (a
+    Spark job past 32 of them); the reader keeps that listing, so it is
+    memoized under the layout's file listing, and any file an upsert,
+    delete or rewrite adds or changes gives a new reader."""
+    schema = index.schema
+
+    def read() -> DataFrame:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.option("basePath", index.path).parquet(index.path)
+
+    params = {"schema": None if schema is None else schema.json()}
+    return session_memo(spark, "layout_reader", index.path, params, read)
+
+
 def _read_clusters(spark: SparkSession, index, keep=None) -> DataFrame:
     """The one reader of a partitioned index layout (the flat IVF's
     ``cluster_id=<c>`` or the tree's ``l1=<a>/l2=<b>`` directories).
 
     ``keep=None`` reads the whole table; otherwise only the kept
-    clusters' directories (ints, or tuples over ``partition_cols``)
-    that exist on disk, so an empty ``keep`` or a never-written cluster
-    reads no rows. The kept keys also filter the scan, where the plan
-    shows them as PartitionFilters. ``basePath`` keeps the partition
-    columns, and the stored schema replaces Spark's inference job."""
-    schema = index.schema if index.schema is not None else _infer_schema(spark, index.path)
-    reader = spark.read.schema(schema).option("basePath", index.path)
+    clusters (ints, or tuples over ``partition_cols``), so an empty
+    ``keep`` or a never-written cluster reads no rows. The kept keys
+    filter the generation's :func:`_layout`; the plan shows them as
+    PartitionFilters, pruned at planning time against the reader's
+    listing, so planning launches no Spark job."""
+    whole = _layout(spark, index)
     if keep is None:
-        return reader.parquet(index.path)
+        return whole
     cols = index.partition_cols
     keys = [k if isinstance(k, tuple) else (k,) for k in dict.fromkeys(keep)]
-    dirs = [
-        os.path.join(index.path, *(f"{c}={v}" for c, v in zip(cols, key)))
-        for key in keys
-    ]
     # one SQL string (one JVM call): an IN list, or a left-deep OR of
     # conjunctions (explicit parentheses: the parser would balance a
     # bare OR chain, and the optimizer then factors it differently)
@@ -108,14 +123,14 @@ def _read_clusters(spark: SparkSession, index, keep=None) -> DataFrame:
         for key in keys:
             conj = " AND ".join(f"`{c}` = {int(v)}" for c, v in zip(cols, key))
             cond = f"({cond} OR ({conj}))"
-    return reader.parquet(*[d for d in dirs if os.path.isdir(d)]).filter(cond)
+    return whole.filter(cond)
 
 
 def _stored_schema(meta: dict, path: str) -> T.StructType | None:
     """The layout schema from an index's metadata file. An index
     written without one is inferred once through the active (or
-    default) session; with no session, None (the reader then infers
-    per call)."""
+    default) session; with no session, None (the layout reader then
+    infers it once per generation)."""
     from pyspark.errors import PySparkRuntimeError
 
     if "schema" in meta:
@@ -369,6 +384,34 @@ def ivf_range_search(
     )
 
 
+def _rank_per_query(
+    scored: DataFrame, strategy: str, k: int, round_digits: int | None = None
+) -> DataFrame:
+    """(query_id, id, score, rank): each query's top-``k`` rows of a
+    scored (query_id, id, score) join, ranked in the strategy's
+    direction with NULL scores last and an id tie-break — the one
+    window of every batch join. ``round_digits`` rounds the scores
+    first (``+ 0.0`` turns IEEE ``-0.0`` into ``0.0``)."""
+    from pyspark.sql import Window
+
+    if round_digits is not None:
+        scored = scored.withColumn(
+            "score", F.round(F.col("score"), round_digits) + F.lit(0.0)
+        )
+    direction = (
+        F.col("score").desc_nulls_last()
+        if sort_descending(strategy)
+        else F.col("score").asc_nulls_last()
+    )
+    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
+    return (
+        scored.select("query_id", "id", "score")
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "id", "score", "rank")
+    )
+
+
 def ivf_knn_join_distributed(
     spark: SparkSession,
     index: IvfIndex,
@@ -416,8 +459,6 @@ def ivf_knn_join_distributed(
     :func:`ivf_knn_join`.
     """
     import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     validate_strategy(strategy)
     if search_top_size < 1:
@@ -471,22 +512,7 @@ def ivf_knn_join_distributed(
     scored = corpus.join(assignment, "cluster_id", "inner").withColumn(
         "score", score_expr(strategy, "embedding", "query_vec")
     )
-    if round_digits is not None:
-        scored = scored.withColumn(
-            "score", F.round(F.col("score"), round_digits) + F.lit(0.0)
-        )
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
-    )
-    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
-    return (
-        scored.select("query_id", "id", "score")
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
+    return _rank_per_query(scored, strategy, k, round_digits)
 
 
 def ivf_knn_join(
@@ -518,9 +544,6 @@ def ivf_knn_join(
     Output: (query_id, id, score, rank); rank in the strategy's
     direction, deterministic id tie-break.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
     validate_strategy(strategy)
     if search_top_size < 1:
         raise ValueError("search_top_size must be a positive integer")
@@ -563,23 +586,7 @@ def ivf_knn_join(
     ).withColumn(
         "score", score_expr(strategy, "embedding", "query_vec")
     )
-    score = F.col("score")
-    if round_digits is not None:
-        scored = scored.withColumn(
-            "score", F.round(score, round_digits) + F.lit(0.0)
-        )
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
-    )
-    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
-    return (
-        scored.select("query_id", "id", "score")
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
+    return _rank_per_query(scored, strategy, k, round_digits)
 
 
 def ivf_upsert(
@@ -744,6 +751,161 @@ def ivf_compact(
     )
 
 
+def query_matrix(vecs: Sequence, dim: int) -> tuple[list[int], np.ndarray]:
+    """(positions, matrix): the positions in ``vecs`` of the vectors
+    with ``dim`` entries, and those vectors as one ``(n, dim)`` float64
+    matrix. A None or wrong-dimension vector routes nowhere, so its
+    query gets no rows."""
+    pos = [i for i, v in enumerate(vecs) if v is not None and len(v) == dim]
+    return pos, np.array([vecs[i] for i in pos], dtype=np.float64).reshape(len(pos), dim)
+
+
+def _collect_queries(
+    queries_df: DataFrame, query_id: str, query_vec: str, dim: int
+) -> tuple[list, np.ndarray, T.DataType]:
+    """The query side of a routed-blocked DataFrame entry, collected:
+    (ids, ``(n, dim)`` matrix, the id column's type)."""
+    rows = queries_df.select(query_id, query_vec).collect()
+    pos, Q = query_matrix([r[1] for r in rows], dim)
+    return [rows[i][0] for i in pos], Q, queries_df.schema[query_id].dataType
+
+
+def _routed_blocked_join(
+    spark: SparkSession,
+    index,
+    query_ids: Sequence,
+    Q: np.ndarray,
+    routes: dict[tuple[int, ...], list[int]],
+    k: int,
+    strategy: str,
+    query_id_type: T.DataType,
+) -> DataFrame:
+    """The scoring core of the routed-blocked batch joins of the flat
+    IVF (:func:`ivf_knn_join_routed_blocked`) and the k-means tree
+    (``tree.tree_knn_join_routed_blocked``). ``routes`` maps a
+    partition key (a tuple over ``index.partition_cols``) to the rows
+    of ``Q`` routed to it. Output (query_id, id, score, rank); rank in
+    the strategy's direction with an id tie-break, NULL scores (an
+    undefined cosine) last.
+
+    The scan prunes to the routed partitions. Inside each Arrow batch
+    the rows of one partition score against only the queries routed to
+    it as ONE matrix product (``search._blas_block_scores``, the
+    ``knn_join_blocked`` kernel); each query keeps the block's top-k,
+    and the batch's survivors leave as one Arrow batch of three
+    concatenated columns."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from .search import _blas_block_scores
+
+    cols = list(index.partition_cols)
+    corpus = tombstones.apply_tombstones(
+        spark, index.path, _read_clusters(spark, index, sorted(routes))
+    ).select(*cols, "id", "embedding")
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", query_id_type),
+            T.StructField("id", corpus.schema["id"].dataType),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
+    if not routes:
+        # the scan reads no partition, so the optimizer plans this to
+        # an empty relation: no Spark job (a local DataFrame would be
+        # an RDD and launch one)
+        return corpus.selectExpr(
+            f"CAST(NULL AS {query_id_type.simpleString()}) AS query_id",
+            "id",
+            "CAST(NULL AS DOUBLE) AS score",
+            "CAST(NULL AS BIGINT) AS rank",
+        )
+    arrow_types = [to_arrow_type(f.dataType) for f in out_schema]
+    desc = sort_descending(strategy)
+    bc = spark.sparkContext.broadcast(
+        (
+            np.asarray(query_ids),
+            Q,
+            {key: np.asarray(q, dtype=np.int64) for key, q in routes.items()},
+            strategy,
+            desc,
+            k,
+        )
+    )
+
+    def score_block(batches):
+        qids_, Q_, routes_, strat, desc_, k_ = bc.value
+        dim = Q_.shape[1]
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
+                continue
+            emb = batch.column("embedding")
+            if (np.diff(emb.offsets.to_numpy()) != dim).any() or emb.null_count:
+                raise ValueError(f"index rows must hold {dim}-d vectors")
+            E = emb.flatten().to_numpy(zero_copy_only=False)
+            E = E.astype(np.float64, copy=False).reshape(n, dim)
+            ids = batch.column("id").to_numpy(zero_copy_only=False)
+            keys = np.stack([batch.column(c).to_numpy(zero_copy_only=False) for c in cols], axis=1)
+            uniq, inv = np.unique(keys, axis=0, return_inverse=True)
+            # each partition's rows, in batch order
+            groups = np.split(np.argsort(inv, kind="stable"), np.cumsum(np.bincount(inv))[:-1])
+            out_q, out_id, out_s = [], [], []
+            for key, rows in zip(uniq.tolist(), groups):
+                q_idx = routes_.get(tuple(key))
+                if q_idx is None:
+                    continue
+                S = _blas_block_scores(E[rows], Q_[q_idx], strat)  # (m, nq)
+                kk = min(k_, len(rows))
+                order = np.argsort(-S if desc_ else S, axis=0, kind="stable")[:kk]
+                out_q.append(np.repeat(qids_[q_idx], kk))
+                out_id.append(ids[rows][order.T.ravel()])
+                out_s.append(np.take_along_axis(S, order, axis=0).T.ravel())
+            if out_q:
+                score = np.concatenate(out_s)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.concatenate(out_q), type=arrow_types[0]),
+                        pa.array(np.concatenate(out_id), type=arrow_types[1]),
+                        pa.array(score, type=arrow_types[2], mask=np.isnan(score)),
+                    ],
+                    names=out_schema.fieldNames(),
+                )
+
+    return _rank_per_query(corpus.mapInArrow(score_block, out_schema), strategy, k)
+
+
+def ivf_knn_join_routed_blocked_arrays(
+    spark: SparkSession,
+    index: IvfIndex,
+    query_ids: Sequence,
+    Q: np.ndarray,
+    k: int = DEFAULT_K,
+    strategy: str = "CosineSimilarity",
+    search_top_size: int = DEFAULT_SEARCH_TOP_SIZE,
+    *,
+    query_id_type: T.DataType,
+) -> DataFrame:
+    """:func:`ivf_knn_join_routed_blocked` over a query batch the
+    driver already holds: ``query_ids`` and the ``(n, dim)`` float64
+    matrix ``Q`` of their vectors, so the batch never enters Spark.
+    ``query_id_type`` is the Spark type of the output ``query_id``. A
+    matrix of another dimension than the index's routes nowhere: no
+    rows, and no Spark job."""
+    validate_strategy(strategy)
+    if search_top_size < 1:
+        raise ValueError("search_top_size must be a positive integer")
+    w_eff = min(search_top_size, index.n_clusters)
+    routes: dict[tuple[int, ...], list[int]] = {}
+    if Q.shape[1:] == (index.dim,):
+        for qi, q in enumerate(Q):
+            for cid in _rank_centroids(index, q, strategy)[:w_eff]:
+                routes.setdefault((cid,), []).append(qi)
+    return _routed_blocked_join(
+        spark, index, query_ids, Q, routes, k, strategy, query_id_type
+    )
+
+
 def ivf_knn_join_routed_blocked(
     spark: SparkSession,
     index: IvfIndex,
@@ -755,133 +917,30 @@ def ivf_knn_join_routed_blocked(
     query_vec: str = "query_vec",
 ) -> DataFrame:
     """Batch ANN join for the SERVING regime: driver-routed cluster
-    pruning x BLAS block scoring. Output (query_id, id, score, rank),
-    same contract as :func:`ivf_knn_join`.
+    pruning x BLAS block scoring (:func:`_routed_blocked_join`). Output
+    (query_id, id, score, rank), same contract as :func:`ivf_knn_join`.
 
     Why this exists (measured, tools/scale_probe.py @ 4M rows x 256
     queries): the join-based formulations materialize a (corpus row x
     assigned query) pair per score and evaluate a per-element Column
     fold on each — `ivf_knn_join_distributed` took 84 s where the
     un-routed BLAS join took 7 s. This variant composes the two wins:
+    queries route on the driver (the `_rank_centroids` arithmetic) and
+    the scan prunes to the union of routed clusters, so bytes read
+    track `search_top_size / n_clusters` like `ivf_search`; each block
+    of a cluster's rows scores against only its routed queries as one
+    matrix product.
 
-    * rows-read lever: queries route on the driver (one small matmul,
-      same `_rank_centroids` arithmetic), and the scan statically
-      prunes to the UNION of needed cluster directories — bytes read
-      track `search_top_size / n_clusters` like `ivf_search`.
-    * per-score lever: inside each Arrow batch, rows score against
-      only the queries assigned to their cluster as ONE matrix
-      product (`_blas_block_scores`, the `knn_join_blocked` kernel),
-      emitting just the block's per-query top-k.
-
-    The query batch is collected driver-side — the documented
-    serving-path contract shared with `knn_join_blocked`/`pq_knn_join`
-    (batches of 10^2..10^5; the no-collect `ivf_knn_join_distributed`
-    remains the 10^6+ regime and the oracle path). BLAS summation
-    differs from the fold expressions in the last ulp, so this variant
-    pins id-set equivalence in tests instead of carrying a SQL oracle.
-    Exact candidate set (== knn_join) at full width."""
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    validate_strategy(strategy)
-    if search_top_size < 1:
-        raise ValueError("search_top_size must be a positive integer")
-    from .search import _blas_block_scores
-
-    q_rows = queries_df.select(
-        F.col(query_id).alias("qid"), F.col(query_vec).alias("qv")
-    ).collect()
-    if not q_rows:
-        empty = T.StructType(
-            [
-                T.StructField("query_id", queries_df.schema[query_id].dataType),
-                T.StructField("id", T.LongType()),
-                T.StructField("score", T.DoubleType()),
-                T.StructField("rank", T.LongType()),
-            ]
-        )
-        return spark.createDataFrame([], empty)
-    qids = np.array([r.qid for r in q_rows])
-    dim = index.centroids.shape[1]
-    Q = np.array(
-        [r.qv if (r.qv is not None and len(r.qv) == dim) else [np.nan] * dim for r in q_rows],
-        dtype=np.float64,
-    )
-    valid = np.array(
-        [r.qv is not None and len(r.qv) == dim for r in q_rows], dtype=bool
-    )
-    w_eff = min(search_top_size, index.n_clusters)
-
-    # per-query cluster routing (one small matmul) -> cluster -> query idxs
-    cluster_queries: dict[int, list[int]] = {}
-    for qi in np.nonzero(valid)[0]:
-        for cid in _rank_centroids(index, Q[qi], strategy)[:w_eff]:
-            cluster_queries.setdefault(int(cid), []).append(int(qi))
-    if not cluster_queries:
-        return ivf_knn_join(
-            spark, index, queries_df.limit(0), k=k, strategy=strategy,
-            search_top_size=search_top_size, query_id=query_id, query_vec=query_vec,
-        )
-
-    desc = sort_descending(strategy)
-    bc = spark.sparkContext.broadcast((qids, Q, cluster_queries, strategy, desc, k))
-
-    corpus = tombstones.apply_tombstones(
-        spark,
-        index.path,
-        # static partition pruning: the routed dirs are known here
-        _read_clusters(spark, index, sorted(cluster_queries)),
-    ).select("cluster_id", "id", "embedding")
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries_df.schema[query_id].dataType),
-            T.StructField("id", corpus.schema["id"].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def score_block(batches):
-        qids_, Q_, cq, strat, desc_, k_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            frames = []
-            for cid, grp in pdf.groupby("cluster_id"):
-                q_idx = cq.get(int(cid))
-                if not q_idx:
-                    continue
-                ids = grp["id"].to_numpy()
-                E = np.array(grp["embedding"].tolist(), dtype=np.float64)
-                S = _blas_block_scores(E, Q_[q_idx], strat)  # (m, nq_c)
-                kk = min(k_, len(ids))
-                order = np.argsort(-S if desc_ else S, axis=0, kind="stable")[:kk]
-                for j, qi in enumerate(q_idx):
-                    sel = order[:, j]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": [qids_[qi]] * kk,
-                                "id": ids[sel],
-                                "score": S[sel, j],
-                            }
-                        )
-                    )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    candidates = corpus.mapInPandas(score_block, schema=out_schema).withColumn(
-        "score",
-        F.when(F.isnan(F.col("score")), F.lit(None).cast("double")).otherwise(
-            F.col("score")
-        ),
-    )
-    direction = (
-        F.col("score").desc_nulls_last() if desc else F.col("score").asc_nulls_last()
-    )
-    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
+    The query batch is collected driver-side and handed to
+    :func:`ivf_knn_join_routed_blocked_arrays` — the serving-path
+    contract shared with `knn_join_blocked`/`pq_knn_join` (batches of
+    10^2..10^5; the no-collect `ivf_knn_join_distributed` remains the
+    10^6+ regime and the oracle path). BLAS summation differs from the
+    fold expressions in the last ulp, so this variant pins id-set
+    equivalence in tests instead of carrying a SQL oracle. Exact
+    candidate set (== knn_join) at full width. Queries whose vector
+    length differs from the index's get no rows."""
+    ids, Q, id_type = _collect_queries(queries_df, query_id, query_vec, index.dim)
+    return ivf_knn_join_routed_blocked_arrays(
+        spark, index, ids, Q, k, strategy, search_top_size, query_id_type=id_type
     )

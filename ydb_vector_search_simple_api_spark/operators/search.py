@@ -98,11 +98,11 @@ def filtered_doc_ids(
     """
     m = columns or ColumnMap()
     flt = _validate_filter(filter)
-    docs = load_documents(spark, sf_dir).select(
-        F.col(m.id).alias("id"),
-        F.col(m.title).alias("title"),
-        F.col(m.vendor).alias("vendor"),
-        F.col(m.description).alias("description"),
+    docs = load_documents(spark, sf_dir).selectExpr(
+        f"`{m.id}` AS id",
+        f"`{m.title}` AS title",
+        f"`{m.vendor}` AS vendor",
+        f"`{m.description}` AS description",
     )
     return docs.filter(_filter_cond(flt)).select("id")
 
@@ -128,14 +128,14 @@ def exact_search(
     m = columns or ColumnMap()
     flt = _validate_filter(filter)
 
-    embs = load_embeddings(spark, sf_dir).select(
-        F.col("vec_id").alias("id"), F.col(m.embedding).alias("embedding")
+    embs = load_embeddings(spark, sf_dir).selectExpr(
+        "vec_id AS id", f"`{m.embedding}` AS embedding"
     )
-    docs = load_documents(spark, sf_dir).select(
-        F.col(m.id).alias("id"),
-        F.col(m.title).alias("title"),
-        F.col(m.vendor).alias("vendor"),
-        F.col(m.description).alias("description"),
+    docs = load_documents(spark, sf_dir).selectExpr(
+        f"`{m.id}` AS id",
+        f"`{m.title}` AS title",
+        f"`{m.vendor}` AS vendor",
+        f"`{m.description}` AS description",
     )
 
     if flt:

@@ -251,7 +251,7 @@ def sq_search_rerank(
     )
     if filter_ids is not None:
         codes = codes.join(
-            filter_ids.select(F.col(filter_ids.columns[0]).alias(id_col)),
+            filter_ids.selectExpr(f"`{filter_ids.columns[0]}` AS `{id_col}`"),
             id_col,
             "left_semi",
         )
@@ -262,14 +262,14 @@ def sq_search_rerank(
         .orderBy(*_order_cols(strategy, id_col=id_col))
         .limit(int(n_short))
     )
-    vecs = src.select(F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col))
+    vecs = src.selectExpr(f"`{id_col}`", f"`{vec_col}`")
     joined = vecs.join(F.broadcast(cand.select(id_col)), id_col, "inner")
     score = score_expr(strategy, vec_col, list(query_vec))
     if round_digits is not None:
         score = F.round(score, round_digits) + F.lit(0.0)
     return (
         joined.withColumn("score", score)
-        .select(F.col(id_col).alias("id"), "score")
+        .selectExpr(f"`{id_col}` AS id", "score")
         .orderBy(*_order_cols(strategy))
         .limit(k)
     )

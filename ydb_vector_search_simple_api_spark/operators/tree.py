@@ -27,15 +27,14 @@ structure:
      ``partitionBy("l1", "l2")`` — each leaf is a physical directory.
 * **Search**: the driver ranks level-1 centroids against the query
   (NumPy, tiny), keeps ``top_l1`` cells, ranks their children, keeps
-  ``top_l2`` leaves, and reads ONLY those ``l1=<a>/l2=<b>`` leaf
-  directories, named explicitly, with the layout schema stored in the
-  tree's metadata file — the flat index's reader
-  (``index._read_clusters``), so planning launches no listing or
-  schema-inference job at a width under Spark's 32-path
-  parallel-discovery threshold, and leaves created by
-  :func:`tree_upsert` are listed per request. An OR-of-conjunctions
-  over the two partition columns also stays on the scan as its
-  PartitionFilters. Candidates re-rank exactly (same
+  ``top_l2`` leaves, and prunes the layout to those ``l1=<a>/l2=<b>``
+  leaf directories through the flat index's reader
+  (``index._read_clusters``): an OR-of-conjunctions over the two
+  partition columns, which the plan shows as PartitionFilters, over a
+  reader listed once per index generation, so planning launches no
+  listing or schema-inference job (the layout schema is stored in the
+  tree's metadata file), and the leaves :func:`tree_upsert` writes
+  give a new reader. Candidates re-rank exactly (same
   TakeOrderedAndProject shape as exact_search).
 * Recall contract: monotone in both widths; EXACT when both widths
   cover the whole tree (every leaf read).
@@ -60,8 +59,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import tombstones
-from .index import _read_clusters, _stored_schema
-from ..config import DEFAULT_K, sort_descending, validate_strategy
+from .index import (
+    _collect_queries,
+    _rank_per_query,
+    _read_clusters,
+    _routed_blocked_join,
+    _stored_schema,
+)
+from ..config import DEFAULT_K, validate_strategy
 from ..functions.distance import score_expr
 from .search import _order_cols
 
@@ -83,6 +88,10 @@ class KmeansTreeIndex:
     @property
     def n_leaves(self) -> int:
         return sum(len(c) for c in self.centroids_l2)
+
+    @property
+    def dim(self) -> int:
+        return self.centroids_l1.shape[1]
 
 
 def _lloyd(x: np.ndarray, k: int, n_iter: int = 20) -> np.ndarray:
@@ -315,6 +324,26 @@ def route(
     return [cand[int(i)] for i in order]
 
 
+def _widths(
+    index: KmeansTreeIndex,
+    search_top_size: int | None,
+    top_l1: int | None,
+    top_l2: int | None,
+) -> tuple[int, int]:
+    """Per-level widths: ``top_l1``/``top_l2`` override
+    ``search_top_size``; ``None`` everywhere is full width."""
+    for w in (search_top_size, top_l1, top_l2):
+        if w is not None and w < 1:
+            raise ValueError("search widths must be positive integers")
+    w1 = top_l1 if top_l1 is not None else (
+        search_top_size if search_top_size is not None else index.n_l1
+    )
+    w2 = top_l2 if top_l2 is not None else (
+        search_top_size if search_top_size is not None else index.n_leaves
+    )
+    return w1, w2
+
+
 def tree_search(
     spark: SparkSession,
     index: KmeansTreeIndex,
@@ -336,17 +365,7 @@ def tree_search(
     after leaf pruning, before scoring — same non-strict filtered-ANN
     contract as ``index.ivf_search``."""
     validate_strategy(strategy)
-    for w in (search_top_size, top_l1, top_l2):
-        if w is not None and w < 1:
-            raise ValueError("search widths must be positive integers")
-    n_leaves = index.n_leaves
-    w1 = top_l1 if top_l1 is not None else (
-        search_top_size if search_top_size is not None else index.n_l1
-    )
-    w2 = top_l2 if top_l2 is not None else (
-        search_top_size if search_top_size is not None else n_leaves
-    )
-
+    w1, w2 = _widths(index, search_top_size, top_l1, top_l2)
     leaves = route(index, query_vec, strategy, top_l1=w1, top_l2=w2)
     pruned = tombstones.apply_tombstones(
         spark, index.path, _read_clusters(spark, index, leaves)
@@ -521,16 +540,8 @@ def tree_knn_join_distributed(
     import pandas as pd
 
     validate_strategy(strategy)
-    for w in (search_top_size, top_l1, top_l2):
-        if w is not None and w < 1:
-            raise ValueError("search widths must be positive integers")
-    w1 = top_l1 if top_l1 is not None else (
-        search_top_size if search_top_size is not None else index.n_l1
-    )
-    w2 = top_l2 if top_l2 is not None else (
-        search_top_size if search_top_size is not None else index.n_leaves
-    )
-    dim = index.centroids_l1.shape[1]
+    w1, w2 = _widths(index, search_top_size, top_l1, top_l2)
+    dim = index.dim
 
     def _route_fn(vecs):
         out = []
@@ -570,23 +581,36 @@ def tree_knn_join_distributed(
     scored = corpus.join(assignment, ["l1", "l2"], "inner").withColumn(
         "score", score_expr(strategy, "embedding", "query_vec")
     )
-    if round_digits is not None:
-        scored = scored.withColumn(
-            "score", F.round(F.col("score"), round_digits) + F.lit(0.0)
-        )
-    from pyspark.sql import Window
+    return _rank_per_query(scored, strategy, k, round_digits)
 
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
-    )
-    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
-    return (
-        scored.select("query_id", "id", "score")
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
+
+def tree_knn_join_routed_blocked_arrays(
+    spark: SparkSession,
+    index: KmeansTreeIndex,
+    query_ids: Sequence,
+    Q: np.ndarray,
+    k: int = DEFAULT_K,
+    strategy: str = "CosineSimilarity",
+    search_top_size: int | None = None,
+    top_l1: int | None = None,
+    top_l2: int | None = None,
+    *,
+    query_id_type: T.DataType,
+) -> DataFrame:
+    """:func:`tree_knn_join_routed_blocked` over a query batch the
+    driver already holds — the tree twin of
+    ``index.ivf_knn_join_routed_blocked_arrays`` (``query_ids``, the
+    ``(n, dim)`` float64 matrix ``Q``, the Spark type of the ids). A
+    matrix of another dimension than the tree's routes nowhere."""
+    validate_strategy(strategy)
+    w1, w2 = _widths(index, search_top_size, top_l1, top_l2)
+    routes: dict[tuple[int, int], list[int]] = {}
+    if Q.shape[1:] == (index.dim,):
+        for qi, q in enumerate(Q):
+            for leaf in route(index, q, strategy, top_l1=w1, top_l2=w2):
+                routes.setdefault(leaf, []).append(qi)
+    return _routed_blocked_join(
+        spark, index, query_ids, Q, routes, k, strategy, query_id_type
     )
 
 
@@ -605,102 +629,17 @@ def tree_knn_join_routed_blocked(
     """Batch ANN join through the tree for the SERVING regime:
     driver routing (the per-level width contract of :func:`route`) x
     BLAS block scoring — the tree twin of
-    ``index.ivf_knn_join_routed_blocked`` (same measured rationale,
-    tools/scale_probe.py: the pair-join + fold formulation pays a
-    per-score constant factor BLAS removes).
+    ``index.ivf_knn_join_routed_blocked``, over the same scoring core
+    (``index._routed_blocked_join``): the scan prunes to the union of
+    routed (l1, l2) leaves, and each block of a leaf's rows scores
+    against only the queries routed there as one matrix product.
 
-    The query batch is collected driver-side (serving contract);
-    the scan statically prunes to the union of routed (l1, l2) leaf
-    directories; each Arrow batch scores its rows against only the
-    queries routed to that leaf as one matrix product. Exact candidate
-    set (== knn_join) at full width; BLAS ulp note as in
+    The query batch is collected driver-side (serving contract) and
+    handed to :func:`tree_knn_join_routed_blocked_arrays`. Exact
+    candidate set (== knn_join) at full width; BLAS ulp note as in
     ``knn_join_blocked`` (id-set equivalence pinned in tests)."""
-    import pandas as pd
-    from pyspark.sql import Window
-
-    from .search import _blas_block_scores
-
-    validate_strategy(strategy)
-    n_leaves = index.n_leaves
-    w1 = top_l1 if top_l1 is not None else (
-        search_top_size if search_top_size is not None else index.n_l1
-    )
-    w2 = top_l2 if top_l2 is not None else (
-        search_top_size if search_top_size is not None else n_leaves
-    )
-
-    q_rows = queries_df.select(
-        F.col(query_id).alias("qid"), F.col(query_vec).alias("qv")
-    ).collect()
-    qids = np.array([r.qid for r in q_rows])
-    dim = index.centroids_l1.shape[1]
-    leaf_queries: dict[tuple[int, int], list[int]] = {}
-    Q = np.full((len(q_rows), dim), np.nan, dtype=np.float64)
-    for qi, r in enumerate(q_rows):
-        if r.qv is None or len(r.qv) != dim:
-            continue
-        Q[qi] = np.asarray(r.qv, dtype=np.float64)
-        for leaf in route(index, Q[qi], strategy, top_l1=w1, top_l2=w2):
-            leaf_queries.setdefault(leaf, []).append(qi)
-
-    corpus = tombstones.apply_tombstones(
-        spark, index.path, _read_clusters(spark, index, sorted(leaf_queries))
-    ).select("l1", "l2", "id", "embedding")
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries_df.schema[query_id].dataType),
-            T.StructField("id", corpus.schema["id"].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    if not leaf_queries:
-        empty = out_schema.add(T.StructField("rank", T.LongType()))
-        return spark.createDataFrame([], empty)
-
-    desc = sort_descending(strategy)
-    bc = spark.sparkContext.broadcast((qids, Q, leaf_queries, strategy, desc, k))
-
-    def score_block(batches):
-        qids_, Q_, lq, strat, desc_, k_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            frames = []
-            for (l1, l2), grp in pdf.groupby(["l1", "l2"]):
-                q_idx = lq.get((int(l1), int(l2)))
-                if not q_idx:
-                    continue
-                ids = grp["id"].to_numpy()
-                E = np.array(grp["embedding"].tolist(), dtype=np.float64)
-                S = _blas_block_scores(E, Q_[q_idx], strat)
-                kk = min(k_, len(ids))
-                order = np.argsort(-S if desc_ else S, axis=0, kind="stable")[:kk]
-                for j, qi in enumerate(q_idx):
-                    sel = order[:, j]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": [qids_[qi]] * kk,
-                                "id": ids[sel],
-                                "score": S[sel, j],
-                            }
-                        )
-                    )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    candidates = corpus.mapInPandas(score_block, schema=out_schema).withColumn(
-        "score",
-        F.when(F.isnan(F.col("score")), F.lit(None).cast("double")).otherwise(
-            F.col("score")
-        ),
-    )
-    direction = (
-        F.col("score").desc_nulls_last() if desc else F.col("score").asc_nulls_last()
-    )
-    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
+    ids, Q, id_type = _collect_queries(queries_df, query_id, query_vec, index.dim)
+    return tree_knn_join_routed_blocked_arrays(
+        spark, index, ids, Q, k, strategy, search_top_size, top_l1, top_l2,
+        query_id_type=id_type,
     )
