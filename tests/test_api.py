@@ -372,57 +372,84 @@ def test_hybrid_plus_filter_is_400_even_in_strict_index_mode(spark, qvec):
     assert "hybrid_terms cannot be combined with filter" in payload["error"]
 
 
-# ------------------------------------------- serving broadcast build side
+# ------------------------------------------- documents in serving plans
 
 
-def _assert_metadata_build_side_is_topk(df):
-    """The metadata join's broadcast BUILD side must be the k-row
-    result side; the documents table (the 100 TB side) must never be a
-    broadcast build input reading its wide columns. The title column
-    (`source`) is read ONLY by the metadata projection, so a broadcast
-    scan of documents shipping `source` == the corpus on the wire."""
+def _documents_scans(df) -> list[str]:
+    """Formatted-plan detail blocks of every scan of documents.parquet."""
+    import re
+
     from ydb_vector_search_simple_api_spark.plans import checks
 
-    subs = checks.broadcast_subtree_details(df)
-    assert subs, checks.formatted_plan(df)
-    for block in checks.broadcast_scan_blocks(df, "documents.parquet"):
-        assert "source" not in block, block
+    blocks = re.split(r"\n(?=\(\d+\) )", checks.formatted_plan(df))
+    return [
+        b for b in blocks
+        if b.splitlines()[0].lstrip("(0123456789) ").startswith("Scan")
+        and "documents.parquet" in b
+    ]
 
 
-def test_ivf_engine_metadata_build_side(qvec, ivf_engine_nonstrict):
-    _assert_metadata_build_side_is_topk(
+def _assert_reads_no_documents(df):
+    """An unfiltered serving plan ranks ids only: its metadata is a
+    point read after the collect, so no file of documents is scanned
+    (and none can be shipped whole as a broadcast build side)."""
+    from ydb_vector_search_simple_api_spark.plans import checks
+
+    assert "documents.parquet" not in checks.formatted_plan(df), (
+        checks.formatted_plan(df)
+    )
+
+
+def _assert_reads_documents_for_filter_only(df):
+    """A filtered serving plan reads documents only for the filter's id
+    set: every documents scan pushes the filter's equality and reads
+    the id and the filtered column, never a metadata column."""
+    scans = _documents_scans(df)
+    assert scans
+    for block in scans:
+        assert "EqualTo(lang,fr)" in block, block
+        assert "ReadSchema: struct<doc_id:bigint,lang:string>" in block, block
+
+
+def test_ivf_engine_plan_reads_no_documents(qvec, ivf_engine_nonstrict):
+    _assert_reads_no_documents(
         ivf_engine_nonstrict.search_df(qvec, k=5, search_top_size=4)
     )
 
 
-def test_ivf_engine_filtered_metadata_build_side(qvec, ivf_engine_nonstrict):
-    _assert_metadata_build_side_is_topk(
+def test_ivf_engine_filtered_plan_reads_documents_for_filter_only(
+    qvec, ivf_engine_nonstrict
+):
+    _assert_reads_documents_for_filter_only(
         ivf_engine_nonstrict.search_df(
             qvec, k=5, filter={"vendor": "fr"}, search_top_size=4
         )
     )
 
 
-def test_tree_engine_metadata_build_side(qvec, tree_engine):
-    _assert_metadata_build_side_is_topk(
-        tree_engine.search_df(qvec, k=5, search_top_size=9)
+def test_tree_engine_plan_reads_no_documents(qvec, tree_engine):
+    _assert_reads_no_documents(tree_engine.search_df(qvec, k=5, search_top_size=9))
+
+
+def test_bq_engine_plan_reads_no_documents(qvec, bq_engine):
+    _assert_reads_no_documents(bq_engine.search_df(qvec, k=5, search_top_size=500))
+
+
+def test_exact_engine_plans_read_documents_for_filter_only(engine, qvec):
+    _assert_reads_no_documents(engine.search_df(qvec, k=5))
+    _assert_reads_documents_for_filter_only(
+        engine.search_df(qvec, k=5, filter={"vendor": "fr"})
     )
 
 
-def test_bq_engine_metadata_build_side(qvec, bq_engine):
-    _assert_metadata_build_side_is_topk(
-        bq_engine.search_df(qvec, k=5, search_top_size=500)
-    )
-
-
-def test_exact_engine_metadata_build_side(engine, qvec):
-    _assert_metadata_build_side_is_topk(engine.search_df(qvec, k=5))
-
-
-def test_hybrid_metadata_build_side(engine, qvec):
-    _assert_metadata_build_side_is_topk(
-        engine.search_hybrid_df(qvec, ["vector", "hash"], k=5)
-    )
+def test_hybrid_plan_reads_no_metadata_column(engine, qvec):
+    """The lexical half of hybrid search scans the documents' text; the
+    title column (``source``) is read only for metadata, which is now a
+    point read, so no documents scan in the plan reads it."""
+    scans = _documents_scans(engine.search_hybrid_df(qvec, ["vector", "hash"], k=5))
+    assert scans
+    for block in scans:
+        assert "source" not in block, block
 
 
 # ------------------------------------------------------- batch search
@@ -435,9 +462,12 @@ def test_search_batch_matches_single_searches(spark, engine):
     assert len(got) == 3
     for qv, rows in zip(batch, got):
         single, _ = engine.search(qv, k=5)
-        assert [(r["id"], r["score"]) for r in rows] == [
-            (r["id"], round(r["score"], 10) and r["score"]) for r in single
-        ]
+        # the batch scores come from BLAS, the single search's from the
+        # sequential SQL fold: equal ids, scores within 1e-9
+        assert [r["id"] for r in rows] == [r["id"] for r in single]
+        assert [r["score"] for r in rows] == pytest.approx(
+            [r["score"] for r in single], abs=1e-9
+        )
         assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
         assert set(rows[0]) == {
             "id", "title", "vendor", "description", "score", "rank"
@@ -687,6 +717,8 @@ def test_result_cache_is_thread_safe(spark):
 
     eng = api.VectorSearchEngine(spark, SF_SMALL, result_cache_size=3)
     eng.search_df = backend
+    # the stub's rows are the replies: no documents metadata to attach
+    eng._with_metadata = lambda rows: [r.asDict() for r in rows]
     queries = [([float(i), 1.0], 1 + i % 3) for i in range(7)]
     # switch threads far more often than the default 5 ms, so a
     # check-then-act window in the cache is actually interleaved

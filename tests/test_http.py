@@ -409,3 +409,48 @@ def test_search_batch_over_http(served, qvec):
         served[0] + "/search_batch", json.dumps({"embeddings": []}).encode()
     )
     assert code == 400
+
+
+def _post_raw(base: str, path: str, length: str, body: bytes = b""):
+    """POST with a hand-set Content-Length header and ``body`` sent
+    after it; returns (status, decoded JSON reply)."""
+    import http.client
+    from urllib.parse import urlparse
+
+    u = urlparse(base)
+    conn = http.client.HTTPConnection(u.hostname, u.port, timeout=30)
+    try:
+        conn.putrequest("POST", path)
+        conn.putheader("Content-Type", "application/json")
+        conn.putheader("Content-Length", length)
+        conn.endheaders()
+        if body:
+            conn.send(body)
+        r = conn.getresponse()
+        return r.status, json.loads(r.read())
+    finally:
+        conn.close()
+
+
+def test_oversized_body_is_413_unread(served):
+    """A Content-Length above the cap gets 413 at once: the server
+    answers without waiting for a body that is never sent."""
+    for path in ("/search", "/search_batch"):
+        code, data = _post_raw(
+            served[0], path, str(http_server.MAX_BODY_BYTES + 1)
+        )
+        assert code == 413, data
+        assert str(http_server.MAX_BODY_BYTES) in data["error"]
+
+
+def test_invalid_content_length_is_400(served, qvec):
+    """A non-integer or negative Content-Length gets a 400 reply, not a
+    dropped connection; a valid request on a new connection still
+    works after them."""
+    for length in ("abc", "-5", "1.5"):
+        code, data = _post_raw(served[0], "/search", length)
+        assert code == 400, (length, data)
+        assert "Content-Length" in data["error"]
+    body = json.dumps({"embedding": qvec, "k": 2}).encode()
+    code, data = _post_raw(served[0], "/search", str(len(body)), body)
+    assert code == 200 and data["count"] == 2

@@ -498,7 +498,9 @@ def test_ivf_search_plan_launches_no_jobs(spark, built, qvec):
 
 
 def test_ivf_engine_search_launches_at_most_two_jobs(spark, built, qvec):
-    """The pruned top-k (broadcast) and the metadata join's top-k."""
+    """A warm search launches exactly one job, the pruned top-k: the
+    metadata is a driver-side point read (``store.doc_metadata``), not
+    a second job joining the top-k to a scan of documents."""
     from conftest import spark_jobs
 
     from ydb_vector_search_simple_api_spark.api import VectorSearchEngine
@@ -507,14 +509,14 @@ def test_ivf_engine_search_launches_at_most_two_jobs(spark, built, qvec):
     eng = VectorSearchEngine(
         spark, SF_SMALL, config=SearchConfig(index_enabled=True), index=built
     )
-    # the first read of documents.parquet infers its schema once per
-    # session (sources.store's scan cache); count a warm request
+    # the first search builds the id-clustered metadata copy; count a
+    # warm request
     eng.search(qvec, k=5, search_top_size=4)
     (results, _), n = spark_jobs(
         spark, lambda: eng.search(qvec, k=5, search_top_size=4)
     )
     assert len(results) == 5
-    assert n <= 2
+    assert n == 1
 
 
 def test_upserts_between_searches_are_read(spark, tmp_path_factory, built):

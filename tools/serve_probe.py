@@ -16,7 +16,7 @@ Measured:
   * the same query with the round-3 bug re-created inline
     (broadcast(docs) — the corpus on the wire) for before/after
   * filtered top-k end-to-end
-  * engine-served IVF at width 1/4/full (index + metadata join)
+  * engine-served IVF at width 1/4/full (index + metadata point read)
   * HTTP ``POST /search`` on the IVF engine (k=10, width 10) under
     closed-loop load from 1, 8 and 32 client threads: q/s, p50/p99
     latency and Spark jobs per request. Each request runs under its
@@ -292,10 +292,8 @@ def main() -> None:
         rows.append(
             (
                 f"engine IVF serve width={width}/{n_clusters}",
-                timed(
-                    lambda w=width: eng.search_df(qvec, 10, None, w).collect()
-                ),
-                "cluster-pruned scan + k-row broadcast metadata join",
+                timed(lambda w=width: eng.search(qvec, 10, None, w)),
+                "cluster-pruned scan + k-id metadata point read",
             )
         )
 

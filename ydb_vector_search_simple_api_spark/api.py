@@ -37,8 +37,8 @@ from .operators import opq as opq_mod
 from .operators import sq as sq_mod
 from .operators import index as ivf_mod
 from .operators import tree as tree_mod
-from .operators.search import _order_cols, exact_search, filtered_doc_ids
-from .sources.store import load_documents, load_embeddings
+from .operators.search import exact_topk, filtered_doc_ids, knn_join_blocked_arrays
+from .sources.store import doc_metadata, load_embeddings
 
 
 def get_query_embedding(
@@ -154,7 +154,9 @@ class VectorSearchEngine:
                 # cached list itself is never mutated, so no lock)
                 return copy.deepcopy(hit), time.perf_counter() - t0
         df = self.search_df(embedding, k, filter, search_top_size)
-        results = [r.asDict() for r in df.collect()]
+        # an indexed search keeps at most k rows when an id has two
+        # documents rows; the exact path keeps them all (exact_search)
+        results = self._with_metadata(df.collect())[: k if self._indexed else None]
         if key is not None:
             cached = copy.deepcopy(results)
             with self._cache_lock:
@@ -176,10 +178,13 @@ class VectorSearchEngine:
         filter: dict | None = None,
         search_top_size: int | None = None,
     ):
-        """The un-collected DataFrame behind :meth:`search` — exposed so
-        the serving plan shape (broadcast build side = the k-row top-k,
-        never the corpus metadata) can be asserted in tests."""
-        if self.config.index_enabled and self.index is not None:
+        """The un-collected ranked (id, score) top-k behind
+        :meth:`search`, ordered by score in the strategy's direction and
+        then by id. :meth:`search` collects it and attaches each id's
+        ``documents`` metadata on the driver (``store.doc_metadata``),
+        so an unfiltered plan reads no ``documents`` file and a filtered
+        one reads ``documents`` only for the filter's id set."""
+        if self._indexed:
             if filter and self.config.strict_filter_index_exclusion:
                 raise ValueError("Unable to use filter with enabled vector index.")
             # non-strict mode (config.py strict_filter_index_exclusion=
@@ -213,7 +218,7 @@ class VectorSearchEngine:
                     if isinstance(self.index, bq_mod.BqIndex)
                     else opq_mod.opq_search_rerank
                 )
-                topk = rerank(
+                return rerank(
                     self.spark,
                     self.index,
                     src,
@@ -223,14 +228,14 @@ class VectorSearchEngine:
                     shortlist=width,
                     filter_ids=flt_ids,
                 )
-            elif isinstance(self.index, gann_mod.GraphAnnIndex):
+            if isinstance(self.index, gann_mod.GraphAnnIndex):
                 # graph shape: the width knob is the BEAM (>= corpus
                 # => exact, the shared O3 contract); candidates
                 # re-rank exactly against the store vectors
                 src = load_embeddings(self.spark, self.sf_dir).selectExpr(
                     "vec_id AS id", "embedding"
                 )
-                topk = gann_mod.graphann_search(
+                return gann_mod.graphann_search(
                     self.spark,
                     self.index,
                     src,
@@ -240,8 +245,8 @@ class VectorSearchEngine:
                     beam=width,
                     filter_ids=flt_ids,
                 )
-            elif isinstance(self.index, tree_mod.KmeansTreeIndex):
-                topk = tree_mod.tree_search(
+            if isinstance(self.index, tree_mod.KmeansTreeIndex):
+                return tree_mod.tree_search(
                     self.spark,
                     self.index,
                     embedding,
@@ -250,43 +255,24 @@ class VectorSearchEngine:
                     search_top_size=width,
                     filter_ids=flt_ids,
                 )
-            else:
-                topk = ivf_mod.ivf_search(
-                    self.spark,
-                    self.index,
-                    embedding,
-                    k=k,
-                    strategy=self.config.strategy,
-                    search_top_size=width,
-                    filter_ids=flt_ids,
-                )
-            docs = self._documents("id")
-            # re-sort after the metadata join (k rows, trivial):
-            # ranked order must not rely on the join preserving
-            # stream-side order — mirrors exact_search. Broadcast the
-            # k-row TOP-K side; the documents table is the 100 TB side
-            # and stays the streamed probe (plan-asserted in
-            # tests/test_api.py). The join emits at most k rows, so
-            # limit(k) changes no result; it makes the re-sort a
-            # TakeOrderedAndProject instead of a range-partitioned
-            # Sort, whose sampling job and shuffle ran per request.
-            df = (
-                F.broadcast(topk).join(docs, "id", "inner")
-                .select("id", "title", "vendor", "description", "score")
-                .orderBy(*_order_cols(self.config.strategy))
-                .limit(k)
-            )
-        else:
-            df = exact_search(
+            return ivf_mod.ivf_search(
                 self.spark,
-                self.sf_dir,
+                self.index,
                 embedding,
                 k=k,
                 strategy=self.config.strategy,
-                filter=filter,
-                columns=self.config.columns,
+                search_top_size=width,
+                filter_ids=flt_ids,
             )
-        return df
+        return exact_topk(
+            self.spark,
+            self.sf_dir,
+            embedding,
+            k=k,
+            strategy=self.config.strategy,
+            filter=filter,
+            columns=self.config.columns,
+        )
 
     def search_hybrid(
         self,
@@ -305,8 +291,7 @@ class VectorSearchEngine:
         hybrid path takes no filter."""
         t0 = time.perf_counter()
         df = self.search_hybrid_df(embedding, terms, k, pool=pool, kk=kk)
-        results = [r.asDict() for r in df.collect()]
-        return results, time.perf_counter() - t0
+        return self._with_metadata(df.collect()), time.perf_counter() - t0
 
     def search_hybrid_df(
         self,
@@ -316,7 +301,8 @@ class VectorSearchEngine:
         pool: int = 50,
         kk: int = 60,
     ):
-        """The un-collected DataFrame behind :meth:`search_hybrid`."""
+        """The un-collected (id, score) fusion behind
+        :meth:`search_hybrid`, ``score`` = the RRF score, best first."""
         from .operators import ranking as ranking_mod
 
         fused = ranking_mod.hybrid_rrf_topk(
@@ -330,15 +316,8 @@ class VectorSearchEngine:
             strategy=self.config.strategy,
             lexical_index=self.lexical_index,
         )
-        docs = self._documents("doc_id")
-        # broadcast the k-row fused list, stream the corpus metadata
-        # (same build-side contract as search_df)
-        return (
-            F.broadcast(fused).join(docs, "doc_id", "inner")
-            .selectExpr(
-                "doc_id AS id", "title", "vendor", "description", "rrf AS score"
-            )
-            .orderBy(F.desc("score"), F.asc("id"))
+        return fused.selectExpr("doc_id AS id", "rrf AS score").orderBy(
+            F.desc("score"), F.asc("id")
         )
 
     def search_batch(
@@ -356,17 +335,8 @@ class VectorSearchEngine:
         t0 = time.perf_counter()
         df = self.search_batch_df(embeddings, k, search_top_size)
         by_q: dict[int, list[dict]] = {i: [] for i in range(len(embeddings))}
-        for r in df.collect():
-            by_q[r.query_id].append(
-                {
-                    "id": r.id,
-                    "title": r.title,
-                    "vendor": r.vendor,
-                    "description": r.description,
-                    "score": r.score,
-                    "rank": r.rank,
-                }
-            )
+        for r in self._with_metadata(df.collect(), "query_id", "rank"):
+            by_q[r.pop("query_id")].append(r)
         results = [
             sorted(by_q[i], key=lambda d: d["rank"])
             for i in range(len(embeddings))
@@ -379,29 +349,25 @@ class VectorSearchEngine:
         k: int,
         search_top_size: int | None = None,
     ):
-        """The un-collected (query_id, id, title, vendor, description,
-        score, rank) DataFrame behind :meth:`search_batch`. IVF- and
-        tree-indexed engines hand the batch, as one matrix, to the
-        pruned routed-blocked join; otherwise the exact ranked join
-        runs over a query DataFrame. Metadata joins in AFTER the per-
-        query top-k with the (n_queries x k)-row side broadcast — the
-        same build-side contract as the single-query path."""
+        """The un-collected (query_id, id, score, rank) relation behind
+        :meth:`search_batch`, before any metadata. IVF- and tree-indexed
+        engines hand the batch, as one matrix, to the pruned
+        routed-blocked join; otherwise the exact BLAS-blocked join
+        (``search.knn_join_blocked_arrays``) scores it against the whole
+        corpus. Either way the vectors go from the request to the join
+        without a Spark round trip."""
         from pyspark.sql import types as T
-
-        from .operators.search import knn_join
 
         index = self.index if self.config.index_enabled else None
         if isinstance(index, (ivf_mod.IvfIndex, tree_mod.KmeansTreeIndex)):
-            # the batch stays on the driver: the routed-blocked join
-            # takes the vectors as one matrix, and a vector of another
-            # dimension than the index's gets no rows
+            # a vector of another dimension than the index's gets no rows
             pos, Q = ivf_mod.query_matrix(embeddings, index.dim)
             join = (
                 ivf_mod.ivf_knn_join_routed_blocked_arrays
                 if isinstance(index, ivf_mod.IvfIndex)
                 else tree_mod.tree_knn_join_routed_blocked_arrays
             )
-            res = join(
+            return join(
                 self.spark,
                 index,
                 pos,
@@ -411,35 +377,42 @@ class VectorSearchEngine:
                 search_top_size=search_top_size or self.config.search_top_size,
                 query_id_type=T.LongType(),
             )
-        else:
-            queries_df = self.spark.createDataFrame(
-                [(i, [float(x) for x in v]) for i, v in enumerate(embeddings)],
-                "query_id bigint, query_vec array<double>",
-            )
-            corpus = load_embeddings(self.spark, self.sf_dir).selectExpr(
+        return knn_join_blocked_arrays(
+            self.spark,
+            list(range(len(embeddings))),
+            embeddings,
+            load_embeddings(self.spark, self.sf_dir).selectExpr(
                 "vec_id AS id", "embedding"
-            )
-            res = knn_join(
-                self.spark,
-                queries_df,
-                corpus,
-                k=k,
-                strategy=self.config.strategy,
-            )
-        return F.broadcast(res).join(self._documents("id"), "id", "inner").select(
-            "query_id", "id", "title", "vendor", "description", "score", "rank"
+            ),
+            k=k,
+            strategy=self.config.strategy,
+            query_id_type=T.LongType(),
         )
 
-    def _documents(self, id_name: str):
-        """The documents' metadata columns under the reference's names,
-        projected in one SQL call; the id column is named ``id_name``."""
-        m = self.config.columns
-        return load_documents(self.spark, self.sf_dir).selectExpr(
-            f"`{m.id}` AS `{id_name}`",
-            f"`{m.title}` AS title",
-            f"`{m.vendor}` AS vendor",
-            f"`{m.description}` AS description",
+    @property
+    def _indexed(self) -> bool:
+        return self.config.index_enabled and self.index is not None
+
+    def _with_metadata(self, rows: list, *extra: str) -> list[dict]:
+        """Result dicts for ranked rows with ``id`` and ``score`` (and
+        the ``extra`` fields): each row once per ``documents`` row of its
+        id, in the order of ``rows``, so an id without a row drops out.
+        The metadata is one driver-side point read of the rows' ids."""
+        meta = doc_metadata(
+            self.spark, self.sf_dir, self.config.columns, [r.id for r in rows]
         )
+        return [
+            {
+                "id": r.id,
+                "title": title,
+                "vendor": vendor,
+                "description": description,
+                "score": r.score,
+                **{c: r[c] for c in extra},
+            }
+            for r in rows
+            for title, vendor, description in meta.get(r.id, ())
+        ]
 
     def healthy(self) -> bool:
         """Connectivity probe: SELECT 1 (O16; app.py:89-102)."""

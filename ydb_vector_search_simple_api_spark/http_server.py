@@ -343,6 +343,12 @@ fetch('/apispec.json').then(r => r.json()).then(spec => {
 """
 
 
+#: the largest request body read, in bytes: a full /search_batch of
+#: 4,096-d vectors at 24 bytes per JSON number. A longer body is
+#: refused with 413 before it is read.
+MAX_BODY_BYTES = api.MAX_BATCH_QUERIES * 4096 * 24
+
+
 def make_handler(engine: api.VectorSearchEngine) -> type[BaseHTTPRequestHandler]:
     class Handler(BaseHTTPRequestHandler):
         # keep pytest output clean; real deployments override
@@ -381,7 +387,20 @@ def make_handler(engine: api.VectorSearchEngine) -> type[BaseHTTPRequestHandler]
             if self.path not in ("/search", "/search_batch"):
                 self._send_json({"error": "Not found"}, 404)
                 return
-            length = int(self.headers.get("Content-Length") or 0)
+            try:
+                length = int(self.headers.get("Content-Length") or 0)
+            except ValueError:
+                length = -1
+            if not 0 <= length <= MAX_BODY_BYTES:
+                # the body stays unread, so the connection cannot be reused
+                self.close_connection = True
+                if length < 0:
+                    self._send_json({"error": "Invalid Content-Length"}, 400)
+                else:
+                    self._send_json(
+                        {"error": f"Request body exceeds {MAX_BODY_BYTES} bytes"}, 413
+                    )
+                return
             raw = self.rfile.read(length) if length else b""
             if not raw:
                 data = None

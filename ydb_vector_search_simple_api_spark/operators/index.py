@@ -54,7 +54,7 @@ from . import tombstones
 from ..artifacts import session_memo
 from ..config import DEFAULT_K, DEFAULT_SEARCH_TOP_SIZE, sort_descending, validate_strategy
 from ..functions.distance import score_expr
-from .search import _order_cols
+from .search import _order_cols, _rank_per_query
 
 _CENTROIDS_FILE = "_ivf_centroids.json"
 
@@ -381,34 +381,6 @@ def ivf_range_search(
         .select("id", "score")
         .filter(F.col("score") >= F.lit(float(threshold)))
         .orderBy(*_order_cols("CosineSimilarity"))
-    )
-
-
-def _rank_per_query(
-    scored: DataFrame, strategy: str, k: int, round_digits: int | None = None
-) -> DataFrame:
-    """(query_id, id, score, rank): each query's top-``k`` rows of a
-    scored (query_id, id, score) join, ranked in the strategy's
-    direction with NULL scores last and an id tie-break — the one
-    window of every batch join. ``round_digits`` rounds the scores
-    first (``+ 0.0`` turns IEEE ``-0.0`` into ``0.0``)."""
-    from pyspark.sql import Window
-
-    if round_digits is not None:
-        scored = scored.withColumn(
-            "score", F.round(F.col("score"), round_digits) + F.lit(0.0)
-        )
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
-    )
-    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
-    return (
-        scored.select("query_id", "id", "score")
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
     )
 
 

@@ -107,6 +107,49 @@ def filtered_doc_ids(
     return docs.filter(_filter_cond(flt)).select("id")
 
 
+def exact_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    query_vec: Sequence[float],
+    k: int = DEFAULT_K,
+    strategy: str = "CosineSimilarity",
+    filter: Mapping[str, str] | None = None,
+    columns: ColumnMap | None = None,
+    round_digits: int | None = None,
+) -> DataFrame:
+    """The ranked (id, score) top-k of :func:`exact_search`, before any
+    metadata: the relation the serving engine collects. With a filter,
+    ``documents`` is read for the filter's id set only."""
+    validate_strategy(strategy)
+    if not isinstance(k, int) or k < 1:
+        raise ValueError("k must be a positive integer")  # app.py:368-370
+    m = columns or ColumnMap()
+    flt = _validate_filter(filter)
+
+    embs = load_embeddings(spark, sf_dir).selectExpr(
+        "vec_id AS id", f"`{m.embedding}` AS embedding"
+    )
+    if flt:
+        # semi-join the (pushed-down) filtered id set into the narrow
+        # vector table; Catalyst broadcasts it when small.
+        embs = embs.join(filtered_doc_ids(spark, sf_dir, flt, m), "id", "left_semi")
+
+    # pass the PLAIN vector so cosine folds the query norm to a literal
+    # driver-side (Catalyst won't constant-fold a HOF over a literal
+    # array, so a query column would re-fold the norm per row)
+    score = score_expr(strategy, "embedding", query_vec)
+    if round_digits is not None:
+        # + 0.0 canonicalizes IEEE -0.0 to 0.0 (oracle bit-parity)
+        score = F.round(score, round_digits) + F.lit(0.0)
+
+    return (
+        embs.withColumn("score", score)
+        .select("id", "score")
+        .orderBy(*_order_cols(strategy))
+        .limit(k)
+    )
+
+
 def exact_search(
     spark: SparkSession,
     sf_dir: str,
@@ -122,41 +165,15 @@ def exact_search(
     Returns columns ``id, title, vendor, description, score`` —
     the reference's SELECT list (``app.py:217-222``).
     """
-    validate_strategy(strategy)
-    if not isinstance(k, int) or k < 1:
-        raise ValueError("k must be a positive integer")  # app.py:368-370
     m = columns or ColumnMap()
-    flt = _validate_filter(filter)
-
-    embs = load_embeddings(spark, sf_dir).selectExpr(
-        "vec_id AS id", f"`{m.embedding}` AS embedding"
+    topk = exact_topk(
+        spark, sf_dir, query_vec, k, strategy, filter, m, round_digits
     )
     docs = load_documents(spark, sf_dir).selectExpr(
         f"`{m.id}` AS id",
         f"`{m.title}` AS title",
         f"`{m.vendor}` AS vendor",
         f"`{m.description}` AS description",
-    )
-
-    if flt:
-        # semi-join the (pushed-down) filtered id set into the narrow
-        # vector table; Catalyst broadcasts it when small.
-        ids = docs.filter(_filter_cond(flt)).select("id")
-        embs = embs.join(ids, "id", "left_semi")
-
-    # pass the PLAIN vector so cosine folds the query norm to a literal
-    # driver-side (Catalyst won't constant-fold a HOF over a literal
-    # array, so a query column would re-fold the norm per row)
-    score = score_expr(strategy, "embedding", query_vec)
-    if round_digits is not None:
-        # + 0.0 canonicalizes IEEE -0.0 to 0.0 (oracle bit-parity)
-        score = F.round(score, round_digits) + F.lit(0.0)
-
-    topk = (
-        embs.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
     )
     # metadata joins in AFTER top-k: the BROADCAST side is the k-row
     # top-k result, never the documents table — at 100 TB the corpus
@@ -167,6 +184,32 @@ def exact_search(
         "id", "title", "vendor", "description", "score"
     )
     return out.orderBy(*_order_cols(strategy))
+
+
+def _rank_per_query(
+    scored: DataFrame, strategy: str, k: int, round_digits: int | None = None
+) -> DataFrame:
+    """(query_id, id, score, rank): each query's top-``k`` rows of a
+    scored (query_id, id, score) join, ranked in the strategy's
+    direction with NULL scores last and an id tie-break — the one
+    window of every batch join. ``round_digits`` rounds the scores
+    first (``+ 0.0`` turns IEEE ``-0.0`` into ``0.0``)."""
+    if round_digits is not None:
+        scored = scored.withColumn(
+            "score", F.round(F.col("score"), round_digits) + F.lit(0.0)
+        )
+    direction = (
+        F.col("score").desc_nulls_last()
+        if sort_descending(strategy)
+        else F.col("score").asc_nulls_last()
+    )
+    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
+    return (
+        scored.select("query_id", "id", "score")
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "id", "score", "rank")
+    )
 
 
 def knn_join(
@@ -198,22 +241,10 @@ def knn_join(
     c = corpus_df.select(
         F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("embedding")
     )
-    score = score_expr(strategy, "embedding", "query_vec")
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    scored = c.crossJoin(F.broadcast(q)).withColumn("score", score)
-
-    direction = (
-        F.col("score").desc_nulls_last()
-        if sort_descending(strategy)
-        else F.col("score").asc_nulls_last()
+    scored = c.crossJoin(F.broadcast(q)).withColumn(
+        "score", score_expr(strategy, "embedding", "query_vec")
     )
-    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
+    return _rank_per_query(scored, strategy, k, round_digits)
 
 
 def _blas_block_scores(E, Q, strategy):  # noqa: ANN001 — numpy arrays
@@ -262,88 +293,122 @@ def knn_join_blocked(
 ) -> DataFrame:
     """Scale-path batch kNN join: NumPy-blocked scoring + two-level
     top-k. Same results as :func:`knn_join` (modulo last-ulp float
-    ties), radically less shuffle.
+    ties), radically less shuffle. The query side is collected to the
+    driver and handed to :func:`knn_join_blocked_arrays`."""
+    rows = queries_df.select(query_id, query_vec).collect()
+    return knn_join_blocked_arrays(
+        spark,
+        [r[0] for r in rows],
+        [r[1] for r in rows],
+        corpus_df.select(
+            F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("embedding")
+        ),
+        k=k,
+        strategy=strategy,
+        query_id_type=queries_df.schema[query_id].dataType,
+    )
 
-    Stage 1 (map-side, zero shuffle): the query matrix is broadcast;
-    each Arrow batch of the corpus is scored as ONE matrix product
-    (BLAS) and reduced to the local top-k per query — so only
-    ``n_queries x k`` candidate triples leave each partition instead
-    of ``n_queries x batch_rows``.
-    Stage 2: a ranked window over the surviving
-    ``n_queries x n_partitions x k`` candidates — the per-group
-    analogue of TakeOrderedAndProject.
+
+def knn_join_blocked_arrays(
+    spark: SparkSession,
+    query_ids: Sequence,
+    query_vecs: Sequence[Sequence[float] | None],
+    corpus: DataFrame,
+    k: int = DEFAULT_K,
+    strategy: str = "CosineSimilarity",
+    *,
+    query_id_type,
+) -> DataFrame:
+    """:func:`knn_join_blocked` over a query batch the driver already
+    holds: ``query_ids`` and their vectors, so the batch never enters
+    Spark. ``corpus`` has columns (id, embedding); ``query_id_type`` is
+    the Spark type of the output ``query_id``.
+
+    Stage 1 (map-side, zero shuffle): the queries are broadcast as one
+    float64 matrix per vector length; each Arrow batch of the corpus is
+    scored as ONE matrix product per length (BLAS) and reduced to the
+    local top-k per query — so only ``n_queries x k`` candidate triples
+    leave each batch instead of ``n_queries x batch_rows``. Stage 2:
+    the ranked window of :func:`_rank_per_query` over the survivors.
 
     Output: (query_id, id, score, rank), score as float64 from BLAS
-    (summation order differs from the sequential-fold Column
-    expressions in the last ulp — hence no SQL oracle; equivalence to
-    :func:`knn_join` is asserted in tests). Id column types follow the
-    input schemas; zero-norm vectors under the cosine strategies score
-    NULL (sorted last), matching :func:`knn_join`.
-    """
+    (summation order differs from the sequential-fold SQL of
+    :func:`knn_join` in the last ulp — hence no SQL oracle; equivalence
+    is asserted in tests). As in :func:`knn_join`, a score is NULL
+    where it is undefined: a vector pair of different lengths, a NULL
+    corpus vector or element, and a zero norm under the cosine
+    strategies; NULLs rank last and ties rank by id. A NULL or empty
+    query vector gets no rows."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
     validate_strategy(strategy)
-    q_rows = (
-        queries_df.select(
-            F.col(query_id).alias("qid"), F.col(query_vec).alias("qv")
-        )
-        .collect()
-    )
-    qids = np.array([r.qid for r in q_rows])
-    Q = np.array([r.qv for r in q_rows], dtype=np.float64)  # (nq, d)
-    desc = sort_descending(strategy)
-    bc = spark.sparkContext.broadcast((qids, Q, strategy, desc, k))
-
-    import pyspark.sql.types as T
-
+    by_len: dict[int, list[int]] = {}
+    for qi, v in enumerate(query_vecs):
+        if v is not None and len(v):
+            by_len.setdefault(len(v), []).append(qi)
+    groups = [
+        (d, np.asarray(q), np.array([query_vecs[i] for i in q], dtype=np.float64))
+        for d, q in by_len.items()
+    ]
     out_schema = T.StructType(
         [
-            T.StructField("query_id", queries_df.schema[query_id].dataType),
-            T.StructField("id", corpus_df.schema[corpus_id].dataType),
+            T.StructField("query_id", query_id_type),
+            T.StructField("id", corpus.schema["id"].dataType),
             T.StructField("score", T.DoubleType()),
         ]
     )
+    arrow_types = [to_arrow_type(f.dataType) for f in out_schema]
+    desc = sort_descending(strategy)
+    bc = spark.sparkContext.broadcast(
+        (np.asarray(query_ids), groups, strategy, desc, k)
+    )
 
     def score_block(batches):
-        qids_, Q_, strat, desc_, k_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
+        qids_, groups_, strat, desc_, k_ = bc.value
+        for batch in batches:
+            n = batch.num_rows
+            if not n or not groups_:
                 continue
-            ids = pdf["id"].to_numpy()
-            E = np.array(pdf["embedding"].tolist(), dtype=np.float64)  # (m, d)
-            S = _blas_block_scores(E, Q_, strat)
-            m = len(ids)
-            kk = min(k_, m)
-            order = np.argsort(-S if desc_ else S, axis=0, kind="stable")[:kk]
-            rows = []
-            for j, qid in enumerate(qids_):
-                sel = order[:, j]
-                # qid keeps its native type (int, string, ...) — the
-                # output schema is derived from the input schemas
-                rows.extend(zip([qid] * kk, ids[sel].tolist(), S[sel, j].tolist()))
-            yield pd.DataFrame(rows, columns=["query_id", "id", "score"])
+            # rows in id order, so a stable sort breaks score ties by id
+            ids = batch.column("id").to_numpy(zero_copy_only=False)
+            perm = np.argsort(ids, kind="stable")
+            ids = ids[perm]
+            emb = batch.column("embedding")
+            offs = emb.offsets.to_numpy()
+            starts = offs[:-1][perm]
+            null = emb.is_null().to_numpy(zero_copy_only=False)
+            lens = np.where(null, -1, np.diff(offs))[perm]
+            vals = emb.values.to_numpy(zero_copy_only=False)
+            vals = vals.astype(np.float64, copy=False)
+            kk = min(k_, n)
+            out_q, out_id, out_s = [], [], []
+            for d, q_idx, Q in groups_:
+                rows = np.flatnonzero(lens == d)
+                S = np.full((n, len(q_idx)), np.nan)
+                if len(rows):
+                    E = vals[starts[rows, None] + np.arange(d)]
+                    S[rows] = _blas_block_scores(E, Q, strat)
+                order = np.argsort(-S if desc_ else S, axis=0, kind="stable")[:kk]
+                out_q.append(np.repeat(qids_[q_idx], kk))
+                out_id.append(ids[order.T.ravel()])
+                out_s.append(np.take_along_axis(S, order, axis=0).T.ravel())
+            score = np.concatenate(out_s)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(out_q), type=arrow_types[0]),
+                    pa.array(np.concatenate(out_id), type=arrow_types[1]),
+                    pa.array(score, type=arrow_types[2], mask=np.isnan(score)),
+                ],
+                names=out_schema.fieldNames(),
+            )
 
-    corpus = corpus_df.select(
-        F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("embedding")
-    )
-    candidates = corpus.mapInPandas(score_block, schema=out_schema).withColumn(
-        # Arrow carries NaN, not NULL, through a float64 column —
-        # convert so downstream NULL semantics match knn_join's
-        "score",
-        F.when(F.isnan(F.col("score")), F.lit(None).cast("double")).otherwise(
-            F.col("score")
-        ),
-    )
-
-    direction = (
-        F.col("score").desc_nulls_last() if desc else F.col("score").asc_nulls_last()
-    )
-    w = Window.partitionBy("query_id").orderBy(direction, F.col("id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
+    return _rank_per_query(
+        corpus.select("id", "embedding").mapInArrow(score_block, out_schema),
+        strategy,
+        k,
     )
 
 

@@ -61,14 +61,13 @@ from pyspark.sql import types as T
 from . import tombstones
 from .index import (
     _collect_queries,
-    _rank_per_query,
     _read_clusters,
     _routed_blocked_join,
     _stored_schema,
 )
 from ..config import DEFAULT_K, validate_strategy
 from ..functions.distance import score_expr
-from .search import _order_cols
+from .search import _order_cols, _rank_per_query
 
 _META_FILE = "_kmeans_tree.json"
 

@@ -9,17 +9,22 @@ is reconstructed from the driver testdata ``documents`` +
 
 Scale note: ``load_embeddings`` / ``load_documents`` return raw scans
 so callers can defer/elide the join — the hot vector-search path scores
-the narrow ``embeddings`` table only and joins metadata AFTER top-k
-(k rows, broadcast), rather than dragging text columns through the
-scan. See ``operators/search.py``.
+the narrow ``embeddings`` table only and attaches metadata AFTER top-k
+(:func:`doc_metadata`, a driver-side point read of the k ids), rather
+than dragging text columns through the scan. See ``operators/search.py``.
 """
 
 from __future__ import annotations
 
+import bisect
+import functools
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..artifacts import listing
+from ..artifacts import listing, persisted
 from ..config import ColumnMap
 
 TABLES = (
@@ -114,6 +119,123 @@ def load_store_df(
         F.col(m.description).alias("description"),
         F.col(m.embedding).alias("embedding"),
     )
+
+
+#: the metadata columns a result row carries, under the reference's names
+META_COLUMNS = ("id", "title", "vendor", "description")
+#: rows per row group of the id-clustered metadata copy: a lookup reads
+#: whole row groups, about one per requested id
+META_ROW_GROUP_ROWS = 1024
+
+
+def _write_doc_metadata(
+    spark: SparkSession, sf_dir: str, names: tuple[str, ...], out: str
+) -> None:
+    """The metadata columns of ``documents``, renamed from the physical
+    ``names`` to :data:`META_COLUMNS`, range-partitioned and sorted by
+    id in row groups of at most :data:`META_ROW_GROUP_ROWS` rows, so the
+    id statistics of the row groups bound disjoint id ranges."""
+    (
+        load_documents(spark, sf_dir)
+        .selectExpr(*(f"`{c}` AS `{n}`" for c, n in zip(names, META_COLUMNS)))
+        .repartitionByRange("id")
+        .sortWithinPartitions("id")
+        .write.option("parquet.block.row.count.limit", META_ROW_GROUP_ROWS)
+        .parquet(out)
+    )
+
+
+class _MetaLayout:
+    """The row groups of one metadata copy by id range, from the part
+    files' footers, read once."""
+
+    def __init__(self, path: str):
+        import pyarrow.parquet as pq
+
+        self.files = []  # (part file, its footer)
+        ranges = []  # (min id, max id, file index, row group)
+        self.unbounded = []  # (file index, row group) without id statistics
+        for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+            md = pq.read_metadata(f)
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(0).statistics
+                if st is not None and st.has_min_max:
+                    ranges.append((st.min, st.max, len(self.files), g))
+                else:
+                    self.unbounded.append((len(self.files), g))
+            self.files.append((f, md))
+        ranges.sort()
+        self.lo = [r[0] for r in ranges]
+        self.hi = [r[1] for r in ranges]
+        self.at = [r[2:] for r in ranges]
+
+    def lookup(self, ids: list) -> dict:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        groups = set(self.unbounded)
+        for i in ids:
+            # the ranges are sorted and disjoint, except where one id's
+            # rows span a row-group boundary
+            j = bisect.bisect_right(self.lo, i) - 1
+            while j >= 0 and self.hi[j] >= i:
+                groups.add(self.at[j])
+                j -= 1
+        by_file: dict[int, list[int]] = {}
+        for fi, g in sorted(groups):
+            by_file.setdefault(fi, []).append(g)
+        out: dict = {}
+        for fi, gs in by_file.items():
+            f, md = self.files[fi]
+            with pq.ParquetFile(f, metadata=md) as pf:
+                t = pf.read_row_groups(gs, columns=list(META_COLUMNS))
+            t = t.filter(pc.is_in(t["id"], pa.array(ids, t.schema.field("id").type)))
+            for row in zip(*(t[c].to_pylist() for c in META_COLUMNS)):
+                out.setdefault(row[0], []).append(row[1:])
+        return out
+
+
+#: (documents path, physical column names) -> (artifact path, layout):
+#: one live layout per table and column map
+_META: dict[tuple, tuple[str, _MetaLayout]] = {}
+
+
+def doc_metadata(
+    spark: SparkSession, sf_dir: str, columns: ColumnMap | None, ids
+) -> dict:
+    """``{id: [(title, vendor, description), ...]}`` for the ``ids``
+    that have ``documents`` rows: one tuple per row, so an id without a
+    row is absent and an id with two rows has two tuples.
+
+    Reads an id-clustered copy of the four metadata columns (physical
+    names per ``columns``), built by Spark on the first lookup through
+    :func:`~..artifacts.persisted` and keyed by the ``documents``
+    listing, so a rewritten table gets a new copy. A lookup runs on the
+    driver and reads only the row groups whose id range holds a
+    requested id; it launches no Spark job once the copy exists."""
+    ids = sorted({i for i in ids if i is not None})
+    if not ids:
+        return {}
+    m = columns or ColumnMap()
+    names = (m.id, m.title, m.vendor, m.description)
+    docs = table_path(sf_dir, "documents")
+    slot = (docs, names)
+
+    def load(path: str) -> _MetaLayout:
+        hit = _META.get(slot)
+        if hit is None or hit[0] != path:
+            hit = _META[slot] = (path, _MetaLayout(path))
+        return hit[1]
+
+    layout = persisted(
+        "doc_meta",
+        docs,
+        {"columns": list(names)},
+        functools.partial(_write_doc_metadata, spark, sf_dir, names),
+        load,
+    )
+    return layout.lookup(ids)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
