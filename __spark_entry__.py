@@ -75,7 +75,11 @@ from ydb_vector_search_simple_api_spark.operators import hist_store as histstore
 from ydb_vector_search_simple_api_spark.operators import index as ivf
 from ydb_vector_search_simple_api_spark.operators import tree as kmt
 from ydb_vector_search_simple_api_spark.operators import search as search_mod
-from ydb_vector_search_simple_api_spark.operators.search import exact_search, knn_join
+from ydb_vector_search_simple_api_spark.operators.search import (
+    exact_search,
+    knn_join,
+    shortlist_search,
+)
 from ydb_vector_search_simple_api_spark.sources.store import load_documents, load_embeddings
 from ydb_vector_search_simple_api_spark.streaming import events as streaming_events
 from ydb_vector_search_simple_api_spark.streaming import curation_ingest as streaming_curing
@@ -145,21 +149,6 @@ def _sq_index(spark: SparkSession, sf_dir: str):
     ), sq_mod.load_sq_index)
 
 
-def _mk_sq_rerank(strategy: str, k: int, shortlist: int | None):
-    """Int8 dequantized-approx shortlist -> exact rerank
-    (operators/sq.py); shortlist=None keeps every row => exact
-    (strong oracle)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return sq_mod.sq_search_rerank(
-            spark, _sq_index(spark, sf_dir), _vectors(spark, sf_dir),
-            _query_vec(spark, sf_dir), k=k, strategy=strategy,
-            shortlist=shortlist, round_digits=ROUND,
-        )
-
-    return run
-
-
 def _bq_index(spark: SparkSession, sf_dir: str):
     return persisted("bq", sf_dir, {}, partial(
         bq_mod.build_bq_index, spark, _vectors(spark, sf_dir)
@@ -198,20 +187,6 @@ def _bpe_merges(spark: SparkSession, sf_dir: str, n_merges: int = 10) -> list:
     ])
 
 
-def _mk_bq_rerank(strategy: str, k: int, shortlist: int | None):
-    """Sign-bit Hamming shortlist -> exact rerank (operators/bq.py);
-    shortlist=None keeps every row => exact (strong oracle)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return bq_mod.bq_search_rerank(
-            spark, _bq_index(spark, sf_dir), _vectors(spark, sf_dir),
-            _query_vec(spark, sf_dir), k=k, strategy=strategy,
-            shortlist=shortlist, round_digits=ROUND,
-        )
-
-    return run
-
-
 def _ivfbq_index(spark: SparkSession, sf_dir: str):
     ivf_idx = _ivf_index(spark, sf_dir)
     return persisted("ivfbq", sf_dir, {"ivf": ivf_idx.path}, partial(
@@ -219,33 +194,11 @@ def _ivfbq_index(spark: SparkSession, sf_dir: str):
     ), bq_mod.load_bq_index)
 
 
-def _mk_ivfbq(strategy: str, k: int, width: int, shortlist: int | None):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return bq_mod.ivfbq_search(
-            spark, _ivf_index(spark, sf_dir), _ivfbq_index(spark, sf_dir),
-            _query_vec(spark, sf_dir), k=k, strategy=strategy,
-            search_top_size=width, shortlist=shortlist, round_digits=ROUND,
-        )
-
-    return run
-
-
 def _ivfsq_index(spark: SparkSession, sf_dir: str):
     ivf_idx = _ivf_index(spark, sf_dir)
     return persisted("ivfsq", sf_dir, {"ivf": ivf_idx.path}, partial(
         sq_mod.build_ivfsq_index, spark, ivf_idx
     ), sq_mod.load_sq_index)
-
-
-def _mk_ivfsq(strategy: str, k: int, width: int, shortlist: int | None):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return sq_mod.ivfsq_search(
-            spark, _ivf_index(spark, sf_dir), _ivfsq_index(spark, sf_dir),
-            _query_vec(spark, sf_dir), k=k, strategy=strategy,
-            search_top_size=width, shortlist=shortlist, round_digits=ROUND,
-        )
-
-    return run
 
 
 def _mk_gann(strategy: str, k: int, beam: int | None):
@@ -294,34 +247,10 @@ def _opq_index(spark: SparkSession, sf_dir: str):
     ), opq_mod.load_opq_index)
 
 
-def _opq_rerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    embs = _vectors(spark, sf_dir)
-    return opq_mod.opq_search_rerank(
-        spark, _opq_index(spark, sf_dir), embs, _query_vec(spark, sf_dir), k=10,
-        strategy="CosineSimilarity", shortlist=embs.count(),
-        round_digits=ROUND,
-    )
-
-
-def _mk_pq_rerank(strategy: str, k: int, shortlist: int | None):
-    """shortlist=None -> full corpus (exact, strong oracle)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        embs = _vectors(spark, sf_dir)
-        n = shortlist if shortlist is not None else embs.count()
-        return pq_mod.pq_search_rerank(
-            spark, _pq_index(spark, sf_dir), embs, _query_vec(spark, sf_dir),
-            k=k, strategy=strategy, shortlist=n, round_digits=ROUND,
-        )
-
-    return run
-
-
 def _mk_pq_adc(strategy: str, k: int):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return pq_mod.pq_adc_topk(
-            spark, _pq_index(spark, sf_dir), _query_vec(spark, sf_dir), k=k,
-            strategy=strategy,
+        return _pq_index(spark, sf_dir).shortlist(
+            spark, _query_vec(spark, sf_dir), k, strategy
         )
 
     return run
@@ -348,21 +277,6 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     ), pq_mod.load_pq_index)
 
 
-def _mk_ivfpq(strategy: str, k: int, width: int | None, rerank: int | None):
-    """width=None -> all clusters. rerank: shortlist size for the
-    full-precision rescore (None = pure ADC)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ivf_idx = _ivf_index(spark, sf_dir)
-        return pq_mod.ivfpq_search(
-            spark, ivf_idx, _ivfpq_index(spark, sf_dir), _query_vec(spark, sf_dir),
-            k=k, strategy=strategy, search_top_size=width or ivf_idx.n_clusters,
-            rerank=rerank,
-        )
-
-    return run
-
-
 def _ivfopq_index(spark: SparkSession, sf_dir: str):
     ivf_idx = _ivf_index(spark, sf_dir)
     return persisted("ivfopq", sf_dir, {**_PQ_PARAMS, "ivf": ivf_idx.path}, partial(
@@ -370,14 +284,24 @@ def _ivfopq_index(spark: SparkSession, sf_dir: str):
     ), opq_mod.load_opq_index)
 
 
-def _ivfopq_rerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ivf_idx = _ivf_index(spark, sf_dir)
-    n = load_embeddings(spark, sf_dir).count()
-    return opq_mod.ivfopq_search(
-        spark, ivf_idx, _ivfopq_index(spark, sf_dir), _query_vec(spark, sf_dir),
-        k=10, strategy="CosineSimilarity",
-        search_top_size=ivf_idx.n_clusters, rerank=n, round_digits=ROUND,
-    )
+def _mk_codes(layout, shortlist: int | None, width: int | None, round_digits):
+    """Top-10 cosine through a code layout's shortlist and the exact
+    rerank (``search.shortlist_search``). ``layout(spark, sf_dir)`` is
+    the index; ``shortlist=None`` keeps every row. ``width`` set routes
+    through ``_ivf_index``'s nearest clusters (an IVF-composed layout;
+    IVF_CLUSTERS = full width); None reranks the flat store vectors."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ivf_idx = None if width is None else _ivf_index(spark, sf_dir)
+        return shortlist_search(
+            spark, layout(spark, sf_dir),
+            _vectors(spark, sf_dir) if ivf_idx is None else None,
+            _query_vec(spark, sf_dir), k=10, strategy="CosineSimilarity",
+            shortlist=shortlist, round_digits=round_digits,
+            ivf_index=ivf_idx, search_top_size=width,
+        )
+
+    return run
 
 
 def _prefixdim_rerank_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -877,7 +801,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["repetition_signals"] = curation.repetition_signals
     # OPQ learned-rotation PQ (Ge et al. 2013) at full shortlist ==
     # exact
-    q["opq_rerank_full"] = _opq_rerank_full
+    q["opq_rerank_full"] = _mk_codes(_opq_index, None, None, ROUND)
     # stream-stream interval join (purchases x trailing clicks, both
     # sides watermarked => evictable join state)
     q["stream_interval_join"] = lambda s, d: streaming_events.purchase_click_interval_join_stream(
@@ -1102,7 +1026,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # same shortlist->exact-rerank family; this one's first pass is the
     # pure-codegen sign-bit Hamming scan, operators/bq.py — full
     # shortlist == exact
-    q["bq_rerank_full"] = _mk_bq_rerank("CosineSimilarity", k=10, shortlist=None)
+    q["bq_rerank_full"] = _mk_codes(_bq_index, None, None, ROUND)
     # batch join through the sign-bit domain; full shortlist == the
     # exact kNN join
     q["bq_knn_join_full"] = _mk_bq_knn_join(
@@ -1485,16 +1409,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # IVFADC pruned to 2 of 8 clusters with a 64-candidate rerank
     # (approximate; exactness at full width/rerank and the pruned-plan
     # shape pinned in tests/test_pq.py)
-    q["ivfpq_topk_width2"] = _mk_ivfpq(
-        "CosineSimilarity", k=10, width=2, rerank=64
-    )
+    q["ivfpq_topk_width2"] = _mk_codes(_ivfpq_index, 64, 2, None)
     # sign-bit Hamming shortlist at 1/5 of the corpus, exact rerank
     # (approximate; recall contract pinned in tests/test_bq.py)
-    q["bq_topk_shortlist"] = _mk_bq_rerank("CosineSimilarity", k=10, shortlist=100)
+    q["bq_topk_shortlist"] = _mk_codes(_bq_index, 100, None, ROUND)
     # IVFxBQ: cluster-directory pruning x 32x bit compression (the BQ
     # analogue of IVFADC; exactness at full width + pruned plan shape
     # pinned in tests/test_bq.py)
-    q["ivfbq_topk_width2"] = _mk_ivfbq("CosineSimilarity", k=10, width=2, shortlist=64)
+    q["ivfbq_topk_width2"] = _mk_codes(_ivfbq_index, 64, 2, ROUND)
     # ntile deciles over the aggregated customer table
     q["customer_revenue_deciles"] = relational.customer_revenue_deciles
     # graph ANN (5th index shape: k-NN graph + beam search). Full beam
@@ -1825,11 +1747,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["source_token_budget"] = curation.source_token_budget
     q["pii_redaction"] = curation.pii_redaction
     q["events_hourly_stream"] = streaming_events.hourly_event_counts_stream
-    q["pq_rerank_full"] = _mk_pq_rerank("CosineSimilarity", k=10, shortlist=None)
-    q["ivfsq_rerank_full"] = _mk_ivfsq(
-        "CosineSimilarity", k=10, width=IVF_CLUSTERS, shortlist=None
-    )
-    q["sq_rerank_full"] = _mk_sq_rerank("CosineSimilarity", k=10, shortlist=None)
+    q["pq_rerank_full"] = _mk_codes(_pq_index, None, None, ROUND)
+    q["ivfsq_rerank_full"] = _mk_codes(_ivfsq_index, None, IVF_CLUSTERS, ROUND)
+    q["sq_rerank_full"] = _mk_codes(_sq_index, None, None, ROUND)
     q["graphann_rerank_full"] = _mk_gann("CosineSimilarity", k=10, beam=None)
     q["domain_profile"] = lambda s, d: web_mod.domain_profile(s, d)
     # dedup extended to the IMAGE modality: dHash over the vendored
@@ -1945,7 +1865,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # first/second-moment cells persisted, batch folds add integers —
     # the store answers the covariance identically, shared oracle
     q["covariance_store"] = lambda s, d: embstats_mod.covariance_store(s, d)
-    q["ivfopq_rerank_full"] = _ivfopq_rerank_full
+    q["ivfopq_rerank_full"] = _mk_codes(_ivfopq_index, None, IVF_CLUSTERS, ROUND)
     q["tfidf_related_docs"] = lambda s, d: sparse_sim_mod.tfidf_related_docs(
         load_documents(s, d), n=3, k=3
     )

@@ -8,7 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_simple_api_spark.operators import bq
-from ydb_vector_search_simple_api_spark.operators.search import exact_search
+from ydb_vector_search_simple_api_spark.operators.search import (
+    exact_search,
+    shortlist_search,
+)
 from ydb_vector_search_simple_api_spark.plans.checks import formatted_plan, uses_take_ordered
 
 from conftest import SF_SMALL
@@ -56,7 +59,7 @@ def test_spark_hamming_matches_numpy(spark, bq_index):
     q = _qvec(spark)
     got = {
         r.id: r.hamming
-        for r in bq.bq_shortlist(spark, bq_index, q, shortlist=500).collect()
+        for r in bq_index.shortlist(spark, q, 500, "CosineSimilarity").collect()
     }
     import pyarrow.parquet as pq_
 
@@ -69,7 +72,7 @@ def test_spark_hamming_matches_numpy(spark, bq_index):
 
 def test_full_shortlist_is_exact(spark, bq_index):
     q = _qvec(spark)
-    got = bq.bq_search_rerank(
+    got = shortlist_search(
         spark, bq_index, _src(spark), q, k=10, shortlist=None, round_digits=6
     ).collect()
     want = [
@@ -82,7 +85,7 @@ def test_full_shortlist_is_exact(spark, bq_index):
 def test_full_shortlist_exact_all_strategies(spark, bq_index):
     q = _qvec(spark)
     for strategy in ("EuclideanDistance", "ManhattanDistance", "InnerProductSimilarity"):
-        got = bq.bq_search_rerank(
+        got = shortlist_search(
             spark, bq_index, _src(spark), q, k=5,
             strategy=strategy, shortlist=None, round_digits=6,
         ).collect()
@@ -95,7 +98,7 @@ def test_full_shortlist_exact_all_strategies(spark, bq_index):
 def _recall(spark, bq_index, q, shortlist, k=10):
     got = {
         r.id
-        for r in bq.bq_search_rerank(
+        for r in shortlist_search(
             spark, bq_index, _src(spark), q, k=k, shortlist=shortlist
         ).collect()
     }
@@ -117,7 +120,7 @@ def test_pruned_shortlist_recall(spark, bq_index):
 
 def test_hamming_scan_is_pure_codegen(spark, bq_index):
     q = _qvec(spark)
-    df = bq.bq_shortlist(spark, bq_index, q, shortlist=50)
+    df = bq_index.shortlist(spark, q, 50, "CosineSimilarity")
     assert uses_take_ordered(df)
     plan = formatted_plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -125,7 +128,7 @@ def test_hamming_scan_is_pure_codegen(spark, bq_index):
 
 def test_dim_mismatch_raises(spark, bq_index):
     with pytest.raises(ValueError):
-        bq.bq_shortlist(spark, bq_index, [1.0, 2.0], shortlist=5)
+        shortlist_search(spark, bq_index, _src(spark), [1.0, 2.0], k=5)
 
 
 def test_compression_ratio(spark, bq_index):
@@ -175,7 +178,7 @@ def test_bq_upsert_and_compact(spark, tmp_path):
     idx = bq.bq_upsert(spark, idx, tail)
     assert idx.n_rows == 500
     q = _qvec(spark)
-    got = bq.bq_search_rerank(
+    got = shortlist_search(
         spark, idx, src, q, k=10, shortlist=None, round_digits=6
     ).collect()
     want = exact_search(spark, SF_SMALL, q, k=10, round_digits=6).collect()
@@ -186,7 +189,7 @@ def test_bq_upsert_and_compact(spark, tmp_path):
     out = str(tmp_path / "bq_gen2")
     idx3 = bq.bq_compact(spark, idx2, out, n_files=1, dedup_ids=True)
     assert idx3.n_rows == 500
-    got2 = bq.bq_search_rerank(
+    got2 = shortlist_search(
         spark, idx3, src, q, k=10, shortlist=None, round_digits=6
     ).collect()
     assert [(r.id, r.score) for r in got2] == [(r.id, r.score) for r in want]
@@ -204,15 +207,15 @@ def test_ivfbq_exact_at_full_width_and_pruned_plan(spark, tmp_path):
     bidx = bq.build_ivfbq_index(spark, ivf_idx, out)
     assert bidx.n_rows == 500
     q = _qvec(spark)
-    got = bq.ivfbq_search(
-        spark, ivf_idx, bidx, q, k=10,
+    got = shortlist_search(
+        spark, bidx, None, q, ivf_index=ivf_idx, k=10,
         search_top_size=ivf_idx.n_clusters, shortlist=None, round_digits=6,
     ).collect()
     want = exact_search(spark, SF_SMALL, q, k=10, round_digits=6).collect()
     assert [(r.id, r.score) for r in got] == [(r.id, r.score) for r in want]
     # pruned width: planner-level partition pruning on cluster_id
-    pruned = bq.ivfbq_search(
-        spark, ivf_idx, bidx, q, k=10, search_top_size=2, shortlist=64
+    pruned = shortlist_search(
+        spark, bidx, None, q, ivf_index=ivf_idx, k=10, search_top_size=2, shortlist=64
     )
     pf = partition_filters(pruned)
     assert "cluster_id" in pf
@@ -241,8 +244,8 @@ def test_partitioned_layout_maintenance_guards(spark, tmp_path):
     assert c.partition_col == "cluster_id"
     assert len(glob.glob(f"{gen2}/bits/cluster_id=*")) == ivf_idx.n_clusters
     q = _qvec(spark)
-    got = bq.ivfbq_search(
-        spark, ivf_idx, c, q, k=10,
+    got = shortlist_search(
+        spark, c, None, q, ivf_index=ivf_idx, k=10,
         search_top_size=ivf_idx.n_clusters, shortlist=None, round_digits=6,
     ).collect()
     want = exact_search(spark, SF_SMALL, q, k=10, round_digits=6).collect()

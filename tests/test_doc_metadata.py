@@ -103,9 +103,9 @@ def _ivf_engine(spark, sf, tmp_path_factory):
 
 def test_search_replies_equal_the_metadata_join(spark, qvec, odd, tmp_path_factory):
     """/search on the exact and the IVF engine: a top-k id without a
-    documents row is dropped, a duplicated one gives two rows, the
-    indexed reply keeps at most k rows and the exact one keeps every
-    row of its k ids (``exact_search``'s library form)."""
+    documents row is dropped, a duplicated one gives two rows, and
+    every reply keeps at most k rows (here the exact one keeps all of
+    ``exact_search``'s rows: one id dropped, one doubled)."""
     sf, missing, dup = odd
     exact_eng = api.VectorSearchEngine(spark, sf)
     got, _ = exact_eng.search(qvec, k=K)
@@ -129,6 +129,20 @@ def test_search_replies_equal_the_metadata_join(spark, qvec, odd, tmp_path_facto
         ]
         _assert_same(got, want)
         assert len(got) <= K
+
+
+def test_search_replies_hold_k_rows_when_an_id_has_two_documents(
+    spark, qvec, tmp_path_factory
+):
+    """One top-k id with two documents rows and none missing: the exact
+    and the IVF engine both reply with exactly k rows."""
+    top = [r.id for r in exact_search(spark, SF_SMALL, qvec, k=K).collect()]
+    docs = pq.read_table(f"{SF_SMALL}/documents.parquet")
+    extra = docs.filter(pc.equal(docs["doc_id"], top[2]))
+    sf = _write_sf(tmp_path_factory.mktemp("dup_only"), pa.concat_tables([docs, extra]))
+    for engine in (api.VectorSearchEngine(spark, sf), _ivf_engine(spark, sf, tmp_path_factory)):
+        got, _ = engine.search(qvec, k=K, search_top_size=4)
+        assert [r["id"] for r in got] == top[:3] + top[2:4]
 
 
 def test_hybrid_and_batch_replies_equal_the_metadata_join(

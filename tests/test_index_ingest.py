@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from conftest import SF_SMALL
 from ydb_vector_search_simple_api_spark.operators import index as ivf
+from ydb_vector_search_simple_api_spark.operators.search import shortlist_search
 from ydb_vector_search_simple_api_spark.streaming import index_ingest
 from ydb_vector_search_simple_api_spark.sources.store import load_embeddings
 
@@ -109,8 +110,9 @@ def test_monitor_rebuild_trigger():
 
 def test_stream_ivfpq_ingest_keeps_layouts_in_lockstep(spark, tmp_path):
     """One stream feeds both serving layouts: full-precision IVF rows
-    and IVFADC codes arrive together, and ivfpq_search over the
-    upserted pair at full width/rerank stays exact."""
+    and IVFADC codes arrive together, and the IVF-composed
+    shortlist_search over the upserted pair at full width/rerank stays
+    exact."""
     from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
 
     embs = load_embeddings(spark, SF_SMALL).select(
@@ -147,9 +149,10 @@ def test_stream_ivfpq_ingest_keeps_layouts_in_lockstep(spark, tmp_path):
     qvec = [float(x) for x in qrow.embedding]
     got = [
         (r.id, round(r.score, 6))
-        for r in pq_mod.ivfpq_search(
-            spark, ivf_idx, pq_idx, qvec, k=10, strategy="CosineSimilarity",
-            search_top_size=4, rerank=n_total, round_digits=6,
+        for r in shortlist_search(
+            spark, pq_idx, None, qvec, k=10, strategy="CosineSimilarity",
+            shortlist=n_total, round_digits=6, ivf_index=ivf_idx,
+            search_top_size=4,
         ).collect()
     ]
     from ydb_vector_search_simple_api_spark.operators.search import knn_join
@@ -233,7 +236,7 @@ def test_stream_bq_ingest_appends_and_search_is_exact(spark, tmp_path):
     assert idx2.n_rows == 500
     row = embs.filter(F.col("id") == 0).first()
     qv = [float(x) for x in row.embedding]
-    got = bq.bq_search_rerank(
+    got = shortlist_search(
         spark, idx2, embs, qv, k=10, shortlist=None, round_digits=6
     ).collect()
     want = exact_search(spark, SF_SMALL, qv, k=10, round_digits=6).collect()
@@ -372,7 +375,7 @@ def test_stream_sq_ingest_appends_and_search_is_exact(spark, tmp_path):
     assert idx2.n_rows == 500
     row = embs.filter(F.col("id") == 0).first()
     qv = [float(x) for x in row.embedding]
-    got = sq.sq_search_rerank(
+    got = shortlist_search(
         spark, idx2, embs, qv, k=10, shortlist=None, round_digits=6
     ).collect()
     want = exact_search(spark, SF_SMALL, qv, k=10, round_digits=6).collect()

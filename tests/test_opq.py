@@ -13,7 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_simple_api_spark.operators import opq, pq
-from ydb_vector_search_simple_api_spark.operators.search import exact_search
+from ydb_vector_search_simple_api_spark.operators.search import (
+    exact_search,
+    shortlist_search,
+)
 from ydb_vector_search_simple_api_spark.sources.store import load_embeddings
 
 SF = "/root/testdata/sf0.001"
@@ -90,7 +93,7 @@ def test_full_shortlist_rerank_is_exact(spark):
         )
         n = _corpus(spark).count()
         q = _qvec(spark)
-        got = opq.opq_search_rerank(
+        got = shortlist_search(
             spark, idx, _corpus(spark), q, k=10, shortlist=n,
             round_digits=ROUND,
         ).collect()
@@ -104,7 +107,7 @@ def test_full_shortlist_rerank_is_exact(spark):
         # reload round-trip serves identically
         idx2 = opq.load_opq_index(out)
         assert np.allclose(idx2.rotation, idx.rotation)
-        got2 = opq.opq_search_rerank(
+        got2 = shortlist_search(
             spark, idx2, _corpus(spark), q, k=10, shortlist=n,
             round_digits=ROUND,
         ).collect()
@@ -156,7 +159,7 @@ def test_pruned_shortlist_recall(spark):
                 round_digits=ROUND,
             ).collect()
         }
-        got = opq.opq_search_rerank(
+        got = shortlist_search(
             spark, idx, _corpus(spark), q, k=10, shortlist=64,
             round_digits=ROUND,
         ).collect()
@@ -180,16 +183,16 @@ def test_ivfopq_full_width_full_rerank_is_exact(spark, tmp_path):
     assert idx.pq.partition_col == "cluster_id"
     q = _qvec(spark)
     n = embs.count()
-    got = opq.ivfopq_search(
-        spark, ivf, idx, q, k=10, search_top_size=ivf.n_clusters,
-        rerank=n, round_digits=ROUND,
+    got = shortlist_search(
+        spark, idx, None, q, k=10, shortlist=n, round_digits=ROUND,
+        ivf_index=ivf, search_top_size=ivf.n_clusters,
     ).collect()
     want = exact_search(
         spark, SF, q, k=10, strategy="CosineSimilarity", round_digits=ROUND
     ).collect()
     assert [(r.id, r.score) for r in got] == [(r.id, r.score) for r in want]
-    pruned = opq.ivfopq_search(
-        spark, ivf, idx, q, k=10, search_top_size=2, rerank=64,
-        round_digits=ROUND,
+    pruned = shortlist_search(
+        spark, idx, None, q, k=10, shortlist=64, round_digits=ROUND,
+        ivf_index=ivf, search_top_size=2,
     ).collect()
     assert len(pruned) == 10

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_simple_api_spark.operators import pq
+from ydb_vector_search_simple_api_spark.operators.search import shortlist_search
 from ydb_vector_search_simple_api_spark.functions.distance import score_expr
 from ydb_vector_search_simple_api_spark.sources.store import load_embeddings
 
@@ -73,7 +74,7 @@ def test_codes_are_m_bytes(spark, pq_norm):
 
 def test_rerank_full_is_exact_cosine(spark, pq_norm):
     n = _corpus(spark).count()
-    got = pq.pq_search_rerank(
+    got = shortlist_search(
         spark, pq_norm, _corpus(spark), _qvec(spark), k=10,
         strategy="CosineSimilarity", shortlist=n, round_digits=ROUND,
     ).collect()
@@ -86,7 +87,7 @@ def test_rerank_full_is_exact_cosine(spark, pq_norm):
 )
 def test_rerank_full_is_exact_raw(spark, pq_raw, strategy):
     n = _corpus(spark).count()
-    got = pq.pq_search_rerank(
+    got = shortlist_search(
         spark, pq_raw, _corpus(spark), _qvec(spark), k=10,
         strategy=strategy, shortlist=n, round_digits=ROUND,
     ).collect()
@@ -98,8 +99,8 @@ def test_adc_recall_and_rerank_monotone(spark, pq_norm):
     exact_ids = {r.id for r in _exact_topk(spark, "CosineSimilarity", 10)}
     adc_ids = {
         r.id
-        for r in pq.pq_adc_topk(
-            spark, pq_norm, _qvec(spark), k=10, strategy="CosineSimilarity"
+        for r in pq_norm.shortlist(
+            spark, _qvec(spark), 10, "CosineSimilarity"
         ).collect()
     }
     recall_adc = len(adc_ids & exact_ids) / 10
@@ -108,7 +109,7 @@ def test_adc_recall_and_rerank_monotone(spark, pq_norm):
     def recall_at(shortlist):
         ids = {
             r.id
-            for r in pq.pq_search_rerank(
+            for r in shortlist_search(
                 spark, pq_norm, _corpus(spark), _qvec(spark), k=10,
                 strategy="CosineSimilarity", shortlist=shortlist,
             ).collect()
@@ -123,12 +124,12 @@ def test_adc_recall_and_rerank_monotone(spark, pq_norm):
 
 def test_cosine_requires_normalized_index(spark, pq_raw):
     with pytest.raises(ValueError, match="normalize=True"):
-        pq.pq_adc_topk(spark, pq_raw, _qvec(spark), k=5, strategy="CosineSimilarity")
+        pq_raw.shortlist(spark, _qvec(spark), 5, "CosineSimilarity")
 
 
 def test_dim_mismatch_rejected(spark, pq_norm):
     with pytest.raises(ValueError, match="dim"):
-        pq.pq_adc_topk(spark, pq_norm, [1.0, 2.0], k=5, strategy="InnerProductSimilarity")
+        pq_norm.shortlist(spark, [1.0, 2.0], 5, "InnerProductSimilarity")
 
 
 def test_adc_exact_on_bounded_vocabulary(spark):
@@ -149,9 +150,7 @@ def test_adc_exact_on_bounded_vocabulary(spark):
     # summation differ only in the last ulps, far below 1e-9)
     adc = {
         r.id: r.score
-        for r in pq.pq_adc_topk(
-            spark, idx, q, k=120, strategy="InnerProductSimilarity"
-        ).collect()
+        for r in idx.shortlist(spark, q, 120, "InnerProductSimilarity").collect()
     }
     exact = {
         r.id: r.score
@@ -172,18 +171,18 @@ def test_ivfpq_full_width_full_rerank_is_exact(spark, tmp_path_factory):
     )
     idx = pq.build_ivfpq_index(spark, ivf, base + "/codes", m=8, normalize=True)
     n = _corpus(spark).count()
-    got = pq.ivfpq_search(
-        spark, ivf, idx, _qvec(spark), k=10, strategy="CosineSimilarity",
-        search_top_size=4, rerank=n, round_digits=ROUND,
+    got = shortlist_search(
+        spark, idx, None, _qvec(spark), k=10, strategy="CosineSimilarity",
+        shortlist=n, round_digits=ROUND, ivf_index=ivf, search_top_size=4,
     ).collect()
     want = _exact_topk(spark, "CosineSimilarity", 10)
     assert [(r.id, r.score) for r in got] == [(r.id, r.score) for r in want]
 
     # pruned read: the codes scan must carry a cluster_id partition
     # filter (directories pruned at planning time)
-    pruned = pq.ivfpq_search(
-        spark, ivf, idx, _qvec(spark), k=10, strategy="CosineSimilarity",
-        search_top_size=2, rerank=64,
+    pruned = shortlist_search(
+        spark, idx, None, _qvec(spark), k=10, strategy="CosineSimilarity",
+        shortlist=64, ivf_index=ivf, search_top_size=2,
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "cluster_id" in plan
@@ -225,15 +224,14 @@ def test_pq_plan_shapes(spark, pq_norm):
         uses_take_ordered,
     )
 
-    adc = pq.pq_adc_topk(spark, pq_norm, _qvec(spark), k=10,
-                         strategy="CosineSimilarity")
+    adc = pq_norm.shortlist(spark, _qvec(spark), 10, "CosineSimilarity")
     plan = simple_plan(adc)
     assert uses_take_ordered(adc), plan
     # one MapInPandas over the scan, and no shuffle feeding it
     scan_to_python = plan.split("MapInPandas")[-1]
     assert "Exchange" not in scan_to_python, plan
 
-    rerank = pq.pq_search_rerank(
+    rerank = shortlist_search(
         spark, pq_norm, _corpus(spark), _qvec(spark), k=10,
         strategy="CosineSimilarity", shortlist=64,
     )
@@ -254,18 +252,19 @@ def test_pq_upsert_extends_search_space(spark, tmp_path_factory):
     assert total == embs.count()
 
     # full rerank over the upserted index == exact over the union
-    got = pq.pq_search_rerank(
+    got = shortlist_search(
         spark, idx, embs, _qvec(spark), k=10,
         strategy="CosineSimilarity", shortlist=total, round_digits=ROUND,
     ).collect()
     want = _exact_topk(spark, "CosineSimilarity", 10)
     assert [(r.id, r.score) for r in got] == [(r.id, r.score) for r in want]
 
-    # mismatched dims are dropped, not mis-encoded
+    # mismatched dims raise, not mis-encoded
     bad = spark.createDataFrame(
         [(999999, [1.0, 2.0])], "id long, embedding array<float>"
     )
-    assert pq.pq_upsert(spark, idx, bad) == 0
+    with pytest.raises(ValueError, match="index dim"):
+        pq.pq_upsert(spark, idx, bad)
 
 
 def test_nbits_over_8_rejected(spark):
@@ -311,9 +310,9 @@ def test_pq_upsert_partitioned_layout(spark, tmp_path_factory):
     appended_ids = {r.id for r in mask}
     seen = {
         r.id
-        for r in pq.ivfpq_search(
-            spark, ivf, idx, _qvec(spark), k=embs.count(),
-            strategy="CosineSimilarity", search_top_size=4,
+        for r in idx.shortlist(
+            spark, _qvec(spark), embs.count(), "CosineSimilarity",
+            keep=list(range(4)),
         ).collect()
     }
     assert appended_ids <= seen
@@ -342,11 +341,11 @@ def test_pq_compact_dedup_and_partitioning(spark, tmp_path_factory):
     assert pq.load_pq_index(idx2.path).partition_col == "cluster_id"
 
     # ADC results over the deduped generation == over the pre-dup index
-    a = [(r.id, round(r.score, 9)) for r in pq.pq_adc_topk(
-        spark, idx2, _qvec(spark), k=10).collect()]
+    a = [(r.id, round(r.score, 9)) for r in idx2.shortlist(
+        spark, _qvec(spark), 10, "CosineSimilarity").collect()]
     # compare against a fresh dup-free build
     ivf2 = ivf_mod.build_ivf_index(spark, embs, base + "/ivf2", n_clusters=4, seed=42)
     clean = pq.build_ivfpq_index(spark, ivf2, base + "/codes_clean", m=8, normalize=True)
-    b = [(r.id, round(r.score, 9)) for r in pq.pq_adc_topk(
-        spark, clean, _qvec(spark), k=10).collect()]
+    b = [(r.id, round(r.score, 9)) for r in clean.shortlist(
+        spark, _qvec(spark), 10, "CosineSimilarity").collect()]
     assert a == b

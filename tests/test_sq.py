@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_simple_api_spark.operators import sq, tombstones
+from ydb_vector_search_simple_api_spark.operators.search import shortlist_search
 
 from conftest import SF_SMALL
 
@@ -66,7 +67,7 @@ def test_full_shortlist_is_exact(spark, sq_index, strategy):
     from ydb_vector_search_simple_api_spark.operators.search import _order_cols
 
     q = _qvec(spark)
-    got = sq.sq_search_rerank(
+    got = shortlist_search(
         spark, sq_index, _src(spark), q, k=10, strategy=strategy
     ).collect()
     exact = (
@@ -88,13 +89,13 @@ def test_pruned_shortlist_recall(spark, sq_index):
     q = _qvec(spark)
     exact_ids = {
         r.id
-        for r in sq.sq_search_rerank(spark, sq_index, _src(spark), q, k=10).collect()
+        for r in shortlist_search(spark, sq_index, _src(spark), q, k=10).collect()
     }
     recalls = {}
     for short in (10, 50, 200):
         ids = {
             r.id
-            for r in sq.sq_search_rerank(
+            for r in shortlist_search(
                 spark, sq_index, _src(spark), q, k=10, shortlist=short
             ).collect()
         }
@@ -112,7 +113,7 @@ def test_filter_contract(spark, sq_index):
 
     q = _qvec(spark)
     keep = _src(spark).filter(F.col("id") % 3 == 0).select("id")
-    got = sq.sq_search_rerank(
+    got = shortlist_search(
         spark, sq_index, _src(spark), q, k=10, filter_ids=keep
     ).collect()
     exact = (
@@ -132,10 +133,10 @@ def test_tombstoned_delete(spark, tmp_path):
     path = str(tmp_path / "sq_tomb")
     idx = sq.build_sq_index(spark, _src(spark), path)
     q = _qvec(spark)
-    before = [r.id for r in sq.sq_search_rerank(spark, idx, _src(spark), q, k=5).collect()]
+    before = [r.id for r in shortlist_search(spark, idx, _src(spark), q, k=5).collect()]
     victim = before[0]
     tombstones.delete_ids(spark, path, [victim])
-    after = [r.id for r in sq.sq_search_rerank(spark, idx, _src(spark), q, k=5).collect()]
+    after = [r.id for r in shortlist_search(spark, idx, _src(spark), q, k=5).collect()]
     assert victim not in after
     assert after[:4] == before[1:5]
 
@@ -153,8 +154,8 @@ def test_upsert_and_compact(spark, tmp_path):
     assert idx.n_rows == src.count()
     q = _qvec(spark)
     full = sq.build_sq_index(spark, src, str(tmp_path / "sq_full"))
-    got = [r.id for r in sq.sq_search_rerank(spark, idx, src, q, k=10).collect()]
-    want = [r.id for r in sq.sq_search_rerank(spark, full, src, q, k=10).collect()]
+    got = [r.id for r in shortlist_search(spark, idx, src, q, k=10).collect()]
+    want = [r.id for r in shortlist_search(spark, full, src, q, k=10).collect()]
     assert got == want
 
     # delete one id, re-upsert it (resurrection), then compact with
@@ -168,7 +169,7 @@ def test_upsert_and_compact(spark, tmp_path):
     assert compacted.n_rows == src.count()
     after = [
         r.id
-        for r in sq.sq_search_rerank(spark, compacted, src, q, k=10).collect()
+        for r in shortlist_search(spark, compacted, src, q, k=10).collect()
     ]
     assert after == want
 
@@ -189,7 +190,7 @@ def test_ivfsq_composition(spark, tmp_path):
 
     exact = [
         r.id
-        for r in sq.sq_search_rerank(
+        for r in shortlist_search(
             spark,
             sq.build_sq_index(spark, src, str(tmp_path / "sq_flat")),
             src, q, k=10,
@@ -197,8 +198,8 @@ def test_ivfsq_composition(spark, tmp_path):
     ]
     full = [
         r.id
-        for r in sq.ivfsq_search(
-            spark, ivf_idx, sq_idx, q, k=10, search_top_size=8
+        for r in shortlist_search(
+            spark, sq_idx, None, q, k=10, ivf_index=ivf_idx, search_top_size=8
         ).collect()
     ]
     assert full == exact
@@ -207,8 +208,8 @@ def test_ivfsq_composition(spark, tmp_path):
     for w in (1, 4, 8):
         ids = {
             r.id
-            for r in sq.ivfsq_search(
-                spark, ivf_idx, sq_idx, q, k=10, search_top_size=w
+            for r in shortlist_search(
+                spark, sq_idx, None, q, k=10, ivf_index=ivf_idx, search_top_size=w
             ).collect()
         }
         rec[w] = len(ids & set(exact)) / 10.0

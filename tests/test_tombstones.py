@@ -9,7 +9,10 @@ from pyspark.sql import functions as F
 from ydb_vector_search_simple_api_spark.operators import bq
 from ydb_vector_search_simple_api_spark.operators import index as ivf
 from ydb_vector_search_simple_api_spark.operators import tombstones
-from ydb_vector_search_simple_api_spark.operators.search import exact_search
+from ydb_vector_search_simple_api_spark.operators.search import (
+    exact_search,
+    shortlist_search,
+)
 
 from conftest import SF_SMALL
 
@@ -87,7 +90,7 @@ def test_bq_delete_and_compact(spark, tmp_path):
     tombstones.delete_ids(spark, idx.path, victims)
     got = [
         r.id
-        for r in bq.bq_search_rerank(
+        for r in shortlist_search(
             spark, idx, _src(spark), q, k=10, shortlist=None
         ).collect()
     ]
@@ -156,7 +159,7 @@ def test_pq_delete_excluded_from_adc_and_rerank(spark, tmp_path):
     tombstones.delete_ids(spark, idx.path, victims)
     got = [
         r.id
-        for r in pqm.pq_search_rerank(
+        for r in shortlist_search(
             spark, idx, _src(spark), q, k=10, shortlist=500
         ).collect()
     ]

@@ -5,10 +5,10 @@ other at a size where index economics actually show:
 
 * exact_search-shape scan (brute force, the baseline)
 * ivf_search at width 1/4/full (rows-read lever)
-* bq_search_rerank at shortlist 1k (bytes-per-row lever)
-* sq_search_rerank at shortlist 1k (8-bit codes, pure-codegen path)
-* pq_search_rerank at shortlist 1k (bytes-per-row, Arrow ADC path)
-* ivfbq_search width 4 (both levers)
+* shortlist_search over BQ at shortlist 1k (bytes-per-row lever)
+* shortlist_search over SQ at shortlist 1k (8-bit codes, pure-codegen path)
+* shortlist_search over PQ at shortlist 1k (bytes-per-row, Arrow ADC path)
+* shortlist_search over IVF x BQ at width 4 (both levers)
 
 Writes a markdown table to stdout (recorded in SCALING.md §"Measured
 at 200k"). Build times are reported separately from query times; each
@@ -49,7 +49,10 @@ def main():
     from ydb_vector_search_simple_api_spark.operators import bq as bq_mod
     from ydb_vector_search_simple_api_spark.operators import index as ivf_mod
     from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
-    from ydb_vector_search_simple_api_spark.operators.search import _order_cols
+    from ydb_vector_search_simple_api_spark.operators.search import (
+        _order_cols,
+        shortlist_search,
+    )
     from ydb_vector_search_simple_api_spark.sources.store import load_embeddings
 
     spark = (
@@ -131,9 +134,9 @@ def main():
     t_build_bq = time.perf_counter() - t0
     results.append(
         (
-            "bq_search_rerank shortlist=1024",
+            "shortlist_search BQ shortlist=1024",
             timed(
-                lambda: bq_mod.bq_search_rerank(
+                lambda: shortlist_search(
                     spark, bq_idx, big, qvec, k=10, shortlist=1024
                 ).collect()
             ),
@@ -148,9 +151,9 @@ def main():
     t_build_sq = time.perf_counter() - t0
     results.append(
         (
-            "sq_search_rerank shortlist=1024",
+            "shortlist_search SQ shortlist=1024",
             timed(
-                lambda: sq_mod.sq_search_rerank(
+                lambda: shortlist_search(
                     spark, sq_idx, big, qvec, k=10, shortlist=1024
                 ).collect()
             ),
@@ -167,9 +170,9 @@ def main():
         t_build_pq = time.perf_counter() - t0
         results.append(
             (
-                "pq_search_rerank shortlist=1024",
+                "shortlist_search PQ shortlist=1024",
                 timed(
-                    lambda: pq_mod.pq_search_rerank(
+                    lambda: shortlist_search(
                         spark, pq_idx, big, qvec, k=10, shortlist=1024
                     ).collect()
                 ),
@@ -182,11 +185,11 @@ def main():
     t_build_ivfbq = time.perf_counter() - t0
     results.append(
         (
-            f"ivfbq_search width=4/{n_clusters} shortlist=1024",
+            f"shortlist_search IVF x BQ width=4/{n_clusters} shortlist=1024",
             timed(
-                lambda: bq_mod.ivfbq_search(
-                    spark, ivf_idx, ivfbq_idx, qvec, k=10,
-                    search_top_size=4, shortlist=1024,
+                lambda: shortlist_search(
+                    spark, ivfbq_idx, None, qvec, k=10, shortlist=1024,
+                    ivf_index=ivf_idx, search_top_size=4,
                 ).collect()
             ),
             "both levers: 4/64 dirs x 1/32 bytes",

@@ -37,7 +37,12 @@ from .operators import opq as opq_mod
 from .operators import sq as sq_mod
 from .operators import index as ivf_mod
 from .operators import tree as tree_mod
-from .operators.search import exact_topk, filtered_doc_ids, knn_join_blocked_arrays
+from .operators.search import (
+    exact_topk,
+    filtered_doc_ids,
+    knn_join_blocked_arrays,
+    shortlist_search,
+)
 from .sources.store import doc_metadata, load_embeddings
 
 
@@ -154,9 +159,9 @@ class VectorSearchEngine:
                 # cached list itself is never mutated, so no lock)
                 return copy.deepcopy(hit), time.perf_counter() - t0
         df = self.search_df(embedding, k, filter, search_top_size)
-        # an indexed search keeps at most k rows when an id has two
-        # documents rows; the exact path keeps them all (exact_search)
-        results = self._with_metadata(df.collect())[: k if self._indexed else None]
+        # at most k rows on every shape, also when an id has two
+        # documents rows
+        results = self._with_metadata(df.collect())[:k]
         if key is not None:
             cached = copy.deepcopy(results)
             with self._cache_lock:
@@ -200,28 +205,17 @@ class VectorSearchEngine:
                 else None
             )
             width = search_top_size or self.config.search_top_size
-            if isinstance(
-                self.index,
-                (bq_mod.BqIndex, sq_mod.SqIndex, opq_mod.OpqIndex),
-            ):
-                # for the compressed-code tables (BQ sign bits, SQ
-                # int8, rotated-ADC OPQ) the search width IS the
-                # rerank shortlist (>= corpus => exact); candidates
-                # rerank against the full-precision store vectors
-                src = load_embeddings(self.spark, self.sf_dir).selectExpr(
-                    "vec_id AS id", "embedding"
-                )
-                rerank = (
-                    sq_mod.sq_search_rerank
-                    if isinstance(self.index, sq_mod.SqIndex)
-                    else bq_mod.bq_search_rerank
-                    if isinstance(self.index, bq_mod.BqIndex)
-                    else opq_mod.opq_search_rerank
-                )
-                return rerank(
+            if hasattr(self.index, "shortlist"):
+                # for the code layouts (BQ sign bits, SQ int8,
+                # rotated-ADC OPQ) the search width IS the rerank
+                # shortlist (>= corpus => exact); candidates rerank
+                # against the full-precision store vectors
+                return shortlist_search(
                     self.spark,
                     self.index,
-                    src,
+                    load_embeddings(self.spark, self.sf_dir).selectExpr(
+                        "vec_id AS id", "embedding"
+                    ),
                     embedding,
                     k=k,
                     strategy=self.config.strategy,

@@ -154,10 +154,6 @@ def shingles(col, n: int = 3) -> Column:
     return shingles_from_tokens(tokens(col), n)
 
 
-def distinct_shingles(col, n: int = 3) -> Column:
-    return F.array_distinct(shingles(col, n))
-
-
 def quality_score(col) -> Column:
     """Composite [0,1] quality heuristic: rewards lexical diversity,
     mid-range length and a sane stopword rate. Weights are arbitrary

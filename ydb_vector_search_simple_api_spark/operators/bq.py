@@ -25,15 +25,16 @@ Spark-native shape:
   word array is a literal; per-row distance is
   ``aggregate(zip_with(bits, qbits, (x, y) -> bit_count(x ^ y)), 0, +)``
   — all inside codegen over the narrow (id, bits) table.
-* **Shortlist**: ``ORDER BY hamming LIMIT shortlist`` compiles to
-  TakeOrderedAndProject (per-partition heap; only ``shortlist`` rows
-  per partition reach the driver merge).
-* **Rerank**: shortlist ids semi-join back into the full-precision
-  vector table (broadcast — a shortlist is small by construction) and
-  the exact strategy score re-ranks (same Column expressions as
-  exact_search). With ``shortlist >= corpus`` the result is EXACT for
-  every strategy — the oracle-gate variant; pruned shortlists trade
-  recall for scan width, recall contract pinned in tests/test_bq.py.
+* **Shortlist** (:meth:`BqIndex.shortlist`): ``ORDER BY hamming LIMIT
+  shortlist`` compiles to TakeOrderedAndProject (per-partition heap;
+  only ``shortlist`` rows per partition reach the driver merge).
+* **Rerank** (``search.shortlist_search``): shortlist ids semi-join
+  back into the full-precision vector table (broadcast — a shortlist
+  is small by construction) and the exact strategy score re-ranks
+  (same expressions as exact_search). With a full shortlist the
+  result is EXACT for every strategy — the oracle-gate variant; pruned
+  shortlists trade recall for scan width, recall contract pinned in
+  tests/test_bq.py.
 
 The Hamming pre-filter approximates ANGULAR closeness: it is a strong
 proxy for Cosine/InnerProduct (and exact-rerank fixes ranking); for
@@ -56,8 +57,8 @@ from pyspark.sql import functions as F
 from . import tombstones
 from ..config import validate_strategy
 from ..functions.distance import score_expr
-from .index import _read_clusters
-from .search import _order_cols
+from .index import ivf_rows
+from .search import _order_cols, check_upsert_dim, read_codes
 
 
 @dataclass(frozen=True)
@@ -74,6 +75,32 @@ class BqIndex:
     n_words: int
     n_rows: int
     partition_col: str | None = None
+
+    def shortlist(
+        self,
+        spark: SparkSession,
+        query_vec: Sequence[float],
+        n: int | None,
+        strategy: str,
+        keep: Sequence[int] | None = None,
+        filter_ids: DataFrame | None = None,
+    ) -> DataFrame:
+        """The ``n`` nearest (id, hamming) rows to the query's sign
+        bits (ascending, id tiebreak; TakeOrdered), ``n=None`` keeping
+        every id (no score). One Hamming shortlist serves every
+        ``strategy``. ``keep`` and ``filter_ids`` prune the bits as in
+        ``search.read_codes``."""
+        bits = read_codes(
+            spark, self.path, os.path.join(self.path, "bits"), keep, filter_ids
+        )
+        if n is None:
+            return bits.select("id")
+        return (
+            bits.withColumn("hamming", hamming_expr("bits", pack_query_bits(query_vec)))
+            .select("id", "hamming")
+            .orderBy(F.asc("hamming"), F.asc("id"))
+            .limit(n)
+        )
 
 
 def _pack_bits(X: np.ndarray) -> np.ndarray:
@@ -148,21 +175,35 @@ def build_bq_index(
     vec_col: str = "embedding",
     id_col: str = "id",
     dim: int | None = None,
+    partition_col: str | None = None,
 ) -> BqIndex:
     """Encode + persist the narrow (id, bits) table. One pass over the
-    source, no shuffle, no driver collect of data rows."""
+    source, no shuffle, no driver collect of data rows.
+    ``partition_col`` (the IVF ``cluster_id``) rides the encode and
+    becomes the hive partition of the bits layout, as in
+    ``pq.build_pq_index``."""
     if dim is None:
         first = src.select(F.size(F.col(vec_col)).alias("d")).first()
         if first is None:
             raise ValueError("cannot build a BQ index over an empty source")
         dim = int(first["d"])
-    bits_df = encode_binary(src, vec_col=vec_col, id_col=id_col, dim=dim)
-    bits_df.write.mode("overwrite").parquet(os.path.join(path, "bits"))
+    extra = (partition_col,) if partition_col else ()
+    bits_df = encode_binary(src, vec_col=vec_col, id_col=id_col, dim=dim, extra_cols=extra)
+    bits_df.write.mode("overwrite").partitionBy(*extra).parquet(os.path.join(path, "bits"))
     n_rows = spark.read.parquet(os.path.join(path, "bits")).count()
-    meta = {"dim": dim, "n_words": n_words_for(dim), "n_rows": n_rows, "id_col": id_col}
-    with open(os.path.join(path, "_bq_meta.json"), "w") as f:
+    return _save_meta(
+        BqIndex(path, dim, n_words_for(dim), n_rows, partition_col), id_col
+    )
+
+
+def _save_meta(index: BqIndex, id_col: str) -> BqIndex:
+    meta = {
+        "dim": index.dim, "n_words": index.n_words, "n_rows": index.n_rows,
+        "id_col": id_col, "partition_col": index.partition_col,
+    }
+    with open(os.path.join(index.path, "_bq_meta.json"), "w") as f:
         json.dump(meta, f)
-    return BqIndex(path=path, dim=dim, n_words=n_words_for(dim), n_rows=n_rows)
+    return index
 
 
 def load_bq_index(path: str) -> BqIndex:
@@ -180,30 +221,6 @@ def hamming_expr(bits_col, query_words: Sequence[int]) -> Column:
     col = F.col(bits_col) if isinstance(bits_col, str) else bits_col
     per_word = F.zip_with(col, q, lambda x, y: F.bit_count(x.bitwiseXOR(y)))
     return F.aggregate(per_word, F.lit(0), lambda acc, x: acc + x)
-
-
-def bq_shortlist(
-    spark: SparkSession,
-    index: BqIndex,
-    query_vec: Sequence[float],
-    shortlist: int,
-    id_col: str = "id",
-) -> DataFrame:
-    """Top-``shortlist`` ids by Hamming distance to the query's sign
-    bits (ascending, id tiebreak). Narrow scan, TakeOrderedAndProject."""
-    if len(query_vec) != index.dim:
-        raise ValueError(f"query dim {len(query_vec)} != index dim {index.dim}")
-    bits = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(os.path.join(index.path, "bits")),
-        id_col=id_col,
-    )
-    qw = pack_query_bits(query_vec)
-    return (
-        bits.withColumn("hamming", hamming_expr("bits", qw))
-        .select(id_col, "hamming")
-        .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
-        .limit(int(shortlist))
-    )
 
 
 def bq_upsert(
@@ -230,6 +247,7 @@ def bq_upsert(
             "rebuild via build_ivfbq_index (or ingest through ivf_upsert "
             "and re-encode the touched clusters)"
         )
+    check_upsert_dim(new_df, vec_col, index.dim, "bq_upsert")
     bits_df = encode_binary(new_df, vec_col=vec_col, id_col=id_col, dim=index.dim)
     bits_df.persist()
     try:
@@ -238,17 +256,9 @@ def bq_upsert(
         bits_df.write.mode("append").parquet(os.path.join(index.path, "bits"))
     finally:
         bits_df.unpersist()
-    out = BqIndex(
-        path=index.path, dim=index.dim, n_words=index.n_words,
-        n_rows=index.n_rows + n_new,
+    return _save_meta(
+        BqIndex(index.path, index.dim, index.n_words, index.n_rows + n_new), id_col
     )
-    meta = {
-        "dim": out.dim, "n_words": out.n_words, "n_rows": out.n_rows,
-        "id_col": id_col,
-    }
-    with open(os.path.join(index.path, "_bq_meta.json"), "w") as f:
-        json.dump(meta, f)
-    return out
 
 
 def bq_compact(
@@ -285,15 +295,9 @@ def bq_compact(
             os.path.join(out_dir, "bits")
         )
     n_rows = spark.read.parquet(os.path.join(out_dir, "bits")).count()
-    meta = {
-        "dim": index.dim, "n_words": index.n_words, "n_rows": n_rows,
-        "id_col": id_col, "partition_col": index.partition_col,
-    }
-    with open(os.path.join(out_dir, "_bq_meta.json"), "w") as f:
-        json.dump(meta, f)
-    return BqIndex(
-        path=out_dir, dim=index.dim, n_words=index.n_words, n_rows=n_rows,
-        partition_col=index.partition_col,
+    return _save_meta(
+        BqIndex(out_dir, index.dim, index.n_words, n_rows, index.partition_col),
+        id_col,
     )
 
 
@@ -500,71 +504,6 @@ def bq_knn_join(
     )
 
 
-def bq_search_rerank(
-    spark: SparkSession,
-    index: BqIndex,
-    src: DataFrame,
-    query_vec: Sequence[float],
-    k: int,
-    strategy: str = "CosineSimilarity",
-    shortlist: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "id",
-    round_digits: int | None = None,
-    filter_ids: DataFrame | None = None,
-) -> DataFrame:
-    """Hamming shortlist -> exact re-rank -> (id, score) top-k.
-
-    ``shortlist=None`` (or >= corpus) keeps every row: the Hamming
-    pass is then a no-op filter and the result is EXACT top-k for any
-    strategy — the oracle-gate configuration. Pruned shortlists cut
-    the rerank join to ``shortlist`` rows (recall tested).
-
-    ``filter_ids`` (1-column ``id`` DataFrame) restricts candidates
-    BEFORE the Hamming shortlist — the non-strict filtered-ANN
-    contract shared with ``ivf_search``/``tree_search``: the shortlist
-    budget is then spent entirely on rows passing the filter, so
-    full-shortlist filtered results equal exact filtered search."""
-    validate_strategy(strategy)
-    if not isinstance(k, int) or k < 1:
-        raise ValueError("k must be a positive integer")
-    n_short = index.n_rows if shortlist is None else int(shortlist)
-
-    if len(query_vec) != index.dim:
-        raise ValueError(f"query dim {len(query_vec)} != index dim {index.dim}")
-    bits = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(os.path.join(index.path, "bits")),
-        id_col=id_col,
-    )
-    if filter_ids is not None:
-        bits = bits.join(
-            filter_ids.selectExpr(f"`{filter_ids.columns[0]}` AS `{id_col}`"),
-            id_col,
-            "left_semi",
-        )
-    qw = pack_query_bits(query_vec)
-    cand = (
-        bits.withColumn("hamming", hamming_expr("bits", qw))
-        .select(id_col, "hamming")
-        .orderBy(F.asc("hamming"), F.asc(id_col))
-        .limit(int(n_short))
-    )
-    vecs = src.selectExpr(f"`{id_col}`", f"`{vec_col}`")
-    # shortlist rows are few by construction: broadcast them into the
-    # vector table so the rerank reads only matching row groups
-    joined = vecs.join(F.broadcast(cand.select(id_col)), id_col, "inner")
-
-    score = score_expr(strategy, vec_col, query_vec)
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        joined.withColumn("score", score)
-        .selectExpr(f"`{id_col}` AS id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
-    )
-
-
 # ----------------------------------------------- IVF x BQ composition
 
 
@@ -576,90 +515,6 @@ def build_ivfbq_index(spark: SparkSession, ivf_index, out_dir: str) -> BqIndex:
     1/32 of the bytes per row it does read. Rows-read and
     bytes-per-row levers multiply; the Hamming scan stays pure
     codegen."""
-    src = _read_clusters(spark, ivf_index).select(
-        F.col(ivf_index.id_col).alias("id"),
-        F.col(ivf_index.vec_col).alias("embedding"),
-        "cluster_id",
-    )
-    first = src.select(F.size("embedding").alias("d")).first()
-    if first is None:
-        raise ValueError("cannot build over an empty IVF layout")
-    dim = int(first["d"])
-    bits_df = encode_binary(src, dim=dim, extra_cols=("cluster_id",))
-    (
-        bits_df.write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(os.path.join(out_dir, "bits"))
-    )
-    n_rows = spark.read.parquet(os.path.join(out_dir, "bits")).count()
-    meta = {
-        "dim": dim, "n_words": n_words_for(dim), "n_rows": n_rows,
-        "id_col": "id", "partition_col": "cluster_id",
-    }
-    with open(os.path.join(out_dir, "_bq_meta.json"), "w") as f:
-        json.dump(meta, f)
-    return BqIndex(
-        path=out_dir, dim=dim, n_words=n_words_for(dim), n_rows=n_rows,
-        partition_col="cluster_id",
-    )
-
-
-def ivfbq_search(
-    spark: SparkSession,
-    ivf_index,
-    bq_index: BqIndex,
-    query_vec: Sequence[float],
-    k: int,
-    strategy: str = "CosineSimilarity",
-    search_top_size: int = 2,
-    shortlist: int | None = None,
-    round_digits: int | None = None,
-) -> DataFrame:
-    """Rank centroids on the driver -> prune the bits layout to the
-    ``search_top_size`` nearest cluster directories (planner-level
-    partition pruning) -> Hamming-shortlist inside them -> exact
-    rerank against the full-precision vectors of the SAME pruned
-    clusters. Exact when ``search_top_size >= n_clusters`` and
-    ``shortlist=None`` (full)."""
-    from .index import _rank_centroids
-
-    validate_strategy(strategy)
-    if not isinstance(k, int) or k < 1:
-        raise ValueError("k must be a positive integer")
-    if len(query_vec) != bq_index.dim:
-        raise ValueError(f"query dim {len(query_vec)} != index dim {bq_index.dim}")
-    keep = _rank_centroids(ivf_index, query_vec, strategy)[:search_top_size]
-
-    bits = tombstones.apply_tombstones(
-        spark,
-        bq_index.path,
-        spark.read.parquet(os.path.join(bq_index.path, "bits")).filter(
-            F.col("cluster_id").isin(keep)
-        ),
-    )
-    qw = pack_query_bits(query_vec)
-    n_short = bq_index.n_rows if shortlist is None else int(shortlist)
-    cand = (
-        bits.withColumn("hamming", hamming_expr("bits", qw))
-        .select("id", "hamming")
-        .orderBy(F.col("hamming").asc(), F.col("id").asc())
-        .limit(n_short)
-    )
-
-    vecs = (
-        _read_clusters(spark, ivf_index, keep)
-        .select(
-            F.col(ivf_index.id_col).alias("id"),
-            F.col(ivf_index.vec_col).alias("embedding"),
-        )
-    )
-    joined = vecs.join(F.broadcast(cand.select("id")), "id", "inner")
-    score = score_expr(strategy, "embedding", query_vec)
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        joined.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
+    return build_bq_index(
+        spark, ivf_rows(spark, ivf_index), out_dir, partition_col="cluster_id"
     )

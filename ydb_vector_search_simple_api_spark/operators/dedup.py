@@ -371,24 +371,6 @@ def _sig_element(sh, seed: int, hasher: str = "xxhash64"):
     raise ValueError(f"unknown hasher {hasher!r}; use 'xxhash64' or 'md5'")
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-    hasher: str = "xxhash64",
-) -> DataFrame:
-    """(id, sig: array<bigint|string>) — per-seed min of the salted
-    hash over the doc's distinct shingles. All JVM expressions; the
-    shingle array is materialized ONCE (:func:`shingled_table`) and
-    each of the ``num_hashes`` transforms reads the stored array
-    instead of re-tokenizing the text."""
-    shingled = shingled_table(df, id_col, text_col, n)
-    sig = F.array(*[_sig_element(F.col("sh"), i, hasher) for i in range(num_hashes)])
-    return shingled.select("id", sig.alias("sig"))
-
-
 def lsh_band_candidates(
     shingled: DataFrame, num_hashes: int, bands: int, hasher: str
 ) -> DataFrame:

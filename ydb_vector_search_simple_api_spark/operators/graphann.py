@@ -64,7 +64,7 @@ from pyspark.sql import functions as F
 from ..config import validate_strategy
 from ..functions.distance import score_expr
 from .index import _read_clusters
-from .search import _order_cols
+from .search import check_upsert_dim, rank_topk
 
 _META_FILE = "_graphann_meta.json"
 
@@ -545,12 +545,8 @@ def graphann_upsert(
     )
     # appended files must carry the EXISTING schema (a double-typed
     # batch against a float store poisons every later scan with a
-    # parquet type mismatch) and the index dim (the sq_upsert guard)
-    bad = new_df.filter(F.size(F.col(vec_col)) != index.dim).limit(1).count()
-    if bad:
-        raise ValueError(
-            f"graphann_upsert batch has vectors whose length != index dim {index.dim}"
-        )
+    # parquet type mismatch) and the index dim
+    check_upsert_dim(new_df, vec_col, index.dim, "graphann_upsert")
     src = new_df.select(
         F.col(id_col).cast(adj.schema["id"].dataType).alias("id"),
         F.col(vec_col).cast(adj.schema["embedding"].dataType).alias("embedding"),
@@ -867,15 +863,7 @@ def graphann_search(
             "id",
             "left_semi",
         )
-    score = score_expr(strategy, "embedding", list(query_vec))
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        vecs.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
-    )
+    return rank_topk(vecs, list(query_vec), k, strategy, round_digits)
 
 
 def _beam_search_distributed(

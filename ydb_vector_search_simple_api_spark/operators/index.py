@@ -54,7 +54,7 @@ from . import tombstones
 from ..artifacts import session_memo
 from ..config import DEFAULT_K, DEFAULT_SEARCH_TOP_SIZE, sort_descending, validate_strategy
 from ..functions.distance import score_expr
-from .search import _order_cols, _rank_per_query
+from .search import _order_cols, _rank_per_query, rank_topk
 
 _CENTROIDS_FILE = "_ivf_centroids.json"
 
@@ -124,6 +124,15 @@ def _read_clusters(spark: SparkSession, index, keep=None) -> DataFrame:
             conj = " AND ".join(f"`{c}` = {int(v)}" for c, v in zip(cols, key))
             cond = f"({cond} OR ({conj}))"
     return whole.filter(cond)
+
+
+def ivf_rows(spark: SparkSession, index) -> DataFrame:
+    """Every (id, embedding, cluster_id) row of an IVF layout: the
+    source an IVF x codec build encodes, keeping ``cluster_id`` as the
+    partition column of its codes."""
+    return _read_clusters(spark, index).selectExpr(
+        f"`{index.id_col}` AS id", f"`{index.vec_col}` AS embedding", "cluster_id"
+    )
 
 
 def _stored_schema(meta: dict, path: str) -> T.StructType | None:
@@ -273,16 +282,7 @@ def ivf_search(
         # Catalyst/AQE broadcasts the (small) filtered id set
         pruned = pruned.join(filter_ids, "id", "left_semi")
 
-    # plain vector (not vector_lit) so cosine's query-norm literal fold applies
-    score = score_expr(strategy, "embedding", query_vec)
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        pruned.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
-    )
+    return rank_topk(pruned, query_vec, k, strategy, round_digits)
 
 
 _CELL_ANGLE_CACHE: dict[str, np.ndarray] = {}

@@ -338,13 +338,6 @@ def kmv_store_upsert(
     merged.write.mode("overwrite").parquet(store_dir)
 
 
-def kmv_store_estimates(
-    spark: SparkSession, store_dir: str, k: int = DEFAULT_K
-) -> DataFrame:
-    """Serve distinct estimates from stored sketches — no fact rescan."""
-    return kmv_estimate(spark.read.parquet(store_dir), k=k)
-
-
 def kmv_store_pair_report(
     spark: SparkSession, store_dir: str, group: str, k: int = DEFAULT_K
 ) -> DataFrame:

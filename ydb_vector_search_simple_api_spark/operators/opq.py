@@ -42,11 +42,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import validate_strategy
-from ..functions.distance import score_expr
-from .index import _read_clusters
-from .pq import PqIndex, build_pq_index, load_pq_index, pq_adc_topk
-from .search import _order_cols
+from .index import ivf_rows
+from .pq import PqIndex, build_pq_index, load_pq_index
 
 _META_FILE = "_opq_meta.json"
 
@@ -56,6 +53,25 @@ class OpqIndex:
     path: str
     rotation: np.ndarray  # (d, d) orthogonal; applied as x @ R
     pq: PqIndex
+
+    @property
+    def dim(self) -> int:
+        return self.pq.dim
+
+    def shortlist(
+        self,
+        spark: SparkSession,
+        query_vec: Sequence[float],
+        n: int | None,
+        strategy: str,
+        keep: Sequence[int] | None = None,
+        filter_ids: DataFrame | None = None,
+    ) -> DataFrame:
+        """The PQ shortlist of the ROTATED query (the codes live in
+        rotated space); centroid routing and the exact rerank of
+        ``search.shortlist_search`` stay in the original space."""
+        q_rot = np.asarray(query_vec, dtype=np.float64) @ self.rotation
+        return self.pq.shortlist(spark, list(q_rot), n, strategy, keep, filter_ids)
 
 
 def train_opq_rotation(x: np.ndarray, m: int) -> np.ndarray:
@@ -114,13 +130,20 @@ def build_opq_index(
     normalize: bool = False,
     id_col: str = "id",
     vec_col: str = "embedding",
+    partition_col: str | None = None,
 ) -> OpqIndex:
     """Offline build: train R on the bounded sample, rotate the corpus
     in one Arrow pass, and product-quantize the rotated vectors with
-    the stock PQ builder (codes live under ``out_dir``/pq)."""
-    src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("embedding"))
+    the stock PQ builder (codes live under ``out_dir``/pq).
+    ``partition_col`` (the IVF ``cluster_id``) rides the rotation and
+    partitions the codes, as in ``build_pq_index``."""
+    extra = (partition_col,) if partition_col else ()
+    src = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("embedding"), *extra
+    )
     train = (
-        src.orderBy(F.abs(F.xxhash64(F.col("id"))).asc(), F.col("id").asc())
+        src.select("id", "embedding")
+        .orderBy(F.abs(F.xxhash64(F.col("id"))).asc(), F.col("id").asc())
         .limit(train_rows)
         .collect()
     )
@@ -128,7 +151,7 @@ def build_opq_index(
     if normalize:
         X = X / np.maximum(np.linalg.norm(X, axis=1)[:, None], 1e-300)
     R = train_opq_rotation(X, m=m)
-    rotated = rotate_df(spark, src, R)
+    rotated = rotate_df(spark, src, R, extra_cols=extra)
     pq = build_pq_index(
         spark,
         rotated,
@@ -137,6 +160,7 @@ def build_opq_index(
         nbits=nbits,
         train_rows=train_rows,
         normalize=normalize,
+        partition_col=partition_col,
     )
     os.makedirs(out_dir, exist_ok=True)
     with open(os.path.join(out_dir, _META_FILE), "w") as f:
@@ -187,46 +211,6 @@ def rotate_df(
     )
 
 
-def opq_search_rerank(
-    spark: SparkSession,
-    index: OpqIndex,
-    full_df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 4,
-    strategy: str = "CosineSimilarity",
-    shortlist: int = 100,
-    round_digits: int | None = None,
-    filter_ids: DataFrame | None = None,
-) -> DataFrame:
-    """ADC shortlist in ROTATED space -> exact re-rank on the ORIGINAL
-    vectors/query. ``shortlist >= corpus size`` is EXACT (identical to
-    exact_search over (id, score)) — the oracle-gated configuration.
-    ``filter_ids`` restricts candidates BEFORE the shortlist (the
-    shared non-strict filtered-ANN contract)."""
-    validate_strategy(strategy)
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    q_rot = q @ index.rotation
-    cand = pq_adc_topk(
-        spark, index.pq, list(q_rot), k=shortlist, strategy=strategy,
-        filter_ids=filter_ids,
-    )
-    ids = cand.select("id")
-    src = full_df.select(
-        F.col(index.pq.id_col).alias("id"),
-        F.col(index.pq.vec_col).alias("embedding"),
-    )
-    hit = src.join(F.broadcast(ids), "id", "left_semi")
-    score = score_expr(strategy, "embedding", [float(v) for v in q])
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        hit.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
-    )
-
-
 def build_ivfopq_index(
     spark: SparkSession,
     ivf_index,
@@ -242,67 +226,7 @@ def build_ivfopq_index(
     partition column — directory pruning and rotated-ADC byte
     compression multiply, exactly like IVFADC, with the rotation's
     lower per-code distortion on top."""
-    src = _read_clusters(spark, ivf_index).select(
-        F.col(ivf_index.id_col).alias("id"),
-        F.col(ivf_index.vec_col).alias("embedding"),
-        "cluster_id",
-    )
-    train = (
-        src.select("id", "embedding")
-        .orderBy(F.abs(F.xxhash64(F.col("id"))).asc(), F.col("id").asc())
-        .limit(train_rows)
-        .collect()
-    )
-    X = np.array([r.embedding for r in train], dtype=np.float64)
-    if normalize:
-        X = X / np.maximum(np.linalg.norm(X, axis=1)[:, None], 1e-300)
-    R = train_opq_rotation(X, m=m)
-    rotated = rotate_df(spark, src, R, extra_cols=("cluster_id",))
-    pq = build_pq_index(
-        spark,
-        rotated,
-        os.path.join(out_dir, "pq"),
-        m=m,
-        nbits=nbits,
-        train_rows=train_rows,
-        normalize=normalize,
-        partition_col="cluster_id",
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, _META_FILE), "w") as f:
-        json.dump({"rotation": R.tolist()}, f)
-    return OpqIndex(path=out_dir, rotation=R, pq=pq)
-
-
-def ivfopq_search(
-    spark: SparkSession,
-    ivf_index,
-    opq_index: OpqIndex,
-    query_vec: Sequence[float],
-    k: int = 4,
-    strategy: str = "CosineSimilarity",
-    search_top_size: int = 2,
-    rerank: int | None = None,
-    round_digits: int | None = None,
-) -> DataFrame:
-    """IVF×OPQ read path: the stock IVFADC engine
-    (:func:`pq.ivfpq_search`) with one twist — the ADC stage sees the
-    ROTATED query (the codes live in rotated space) while centroid
-    routing and the full-precision rerank stay in the original space.
-    Exact when ``search_top_size >= n_clusters`` and ``rerank >=
-    corpus size`` (the oracle-gated configuration)."""
-    from .pq import ivfpq_search
-
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    return ivfpq_search(
-        spark,
-        ivf_index,
-        opq_index.pq,
-        [float(v) for v in q],
-        k=k,
-        strategy=strategy,
-        search_top_size=search_top_size,
-        rerank=rerank,
-        round_digits=round_digits,
-        adc_query_vec=[float(v) for v in (q @ opq_index.rotation)],
+    return build_opq_index(
+        spark, ivf_rows(spark, ivf_index), out_dir, m=m, nbits=nbits,
+        train_rows=train_rows, normalize=normalize, partition_col="cluster_id",
     )

@@ -27,13 +27,14 @@ Spark-native shape:
   (m x 2**nbits float64) is broadcast; each batch scores as ``m``
   gathers + a row sum, then local top-k, then the global
   TakeOrdered-style merge — only k rows per partition leave the scan.
-* **Rerank**: ADC shortlist -> broadcast-join the full-precision
-  vectors by id -> exact re-rank (same Column expressions as
-  exact_search). With ``shortlist >= corpus size`` the result is
-  EXACT (the shortlist is everything) — that variant is the oracle
-  gate; pruned shortlists trade recall for the join size, recall
-  contract pinned in tests/test_pq.py.
-* **IVFADC** (:func:`build_ivfpq_index` / :func:`ivfpq_search`): the
+* **Rerank**: :meth:`PqIndex.shortlist` is the ADC shortlist of
+  ``search.shortlist_search``, which semi-joins it into the
+  full-precision vectors and re-ranks them exactly. With a full
+  shortlist the result is EXACT — that variant is the oracle gate;
+  pruned shortlists trade recall for the join size, recall contract
+  pinned in tests/test_pq.py.
+* **IVFADC** (:func:`build_ivfpq_index`, searched with
+  ``shortlist_search(..., ivf_index=...)``): the
   codes layout is hive-partitioned by the IVF ``cluster_id``; a query
   reads only the ``search_top_size`` nearest cluster directories
   (planner-level pruning) and only the m-byte codes inside them —
@@ -60,9 +61,8 @@ from pyspark.sql import types as T
 
 from . import tombstones
 from ..config import DEFAULT_K, sort_descending, validate_strategy
-from ..functions.distance import score_expr
-from .index import _read_clusters
-from .search import _order_cols
+from .index import ivf_rows
+from .search import _order_cols, check_upsert_dim, read_codes
 from .tree import _lloyd
 
 _META_FILE = "_pq_meta.json"
@@ -86,6 +86,68 @@ class PqIndex:
     @property
     def n_codes(self) -> int:
         return self.codebooks.shape[1]
+
+    def shortlist(
+        self,
+        spark: SparkSession,
+        query_vec: Sequence[float],
+        n: int | None,
+        strategy: str,
+        keep: Sequence[int] | None = None,
+        filter_ids: DataFrame | None = None,
+    ) -> DataFrame:
+        """Approximate top-``n`` over the PQ codes only (no full
+        vectors touched): (id, score) with the ADC estimate as score,
+        ``n=None`` keeping every id (no score). Shuffle-free scan: each
+        partition emits at most ``n`` candidate rows. ``keep`` and
+        ``filter_ids`` prune the codes as in ``search.read_codes``
+        (``keep`` is the IVFADC read: whole code directories pruned at
+        planning time)."""
+        codes_df = read_codes(spark, self.path, self.path, keep, filter_ids)
+        if n is None:
+            return codes_df.select("id")
+        lut, needs_sqrt = _adc_table(self, query_vec, strategy)
+        desc = sort_descending(strategy)
+        bc = spark.sparkContext.broadcast((lut, self.m, desc, n))
+        codes_df = codes_df.select("id", "codes")
+        out_schema = T.StructType(
+            [
+                T.StructField("id", codes_df.schema["id"].dataType),
+                T.StructField("score", T.DoubleType()),
+            ]
+        )
+
+        def scan(batches):
+            import pandas as pd
+
+            lut_, m_, desc_, k_ = bc.value
+            cols = np.arange(m_)
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                codes = np.frombuffer(
+                    b"".join(pdf["codes"]), dtype=np.uint8
+                ).reshape(len(pdf), m_)
+                s = lut_[cols[None, :], codes].sum(axis=1)
+                kk = min(k_, len(s))
+                # local top-k with the same tie-break as the global merge
+                # (score direction, then id ascending): two stable sorts —
+                # an argpartition would cut ties at the k boundary
+                # arbitrarily and could drop the id the total order keeps
+                ids = pdf["id"].to_numpy()
+                by_id = np.argsort(ids, kind="stable")
+                s_id = s[by_id]
+                part = by_id[
+                    np.argsort(-s_id if desc_ else s_id, kind="stable")[:kk]
+                ]
+                yield pd.DataFrame({"id": ids[part], "score": s[part]})
+
+        out = codes_df.mapInPandas(scan, schema=out_schema)
+        if needs_sqrt:
+            out = out.withColumn(
+                "score", F.sqrt(F.greatest(F.col("score"), F.lit(0.0)))
+            )
+        return out.orderBy(*_order_cols(strategy)).limit(n)
 
 
 def train_pq_codebooks(
@@ -231,23 +293,25 @@ def pq_upsert(
 
     A partitioned (IVFADC) layout must stay partitioned: appending
     flat files into a hive-partitioned directory breaks partition
-    discovery and the pruned reads ``ivfpq_search`` depends on. When
-    ``index.partition_col`` is set, pass the owning ``IvfIndex`` so
+    discovery and the pruned reads ``search.shortlist_search`` depends
+    on. When ``index.partition_col`` is set, pass the owning ``IvfIndex`` so
     new rows are routed to their nearest centroid and appended with
     ``partitionBy`` (same routing as ``index.ivf_upsert``); without it
     this raises instead of corrupting the layout.
 
-    Rows whose vector length differs from the index dim are dropped
-    (they cannot be encoded). Returns the number of appended rows."""
+    A batch holding a vector whose length differs from the index dim
+    raises (``search.check_upsert_dim``). Returns the number of
+    appended rows."""
     if index.partition_col is not None and ivf_index is None:
         raise ValueError(
             f"codes layout is partitioned by {index.partition_col!r} "
             "(IVFADC); pass ivf_index= so appended rows are routed and "
             "written with partitionBy, or rebuild via build_ivfpq_index"
         )
+    check_upsert_dim(new_df, index.vec_col, index.dim, "pq_upsert")
     src = new_df.select(
         F.col(index.id_col).alias("id"), F.col(index.vec_col).alias("embedding")
-    ).filter(F.size("embedding") == index.dim)
+    )
     centroids = ivf_index.centroids if ivf_index is not None else None
     bc = spark.sparkContext.broadcast((index.codebooks, index.normalize, centroids))
 
@@ -389,119 +453,6 @@ def _adc_table(index: PqIndex, query_vec: Sequence[float], strategy: str) -> tup
     raise ValueError(f"unknown strategy {strategy!r}")
 
 
-def pq_adc_topk(
-    spark: SparkSession,
-    index: PqIndex,
-    query_vec: Sequence[float],
-    k: int = DEFAULT_K,
-    strategy: str = "CosineSimilarity",
-    partition_filter=None,
-    filter_ids: DataFrame | None = None,
-) -> DataFrame:
-    """Approximate top-k over PQ codes only (no full vectors touched).
-    Returns (id, score) with the ADC estimate as score. Shuffle-free
-    scan: each partition emits at most k candidate rows.
-    ``partition_filter`` (a Column over the codes layout's partition
-    column) turns this into the IVFADC read: whole code directories
-    are pruned at planning time before the scan even lists files.
-    ``filter_ids`` (1-column id DataFrame) restricts candidates BEFORE
-    the shortlist — the shared non-strict filtered-ANN contract: the
-    budget is spent on rows passing the filter, so full-shortlist
-    filtered results equal exact filtered search."""
-    validate_strategy(strategy)
-    lut, needs_sqrt = _adc_table(index, query_vec, strategy)
-    desc = sort_descending(strategy)
-    bc = spark.sparkContext.broadcast((lut, index.m, desc, k))
-
-    codes_df = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(index.path)
-    )
-    if partition_filter is not None:
-        codes_df = codes_df.filter(partition_filter)
-    if filter_ids is not None:
-        codes_df = codes_df.join(
-            filter_ids.select(F.col(filter_ids.columns[0]).alias("id")),
-            "id",
-            "left_semi",
-        )
-    codes_df = codes_df.select("id", "codes")
-    out_schema = T.StructType(
-        [
-            T.StructField("id", codes_df.schema["id"].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def scan(batches):
-        import pandas as pd
-
-        lut_, m_, desc_, k_ = bc.value
-        cols = np.arange(m_)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf["codes"]), dtype=np.uint8
-            ).reshape(len(pdf), m_)
-            s = lut_[cols[None, :], codes].sum(axis=1)
-            kk = min(k_, len(s))
-            # local top-k with the same tie-break as the global merge
-            # (score direction, then id ascending): two stable sorts —
-            # an argpartition would cut ties at the k boundary
-            # arbitrarily and could drop the id the total order keeps
-            ids = pdf["id"].to_numpy()
-            by_id = np.argsort(ids, kind="stable")
-            s_id = s[by_id]
-            part = by_id[
-                np.argsort(-s_id if desc_ else s_id, kind="stable")[:kk]
-            ]
-            yield pd.DataFrame({"id": ids[part], "score": s[part]})
-
-    out = codes_df.mapInPandas(scan, schema=out_schema)
-    if needs_sqrt:
-        out = out.withColumn("score", F.sqrt(F.greatest(F.col("score"), F.lit(0.0))))
-    direction = (
-        F.col("score").desc_nulls_last() if desc else F.col("score").asc_nulls_last()
-    )
-    return out.orderBy(direction, F.col("id").asc()).limit(k)
-
-
-def pq_search_rerank(
-    spark: SparkSession,
-    index: PqIndex,
-    full_df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = DEFAULT_K,
-    strategy: str = "CosineSimilarity",
-    shortlist: int = 100,
-    round_digits: int | None = None,
-) -> DataFrame:
-    """ADC shortlist -> exact re-rank on full-precision vectors.
-
-    ``shortlist >= corpus size`` makes this EXACT (identical to
-    exact_search over (id, score)) — the oracle-gated configuration;
-    smaller shortlists trade recall for the size of the broadcast
-    rescore join. Returns (id, score), score exact per score_expr.
-    """
-    validate_strategy(strategy)
-    cand = pq_adc_topk(spark, index, query_vec, k=shortlist, strategy=strategy)
-    ids = cand.select("id")
-    src = full_df.select(
-        F.col(index.id_col).alias("id"), F.col(index.vec_col).alias("embedding")
-    )
-    # shortlist is small (<= shortlist rows): broadcast the semi-join
-    hit = src.join(F.broadcast(ids), "id", "left_semi")
-    score = score_expr(strategy, "embedding", list(query_vec))
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        hit.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
-    )
-
-
 def _adc_tables_batch(
     index: PqIndex, Q: np.ndarray, strategy: str
 ) -> tuple[np.ndarray, bool]:
@@ -638,78 +589,9 @@ def build_ivfpq_index(
     """IVFADC build: PQ-encode the IVF index's partitioned layout,
     keeping ``cluster_id`` as the codes partition column. The returned
     PqIndex reads ~(search_top_size / n_clusters) of the code bytes
-    when searched through :func:`ivfpq_search`."""
-    src = _read_clusters(spark, ivf_index).select(
-        F.col(ivf_index.id_col).alias("id"),
-        F.col(ivf_index.vec_col).alias("embedding"),
-        "cluster_id",
-    )
+    when searched through ``search.shortlist_search(...,
+    ivf_index=...)``."""
     return build_pq_index(
-        spark, src, out_dir, m=m, nbits=nbits, train_rows=train_rows,
+        spark, ivf_rows(spark, ivf_index), out_dir, m=m, nbits=nbits, train_rows=train_rows,
         normalize=normalize, partition_col="cluster_id",
-    )
-
-
-def ivfpq_search(
-    spark: SparkSession,
-    ivf_index,
-    pq_index: PqIndex,
-    query_vec: Sequence[float],
-    k: int = DEFAULT_K,
-    strategy: str = "CosineSimilarity",
-    search_top_size: int = 2,
-    rerank: int | None = None,
-    round_digits: int | None = None,
-    adc_query_vec: Sequence[float] | None = None,
-) -> DataFrame:
-    """Classic IVFADC: rank the (tiny) centroid table on the driver,
-    prune the codes layout to the ``search_top_size`` nearest cluster
-    directories, ADC-score only those codes, and optionally re-rank a
-    shortlist against full-precision vectors (read from the IVF
-    layout, pruned to the same clusters). Exact when
-    ``search_top_size >= n_clusters`` and ``rerank >= corpus size``.
-
-    Scan economics at 100 TB: bytes read ~= corpus_bytes x
-    (search_top_size / n_clusters) x (m / 4·dim) — both pruning levers
-    multiply."""
-    from .index import _rank_centroids
-
-    validate_strategy(strategy)
-    keep = _rank_centroids(ivf_index, query_vec, strategy)[:search_top_size]
-    # adc_query_vec: the query as the CODES see it (OPQ rotates the
-    # coding space; centroid routing and the rerank stay in the
-    # original space) — None means codes and store share one space
-    cand = pq_adc_topk(
-        spark, pq_index,
-        query_vec if adc_query_vec is None else adc_query_vec,
-        k=rerank if rerank else k, strategy=strategy,
-        partition_filter=F.col("cluster_id").isin(keep),
-    )
-    if not rerank:
-        if round_digits is not None:
-            cand = cand.withColumn(
-                "score", F.round(F.col("score"), round_digits) + F.lit(0.0)
-            )
-        return cand
-    full = (
-        tombstones.apply_tombstones(
-            spark,
-            ivf_index.path,
-            _read_clusters(spark, ivf_index, keep),
-            id_col=ivf_index.id_col,
-        )
-        .select(
-            F.col(ivf_index.id_col).alias("id"),
-            F.col(ivf_index.vec_col).alias("embedding"),
-        )
-    )
-    hit = full.join(F.broadcast(cand.select("id")), "id", "left_semi")
-    score = score_expr(strategy, "embedding", list(query_vec))
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        hit.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
     )

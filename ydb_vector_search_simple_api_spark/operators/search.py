@@ -29,6 +29,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import tombstones
 from ..config import (
     ColumnMap,
     DEFAULT_K,
@@ -79,6 +80,33 @@ def _filter_cond(flt: Mapping[str, str]) -> Column:
         c = F.col(field) == F.lit(value)
         cond = c if cond is None else (cond & c)
     return cond
+
+
+def rank_topk(
+    vecs: DataFrame,
+    query_vec: Sequence[float],
+    k: int,
+    strategy: str,
+    round_digits: int | None = None,
+) -> DataFrame:
+    """The exact tail of every single-query search: the (id, score)
+    top-``k`` of an ``(id, embedding)`` relation, scored against the
+    query, ordered by :func:`_order_cols` (TakeOrderedAndProject).
+
+    ``query_vec`` is a PLAIN vector, so cosine folds the query norm to
+    a literal driver-side (Catalyst won't constant-fold a HOF over a
+    literal array, so a query column would re-fold the norm per row).
+    ``round_digits`` rounds the score; ``+ 0.0`` canonicalizes IEEE
+    -0.0 to 0.0 (oracle bit-parity)."""
+    score = score_expr(strategy, "embedding", query_vec)
+    if round_digits is not None:
+        score = F.round(score, round_digits) + F.lit(0.0)
+    return (
+        vecs.withColumn("score", score)
+        .select("id", "score")
+        .orderBy(*_order_cols(strategy))
+        .limit(k)
+    )
 
 
 def filtered_doc_ids(
@@ -134,20 +162,7 @@ def exact_topk(
         # vector table; Catalyst broadcasts it when small.
         embs = embs.join(filtered_doc_ids(spark, sf_dir, flt, m), "id", "left_semi")
 
-    # pass the PLAIN vector so cosine folds the query norm to a literal
-    # driver-side (Catalyst won't constant-fold a HOF over a literal
-    # array, so a query column would re-fold the norm per row)
-    score = score_expr(strategy, "embedding", query_vec)
-    if round_digits is not None:
-        # + 0.0 canonicalizes IEEE -0.0 to 0.0 (oracle bit-parity)
-        score = F.round(score, round_digits) + F.lit(0.0)
-
-    return (
-        embs.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
-    )
+    return rank_topk(embs, query_vec, k, strategy, round_digits)
 
 
 def exact_search(
@@ -504,12 +519,90 @@ def prefix_dim_search_rerank(
             .select("id")
         )
         vecs = vecs.join(F.broadcast(cand), "id", "left_semi")
-    score = score_expr(strategy, "embedding", q_full)
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        vecs.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
-    )
+    return rank_topk(vecs, q_full, k, strategy, round_digits)
+
+
+def read_codes(
+    spark: SparkSession,
+    index_path: str,
+    codes_dir: str,
+    keep: Sequence[int] | None = None,
+    filter_ids: DataFrame | None = None,
+) -> DataFrame:
+    """The rows of a code layout (PQ, SQ8 or BQ) one search may
+    shortlist: the ``codes_dir`` table without the ids tombstoned at
+    ``index_path``, pruned to the IVF clusters in ``keep`` (a
+    ``cluster_id`` PartitionFilter of the IVF-composed layouts; None
+    keeps all) and to the ids of ``filter_ids`` (a 1-column DataFrame,
+    applied BEFORE the shortlist: the non-strict filtered-ANN contract,
+    so a full shortlist gives the exact filtered top-k)."""
+    codes = tombstones.apply_tombstones(spark, index_path, spark.read.parquet(codes_dir))
+    if keep is not None:
+        codes = codes.filter(F.col("cluster_id").isin(keep))
+    if filter_ids is not None:
+        codes = codes.join(
+            filter_ids.selectExpr(f"`{filter_ids.columns[0]}` AS id"), "id", "left_semi"
+        )
+    return codes
+
+
+def shortlist_search(
+    spark: SparkSession,
+    index,
+    vecs: DataFrame | None,
+    query_vec: Sequence[float],
+    k: int = DEFAULT_K,
+    strategy: str = "CosineSimilarity",
+    shortlist: int | None = None,
+    filter_ids: DataFrame | None = None,
+    round_digits: int | None = None,
+    ivf_index=None,
+    search_top_size: int | None = None,
+) -> DataFrame:
+    """The one search of the code layouts (``PqIndex``, ``OpqIndex``,
+    ``SqIndex``, ``BqIndex``): the layout's code-domain shortlist of
+    ``shortlist`` ids (None keeps every row), then the exact rerank of
+    :func:`rank_topk` over the full-precision vectors of those ids.
+    Returns (id, score).
+
+    Flat layouts rerank ``vecs``, an ``(id, embedding)`` relation. With
+    ``ivf_index`` (a layout built by ``build_ivf{pq,opq,sq,bq}_index``)
+    the centroids are ranked on the driver, the codes and the IVF
+    layout are both pruned to the ``search_top_size`` nearest clusters
+    (None: all), and the rerank reads the IVF layout's kept clusters
+    without its tombstoned ids; ``vecs`` is then unused.
+
+    The shortlist ids semi-join into the vectors (broadcast: a
+    shortlist is small by construction), so an id the codes hold twice
+    is ranked once. Exact when the shortlist keeps every row and, with
+    ``ivf_index``, the width covers every cluster."""
+    validate_strategy(strategy)
+    if not isinstance(k, int) or k < 1:
+        raise ValueError("k must be a positive integer")
+    if len(query_vec) != index.dim:
+        raise ValueError(f"query dim {len(query_vec)} != index dim {index.dim}")
+    keep = None
+    if ivf_index is not None:
+        from .index import _rank_centroids, _read_clusters
+
+        keep = _rank_centroids(ivf_index, query_vec, strategy)[:search_top_size]
+        vecs = tombstones.apply_tombstones(
+            spark,
+            ivf_index.path,
+            _read_clusters(spark, ivf_index, keep),
+            id_col=ivf_index.id_col,
+        ).selectExpr(
+            f"`{ivf_index.id_col}` AS id", f"`{ivf_index.vec_col}` AS embedding"
+        )
+    cand = index.shortlist(spark, query_vec, shortlist, strategy, keep, filter_ids)
+    hit = vecs.join(F.broadcast(cand.select("id")), "id", "left_semi")
+    return rank_topk(hit, query_vec, k, strategy, round_digits)
+
+
+def check_upsert_dim(new_df: DataFrame, vec_col: str, dim: int, op: str) -> None:
+    """The dimension rule of every code-layout upsert: raise when a row
+    of ``new_df`` holds a vector whose length is not the index ``dim``
+    (one bounded Spark job). Codes of another length would score NULL
+    and silently sink in every later result."""
+    if new_df.filter(F.size(F.col(vec_col)) != dim).limit(1).count():
+        raise ValueError(f"{op} batch has vectors whose length != index dim {dim}")

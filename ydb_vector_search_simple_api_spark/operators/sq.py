@@ -33,13 +33,13 @@ Spark-native shape:
   brute-force float scan; this form measures 1.4× faster at 4M
   rows CPU-bound, plus the ~2× parquet byte cut when scan-bound
   (see ``_approx_score``).
-* **Shortlist**: ``ORDER BY approx score LIMIT shortlist`` compiles
-  to TakeOrderedAndProject.
-* **Rerank**: shortlist ids broadcast-join back into the
-  full-precision table; exact strategy score re-ranks. With
-  ``shortlist >= corpus`` the result is EXACT for every strategy —
-  the oracle-gate variant; pruned shortlists trade recall for scan
-  bytes (recall contract pinned in tests/test_sq.py).
+* **Shortlist** (:meth:`SqIndex.shortlist`): ``ORDER BY approx score
+  LIMIT shortlist`` compiles to TakeOrderedAndProject.
+* **Rerank** (``search.shortlist_search``): shortlist ids broadcast
+  semi-join into the full-precision table; exact strategy score
+  re-ranks. With a full shortlist the result is EXACT for every
+  strategy — the oracle-gate variant; pruned shortlists trade recall
+  for scan bytes (recall contract pinned in tests/test_sq.py).
 
 Reference parity: extends the reference's ANN surface
 (app.py:267-405 exposes flat search only); cited for the shared
@@ -57,17 +57,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import tombstones
-from ..config import validate_strategy
 from ..functions.distance import (
     _py_l2_norm,
     double_sql,
     fold_sql,
     operand_sql,
-    score_expr,
     score_sql,
 )
-from .index import _read_clusters
-from .search import _order_cols
+from .index import ivf_rows
+from .search import _order_cols, check_upsert_dim, read_codes
 
 
 @dataclass(frozen=True)
@@ -81,6 +79,31 @@ class SqIndex:
     dim: int
     n_rows: int
     partition_col: str | None = None
+
+    def shortlist(
+        self,
+        spark: SparkSession,
+        query_vec: Sequence[float],
+        n: int | None,
+        strategy: str,
+        keep: Sequence[int] | None = None,
+        filter_ids: DataFrame | None = None,
+    ) -> DataFrame:
+        """The ``n`` best (id, score) rows by the one-fold approximate
+        score over the int8 codes (``_approx_score``; TakeOrdered),
+        ``n=None`` keeping every id (no score). ``keep`` and
+        ``filter_ids`` prune the codes as in ``search.read_codes``."""
+        codes = read_codes(
+            spark, self.path, os.path.join(self.path, "codes"), keep, filter_ids
+        )
+        if n is None:
+            return codes.select("id")
+        return (
+            codes.withColumn("score", _approx_score(strategy, list(query_vec)))
+            .select("id", "score")
+            .orderBy(*_order_cols(strategy))
+            .limit(n)
+        )
 
 
 def encode_sq(
@@ -149,19 +172,34 @@ def build_sq_index(
     path: str,
     vec_col: str = "embedding",
     id_col: str = "id",
+    partition_col: str | None = None,
 ) -> SqIndex:
-    """Encode + persist. One pass, no shuffle, no driver collect."""
+    """Encode + persist. One pass, no shuffle, no driver collect.
+    ``partition_col`` (the IVF ``cluster_id``) rides the encode and
+    becomes the hive partition of the codes layout, as in
+    ``pq.build_pq_index``."""
     first = src.select(F.size(F.col(vec_col)).alias("d")).first()
     if first is None:
         raise ValueError("cannot build an SQ index over an empty source")
-    dim = int(first["d"])
-    encode_sq(src, vec_col=vec_col, id_col=id_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "codes"))
+    extra = (partition_col,) if partition_col else ()
+    writer = encode_sq(src, vec_col=vec_col, id_col=id_col, extra_cols=extra).write
+    writer.mode("overwrite").partitionBy(*extra).parquet(os.path.join(path, "codes"))
     n_rows = spark.read.parquet(os.path.join(path, "codes")).count()
-    with open(os.path.join(path, "_sq_meta.json"), "w") as f:
-        json.dump({"dim": dim, "n_rows": n_rows, "id_col": id_col}, f)
-    return SqIndex(path=path, dim=dim, n_rows=n_rows)
+    return _save_meta(
+        SqIndex(path, int(first["d"]), n_rows, partition_col), id_col
+    )
+
+
+def _save_meta(index: SqIndex, id_col: str) -> SqIndex:
+    with open(os.path.join(index.path, "_sq_meta.json"), "w") as f:
+        json.dump(
+            {
+                "dim": index.dim, "n_rows": index.n_rows, "id_col": id_col,
+                "partition_col": index.partition_col,
+            },
+            f,
+        )
+    return index
 
 
 def load_sq_index(path: str) -> SqIndex:
@@ -220,61 +258,6 @@ def _approx_score(strategy: str, q: Sequence[float]) -> Column:
     return F.expr(sql)
 
 
-def sq_search_rerank(
-    spark: SparkSession,
-    index: SqIndex,
-    src: DataFrame,
-    query_vec: Sequence[float],
-    k: int,
-    strategy: str = "CosineSimilarity",
-    shortlist: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "id",
-    round_digits: int | None = None,
-    filter_ids: DataFrame | None = None,
-) -> DataFrame:
-    """Dequantized-approx shortlist -> exact re-rank -> (id, score)
-    top-k. ``shortlist=None`` keeps every row (exact for any strategy
-    — the oracle-gate configuration); ``filter_ids`` restricts
-    candidates BEFORE the shortlist (the shared non-strict filtered
-    contract), so full-shortlist filtered == exact filtered."""
-    validate_strategy(strategy)
-    if not isinstance(k, int) or k < 1:
-        raise ValueError("k must be a positive integer")
-    if len(query_vec) != index.dim:
-        raise ValueError(f"query dim {len(query_vec)} != index dim {index.dim}")
-    n_short = index.n_rows if shortlist is None else int(shortlist)
-
-    codes = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(os.path.join(index.path, "codes")),
-        id_col=id_col,
-    )
-    if filter_ids is not None:
-        codes = codes.join(
-            filter_ids.selectExpr(f"`{filter_ids.columns[0]}` AS `{id_col}`"),
-            id_col,
-            "left_semi",
-        )
-    approx = _approx_score(strategy, list(query_vec))
-    cand = (
-        codes.withColumn("score", approx)
-        .select(id_col, "score")
-        .orderBy(*_order_cols(strategy, id_col=id_col))
-        .limit(int(n_short))
-    )
-    vecs = src.selectExpr(f"`{id_col}`", f"`{vec_col}`")
-    joined = vecs.join(F.broadcast(cand.select(id_col)), id_col, "inner")
-    score = score_expr(strategy, vec_col, list(query_vec))
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        joined.withColumn("score", score)
-        .selectExpr(f"`{id_col}` AS id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
-    )
-
-
 def sq_upsert(
     spark: SparkSession,
     index: SqIndex,
@@ -299,13 +282,7 @@ def sq_upsert(
             "rebuild via build_ivfsq_index (or ingest through ivf_upsert "
             "and re-encode the touched clusters)"
         )
-    # dim guard: a mis-dimensioned batch would append codes that score
-    # NULL through zip_with padding and silently sink in results
-    bad = new_df.filter(F.size(F.col(vec_col)) != index.dim).limit(1).count()
-    if bad:
-        raise ValueError(
-            f"sq_upsert batch has vectors whose length != index dim {index.dim}"
-        )
+    check_upsert_dim(new_df, vec_col, index.dim, "sq_upsert")
     codes_df = encode_sq(new_df, vec_col=vec_col, id_col=id_col)
     codes_df.persist()
     try:
@@ -314,10 +291,7 @@ def sq_upsert(
         codes_df.write.mode("append").parquet(os.path.join(index.path, "codes"))
     finally:
         codes_df.unpersist()
-    out = SqIndex(path=index.path, dim=index.dim, n_rows=index.n_rows + n_new)
-    with open(os.path.join(index.path, "_sq_meta.json"), "w") as f:
-        json.dump({"dim": out.dim, "n_rows": out.n_rows, "id_col": id_col}, f)
-    return out
+    return _save_meta(SqIndex(index.path, index.dim, index.n_rows + n_new), id_col)
 
 
 def sq_compact(
@@ -334,7 +308,7 @@ def sq_compact(
     keeps one row per id for streaming replay hygiene. A partitioned
     (IVF x SQ) layout compacts partition-aware — one file per cluster
     directory, ``partition_col`` preserved in the meta — so
-    ``ivfsq_search`` keeps cluster-directory pruning and the
+    the IVF-composed search keeps cluster-directory pruning and the
     ``sq_upsert`` partition guard keeps rejecting flat appends."""
     if n_files < 1:
         raise ValueError("n_files must be a positive integer")
@@ -356,14 +330,8 @@ def sq_compact(
             os.path.join(out_dir, "codes")
         )
     n_rows = spark.read.parquet(os.path.join(out_dir, "codes")).count()
-    with open(os.path.join(out_dir, "_sq_meta.json"), "w") as f:
-        json.dump({
-            "dim": index.dim, "n_rows": n_rows, "id_col": id_col,
-            "partition_col": index.partition_col,
-        }, f)
-    return SqIndex(
-        path=out_dir, dim=index.dim, n_rows=n_rows,
-        partition_col=index.partition_col,
+    return _save_meta(
+        SqIndex(out_dir, index.dim, n_rows, index.partition_col), id_col
     )
 
 
@@ -377,89 +345,6 @@ def build_ivfsq_index(spark: SparkSession, ivf_index, out_dir: str) -> SqIndex:
     of the rows AND ~1/2 of the parquet bytes per row it does read,
     with near-exact codes (tight shortlists; see the recall contract
     in tests/test_sq.py)."""
-    src = _read_clusters(spark, ivf_index).select(
-        F.col(ivf_index.id_col).alias("id"),
-        F.col(ivf_index.vec_col).alias("embedding"),
-        "cluster_id",
-    )
-    first = src.select(F.size("embedding").alias("d")).first()
-    if first is None:
-        raise ValueError("cannot build over an empty IVF layout")
-    dim = int(first["d"])
-    codes_df = encode_sq(src, extra_cols=("cluster_id",))
-    (
-        codes_df.write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(os.path.join(out_dir, "codes"))
-    )
-    n_rows = spark.read.parquet(os.path.join(out_dir, "codes")).count()
-    with open(os.path.join(out_dir, "_sq_meta.json"), "w") as f:
-        json.dump(
-            {
-                "dim": dim, "n_rows": n_rows, "id_col": "id",
-                "partition_col": "cluster_id",
-            },
-            f,
-        )
-    return SqIndex(
-        path=out_dir, dim=dim, n_rows=n_rows, partition_col="cluster_id"
-    )
-
-
-def ivfsq_search(
-    spark: SparkSession,
-    ivf_index,
-    sq_index: SqIndex,
-    query_vec: Sequence[float],
-    k: int,
-    strategy: str = "CosineSimilarity",
-    search_top_size: int = 2,
-    shortlist: int | None = None,
-    round_digits: int | None = None,
-) -> DataFrame:
-    """Rank centroids on the driver -> prune the codes layout to the
-    ``search_top_size`` nearest cluster directories (planner-level
-    partition pruning) -> one-fold approx shortlist inside them ->
-    exact rerank against the full-precision vectors of the SAME
-    pruned clusters. Exact when ``search_top_size >= n_clusters`` and
-    ``shortlist=None``."""
-    from .index import _rank_centroids
-
-    validate_strategy(strategy)
-    if not isinstance(k, int) or k < 1:
-        raise ValueError("k must be a positive integer")
-    if len(query_vec) != sq_index.dim:
-        raise ValueError(f"query dim {len(query_vec)} != index dim {sq_index.dim}")
-    keep = _rank_centroids(ivf_index, query_vec, strategy)[:search_top_size]
-
-    codes = tombstones.apply_tombstones(
-        spark,
-        sq_index.path,
-        spark.read.parquet(os.path.join(sq_index.path, "codes")).filter(
-            F.col("cluster_id").isin(keep)
-        ),
-    )
-    n_short = sq_index.n_rows if shortlist is None else int(shortlist)
-    cand = (
-        codes.withColumn("score", _approx_score(strategy, list(query_vec)))
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(int(n_short))
-    )
-    vecs = (
-        _read_clusters(spark, ivf_index, keep)
-        .select(
-            F.col(ivf_index.id_col).alias("id"),
-            F.col(ivf_index.vec_col).alias("embedding"),
-        )
-    )
-    joined = vecs.join(F.broadcast(cand.select("id")), "id", "inner")
-    score = score_expr(strategy, "embedding", list(query_vec))
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        joined.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
+    return build_sq_index(
+        spark, ivf_rows(spark, ivf_index), out_dir, partition_col="cluster_id"
     )

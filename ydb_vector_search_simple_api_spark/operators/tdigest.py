@@ -177,35 +177,6 @@ def _partials(
     )
 
 
-def _fold_partials(partials: DataFrame, delta: int) -> DataFrame:
-    """Merge all shard partials per key: concat centroids, ONE
-    compression over the (mean, weight)-sorted stream — order of
-    arrival irrelevant by construction."""
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        means: list[float] = []
-        weights: list[float] = []
-        for m, w in zip(pdf["means"], pdf["weights"]):
-            means.extend(m)
-            weights.extend(w)
-        m, w = compress(means, weights, delta)
-        return pd.DataFrame(
-            [(key, m, w, float(sum(w)))],
-            columns=["key", "means", "weights", "n"],
-        )
-
-    schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("means", T.ArrayType(T.DoubleType())),
-            T.StructField("weights", T.ArrayType(T.DoubleType())),
-            T.StructField("n", T.DoubleType()),
-        ]
-    )
-    return partials.groupBy("key").applyInPandas(fold, schema=schema)
-
-
 def build_tdigest_store(
     df: DataFrame,
     out_dir: str,

@@ -93,12 +93,6 @@ def resurrect_ids(spark: SparkSession, index_path: str, ids_df: DataFrame, id_co
         )
 
 
-def clear_tombstones(index_path: str) -> None:
-    import shutil
-
-    shutil.rmtree(tombstone_path(index_path), ignore_errors=True)
-
-
 # ------------------------------------------------ generation pointer
 
 _POINTER = "_serving_pointer.json"

@@ -67,7 +67,7 @@ from .index import (
 )
 from ..config import DEFAULT_K, validate_strategy
 from ..functions.distance import score_expr
-from .search import _order_cols, _rank_per_query
+from .search import _rank_per_query, rank_topk
 
 _META_FILE = "_kmeans_tree.json"
 
@@ -372,15 +372,7 @@ def tree_search(
     if filter_ids is not None:
         pruned = pruned.join(filter_ids, "id", "left_semi")
 
-    score = score_expr(strategy, "embedding", query_vec)
-    if round_digits is not None:
-        score = F.round(score, round_digits) + F.lit(0.0)
-    return (
-        pruned.withColumn("score", score)
-        .select("id", "score")
-        .orderBy(*_order_cols(strategy))
-        .limit(k)
-    )
+    return rank_topk(pruned, query_vec, k, strategy, round_digits)
 
 
 def tree_upsert(

@@ -36,12 +36,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in simple_plan(df)
 
 
-def has_full_sort(df: DataFrame) -> bool:
-    """A global (non-topk) sort — the thing top-k queries must avoid."""
-    plan = simple_plan(df)
-    return "Sort " in plan or "+- Sort" in plan
-
-
 def pushed_filters(df: DataFrame) -> str:
     """Concatenated PushedFilters sections of every scan in the plan."""
     out = []

@@ -135,8 +135,9 @@ def stream_ivfpq_ingest(
     (``ivf_upsert``) and (2) PQ-encoded against the frozen codebooks
     and appended into the cluster-partitioned IVFADC codes layout
     (``pq_upsert`` with the same routing centroids) — the pair
-    ``ivfpq_search`` reads (codes for the ADC scan, full vectors for
-    the rerank) stays consistent batch by batch.
+    ``search.shortlist_search(..., ivf_index=...)`` reads (codes for
+    the ADC shortlist, full vectors for the rerank) stays consistent
+    batch by batch.
 
     Both appends run inside ONE foreachBatch, so a replayed batch
     re-appends to both layouts together (never codes without vectors).
