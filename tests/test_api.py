@@ -820,3 +820,19 @@ def test_exact_search_df_projects_in_sql_text(spark, engine, qvec):
     got = df.collect()
     assert [r.id for r in got] == [i for _, i in want]
     assert [r.score for r in got] == pytest.approx([-c for c, _ in want], abs=1e-12)
+
+
+#: py4j commands of one warm BQ ``search_df`` (k=10, shortlist 50) when
+#: the Hamming score was built from Column lambdas
+COLUMN_API_BQ_COMMANDS = 206
+
+
+def test_bq_search_df_scores_in_sql_text(spark, qvec, bq_engine):
+    """The Hamming shortlist score is one SQL string: a warm BQ
+    ``search_df`` sends at most half the py4j commands of the Column
+    lambda form."""
+    from conftest import py4j_commands
+
+    bq_engine.search_df(qvec, k=10, search_top_size=50)
+    _, n = py4j_commands(spark, lambda: bq_engine.search_df(qvec, k=10, search_top_size=50))
+    assert n <= 0.5 * COLUMN_API_BQ_COMMANDS, n

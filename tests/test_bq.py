@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_simple_api_spark.operators import bq
+from ydb_vector_search_simple_api_spark.operators.layout import codes_upsert, compact
 from ydb_vector_search_simple_api_spark.operators.search import (
     exact_search,
     shortlist_search,
@@ -68,6 +69,38 @@ def test_spark_hamming_matches_numpy(spark, bq_index):
     want = ((X > 0) != (np.asarray(q) > 0)).sum(axis=1)
     for vid, h in zip(t.vec_id.values, want):
         assert got[int(vid)] == int(h)
+
+
+def _column_hamming(bits_col, query_words):
+    """The Column-lambda form ``hamming_expr`` replaced (the reference
+    the SQL text must equal)."""
+    q = F.array(*[F.lit(int(w)).cast("long") for w in query_words])
+    per_word = F.zip_with(F.col(bits_col), q, lambda x, y: F.bit_count(x.bitwiseXOR(y)))
+    return F.aggregate(per_word, F.lit(0), lambda acc, x: acc + x)
+
+
+def test_hamming_sql_equals_the_column_form(spark):
+    """``hamming_expr`` is one SQL string: the counts equal the Column
+    lambda form's bit for bit (extreme words included), and so does the
+    optimized plan up to lambda-variable names and expression ids."""
+    import re
+
+    words = [-(2**63), 2**63 - 1, 0, -1, 5, 2**40]
+    rng = np.random.default_rng(3)
+    rows = [([-(2**63), 0, -1, 7, 2**62, 9],)] + [
+        ([int(w) for w in rng.integers(-(2**63), 2**63 - 1, size=6, dtype=np.int64)],)
+        for _ in range(50)
+    ]
+    df = spark.createDataFrame(rows, "bits array<bigint>")
+    old = df.select(_column_hamming("bits", words).alias("h"))
+    new = df.select(bq.hamming_expr("bits", words).alias("h"))
+    assert [r.h for r in new.collect()] == [r.h for r in old.collect()]
+
+    def plan(d):
+        text = d._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+", "#N", re.sub(r"lambda \w+#", "lambda v#", text))
+
+    assert plan(new) == plan(old)
 
 
 def test_full_shortlist_is_exact(spark, bq_index):
@@ -175,7 +208,8 @@ def test_bq_upsert_and_compact(spark, tmp_path):
     path = str(tmp_path / "bq_up")
     idx = bq.build_bq_index(spark, head, path, dim=64)
     assert idx.n_rows == 400
-    idx = bq.bq_upsert(spark, idx, tail)
+    codes_upsert(spark, idx, tail)
+    idx = bq.load_bq_index(path)
     assert idx.n_rows == 500
     q = _qvec(spark)
     got = shortlist_search(
@@ -184,10 +218,11 @@ def test_bq_upsert_and_compact(spark, tmp_path):
     want = exact_search(spark, SF_SMALL, q, k=10, round_digits=6).collect()
     assert [(r.id, r.score) for r in got] == [(r.id, r.score) for r in want]
     # replayed append -> duplicate ids; compact with dedup restores 1/row
-    idx2 = bq.bq_upsert(spark, idx, tail)
+    codes_upsert(spark, idx, tail)
+    idx2 = bq.load_bq_index(path)
     assert idx2.n_rows == 600
     out = str(tmp_path / "bq_gen2")
-    idx3 = bq.bq_compact(spark, idx2, out, n_files=1, dedup_ids=True)
+    idx3 = compact(spark, idx2, out, dedup_ids=True)
     assert idx3.n_rows == 500
     got2 = shortlist_search(
         spark, idx3, src, q, k=10, shortlist=None, round_digits=6
@@ -235,12 +270,12 @@ def test_partitioned_layout_maintenance_guards(spark, tmp_path):
     # flat append into a hive-partitioned tree must be refused
     tail = _src(spark).filter(F.col("id") < 10)
     with pytest.raises(ValueError, match="partitioned"):
-        bq.bq_upsert(spark, bidx, tail)
+        codes_upsert(spark, bidx, tail)
     # compaction preserves the partition directories
     import glob
 
     gen2 = str(tmp_path / "ivfbq_gen2")
-    c = bq.bq_compact(spark, bidx, gen2, n_files=1)
+    c = compact(spark, bidx, gen2)
     assert c.partition_col == "cluster_id"
     assert len(glob.glob(f"{gen2}/bits/cluster_id=*")) == ivf_idx.n_clusters
     q = _qvec(spark)

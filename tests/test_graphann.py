@@ -186,7 +186,8 @@ def test_upsert_then_compact_preserves_search(spark):
             (10001 + i, [float(x) + 0.5 * (i + 1) for x in q]) for i in range(3)
         ]
         new_df = spark.createDataFrame(new_rows, ["id", "embedding"])
-        idx2 = G.graphann_upsert(spark, idx, new_df)
+        assert G.graphann_upsert(spark, idx, new_df)["n_appended"] == 4
+        idx2 = G.load_graph_index(base_out)
         assert idx2.n_rows == 404
 
         grown = embs.unionByName(new_df)
@@ -328,7 +329,8 @@ def test_navigation_seeds_persist_and_search(spark):
         batch = embs.filter(F.col("id") < 4).select(
             (F.col("id") + n0 + 1_000_000).alias("id"), "embedding"
         )
-        idx2 = G.graphann_upsert(spark, idx, batch)
+        G.graphann_upsert(spark, idx, batch)
+        idx2 = G.load_graph_index(idx.path)
         assert list(idx2.seeds) == seeds
         idx3 = G.graphann_compact(spark, idx2, out2)
         assert list(idx3.seeds) == seeds

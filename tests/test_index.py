@@ -199,7 +199,7 @@ def test_ivf_upsert_appends_and_stays_exact_at_full_width(spark, tmp_path_factor
 
     stats = ivf_mod.ivf_upsert(spark, idx, second)
     assert stats["n_appended"] == second.count()
-    assert sum(stats["per_cluster"].values()) == stats["n_appended"]
+    assert sum(stats["per_partition"].values()) == stats["n_appended"]
     assert stats["max_assign_l2"] > 0.0
 
     qrow = embs.filter(F.col("id") == 1).head()
@@ -224,10 +224,11 @@ def test_ivf_upsert_appends_and_stays_exact_at_full_width(spark, tmp_path_factor
     ]
     assert got == want
 
-    # mismatched-dimension rows route nowhere and are not appended
+    # a batch with a mismatched-dimension row raises and appends nothing
     bad = spark.createDataFrame([(999999, [1.0, 2.0])], "id long, embedding array<float>")
-    s2 = ivf_mod.ivf_upsert(spark, idx, bad)
-    assert s2["n_appended"] == 0
+    with pytest.raises(ValueError, match="index dim 64"):
+        ivf_mod.ivf_upsert(spark, idx, bad)
+    assert spark.read.parquet(idx.path).count() == embs.count()
 
 
 def test_ivf_compact_reduces_files_and_preserves_results(spark, tmp_path_factory):
@@ -253,10 +254,10 @@ def test_ivf_compact_reduces_files_and_preserves_results(spark, tmp_path_factory
         return len(glob.glob(p + "/cluster_id=*/*.parquet"))
 
     before = n_files(base + "/g0")
-    idx2 = ivf_mod.ivf_compact(spark, idx, base + "/g1", files_per_cluster=1)
+    idx2 = ivf_mod.ivf_compact(spark, idx, base + "/g1")
     after = n_files(base + "/g1")
     assert after < before
-    assert after <= 4 * 1 + 4  # ~files_per_cluster per non-empty cluster
+    assert after == len(glob.glob(base + "/g1/cluster_id=*"))  # one per cluster
 
     qrow = embs.filter(F.col("id") == 2).head()
     qvec = [float(x) for x in qrow.embedding]
@@ -315,40 +316,6 @@ def test_knn_join_variants_accept_string_query_ids(
         assert dict(df.dtypes)["query_id"] == "string", name
         got = {(r.query_id, r.rank): r.id for r in df.collect()}
         assert got == exact, name
-
-
-def test_ivf_compact_files_per_cluster_salting(spark, tmp_path_factory):
-    """files_per_cluster > 1 must actually spread each cluster over
-    that many files (salted repartition), with identical results."""
-    import glob
-
-    from ydb_vector_search_simple_api_spark.operators import index as ivf_mod
-
-    base = str(tmp_path_factory.mktemp("ivf_fpc"))
-    embs = load_embeddings(spark, SF_SMALL).select(
-        F.col("vec_id").alias("id"), "embedding"
-    )
-    idx = ivf_mod.build_ivf_index(spark, embs, base + "/g0", n_clusters=2, seed=42)
-    idx2 = ivf_mod.ivf_compact(spark, idx, base + "/g2", files_per_cluster=3)
-
-    per_cluster = {}
-    for f in glob.glob(base + "/g2/cluster_id=*/*.parquet"):
-        c = f.split("cluster_id=")[1].split("/")[0]
-        per_cluster[c] = per_cluster.get(c, 0) + 1
-    # each (non-tiny) cluster spread over >1 file, bounded by the knob
-    assert per_cluster and all(1 <= n <= 3 for n in per_cluster.values())
-    assert any(n > 1 for n in per_cluster.values()), per_cluster
-
-    qrow = embs.filter(F.col("id") == 3).head()
-    qv = [float(x) for x in qrow.embedding]
-    a = [(r.id, round(r.score, 6)) for r in ivf_mod.ivf_search(
-        spark, idx, qv, k=10, search_top_size=2, round_digits=6).collect()]
-    b = [(r.id, round(r.score, 6)) for r in ivf_mod.ivf_search(
-        spark, idx2, qv, k=10, search_top_size=2, round_digits=6).collect()]
-    assert a == b
-
-    with pytest.raises(ValueError):
-        ivf_mod.ivf_compact(spark, idx, base + "/g3", files_per_cluster=0)
 
 
 def test_filtered_ivf_plan_shape(spark, built, qvec):
@@ -480,6 +447,31 @@ def test_ivf_range_search_lossless_and_prunes(spark, built, qvec):
     assert (ub < 0.5 - 5e-7 - 1e-9).any()
 
 
+def test_ivf_range_search_sees_an_upsert_into_the_same_path(spark, tmp_path):
+    """The cell radii are memoized under the layout's file listing: a
+    row an upsert appends beyond a cell's old radius is found by the
+    next range search over the same path (the radii were once keyed by
+    the path alone, and the stale radius pruned that row's cell)."""
+    import numpy as np
+
+    X = np.zeros((400, 8))
+    rng = np.random.default_rng(5)
+    for i in range(400):
+        X[i, i % 4] = 10.0
+        X[i] += rng.normal(scale=0.5, size=8)
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(400)],
+        "id long, embedding array<double>",
+    )
+    idx = ivf.build_ivf_index(spark, df, str(tmp_path / "ivf"), n_clusters=4, seed=7)
+    tiny = [0.0] * 6 + [0.01, -0.01]
+    assert ivf.ivf_range_search(spark, idx, tiny, 0.99).collect() == []
+    ivf.ivf_upsert(
+        spark, idx, spark.createDataFrame([(1000, tiny)], "id long, embedding array<double>")
+    )
+    assert [r.id for r in ivf.ivf_range_search(spark, idx, tiny, 0.99).collect()] == [1000]
+
+
 # ------------------------------------------- explicit-directory reader
 
 
@@ -543,7 +535,7 @@ def test_upserts_between_searches_are_read(spark, tmp_path_factory, built):
     new = spark.createDataFrame(
         [(10**9, q_gone), (10**9 + 1, q_home)], "id long, embedding array<float>"
     )
-    assert ivf.ivf_upsert(spark, idx, new)["per_cluster"] == {gone: 1, home: 1}
+    assert ivf.ivf_upsert(spark, idx, new)["per_partition"] == {(gone,): 1, (home,): 1}
     assert top1(q_gone) == 10**9
     assert top1(q_home) == 10**9 + 1
     assert not before & {10**9, 10**9 + 1}
@@ -560,7 +552,7 @@ def test_index_without_stored_schema_loads_and_matches(
 
     out = str(tmp_path_factory.mktemp("ivf_noschema") / "idx")
     shutil.copytree(built.path, out)
-    meta_path = f"{out}/{ivf._CENTROIDS_FILE}"
+    meta_path = f"{out}/{ivf.IvfIndex.meta_file}"
     with open(meta_path) as f:
         meta = json.load(f)
     assert "schema" in meta

@@ -1,6 +1,7 @@
 """Streaming index ingestion (streaming/index_ingest.py): vectors
-landed as parquet drops flow through foreachBatch -> ivf_upsert into
-the cluster-partitioned layout, and serving sees them immediately."""
+landed as parquet drops flow through one ``stream_ingest`` wiring
+(foreachBatch -> each layout's upsert) into every index it feeds, and
+serving sees them immediately."""
 
 from __future__ import annotations
 
@@ -12,6 +13,11 @@ from ydb_vector_search_simple_api_spark.operators import index as ivf
 from ydb_vector_search_simple_api_spark.operators.search import shortlist_search
 from ydb_vector_search_simple_api_spark.streaming import index_ingest
 from ydb_vector_search_simple_api_spark.sources.store import load_embeddings
+
+
+def _landing_stream(spark, path):
+    """A streaming file source over the parquet drops under ``path``."""
+    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
 
 
 @pytest.fixture()
@@ -31,10 +37,10 @@ def test_stream_ingest_appends_and_serves(spark, tmp_path, halves):
     second.write.mode("overwrite").parquet(land)
 
     mon = index_ingest.IngestMonitor()
-    q = index_ingest.stream_ivf_ingest(
+    q = index_ingest.stream_ingest(
         spark,
-        idx,
-        index_ingest.parquet_vector_stream(spark, land),
+        [idx],
+        _landing_stream(spark, land),
         checkpoint_dir=str(tmp_path / "ckpt"),
         monitor=mon,
     )
@@ -76,23 +82,23 @@ def test_stream_ingest_is_incremental(spark, tmp_path, halves):
     part_a.write.mode("overwrite").parquet(land)
 
     mon = index_ingest.IngestMonitor()
-    index_ingest.stream_ivf_ingest(
-        spark, idx, index_ingest.parquet_vector_stream(spark, land),
+    index_ingest.stream_ingest(
+        spark, [idx], _landing_stream(spark, land),
         checkpoint_dir=ckpt, monitor=mon,
     ).awaitTermination(120)
     assert mon.n_appended == part_a.count()
 
     # restart with no new files: nothing re-ingested
-    index_ingest.stream_ivf_ingest(
-        spark, idx, index_ingest.parquet_vector_stream(spark, land),
+    index_ingest.stream_ingest(
+        spark, [idx], _landing_stream(spark, land),
         checkpoint_dir=ckpt, monitor=mon,
     ).awaitTermination(120)
     assert mon.n_appended == part_a.count()
 
     # drop a new shard: exactly its rows land
     part_b.write.mode("append").parquet(land)
-    index_ingest.stream_ivf_ingest(
-        spark, idx, index_ingest.parquet_vector_stream(spark, land),
+    index_ingest.stream_ingest(
+        spark, [idx], _landing_stream(spark, land),
         checkpoint_dir=ckpt, monitor=mon,
     ).awaitTermination(120)
     assert mon.n_appended == part_a.count() + part_b.count()
@@ -109,11 +115,12 @@ def test_monitor_rebuild_trigger():
 
 
 def test_stream_ivfpq_ingest_keeps_layouts_in_lockstep(spark, tmp_path):
-    """One stream feeds both serving layouts: full-precision IVF rows
-    and IVFADC codes arrive together, and the IVF-composed
-    shortlist_search over the upserted pair at full width/rerank stays
-    exact."""
+    """One stream feeds every serving layout of a batch in order: the
+    full-precision IVF rows first, then the IVFADC codes and the IVF x
+    SQ8 codes it routes, and the IVF-composed shortlist_search over the
+    upserted layouts at full width/rerank stays exact."""
     from ydb_vector_search_simple_api_spark.operators import pq as pq_mod
+    from ydb_vector_search_simple_api_spark.operators import sq as sq_mod
 
     embs = load_embeddings(spark, SF_SMALL).select(
         F.col("vec_id").alias("id"), "embedding"
@@ -124,37 +131,35 @@ def test_stream_ivfpq_ingest_keeps_layouts_in_lockstep(spark, tmp_path):
     pq_idx = pq_mod.build_ivfpq_index(
         spark, ivf_idx, str(tmp_path / "codes"), m=8, normalize=True
     )
+    sq_idx = sq_mod.build_ivfsq_index(spark, ivf_idx, str(tmp_path / "sq"))
 
     land = str(tmp_path / "landing")
     second.write.mode("overwrite").parquet(land)
     mon = index_ingest.IngestMonitor()
-    index_ingest.stream_ivfpq_ingest(
-        spark, ivf_idx, pq_idx,
-        index_ingest.parquet_vector_stream(spark, land),
+    index_ingest.stream_ingest(
+        spark, [ivf_idx, pq_idx, sq_idx],
+        _landing_stream(spark, land),
         checkpoint_dir=str(tmp_path / "ckpt"),
         monitor=mon,
     ).awaitTermination(120)
 
     n_second = second.count()
     assert mon.n_appended == n_second
-    assert sum(b["n_codes_appended"] for b in mon.batches) == n_second
+    for b in mon.batches:
+        ivf_stats, pq_stats, sq_stats = b["per_index"]
+        # the codes are routed by the IVF: same rows per cluster
+        assert pq_stats["per_partition"] == ivf_stats["per_partition"]
+        assert sq_stats["per_partition"] == ivf_stats["per_partition"]
     n_total = embs.count()
     assert spark.read.parquet(ivf_idx.path).count() == n_total
-    codes = spark.read.parquet(pq_idx.path)
-    assert codes.count() == n_total
-    assert codes.filter(F.col("cluster_id").isNull()).count() == 0
+    for codes in (spark.read.parquet(pq_idx.path), sq_idx.rows(spark)):
+        assert codes.count() == n_total
+        assert codes.filter(F.col("cluster_id").isNull()).count() == 0
+    assert sq_mod.load_sq_index(sq_idx.path).n_rows == n_total
 
-    # exactness through the upserted pair (full width + full rerank)
+    # exactness through the upserted layouts (full width + full rerank)
     qrow = embs.filter(F.col("id") == 1).head()
     qvec = [float(x) for x in qrow.embedding]
-    got = [
-        (r.id, round(r.score, 6))
-        for r in shortlist_search(
-            spark, pq_idx, None, qvec, k=10, strategy="CosineSimilarity",
-            shortlist=n_total, round_digits=6, ivf_index=ivf_idx,
-            search_top_size=4,
-        ).collect()
-    ]
     from ydb_vector_search_simple_api_spark.operators.search import knn_join
 
     queries = spark.createDataFrame(
@@ -166,45 +171,34 @@ def test_stream_ivfpq_ingest_keeps_layouts_in_lockstep(spark, tmp_path):
         .orderBy("rank")
         .collect()
     ]
-    assert got == want
+    for codes_idx in (pq_idx, sq_idx):
+        got = [
+            (r.id, round(r.score, 6))
+            for r in shortlist_search(
+                spark, codes_idx, None, qvec, k=10, strategy="CosineSimilarity",
+                shortlist=n_total, round_digits=6, ivf_index=ivf_idx,
+                search_top_size=4,
+            ).collect()
+        ]
+        assert got == want
 
 
-def test_parquet_vector_stream_empty_dir_needs_schema(spark, tmp_path, halves):
-    """Wiring the stream before the first shard lands: schema
-    inference fails with a clear error, an explicit schema works."""
-    from pyspark.sql import types as T
+def test_composed_codes_layout_needs_its_ivf_first(spark, tmp_path, halves):
+    """An IVF-composed codes layout fed without the IVF that routes its
+    rows fails the batch and appends nothing to it."""
+    from ydb_vector_search_simple_api_spark.operators import sq as sq_mod
 
     embs, first, second, idx = halves
-    land = str(tmp_path / "empty_landing")
-
-    with pytest.raises(ValueError, match="schema"):
-        index_ingest.parquet_vector_stream(spark, land)
-
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
+    sq_idx = sq_mod.build_ivfsq_index(spark, idx, str(tmp_path / "sq"))
+    land = str(tmp_path / "landing")
+    second.write.mode("overwrite").parquet(land)
+    q = index_ingest.stream_ingest(
+        spark, [sq_idx, idx], _landing_stream(spark, land),
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    import os
-
-    os.makedirs(land, exist_ok=True)
-    src = index_ingest.parquet_vector_stream(spark, land, schema=schema)
-    mon = index_ingest.IngestMonitor()
-    # stream starts and drains an (empty) landing dir without error
-    index_ingest.stream_ivf_ingest(
-        spark, idx, src, checkpoint_dir=str(tmp_path / "ckpt"), monitor=mon
-    ).awaitTermination(120)
-    assert mon.n_appended == 0
-
-    # first shard lands after wiring: picked up on the next drain
-    second.write.mode("append").parquet(land)
-    index_ingest.stream_ivf_ingest(
-        spark, idx,
-        index_ingest.parquet_vector_stream(spark, land, schema=schema),
-        checkpoint_dir=str(tmp_path / "ckpt"), monitor=mon,
-    ).awaitTermination(120)
-    assert mon.n_appended == second.count()
+    with pytest.raises(Exception, match="partitioned"):
+        q.awaitTermination(120)
+    assert sq_idx.rows(spark).count() == first.count()
 
 
 def test_stream_bq_ingest_appends_and_search_is_exact(spark, tmp_path):
@@ -212,10 +206,6 @@ def test_stream_bq_ingest_appends_and_search_is_exact(spark, tmp_path):
 
     from ydb_vector_search_simple_api_spark.operators import bq
     from ydb_vector_search_simple_api_spark.operators.search import exact_search
-    from ydb_vector_search_simple_api_spark.streaming.index_ingest import (
-        parquet_vector_stream,
-        stream_bq_ingest,
-    )
 
     embs = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
         F.col("vec_id").alias("id"), "embedding"
@@ -225,10 +215,10 @@ def test_stream_bq_ingest_appends_and_search_is_exact(spark, tmp_path):
     )
     landing = str(tmp_path / "landing")
     embs.filter(F.col("id") >= 300).repartition(2).write.parquet(landing)
-    q = stream_bq_ingest(
+    q = index_ingest.stream_ingest(
         spark,
-        idx,
-        parquet_vector_stream(spark, landing),
+        [idx],
+        _landing_stream(spark, landing),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination()
@@ -248,10 +238,6 @@ def test_stream_graphann_ingest_appends_and_search_is_exact(spark, tmp_path):
 
     from ydb_vector_search_simple_api_spark.operators import graphann as G
     from ydb_vector_search_simple_api_spark.operators.search import exact_search
-    from ydb_vector_search_simple_api_spark.streaming.index_ingest import (
-        parquet_vector_stream,
-        stream_graphann_ingest,
-    )
 
     embs = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
         F.col("vec_id").alias("id"), "embedding"
@@ -261,10 +247,10 @@ def test_stream_graphann_ingest_appends_and_search_is_exact(spark, tmp_path):
     )
     landing = str(tmp_path / "landing")
     embs.filter(F.col("id") >= 300).repartition(2).write.parquet(landing)
-    q = stream_graphann_ingest(
+    q = index_ingest.stream_ingest(
         spark,
-        idx,
-        parquet_vector_stream(spark, landing),
+        [idx],
+        _landing_stream(spark, landing),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination()
@@ -284,11 +270,6 @@ def test_stream_tree_ingest_appends_and_search_is_exact(spark, tmp_path):
 
     from ydb_vector_search_simple_api_spark.operators import tree as kmt
     from ydb_vector_search_simple_api_spark.operators.search import exact_search
-    from ydb_vector_search_simple_api_spark.streaming.index_ingest import (
-        IngestMonitor,
-        parquet_vector_stream,
-        stream_tree_ingest,
-    )
 
     embs = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
         F.col("vec_id").alias("id"), "embedding"
@@ -299,11 +280,11 @@ def test_stream_tree_ingest_appends_and_search_is_exact(spark, tmp_path):
     )
     landing = str(tmp_path / "landing")
     embs.filter(F.col("id") >= 300).repartition(2).write.parquet(landing)
-    mon = IngestMonitor()
-    q = stream_tree_ingest(
+    mon = index_ingest.IngestMonitor()
+    q = index_ingest.stream_ingest(
         spark,
-        idx,
-        parquet_vector_stream(spark, landing),
+        [idx],
+        _landing_stream(spark, landing),
         checkpoint_dir=str(tmp_path / "ckpt"),
         monitor=mon,
     )
@@ -351,10 +332,6 @@ def test_stream_sq_ingest_appends_and_search_is_exact(spark, tmp_path):
 
     from ydb_vector_search_simple_api_spark.operators import sq
     from ydb_vector_search_simple_api_spark.operators.search import exact_search
-    from ydb_vector_search_simple_api_spark.streaming.index_ingest import (
-        parquet_vector_stream,
-        stream_sq_ingest,
-    )
 
     embs = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
         F.col("vec_id").alias("id"), "embedding"
@@ -364,10 +341,10 @@ def test_stream_sq_ingest_appends_and_search_is_exact(spark, tmp_path):
     )
     landing = str(tmp_path / "landing")
     embs.filter(F.col("id") >= 300).repartition(2).write.parquet(landing)
-    q = stream_sq_ingest(
+    q = index_ingest.stream_ingest(
         spark,
-        idx,
-        parquet_vector_stream(spark, landing),
+        [idx],
+        _landing_stream(spark, landing),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination()

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_simple_api_spark.operators import pq
+from ydb_vector_search_simple_api_spark.operators.layout import codes_upsert, compact
 from ydb_vector_search_simple_api_spark.operators.search import shortlist_search
 from ydb_vector_search_simple_api_spark.functions.distance import score_expr
 from ydb_vector_search_simple_api_spark.sources.store import load_embeddings
@@ -246,7 +247,7 @@ def test_pq_upsert_extends_search_space(spark, tmp_path_factory):
     second = embs.filter(F.col("id") % 2 == 1)
     idx = pq.build_pq_index(spark, first, out, m=8, nbits=8, normalize=True)
 
-    n = pq.pq_upsert(spark, idx, second)
+    n = codes_upsert(spark, idx, second)["n_appended"]
     assert n == second.count()
     total = spark.read.parquet(idx.path).count()
     assert total == embs.count()
@@ -264,7 +265,7 @@ def test_pq_upsert_extends_search_space(spark, tmp_path_factory):
         [(999999, [1.0, 2.0])], "id long, embedding array<float>"
     )
     with pytest.raises(ValueError, match="index dim"):
-        pq.pq_upsert(spark, idx, bad)
+        codes_upsert(spark, idx, bad)
 
 
 def test_nbits_over_8_rejected(spark):
@@ -278,7 +279,7 @@ def test_nbits_over_8_rejected(spark):
 
 
 def test_pq_upsert_partitioned_layout(spark, tmp_path_factory):
-    """IVFADC maintenance: pq_upsert on a partitioned codes layout must
+    """IVFADC maintenance: the upsert of a partitioned codes layout must
     route rows to cluster directories (never mix in flat files), and
     must refuse to append without the routing centroids."""
     from ydb_vector_search_simple_api_spark.operators import index as ivf_mod
@@ -294,9 +295,9 @@ def test_pq_upsert_partitioned_layout(spark, tmp_path_factory):
 
     # refuse flat appends into a hive-partitioned directory
     with pytest.raises(ValueError, match="partitioned"):
-        pq.pq_upsert(spark, idx, second)
+        codes_upsert(spark, idx, second)
 
-    n = pq.pq_upsert(spark, idx, second, ivf_index=ivf)
+    n = codes_upsert(spark, idx, second, ivf_index=ivf)["n_appended"]
     assert n == second.count()
 
     # partition discovery still intact: every row has a cluster_id and
@@ -319,7 +320,7 @@ def test_pq_upsert_partitioned_layout(spark, tmp_path_factory):
 
 
 def test_pq_compact_dedup_and_partitioning(spark, tmp_path_factory):
-    """pq_compact folds replay duplicates out of the codes layout and
+    """The rewrite folds replay duplicates out of the codes layout and
     preserves the IVFADC hive partitioning across generations."""
     from ydb_vector_search_simple_api_spark.operators import index as ivf_mod
 
@@ -330,10 +331,10 @@ def test_pq_compact_dedup_and_partitioning(spark, tmp_path_factory):
     n = embs.count()
 
     dup = embs.filter(F.col("id") % 5 == 0)
-    pq.pq_upsert(spark, idx, dup, ivf_index=ivf)  # replayed batch
+    codes_upsert(spark, idx, dup, ivf_index=ivf)  # replayed batch
     assert spark.read.parquet(idx.path).count() == n + dup.count()
 
-    idx2 = pq.pq_compact(spark, idx, base + "/codes_g1", dedup_ids=True)
+    idx2 = compact(spark, idx, base + "/codes_g1", dedup_ids=True)
     codes = spark.read.parquet(idx2.path)
     assert codes.count() == n
     assert idx2.partition_col == "cluster_id"

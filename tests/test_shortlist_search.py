@@ -14,8 +14,10 @@ import pytest
 from pyspark.sql import functions as F
 
 import ydb_vector_search_simple_api_spark as pkg
-from ydb_vector_search_simple_api_spark.operators import bq, opq, pq, sq, tombstones
+from ydb_vector_search_simple_api_spark.artifacts import listing
+from ydb_vector_search_simple_api_spark.operators import bq, graphann, opq, pq, sq, tombstones, tree
 from ydb_vector_search_simple_api_spark.operators import index as ivf
+from ydb_vector_search_simple_api_spark.operators.layout import codes_upsert
 from ydb_vector_search_simple_api_spark.operators.search import (
     rank_topk,
     shortlist_search,
@@ -124,20 +126,62 @@ def test_k_and_dimension_are_checked_once_for_every_layout(spark, corpus, compos
             shortlist_search(spark, idx, None, [1.0, 2.0], k=3, ivf_index=clean)
 
 
+@pytest.mark.parametrize("codec", ["bq", "sq"])
+def test_codes_are_stored_under_id_whatever_the_source_column(spark, corpus, tmp_path, codec):
+    """The encoders write the id column as ``id``, the name the one
+    search reads: a layout built from a ``vec_id`` source searches
+    exactly at full shortlist."""
+    df, q = corpus
+    build = {"bq": bq.build_bq_index, "sq": sq.build_sq_index}[codec]
+    idx = build(spark, df.withColumnRenamed("id", "vec_id"), str(tmp_path / codec), id_col="vec_id")
+    got = [r.id for r in shortlist_search(spark, idx, df, q, k=5).collect()]
+    assert got == _exact_ids(df, q, 5)
+
+
 UPSERTS = {
-    "pq": lambda s, i, df: pq.pq_upsert(s, i, df),
-    "sq": lambda s, i, df: sq.sq_upsert(s, i, df),
-    "bq": lambda s, i, df: bq.bq_upsert(s, i, df),
+    "bq": (FLAT["bq"], codes_upsert),
+    "graphann": (lambda s, df, p: graphann.build_knn_graph(s, df, p, m=4), graphann.graphann_upsert),
+    "ivf": (lambda s, df, p: ivf.build_ivf_index(s, df, p, n_clusters=2), ivf.ivf_upsert),
+    "pq": (FLAT["pq"], codes_upsert),
+    "sq": (FLAT["sq"], codes_upsert),
+    "tree": (lambda s, df, p: tree.build_kmeans_tree(s, df, p, n_l1=2, fanout=2), tree.tree_upsert),
 }
 
 
-@pytest.mark.parametrize("codec", sorted(UPSERTS))
-def test_upsert_of_a_wrong_dimension_raises(spark, corpus, tmp_path, codec):
+@pytest.mark.parametrize("layout", sorted(UPSERTS))
+def test_upsert_of_a_wrong_dimension_raises(spark, corpus, tmp_path, layout):
+    """One dimension rule for all six upserts: a batch holding a vector
+    of another length than the index dim raises before anything is
+    written, so the index directory's file listing is unchanged."""
     df, _ = corpus
-    idx = FLAT[codec](spark, df.filter(F.col("id") < 40), str(tmp_path / codec))
-    bad = spark.createDataFrame([(N, [1.0, 2.0])], "id long, embedding array<double>")
-    with pytest.raises(ValueError, match=f"{codec}_upsert batch has vectors whose length != index dim {DIM}"):
-        UPSERTS[codec](spark, idx, bad)
+    build, upsert = UPSERTS[layout]
+    idx = build(spark, df.filter(F.col("id") < 40), str(tmp_path / layout))
+    before = listing(idx.path)
+    bad = spark.createDataFrame(
+        [(N, [1.0, 2.0]), (N + 1, [0.5] * DIM)], "id long, embedding array<double>"
+    )
+    with pytest.raises(
+        ValueError, match=rf"upsert batch holds 1 vector\(s\) whose length is not the index dim {DIM}"
+    ):
+        upsert(spark, idx, bad)
+    assert listing(idx.path) == before
+
+
+def test_rejected_batch_leaves_the_layout_and_its_tombstones_unchanged(spark, corpus, tmp_path):
+    """A rejected batch resurrects nothing either: the tombstoned id it
+    carries stays deleted, and no file of the layout changes."""
+    df, q = corpus
+    idx = ivf.build_ivf_index(spark, df, str(tmp_path / "ivf"), n_clusters=2)
+    tombstones.delete_ids(spark, idx.path, [DUP])
+    before = listing(idx.path)
+    bad = df.filter(F.col("id") == DUP).unionByName(
+        spark.createDataFrame([(N, [1.0])], "id long, embedding array<double>")
+    )
+    with pytest.raises(ValueError, match="index dim"):
+        ivf.ivf_upsert(spark, idx, bad)
+    assert listing(idx.path) == before
+    got = [r.id for r in ivf.ivf_search(spark, idx, q, k=5, search_top_size=2).collect()]
+    assert DUP not in got
 
 
 def _ends_with_exact_tail(fn: ast.FunctionDef) -> bool:

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_simple_api_spark.operators import sq, tombstones
+from ydb_vector_search_simple_api_spark.operators.layout import codes_upsert, compact, encode_rows
 from ydb_vector_search_simple_api_spark.operators.search import shortlist_search
 
 from conftest import SF_SMALL
@@ -40,7 +41,7 @@ def test_encode_golden(spark):
         [(1, [1.0, -0.5, 0.0, 0.25]), (2, [0.0, 0.0, 0.0, 0.0])],
         "id long, embedding array<double>",
     )
-    rows = {r.id: r for r in sq.encode_sq(df).collect()}
+    rows = {r.id: r for r in encode_rows(df, sq.SqIndex).collect()}
     # scale = max|x| = 1.0; codes = floor(x*127 + 0.5) (round half up):
     # floor(-63.5 + 0.5) = -63, floor(31.75 + 0.5) = 32
     assert rows[1].codes == [127, -63, 0, 32]
@@ -150,7 +151,8 @@ def test_upsert_and_compact(spark, tmp_path):
     rest = src.filter(F.col("id") >= 300)
     path = str(tmp_path / "sq_up")
     idx = sq.build_sq_index(spark, half, path)
-    idx = sq.sq_upsert(spark, idx, rest)
+    codes_upsert(spark, idx, rest)
+    idx = sq.load_sq_index(path)
     assert idx.n_rows == src.count()
     q = _qvec(spark)
     full = sq.build_sq_index(spark, src, str(tmp_path / "sq_full"))
@@ -162,10 +164,8 @@ def test_upsert_and_compact(spark, tmp_path):
     # dedup: exactly one surviving row per id, same search results
     victim = got[0]
     tombstones.delete_ids(spark, path, [victim])
-    idx = sq.sq_upsert(spark, idx, src.filter(F.col("id") == victim))
-    compacted = sq.sq_compact(
-        spark, idx, str(tmp_path / "sq_gen2"), dedup_ids=True
-    )
+    codes_upsert(spark, idx, src.filter(F.col("id") == victim))
+    compacted = compact(spark, idx, str(tmp_path / "sq_gen2"), dedup_ids=True)
     assert compacted.n_rows == src.count()
     after = [
         r.id
@@ -218,4 +218,4 @@ def test_ivfsq_composition(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="partitioned"):
-        sq.sq_upsert(spark, sq_idx, src.limit(5))
+        codes_upsert(spark, sq_idx, src.limit(5))

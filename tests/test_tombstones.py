@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from ydb_vector_search_simple_api_spark.operators import bq
 from ydb_vector_search_simple_api_spark.operators import index as ivf
 from ydb_vector_search_simple_api_spark.operators import tombstones
+from ydb_vector_search_simple_api_spark.operators.layout import compact
 from ydb_vector_search_simple_api_spark.operators.search import (
     exact_search,
     shortlist_search,
@@ -105,7 +106,7 @@ def test_bq_delete_and_compact(spark, tmp_path):
     ).collect()
     assert not set(victims) & {r.id for r in jj}
     # compact folds; counts drop
-    idx2 = bq.bq_compact(spark, idx, str(tmp_path / "bq_gen2"))
+    idx2 = compact(spark, idx, str(tmp_path / "bq_gen2"))
     assert idx2.n_rows == 498
     assert not tombstones.has_tombstones(idx2.path)
 
@@ -270,3 +271,29 @@ def test_tombstones_from_int_ids_read_as_long(spark, tmp_path):
     t = tombstones.load_tombstones(spark, path)
     assert t.schema.simpleString() == "struct<id:bigint>"
     assert sorted(r.id for r in t.collect()) == [3, 4]
+
+
+def test_failed_resurrection_keeps_the_deleted_ids_deleted(spark, tmp_path, monkeypatch):
+    """``resurrect_ids`` appends the remaining set before it removes the
+    old files: when that write fails, every deleted id stays deleted
+    (the old set is untouched). A successful call leaves only the
+    remaining ids, as many tombstone rows as before it minus the
+    resurrected ones."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / "idx")
+    tombstones.delete_ids(spark, path, [1, 2, 3])
+    back = spark.createDataFrame([(2,)], "id long")
+
+    def fail(self, *args, **kwargs):
+        raise OSError("write failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", fail)
+        with pytest.raises(OSError, match="write failed"):
+            tombstones.resurrect_ids(spark, path, back)
+    assert sorted(r.id for r in tombstones.load_tombstones(spark, path).collect()) == [1, 2, 3]
+
+    tombstones.resurrect_ids(spark, path, back)
+    rows = spark.read.parquet(tombstones.tombstone_path(path)).collect()
+    assert sorted(r.id for r in rows) == [1, 3]

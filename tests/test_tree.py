@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_simple_api_spark.operators import tree as kmt
+from ydb_vector_search_simple_api_spark.operators.layout import compact
 from ydb_vector_search_simple_api_spark.operators.search import exact_search
 from ydb_vector_search_simple_api_spark.plans import checks
 from ydb_vector_search_simple_api_spark.sources.store import load_embeddings
@@ -251,7 +252,7 @@ def test_tree_upsert_appends_and_stays_exact(spark, tmp_path_factory):
     stats = kmt.tree_upsert(spark, idx, second)
     assert stats["n_appended"] == second.count()
     assert stats["max_assign_l2"] > 0.0
-    assert sum(stats["per_leaf"].values()) == stats["n_appended"]
+    assert sum(stats["per_partition"].values()) == stats["n_appended"]
     assert spark.read.parquet(idx.path).count() == embs.count()
 
     qrow = embs.filter(F.col("id") == 1).head()
@@ -260,11 +261,13 @@ def test_tree_upsert_appends_and_stays_exact(spark, tmp_path_factory):
     assert got == _exact_ids(spark, qv, 10, "CosineSimilarity")
     assert got[0] == 1
 
-    # mismatched dims dropped, not mis-routed
+    # a batch with a mismatched-dimension row raises and appends nothing
     bad = spark.createDataFrame(
         [(999999, [1.0, 2.0])], "id long, embedding array<float>"
     )
-    assert kmt.tree_upsert(spark, idx, bad)["n_appended"] == 0
+    with pytest.raises(ValueError, match="index dim 64"):
+        kmt.tree_upsert(spark, idx, bad)
+    assert spark.read.parquet(idx.path).count() == embs.count()
 
 
 def test_tree_compact_dedups_and_preserves_results(spark, tmp_path_factory):
@@ -282,7 +285,7 @@ def test_tree_compact_dedups_and_preserves_results(spark, tmp_path_factory):
         kmt.tree_upsert(spark, idx, dup)
     n_files_before = len(glob.glob(base + "/g0/l1=*/l2=*/*.parquet"))
 
-    idx2 = kmt.tree_compact(spark, idx, base + "/g1", dedup_ids=True)
+    idx2 = compact(spark, idx, base + "/g1", dedup_ids=True)
     n_files_after = len(glob.glob(base + "/g1/l1=*/l2=*/*.parquet"))
     assert n_files_after < n_files_before
     assert spark.read.parquet(idx2.path).count() == embs.count()

@@ -18,9 +18,9 @@ approximation than PQ's ADC (1 bit vs 8 bits per subdimension).
 
 Spark-native shape:
 
-* **Encode** (distributed, zero shuffle): one Arrow-batched
-  ``mapInPandas`` pass packs ``sign(x) > 0`` bits into
-  ``array<bigint>`` words (NumPy packbits). Build-time only.
+* **Encode** (distributed, zero shuffle, at build and upsert): one
+  Arrow-batched pass packs ``sign(x) > 0`` bits into ``array<bigint>``
+  words (NumPy packbits, ``BqIndex.encode``).
 * **Hamming scan** (distributed, zero shuffle, zero Python): the query
   word array is a literal; per-row distance is
   ``aggregate(zip_with(bits, qbits, (x, y) -> bit_count(x ^ y)), 0, +)``
@@ -48,33 +48,46 @@ import json
 import os
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import tombstones
 from ..config import validate_strategy
 from ..functions.distance import score_expr
 from .index import ivf_rows
-from .search import _order_cols, check_upsert_dim, read_codes
+from .layout import CodeLayout, encode_rows, write_meta
+from .search import _order_cols, read_codes
 
 
 @dataclass(frozen=True)
-class BqIndex:
-    """A persisted (id, bits) sign-bit table beside its source.
+class BqIndex(CodeLayout):
+    """A persisted (id, bits) sign-bit table under ``bits/``.
 
     ``partition_col`` records whether the bits layout is
     hive-partitioned (the IVF x BQ composition partitions by
-    ``cluster_id``); maintenance ops honor or reject it so flat files
-    are never mixed into a partitioned directory."""
+    ``cluster_id``), which the upsert routes into."""
 
     path: str
     dim: int
     n_words: int
     n_rows: int
     partition_col: str | None = None
+
+    subdir: ClassVar[str] = "bits"
+    meta_file: ClassVar[str] = "_bq_meta.json"
+    code_fields: ClassVar[tuple[T.StructField, ...]] = (
+        T.StructField("bits", T.ArrayType(T.LongType())),
+    )
+
+    @staticmethod
+    def encode(X: np.ndarray) -> dict:
+        """(n, dim) float64 rows -> their packed sign bits."""
+        return {"bits": [list(r) for r in _pack_bits(X)]}
 
     def shortlist(
         self,
@@ -90,9 +103,7 @@ class BqIndex:
         every id (no score). One Hamming shortlist serves every
         ``strategy``. ``keep`` and ``filter_ids`` prune the bits as in
         ``search.read_codes``."""
-        bits = read_codes(
-            spark, self.path, os.path.join(self.path, "bits"), keep, filter_ids
-        )
+        bits = read_codes(spark, self.path, self.layout_dir, keep, filter_ids)
         if n is None:
             return bits.select("id")
         return (
@@ -128,46 +139,6 @@ def n_words_for(dim: int) -> int:
     return (dim + 63) // 64
 
 
-def encode_binary(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "id",
-    dim: int | None = None,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Distributed sign-bit encode: (id, bits array<bigint>[, extras]).
-
-    ``dim`` is required knowledge for the word count; when omitted it
-    is taken from the first row (one tiny driver action) — pass it
-    explicitly in pipelines (same no-hidden-driver-action rule as the
-    SRP LSH operator, operators/dedup.py). ``extra_cols`` pass through
-    untouched (e.g. ``cluster_id`` for the IVF-partitioned layout)."""
-    if dim is None:
-        first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        if first is None:
-            raise ValueError("cannot infer dim from an empty DataFrame")
-        dim = int(first["d"])
-    fields = [f"`{id_col}` {df.schema[id_col].dataType.simpleString()}", "bits array<bigint>"]
-    for c in extra_cols:
-        fields.append(f"`{c}` {df.schema[c].dataType.simpleString()}")
-    out_schema = ", ".join(fields)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]], dtype=np.float64
-            )
-            words = _pack_bits(X)
-            out = {id_col: pdf[id_col].values, "bits": [list(r) for r in words]}
-            for c in extra_cols:
-                out[c] = pdf[c].values
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, vec_col, *extra_cols).mapInPandas(encode, schema=out_schema)
-
-
 def build_bq_index(
     spark: SparkSession,
     src: DataFrame,
@@ -181,33 +152,27 @@ def build_bq_index(
     source, no shuffle, no driver collect of data rows.
     ``partition_col`` (the IVF ``cluster_id``) rides the encode and
     becomes the hive partition of the bits layout, as in
-    ``pq.build_pq_index``."""
+    ``pq.build_pq_index``. ``dim`` (the word count's input) is taken
+    from the first row when omitted (one tiny driver action)."""
     if dim is None:
         first = src.select(F.size(F.col(vec_col)).alias("d")).first()
         if first is None:
             raise ValueError("cannot build a BQ index over an empty source")
         dim = int(first["d"])
     extra = (partition_col,) if partition_col else ()
-    bits_df = encode_binary(src, vec_col=vec_col, id_col=id_col, dim=dim, extra_cols=extra)
-    bits_df.write.mode("overwrite").partitionBy(*extra).parquet(os.path.join(path, "bits"))
-    n_rows = spark.read.parquet(os.path.join(path, "bits")).count()
-    return _save_meta(
-        BqIndex(path, dim, n_words_for(dim), n_rows, partition_col), id_col
+    bits_dir = os.path.join(path, BqIndex.subdir)
+    rows = src.selectExpr(f"`{id_col}` AS id", f"`{vec_col}` AS embedding", *extra)
+    encode_rows(rows, BqIndex, extra).write.mode("overwrite").partitionBy(*extra).parquet(
+        bits_dir
     )
-
-
-def _save_meta(index: BqIndex, id_col: str) -> BqIndex:
-    meta = {
-        "dim": index.dim, "n_words": index.n_words, "n_rows": index.n_rows,
-        "id_col": id_col, "partition_col": index.partition_col,
-    }
-    with open(os.path.join(index.path, "_bq_meta.json"), "w") as f:
-        json.dump(meta, f)
+    n_rows = spark.read.parquet(bits_dir).count()
+    index = BqIndex(path, dim, n_words_for(dim), n_rows, partition_col)
+    write_meta(index)
     return index
 
 
 def load_bq_index(path: str) -> BqIndex:
-    with open(os.path.join(path, "_bq_meta.json")) as f:
+    with open(os.path.join(path, BqIndex.meta_file)) as f:
         meta = json.load(f)
     return BqIndex(
         path=path, dim=meta["dim"], n_words=meta["n_words"],
@@ -215,89 +180,17 @@ def load_bq_index(path: str) -> BqIndex:
     )
 
 
-def hamming_expr(bits_col, query_words: Sequence[int]) -> Column:
-    """``popcount(bits XOR qbits)`` summed over words — pure codegen."""
-    q = F.array(*[F.lit(int(w)).cast("long") for w in query_words])
-    col = F.col(bits_col) if isinstance(bits_col, str) else bits_col
-    per_word = F.zip_with(col, q, lambda x, y: F.bit_count(x.bitwiseXOR(y)))
-    return F.aggregate(per_word, F.lit(0), lambda acc, x: acc + x)
-
-
-def bq_upsert(
-    spark: SparkSession,
-    index: BqIndex,
-    new_df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "id",
-) -> BqIndex:
-    """Incremental maintenance: encode new rows and APPEND to the bits
-    table — same append-generation pattern as ``ivf_upsert``
-    (operators/index.py). No rebuild, no touch of existing files;
-    searches see the new rows on the next scan. Replayed/duplicate ids
-    are folded at the next ``bq_compact(dedup_ids=True)``.
-
-    Raises for an IVF-partitioned layout (build_ivfbq_index): flat
-    appends would break cluster_id partition discovery/pruning — route
-    new rows through ``ivf_upsert`` + a bits rebuild of the touched
-    clusters instead (same contract as pq_upsert's partition guard)."""
-    if index.partition_col is not None:
-        raise ValueError(
-            f"bq_upsert on a layout partitioned by {index.partition_col!r} "
-            "would mix unpartitioned files into the directory tree; "
-            "rebuild via build_ivfbq_index (or ingest through ivf_upsert "
-            "and re-encode the touched clusters)"
-        )
-    check_upsert_dim(new_df, vec_col, index.dim, "bq_upsert")
-    bits_df = encode_binary(new_df, vec_col=vec_col, id_col=id_col, dim=index.dim)
-    bits_df.persist()
-    try:
-        tombstones.resurrect_ids(spark, index.path, bits_df, id_col)
-        n_new = bits_df.count()
-        bits_df.write.mode("append").parquet(os.path.join(index.path, "bits"))
-    finally:
-        bits_df.unpersist()
-    return _save_meta(
-        BqIndex(index.path, index.dim, index.n_words, index.n_rows + n_new), id_col
-    )
-
-
-def bq_compact(
-    spark: SparkSession,
-    index: BqIndex,
-    out_dir: str,
-    n_files: int = 1,
-    dedup_ids: bool = False,
-    id_col: str = "id",
-) -> BqIndex:
-    """Generation rewrite: coalesce the append-churned bits table into
-    ``n_files`` files (immutable new generation, pointer flip — same
-    contract as ``ivf_compact``). ``dedup_ids=True`` keeps one row per
-    id (streaming replay hygiene; one extra keyed exchange). A
-    partitioned (IVF x BQ) layout compacts partition-aware: one file
-    per cluster directory, layout contract preserved."""
-    if n_files < 1:
-        raise ValueError("n_files must be a positive integer")
-    df = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(os.path.join(index.path, "bits")),
-        id_col=id_col,
-    )
-    if dedup_ids:
-        df = df.dropDuplicates([id_col])
-    if index.partition_col is not None:
-        # hash on the partition key: each cluster's rows land in one
-        # shuffle partition => exactly one file per cluster directory
-        shaped = df.repartition(n_files, index.partition_col)
-        shaped.write.mode("overwrite").partitionBy(index.partition_col).parquet(
-            os.path.join(out_dir, "bits")
-        )
+def hamming_expr(bits_col: str, query_words: str | Sequence[int]) -> Column:
+    """``popcount(bits XOR qbits)`` summed over words, as one SQL
+    expression (one JVM call, pure codegen). ``query_words`` is a
+    column name or the query's packed words."""
+    if isinstance(query_words, str):
+        q = f"`{query_words}`"
     else:
-        df.repartition(n_files).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "bits")
-        )
-    n_rows = spark.read.parquet(os.path.join(out_dir, "bits")).count()
-    return _save_meta(
-        BqIndex(out_dir, index.dim, index.n_words, n_rows, index.partition_col),
-        id_col,
+        q = f"array({', '.join(f'CAST({int(w)} AS BIGINT)' for w in query_words)})"
+    return F.expr(
+        f"aggregate(zip_with(`{bits_col}`, {q}, (x, y) -> bit_count(x ^ y)), 0, "
+        "(acc, x) -> acc + x)"
     )
 
 
@@ -446,9 +339,8 @@ def bq_knn_join(
     n_short = index.n_rows if shortlist is None else int(shortlist)
 
     bits = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(os.path.join(index.path, "bits")),
-        id_col=id_col,
-    )
+        spark, index.path, index.rows(spark)
+    ).withColumnRenamed("id", id_col)
     w_short = Window.partitionBy("query_id").orderBy(
         F.col("hamming").asc(), F.col(id_col).asc()
     )
@@ -459,21 +351,14 @@ def bq_knn_join(
             id_col=id_col, dim=index.dim,
         )
     else:
-        qbits = encode_binary(
-            queries_df, vec_col=query_vec, id_col=query_id, dim=index.dim
+        qbits = encode_rows(
+            queries_df.selectExpr(f"`{query_id}` AS id", f"`{query_vec}` AS embedding"),
+            BqIndex,
         )
         pairs = bits.join(
-            F.broadcast(
-                qbits.select(
-                    F.col(query_id).alias("query_id"), F.col("bits").alias("qbits")
-                )
-            )
+            F.broadcast(qbits.selectExpr("id AS query_id", "bits AS qbits"))
         )
-        per_word = F.zip_with(
-            F.col("bits"), F.col("qbits"), lambda x, y: F.bit_count(x.bitwiseXOR(y))
-        )
-        hamming = F.aggregate(per_word, F.lit(0), lambda acc, x: acc + x)
-        cand_scored = pairs.withColumn("hamming", hamming).select(
+        cand_scored = pairs.withColumn("hamming", hamming_expr("bits", "qbits")).select(
             "query_id", id_col, "hamming"
         )
     cand = (

@@ -33,7 +33,7 @@ Spark-first decomposition:
 
   - *driver replay* (default below ``small_graph_max`` rows): the
     adjacency is loaded ONCE per session into numpy (pure function of
-    the persisted index generation — the ``_SCAN_CACHE`` contract)
+    the persisted files — a session memo keyed by their listing)
     and each query beam-searches in-process. Traversal only picks the
     CANDIDATE set; final scores always come from the shared JVM
     ``score_expr`` re-rank, so float parity is untouched.
@@ -52,21 +52,23 @@ five index shapes).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 from collections.abc import Sequence
 from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import session_memo
 from ..config import validate_strategy
 from ..functions.distance import score_expr
 from .index import _read_clusters
-from .search import check_upsert_dim, rank_topk
-
-_META_FILE = "_graphann_meta.json"
+from .layout import append_batch, append_rows, count_appended, write_meta
+from .search import rank_topk
 
 
 @dataclass(frozen=True)
@@ -95,6 +97,9 @@ class GraphAnnIndex:
     # true neighborhood). Empty tuples = legacy two-seed behavior.
     seeds: tuple = ()
     seed_vecs: tuple = ()
+
+    meta_file: ClassVar[str] = "_graphann_meta.json"
+    partition_cols: ClassVar[tuple[str, ...]] = ()
 
 
 def build_knn_graph(
@@ -245,21 +250,13 @@ def build_knn_graph(
         rows.sort(key=lambda r: r.id)
         seeds = [int(r.id) for r in rows]
         seed_vecs = [[float(x) for x in r.embedding] for r in rows]
-    meta = {
-        "dim": dim,
-        "n_rows": n_rows,
-        "m": m,
-        "entry_point": int(global_root),
-        "medoid": int(medoid),
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "seeds": seeds,
-        "seed_vecs": seed_vecs,
-    }
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, _META_FILE), "w") as f:
-        json.dump(meta, f)
-    return GraphAnnIndex(path=out_dir, **meta)
+    index = GraphAnnIndex(
+        path=out_dir, dim=dim, n_rows=n_rows, m=m, entry_point=int(global_root),
+        medoid=int(medoid), id_col=id_col, vec_col=vec_col, seeds=seeds,
+        seed_vecs=seed_vecs,
+    )
+    write_meta(index)
+    return index
 
 
 def clustered_bootstrap_edges(
@@ -506,7 +503,7 @@ def _nn_descent_round(
 
 
 def load_graph_index(path: str) -> GraphAnnIndex:
-    with open(os.path.join(path, _META_FILE)) as f:
+    with open(os.path.join(path, GraphAnnIndex.meta_file)) as f:
         meta = json.load(f)
     return GraphAnnIndex(path=path, **meta)
 
@@ -518,86 +515,76 @@ def graphann_upsert(
     spark: SparkSession,
     index: GraphAnnIndex,
     new_df: DataFrame,
-    id_col: str = "id",
-    vec_col: str = "embedding",
     strategy: str = "CosineSimilarity",
-) -> GraphAnnIndex:
-    """Incremental maintenance, the append-generation pattern every
-    other shape uses (``ivf_upsert``/``bq_upsert``) adapted to a
-    graph: each new node's m nearest EXISTING nodes come from one
+) -> dict:
+    """Incremental maintenance, the append-generation pattern of the
+    other layouts adapted to a graph. ``layout.append_batch`` persists
+    the ``(id, embedding)`` batch once (cast to the adjacency's types: a
+    double-typed batch against a float store would poison every later
+    scan with a parquet type mismatch), counts it and raises on a
+    vector of another length than the index dim before anything is
+    written. Then each new node's m nearest EXISTING nodes come from one
     blocked BLAS kNN join (new side broadcast — an ingest batch is
-    small by construction), the new rows append to ``adjacency/``
-    with those forward links, and the REVERSE links (existing ->
-    new, what keeps the graph navigable toward fresh nodes and the
-    full-beam connectivity assertion true) append to a ``delta/``
-    directory instead of rewriting existing rows — adjacency files
-    stay immutable. Search merges delta neighbor lists on load;
+    small by construction), the new rows append to ``adjacency/`` with
+    those forward links, and the REVERSE links (existing -> new, what
+    keeps the graph navigable toward fresh nodes and the full-beam
+    connectivity assertion true) append to a ``delta/`` directory
+    instead of rewriting existing rows — adjacency files stay
+    immutable. Search merges delta neighbor lists on load;
     ``graphann_compact`` folds them into the next generation.
 
     Degree grows by at most one per inserted neighbor link between
     compactions (the LSM trade: churn cost moves to the background
-    rewrite, exactly like ivf/bq/sq appends)."""
+    rewrite). Returns the ``append_batch`` stats; the metadata's
+    ``n_rows`` counts the appended rows, so load the index again for
+    the grown graph."""
     from .search import knn_join_blocked
 
     validate_strategy(strategy)
     adj = spark.read.parquet(os.path.join(index.path, "adjacency")).select(
         "id", "embedding"
     )
-    # appended files must carry the EXISTING schema (a double-typed
-    # batch against a float store poisons every later scan with a
-    # parquet type mismatch) and the index dim
-    check_upsert_dim(new_df, vec_col, index.dim, "graphann_upsert")
+
+    def link(rows: DataFrame) -> None:
+        pairs = knn_join_blocked(
+            spark,
+            rows.selectExpr("id AS query_id", "embedding AS query_vec"),
+            adj,
+            k=index.m,
+            strategy=strategy,
+        ).select("query_id", "id")
+        fwd = (
+            pairs.groupBy("query_id")
+            .agg(F.array_sort(F.collect_set("id")).alias("neighbors"))
+            .select(F.col("query_id").alias("id"), "neighbors")
+        )
+        new_rows = rows.join(fwd, "id", "left").select(
+            "id",
+            "embedding",
+            F.coalesce(F.col("neighbors"), F.array().cast("array<long>")).alias(
+                "neighbors"
+            ),
+        )
+        append_rows(new_rows, os.path.join(index.path, "adjacency"))
+        rev = pairs.groupBy("id").agg(
+            F.array_sort(F.collect_set("query_id")).alias("neighbors")
+        )
+        append_rows(rev, os.path.join(index.path, "delta"))
+
     src = new_df.select(
-        F.col(id_col).cast(adj.schema["id"].dataType).alias("id"),
-        F.col(vec_col).cast(adj.schema["embedding"].dataType).alias("embedding"),
+        F.col("id").cast(adj.schema["id"].dataType).alias("id"),
+        F.col("embedding").cast(adj.schema["embedding"].dataType).alias("embedding"),
     )
-    pairs = knn_join_blocked(
-        spark,
-        src.select(F.col("id").alias("query_id"), F.col("embedding").alias("query_vec")),
-        adj,
-        k=index.m,
-        strategy=strategy,
-    ).select("query_id", "id")
-    fwd = (
-        pairs.groupBy("query_id")
-        .agg(F.array_sort(F.collect_set("id")).alias("neighbors"))
-        .select(F.col("query_id").alias("id"), "neighbors")
-    )
-    new_rows = src.join(fwd, "id", "left").select(
-        "id",
-        "embedding",
-        F.coalesce(F.col("neighbors"), F.array().cast("array<long>")).alias(
-            "neighbors"
-        ),
-    )
-    new_rows.write.mode("append").parquet(os.path.join(index.path, "adjacency"))
-    rev = (
-        pairs.groupBy("id")
-        .agg(F.array_sort(F.collect_set("query_id")).alias("neighbors"))
-    )
-    rev.write.mode("append").parquet(os.path.join(index.path, "delta"))
-    n_new = src.count()
-    meta = {
-        "dim": index.dim,
-        "n_rows": index.n_rows + n_new,
-        "m": index.m,
-        "entry_point": index.entry_point,
-        "medoid": index.medoid,
-        "id_col": index.id_col,
-        "vec_col": index.vec_col,
-        "seeds": list(index.seeds),
-        "seed_vecs": [list(v) for v in index.seed_vecs],
-    }
-    with open(os.path.join(index.path, _META_FILE), "w") as f:
-        json.dump(meta, f)
-    return GraphAnnIndex(path=index.path, **meta)
+    stats = append_batch(spark, index, src, write=link)
+    count_appended(index, stats["n_appended"])
+    return stats
 
 
 def graphann_compact(
     spark: SparkSession, index: GraphAnnIndex, out_dir: str, n_files: int = 1
 ) -> GraphAnnIndex:
     """Generation rewrite (immutable new generation, pointer flip —
-    the shared ``ivf_compact``/``bq_compact`` contract): fold the
+    the ``layout.compact`` contract): fold the
     reverse-edge ``delta/`` into the adjacency rows, dedup neighbor
     lists, and restore the id-sorted range-partitioned layout the
     per-hop lookups prune against."""
@@ -627,32 +614,16 @@ def graphann_compact(
         .write.mode("overwrite")
         .parquet(os.path.join(out_dir, "adjacency"))
     )
-    n_rows = spark.read.parquet(os.path.join(out_dir, "adjacency")).count()
-    meta = {
-        "dim": index.dim,
-        "n_rows": n_rows,
-        "m": index.m,
-        "entry_point": index.entry_point,
-        "medoid": index.medoid,
-        "id_col": index.id_col,
-        "vec_col": index.vec_col,
-        "seeds": list(index.seeds),
-        "seed_vecs": [list(v) for v in index.seed_vecs],
-    }
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, _META_FILE), "w") as f:
-        json.dump(meta, f)
-    return GraphAnnIndex(path=out_dir, **meta)
+    new = dataclasses.replace(
+        index,
+        path=out_dir,
+        n_rows=spark.read.parquet(os.path.join(out_dir, "adjacency")).count(),
+    )
+    write_meta(new)
+    return new
 
 
 # --------------------------------------------------------- search side
-
-#: session cache of (ids, vectors, CSR neighbors) per index
-#: generation — a pure function of the persisted files (the
-#: _SCAN_CACHE contract); the key includes n_rows so an upsert
-#: (which bumps the meta) invalidates instead of serving stale.
-_GRAPH_CACHE: dict[tuple, tuple] = {}
-
 
 def _adjacency_with_delta(spark: SparkSession, index: GraphAnnIndex) -> DataFrame:
     """Adjacency rows with any LSM delta's reverse edges merged in
@@ -684,8 +655,12 @@ def _adjacency_with_delta(spark: SparkSession, index: GraphAnnIndex) -> DataFram
 
 
 def _load_graph_numpy(spark: SparkSession, index: GraphAnnIndex):
-    key = (index.path, index.n_rows)
-    if key not in _GRAPH_CACHE:
+    """(sorted ids, vectors, CSR neighbors) of the graph: a pure
+    function of the persisted files, memoized per session under the
+    index directory's file listing, so the files an upsert or rewrite
+    adds give a new value (one entry per directory)."""
+
+    def load():
         pdf = (
             _adjacency_with_delta(spark, index)
             .select("id", "embedding", "neighbors")
@@ -706,8 +681,9 @@ def _load_graph_numpy(spark: SparkSession, index: GraphAnnIndex):
         indices = (
             np.concatenate(flat) if flat else np.zeros(0, dtype=np.int64)
         )
-        _GRAPH_CACHE[key] = (ids, vecs, indptr, indices)
-    return _GRAPH_CACHE[key]
+        return ids, vecs, indptr, indices
+
+    return session_memo(spark, "graph_numpy", index.path, {}, load)
 
 
 def _np_scores(strategy: str, V: np.ndarray, q: np.ndarray) -> np.ndarray:

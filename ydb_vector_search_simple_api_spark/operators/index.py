@@ -54,9 +54,8 @@ from . import tombstones
 from ..artifacts import session_memo
 from ..config import DEFAULT_K, DEFAULT_SEARCH_TOP_SIZE, sort_descending, validate_strategy
 from ..functions.distance import score_expr
+from .layout import append_batch, compact, nearest, write_meta
 from .search import _order_cols, _rank_per_query, rank_topk
-
-_CENTROIDS_FILE = "_ivf_centroids.json"
 
 
 @dataclass(frozen=True)
@@ -70,10 +69,22 @@ class IvfIndex:
     schema: T.StructType | None = None
 
     partition_cols: ClassVar[tuple[str, ...]] = ("cluster_id",)
+    meta_file: ClassVar[str] = "_ivf_centroids.json"
 
     @property
     def dim(self) -> int:
         return self.centroids.shape[1]
+
+    @property
+    def layout_dir(self) -> str:
+        return self.path
+
+    @property
+    def n_partitions(self) -> int:
+        return self.n_clusters
+
+    def rows(self, spark: SparkSession) -> DataFrame:
+        return _read_clusters(spark, self)
 
 
 def _infer_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -151,20 +162,6 @@ def _stored_schema(meta: dict, path: str) -> T.StructType | None:
     return _infer_schema(spark, path)
 
 
-def _write_meta(
-    out_dir: str, n_clusters: int, centroids: np.ndarray, schema: T.StructType
-) -> None:
-    with open(os.path.join(out_dir, _CENTROIDS_FILE), "w") as f:
-        json.dump(
-            {
-                "n_clusters": n_clusters,
-                "centroids": centroids.tolist(),
-                "schema": json.loads(schema.json()),
-            },
-            f,
-        )
-
-
 def build_ivf_index(
     spark: SparkSession,
     df: DataFrame,
@@ -216,15 +213,16 @@ def build_ivf_index(
     centroids = np.array(
         [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
     )
-    _write_meta(out_dir, n_clusters, centroids, assigned.schema)
-    return IvfIndex(
+    index = IvfIndex(
         path=out_dir, n_clusters=n_clusters, centroids=centroids,
         schema=assigned.schema,
     )
+    write_meta(index)
+    return index
 
 
 def load_ivf_index(path: str) -> IvfIndex:
-    with open(os.path.join(path, _CENTROIDS_FILE)) as f:
+    with open(os.path.join(path, IvfIndex.meta_file)) as f:
         meta = json.load(f)
     return IvfIndex(
         path=path,
@@ -285,18 +283,14 @@ def ivf_search(
     return rank_topk(pruned, query_vec, k, strategy, round_digits)
 
 
-_CELL_ANGLE_CACHE: dict[str, np.ndarray] = {}
-
-
 def _cell_max_angles(spark: SparkSession, index: IvfIndex) -> np.ndarray:
     """Per-cell angular radius ``max_x theta(x, centroid)`` from the
     stored layout: one scan, Arrow-batched numpy cosine per row,
     cluster-keyed MIN-cosine aggregate, cluster-count-sized collect.
-    A pure function of the index files — session-cached (the
-    ``_SCAN_CACHE`` contract). Zero-norm rows count as angle pi (never
-    prunable past them)."""
-    if index.path in _CELL_ANGLE_CACHE:
-        return _CELL_ANGLE_CACHE[index.path]
+    A pure function of the index files, memoized per session under the
+    layout's file listing, so an upsert or rewrite into the directory
+    recomputes it. Zero-norm rows count as angle pi (never prunable
+    past them)."""
     cents = index.centroids
     cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
 
@@ -315,19 +309,21 @@ def _cell_max_angles(spark: SparkSession, index: IvfIndex) -> np.ndarray:
             cos = np.where(norms > 0, np.clip(cos, -1.0, 1.0), -1.0)
             yield pd.DataFrame({"cluster_id": cids, "min_cos": cos})
 
-    rows = (
-        _read_clusters(spark, index)
-        .select("cluster_id", "embedding")
-        .mapInPandas(part, "cluster_id int, min_cos double")
-        .groupBy("cluster_id")
-        .agg(F.min("min_cos").alias("min_cos"))
-        .collect()
-    )
-    angles = np.full(index.n_clusters, np.pi)
-    for r in rows:
-        angles[r.cluster_id] = float(np.arccos(np.clip(r.min_cos, -1.0, 1.0)))
-    _CELL_ANGLE_CACHE[index.path] = angles
-    return angles
+    def angles() -> np.ndarray:
+        rows = (
+            _read_clusters(spark, index)
+            .select("cluster_id", "embedding")
+            .mapInPandas(part, "cluster_id int, min_cos double")
+            .groupBy("cluster_id")
+            .agg(F.min("min_cos").alias("min_cos"))
+            .collect()
+        )
+        out = np.full(index.n_clusters, np.pi)
+        for r in rows:
+            out[r.cluster_id] = float(np.arccos(np.clip(r.min_cos, -1.0, 1.0)))
+        return out
+
+    return session_memo(spark, "cell_angles", index.path, {}, angles)
 
 
 def ivf_range_search(
@@ -561,166 +557,41 @@ def ivf_knn_join(
     return _rank_per_query(scored, strategy, k, round_digits)
 
 
-def ivf_upsert(
-    spark: SparkSession,
-    index: IvfIndex,
-    new_df: DataFrame,
-    id_col: str = "id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Incremental index maintenance: route new vectors to their
-    nearest existing centroid (Arrow-batched, centroid matrix in the
-    UDF closure — a few KB) and APPEND them to the cluster's partition
-    directory. No rebuild, no touch of existing files; searches see
-    the new rows immediately because pruning is directory-based.
-
-    Routing is nearest-centroid by L2 — consistent with the KMeans
-    build-time objective — for EVERY serving strategy; inner-product
-    serving still routes by L2 here (same row placement the build
-    produced), so upserted rows land where a rebuild would put them.
+def ivf_upsert(spark: SparkSession, index: IvfIndex, new_df: DataFrame) -> dict:
+    """Incremental index maintenance: route each ``(id, embedding)`` row
+    of ``new_df`` to its nearest existing centroid by L2
+    (``layout.nearest``, the KMeans build objective, for every serving
+    strategy) and APPEND it to that cluster's partition directory
+    through ``layout.append_batch``. No rebuild, no touch of existing
+    files; searches see the new rows at once because pruning is
+    directory-based. A batch holding a vector of another length than
+    the index dim raises and writes nothing.
 
     Centroids are deliberately NOT moved: recall for pre-existing rows
     is untouched, and the approximation only degrades as drift between
-    the frozen centroids and the true cluster means grows. That drift
-    is what the returned stats measure — ``max_assign_l2`` and
-    per-cluster counts feed the rebuild trigger (rebuild when the
-    incoming distribution stops matching the codebook, e.g. p95 assign
-    distance creeping above the build-time baseline). This mirrors how
-    serving systems run IVF in production: cheap appends + periodic
-    offline rebuilds, not online centroid updates.
+    the frozen centroids and the true cluster means grows. The returned
+    ``max_assign_l2`` and per-cluster counts measure that drift and feed
+    the rebuild trigger: cheap appends plus periodic offline rebuilds,
+    not online centroid updates.
 
-    Returns {"n_appended", "per_cluster", "max_assign_l2"}.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    Returns {"n_appended", "per_partition" ((cluster_id,) -> rows),
+    "max_assign_l2"}."""
     c = index.centroids
-    dim = c.shape[1]
 
-    # one Arrow pass computes assignment AND assign-distance (no
-    # second scoring stage, no per-row Python)
-    def _assign_fn(vecs):
-        cids, dists = [], []
-        for v in vecs:
-            if v is None or len(v) != dim:
-                cids.append(None)
-                dists.append(None)
-                continue
-            q = np.asarray(v, dtype=np.float64)
-            d2 = ((c - q) ** 2).sum(axis=1)
-            j = int(d2.argmin())
-            cids.append(j)
-            dists.append(float(np.sqrt(d2[j])))
-        return pd.DataFrame({"cluster_id": cids, "d": dists})
+    def route(E):
+        cid, d = nearest(c, E)
+        return {"cluster_id": cid, "d": d}
 
-    _assign = F.pandas_udf(
-        _assign_fn, T.StructType(
-            [
-                T.StructField("cluster_id", T.IntegerType()),
-                T.StructField("d", T.DoubleType()),
-            ]
-        )
+    return append_batch(
+        spark, index, new_df, route, [T.StructField("cluster_id", T.IntegerType())]
     )
 
-    assigned = (
-        new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("embedding"))
-        .withColumn("a", _assign(F.col("embedding")))
-        .select("id", "embedding", F.col("a.cluster_id").alias("cluster_id"),
-                F.col("a.d").alias("d"))
-        .filter(F.col("cluster_id").isNotNull())
-    )
-    # persist so the write and the stats collect see ONE evaluation of
-    # the assignment: for a non-deterministic new_df (sampled / re-read
-    # source) a recompute could describe different rows than were written
-    assigned.persist()
-    try:
-        # upsert-wins: a previously tombstoned id that arrives again is
-        # resurrected (the tiny tombstone set is rewritten minus these
-        # ids) BEFORE the append, so readers never see it flicker
-        tombstones.resurrect_ids(spark, index.path, assigned, "id")
-        assigned.drop("d").write.mode("append").partitionBy("cluster_id").parquet(
-            index.path
-        )
 
-        stats = (
-            assigned.groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("d").alias("max_d"))
-            .collect()
-        )
-    finally:
-        assigned.unpersist()
-    per_cluster = {int(r.cluster_id): int(r.n) for r in stats}
-    return {
-        "n_appended": sum(per_cluster.values()),
-        "per_cluster": per_cluster,
-        "max_assign_l2": max((float(r.max_d) for r in stats), default=0.0),
-    }
-
-
-def ivf_compact(
-    spark: SparkSession,
-    index: IvfIndex,
-    out_dir: str,
-    files_per_cluster: int = 1,
-    dedup_ids: bool = False,
-) -> IvfIndex:
-    """Compaction: rewrite the (append-churned) cluster layout into a
-    NEW index generation with ``files_per_cluster`` files per
-    directory, centroids carried over unchanged. Many small appends
-    (ivf_upsert) degrade scan efficiency — each file costs a task and
-    a footer read; compaction restores ~one right-sized file per
-    cluster. Generations are immutable: the new directory is written
-    in full, then serving flips its index pointer (no in-place file
-    surgery, readers of the old generation are never disturbed —
-    the standard object-store-friendly pattern).
-
-    One shuffle co-locates each cluster's rows and bounds the file
-    count. Hash-partitioning on cluster_id alone lands each cluster in
-    ONE shuffle partition — so for ``files_per_cluster > 1`` a salt
-    (pmod of the row id hash) spreads every cluster across exactly
-    that many partitions, each of which writes one file into the
-    cluster's directory. Results are identical by construction (same
-    rows, same layout contract); tests pin file-count reduction +
-    result equality.
-
-    ``dedup_ids=True`` additionally keeps one row per id (replayed
-    streaming batches can re-append rows — see
-    streaming/index_ingest.py). This costs a SECOND exchange (the
-    dedup aggregate hashes on id, the compaction repartition on
-    cluster_id[+salt]) — accepted for an offline generation rewrite
-    because it makes dedup unconditional: it collapses same-id rows
-    even if two versions carry different vectors and were routed to
-    different clusters, which any single-shuffle per-partition scheme
-    keyed on (cluster_id, id) could not. Map-side partial aggregation
-    still shrinks the dedup exchange to distinct ids.
-    """
-    if files_per_cluster < 1:
-        raise ValueError("files_per_cluster must be a positive integer")
-    src = _read_clusters(spark, index)
-    df = tombstones.apply_tombstones(spark, index.path, src)
-    if dedup_ids:
-        df = df.dropDuplicates(["id"])
-    if files_per_cluster == 1:
-        shuffled = df.repartition(index.n_clusters, "cluster_id")
-    else:
-        salt = F.pmod(F.xxhash64(F.col("id")), F.lit(files_per_cluster))
-        shuffled = df.withColumn("_salt", salt).repartition(
-            files_per_cluster * index.n_clusters, "cluster_id", "_salt"
-        ).drop("_salt")
-    (
-        shuffled.write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(out_dir)
-    )
-    _write_meta(out_dir, index.n_clusters, index.centroids, src.schema)
-    return IvfIndex(
-        path=out_dir,
-        n_clusters=index.n_clusters,
-        centroids=index.centroids,
-        id_col=index.id_col,
-        vec_col=index.vec_col,
-        schema=src.schema,
-    )
+#: the IVF name of the one generation rewrite (``layout.compact``):
+#: ``ivf_compact(spark, index, out_dir, dedup_ids=False)`` rewrites the
+#: append-churned cluster layout into a new generation with one file
+#: per cluster directory, centroids carried over
+ivf_compact = compact
 
 
 def query_matrix(vecs: Sequence, dim: int) -> tuple[list[int], np.ndarray]:

@@ -53,6 +53,7 @@ import json
 import os
 from collections.abc import Sequence
 from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -62,14 +63,13 @@ from pyspark.sql import types as T
 from . import tombstones
 from ..config import DEFAULT_K, sort_descending, validate_strategy
 from .index import ivf_rows
-from .search import _order_cols, check_upsert_dim, read_codes
+from .layout import CodeLayout, encode_rows, write_meta
+from .search import _order_cols, read_codes
 from .tree import _lloyd
-
-_META_FILE = "_pq_meta.json"
 
 
 @dataclass(frozen=True)
-class PqIndex:
+class PqIndex(CodeLayout):
     path: str  # codes parquet directory
     m: int
     nbits: int
@@ -79,13 +79,25 @@ class PqIndex:
     id_col: str = "id"
     vec_col: str = "embedding"
     #: hive partition column of the codes layout (IVFADC: "cluster_id");
-    #: None for a flat layout. Recorded so maintenance ops (pq_upsert)
-    #: can preserve — not silently break — partition discovery.
+    #: None for a flat layout. Recorded so the upsert routes new codes
+    #: into it and the rewrite keeps it.
     partition_col: str | None = None
+
+    meta_file: ClassVar[str] = "_pq_meta.json"
+    code_fields: ClassVar[tuple[T.StructField, ...]] = (
+        T.StructField("codes", T.BinaryType()),
+    )
 
     @property
     def n_codes(self) -> int:
         return self.codebooks.shape[1]
+
+    def encode(self, E: np.ndarray) -> dict:
+        """(n, dim) float64 rows -> their m-byte codes (unit rows first
+        when the index is normalized)."""
+        if self.normalize:
+            E = E / np.maximum(np.linalg.norm(E, axis=1)[:, None], 1e-300)
+        return {"codes": [c.tobytes() for c in _encode_batch(E, self.codebooks)]}
 
     def shortlist(
         self,
@@ -230,186 +242,20 @@ def build_pq_index(
     if normalize:
         X = X / np.maximum(np.linalg.norm(X, axis=1)[:, None], 1e-300)
     books = train_pq_codebooks(X, m=m, nbits=nbits)
-    bc = spark.sparkContext.broadcast((books, normalize))
-
-    fields = [
-        T.StructField("id", src.schema["id"].dataType),
-        T.StructField("codes", T.BinaryType()),
-    ]
-    if partition_col:
-        fields.append(T.StructField(partition_col, src.schema[partition_col].dataType))
-    out_schema = T.StructType(fields)
-
-    def encode(batches):
-        import pandas as pd
-
-        books_, norm_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            if norm_:
-                E = E / np.maximum(np.linalg.norm(E, axis=1)[:, None], 1e-300)
-            codes = _encode_batch(E, books_)
-            out = {"id": pdf["id"].to_numpy(), "codes": [c.tobytes() for c in codes]}
-            if partition_col:
-                out[partition_col] = pdf[partition_col].to_numpy()
-            yield pd.DataFrame(out)
-
-    writer = src.mapInPandas(encode, schema=out_schema).write.mode("overwrite")
-    if partition_col:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(out_dir)
-    meta = {
-        "m": m,
-        "nbits": nbits,
-        "dim": dim,
-        "normalize": normalize,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "partition_col": partition_col,
-        "codebooks": books.tolist(),
-    }
-    with open(os.path.join(out_dir, _META_FILE), "w") as f:
-        json.dump(meta, f)
-    return PqIndex(
+    index = PqIndex(
         path=out_dir, m=m, nbits=nbits, dim=dim, normalize=normalize,
         codebooks=books, id_col=id_col, vec_col=vec_col,
         partition_col=partition_col,
     )
-
-
-def pq_upsert(
-    spark: SparkSession,
-    index: PqIndex,
-    new_df: DataFrame,
-    ivf_index=None,
-) -> int:
-    """Incremental code maintenance: encode new vectors against the
-    FROZEN codebooks and append to the codes layout — the PQ twin of
-    ``index.ivf_upsert`` (same production pattern: cheap appends,
-    codebooks retrained only on periodic rebuild, since moving a
-    codeword would silently re-interpret every existing code).
-
-    A partitioned (IVFADC) layout must stay partitioned: appending
-    flat files into a hive-partitioned directory breaks partition
-    discovery and the pruned reads ``search.shortlist_search`` depends
-    on. When ``index.partition_col`` is set, pass the owning ``IvfIndex`` so
-    new rows are routed to their nearest centroid and appended with
-    ``partitionBy`` (same routing as ``index.ivf_upsert``); without it
-    this raises instead of corrupting the layout.
-
-    A batch holding a vector whose length differs from the index dim
-    raises (``search.check_upsert_dim``). Returns the number of
-    appended rows."""
-    if index.partition_col is not None and ivf_index is None:
-        raise ValueError(
-            f"codes layout is partitioned by {index.partition_col!r} "
-            "(IVFADC); pass ivf_index= so appended rows are routed and "
-            "written with partitionBy, or rebuild via build_ivfpq_index"
-        )
-    check_upsert_dim(new_df, index.vec_col, index.dim, "pq_upsert")
-    src = new_df.select(
-        F.col(index.id_col).alias("id"), F.col(index.vec_col).alias("embedding")
-    )
-    centroids = ivf_index.centroids if ivf_index is not None else None
-    bc = spark.sparkContext.broadcast((index.codebooks, index.normalize, centroids))
-
-    fields = [
-        T.StructField("id", src.schema["id"].dataType),
-        T.StructField("codes", T.BinaryType()),
-    ]
-    part_col = index.partition_col
-    if part_col:
-        fields.append(T.StructField(part_col, T.IntegerType()))
-    out_schema = T.StructType(fields)
-
-    def encode(batches):
-        import pandas as pd
-
-        books_, norm_, cents_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            if norm_:
-                En = E / np.maximum(np.linalg.norm(E, axis=1)[:, None], 1e-300)
-            else:
-                En = E
-            codes = _encode_batch(En, books_)
-            out = {"id": pdf["id"].to_numpy(), "codes": [c.tobytes() for c in codes]}
-            if part_col:
-                # route on the RAW vector (L2 to centroids), matching
-                # ivf_upsert / the KMeans build-time assignment
-                d2 = (
-                    (E**2).sum(axis=1)[:, None]
-                    - 2.0 * (E @ cents_.T)
-                    + (cents_**2).sum(axis=1)[None, :]
-                )
-                out[part_col] = d2.argmin(axis=1).astype(np.int32)
-            yield pd.DataFrame(out)
-
-    # persist so the count and the write see ONE evaluation (same
-    # non-deterministic-source hazard ivf_upsert guards against)
-    src.persist()
-    try:
-        tombstones.resurrect_ids(spark, index.path, src, index.id_col)
-        n = src.count()
-        writer = src.mapInPandas(encode, schema=out_schema).write.mode("append")
-        if part_col:
-            writer = writer.partitionBy(part_col)
-        writer.parquet(index.path)
-    finally:
-        src.unpersist()
-    return n
-
-
-def pq_compact(
-    spark: SparkSession,
-    index: PqIndex,
-    out_dir: str,
-    dedup_ids: bool = False,
-) -> PqIndex:
-    """Compaction for the CODES layout — the PQ twin of
-    ``index.ivf_compact``: rewrite the (append-churned) codes into a
-    NEW immutable generation, preserving the hive partitioning when
-    the layout has one (IVFADC), then flip the serving pointer.
-
-    ``dedup_ids=True`` keeps one row per id — the mitigation for
-    streaming replay duplicates (``stream_ivfpq_ingest``'s foreachBatch
-    re-appends on recovery); without it a duplicated id occupies two
-    of the k slots in pure-ADC results forever. Run alongside
-    ``ivf_compact(dedup_ids=True)`` so the vector and codes
-    generations stay consistent."""
-    df = tombstones.apply_tombstones(
-        spark, index.path, spark.read.parquet(index.path)
-    )
-    if dedup_ids:
-        df = df.dropDuplicates(["id"])
-    part_col = index.partition_col
-    if part_col:
-        shuffled = df.repartition(F.col(part_col))
-        writer = shuffled.write.mode("overwrite").partitionBy(part_col)
-    else:
-        writer = df.coalesce(
-            max(1, spark.sparkContext.defaultParallelism)
-        ).write.mode("overwrite")
-    writer.parquet(out_dir)
-    import shutil
-
-    shutil.copyfile(
-        os.path.join(index.path, _META_FILE), os.path.join(out_dir, _META_FILE)
-    )
-    return PqIndex(
-        path=out_dir, m=index.m, nbits=index.nbits, dim=index.dim,
-        normalize=index.normalize, codebooks=index.codebooks,
-        id_col=index.id_col, vec_col=index.vec_col,
-        partition_col=part_col,
-    )
+    encode_rows(src, index, index.partition_cols).write.mode("overwrite").partitionBy(
+        *index.partition_cols
+    ).parquet(out_dir)
+    write_meta(index)
+    return index
 
 
 def load_pq_index(path: str) -> PqIndex:
-    with open(os.path.join(path, _META_FILE)) as f:
+    with open(os.path.join(path, PqIndex.meta_file)) as f:
         meta = json.load(f)
     return PqIndex(
         path=path, m=meta["m"], nbits=meta["nbits"], dim=meta["dim"],

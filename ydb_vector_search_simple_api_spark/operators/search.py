@@ -597,12 +597,3 @@ def shortlist_search(
     cand = index.shortlist(spark, query_vec, shortlist, strategy, keep, filter_ids)
     hit = vecs.join(F.broadcast(cand.select("id")), "id", "left_semi")
     return rank_topk(hit, query_vec, k, strategy, round_digits)
-
-
-def check_upsert_dim(new_df: DataFrame, vec_col: str, dim: int, op: str) -> None:
-    """The dimension rule of every code-layout upsert: raise when a row
-    of ``new_df`` holds a vector whose length is not the index ``dim``
-    (one bounded Spark job). Codes of another length would score NULL
-    and silently sink in every later result."""
-    if new_df.filter(F.size(F.col(vec_col)) != dim).limit(1).count():
-        raise ValueError(f"{op} batch has vectors whose length != index dim {dim}")

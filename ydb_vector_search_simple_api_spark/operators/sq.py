@@ -17,8 +17,8 @@ upserts trivial (encode the delta, append).
 
 Spark-native shape:
 
-* **Encode** (distributed, zero shuffle, build-time only): one
-  Arrow-batched numpy pass — ``codes = floor(x·127/max|x| + 0.5)``
+* **Encode** (distributed, zero shuffle, at build and upsert): one
+  Arrow-batched numpy pass (``SqIndex.encode``) — ``codes = floor(x·127/max|x| + 0.5)``
   (the exact scheme of the ``quantize_embeddings`` gate entry, so
   the two surfaces agree bit-for-bit). One narrow parquet table
   (id, codes array<tinyint>, qscale).
@@ -52,11 +52,13 @@ import json
 import os
 from collections.abc import Sequence
 from dataclasses import dataclass
+from typing import ClassVar
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from . import tombstones
 from ..functions.distance import (
     _py_l2_norm,
     double_sql,
@@ -65,20 +67,50 @@ from ..functions.distance import (
     score_sql,
 )
 from .index import ivf_rows
-from .search import _order_cols, check_upsert_dim, read_codes
+from .layout import CodeLayout, encode_rows, write_meta
+from .search import _order_cols, read_codes
 
 
 @dataclass(frozen=True)
-class SqIndex:
-    """A persisted (id, codes, qscale, cnorm) int8-code table.
-    ``partition_col`` marks the IVF-partitioned composition layout
-    (build_ivfsq_index) — maintenance ops guard on it so flat appends
-    never mix into a partitioned directory tree."""
+class SqIndex(CodeLayout):
+    """A persisted (id, codes, qscale, cnorm) int8-code table under
+    ``codes/``. ``partition_col`` marks the IVF-partitioned composition
+    layout (build_ivfsq_index), which the upsert routes into."""
 
     path: str
     dim: int
     n_rows: int
     partition_col: str | None = None
+
+    subdir: ClassVar[str] = "codes"
+    meta_file: ClassVar[str] = "_sq_meta.json"
+    code_fields: ClassVar[tuple[T.StructField, ...]] = (
+        T.StructField("codes", T.ArrayType(T.ByteType())),
+        T.StructField("qscale", T.DoubleType()),
+        T.StructField("cnorm", T.DoubleType()),
+    )
+
+    @staticmethod
+    def encode(X: np.ndarray) -> dict:
+        """(n, dim) float64 rows -> codes, qscale, cnorm: ``codes =
+        floor(x·127/max|x| + 0.5)`` (round-half-up, the
+        ``quantize_embeddings`` gate entry's scheme bit-for-bit). Numpy,
+        not Column expressions: Catalyst has no let-binding, so a Column
+        encode re-evaluates ``max|x|`` per element (84 s vs ~4 s at 4M
+        rows). ``cnorm``, the L2 norm of the integer codes, is stored so
+        the query-time cosine/Euclidean costs ONE array fold per row;
+        it only ranks the approximate shortlist, so numpy's summation
+        order is fine. Zero vectors encode to all-zero codes with qscale
+        0 (dequantize reproduces them)."""
+        s = np.abs(X).max(axis=1)
+        safe = np.where(s == 0.0, 1.0, s)
+        C = np.floor(X * (127.0 / safe[:, None]) + 0.5).astype(np.int8)
+        C[s == 0.0] = 0
+        return {
+            "codes": [list(r) for r in C],
+            "qscale": s,
+            "cnorm": np.sqrt((C.astype(np.float64) ** 2).sum(axis=1)),
+        }
 
     def shortlist(
         self,
@@ -93,9 +125,7 @@ class SqIndex:
         score over the int8 codes (``_approx_score``; TakeOrdered),
         ``n=None`` keeping every id (no score). ``keep`` and
         ``filter_ids`` prune the codes as in ``search.read_codes``."""
-        codes = read_codes(
-            spark, self.path, os.path.join(self.path, "codes"), keep, filter_ids
-        )
+        codes = read_codes(spark, self.path, self.layout_dir, keep, filter_ids)
         if n is None:
             return codes.select("id")
         return (
@@ -104,66 +134,6 @@ class SqIndex:
             .orderBy(*_order_cols(strategy))
             .limit(n)
         )
-
-
-def encode_sq(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "id",
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(id, codes array<tinyint>, qscale double, cnorm double) via one
-    Arrow-batched numpy pass (the BQ build pattern — a pure-Column
-    encode would re-evaluate the ``max|x|`` subexpression per element
-    because Catalyst has no let-binding: measured 84 s vs ~4 s at 4M
-    rows). ``cnorm`` is the L2 norm of the integer codes, precomputed
-    so the query-time cosine/Euclidean costs ONE array fold per row
-    instead of two (the fold over 64 lambda evaluations is the hot
-    cost; measured below brute-force without it). It only ranks the
-    approximate shortlist, so numpy's summation order is fine.
-    Build-time only; the query path stays entirely JVM-side. Zero
-    vectors encode to all-zero codes with qscale 0 (dequantize
-    reproduces the zero vector)."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    fields = [
-        f"`{id_col}` {id_type}", "codes array<tinyint>",
-        "qscale double", "cnorm double",
-    ]
-    for c in extra_cols:
-        fields.append(f"`{c}` {df.schema[c].dataType.simpleString()}")
-    out_schema = ", ".join(fields)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
-                dtype=np.float64,
-            )
-            s = np.abs(X).max(axis=1)
-            safe = np.where(s == 0.0, 1.0, s)
-            # floor(x*127/s + 0.5): round-half-up, matching the
-            # quantize_embeddings gate entry bit-for-bit
-            C = np.floor(X * (127.0 / safe[:, None]) + 0.5).astype(np.int8)
-            C[s == 0.0] = 0
-            out = {
-                id_col: pdf[id_col].values,
-                "codes": [list(r) for r in C],
-                "qscale": s,
-                "cnorm": np.sqrt((C.astype(np.float64) ** 2).sum(axis=1)),
-            }
-            for c in extra_cols:
-                out[c] = pdf[c].values
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, vec_col, *extra_cols).mapInPandas(
-        encode, schema=out_schema
-    )
 
 
 def build_sq_index(
@@ -182,28 +152,19 @@ def build_sq_index(
     if first is None:
         raise ValueError("cannot build an SQ index over an empty source")
     extra = (partition_col,) if partition_col else ()
-    writer = encode_sq(src, vec_col=vec_col, id_col=id_col, extra_cols=extra).write
-    writer.mode("overwrite").partitionBy(*extra).parquet(os.path.join(path, "codes"))
-    n_rows = spark.read.parquet(os.path.join(path, "codes")).count()
-    return _save_meta(
-        SqIndex(path, int(first["d"]), n_rows, partition_col), id_col
+    codes_dir = os.path.join(path, SqIndex.subdir)
+    rows = src.selectExpr(f"`{id_col}` AS id", f"`{vec_col}` AS embedding", *extra)
+    encode_rows(rows, SqIndex, extra).write.mode("overwrite").partitionBy(*extra).parquet(
+        codes_dir
     )
-
-
-def _save_meta(index: SqIndex, id_col: str) -> SqIndex:
-    with open(os.path.join(index.path, "_sq_meta.json"), "w") as f:
-        json.dump(
-            {
-                "dim": index.dim, "n_rows": index.n_rows, "id_col": id_col,
-                "partition_col": index.partition_col,
-            },
-            f,
-        )
+    n_rows = spark.read.parquet(codes_dir).count()
+    index = SqIndex(path, int(first["d"]), n_rows, partition_col)
+    write_meta(index)
     return index
 
 
 def load_sq_index(path: str) -> SqIndex:
-    with open(os.path.join(path, "_sq_meta.json")) as f:
+    with open(os.path.join(path, SqIndex.meta_file)) as f:
         meta = json.load(f)
     return SqIndex(
         path=path, dim=meta["dim"], n_rows=meta["n_rows"],
@@ -256,83 +217,6 @@ def _approx_score(strategy: str, q: Sequence[float]) -> Column:
             "`codes`", operand_sql(q), f"abs(CAST(x AS DOUBLE) * {scale} - y)"
         )
     return F.expr(sql)
-
-
-def sq_upsert(
-    spark: SparkSession,
-    index: SqIndex,
-    new_df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "id",
-) -> SqIndex:
-    """Incremental maintenance: encode new rows (stateless — SQ has no
-    trained state to go stale, unlike PQ's codebooks) and APPEND to
-    the codes table; same append-generation pattern as ``bq_upsert``.
-    Re-inserted ids are resurrected from the tombstone set; duplicate
-    ids fold at the next ``sq_compact(dedup_ids=True)``.
-
-    Raises for an IVF-partitioned layout (build_ivfsq_index): flat
-    appends would break cluster_id partition discovery/pruning —
-    route new rows through ``ivf_upsert`` and re-encode the touched
-    clusters (the shared pq_upsert/bq_upsert partition guard)."""
-    if index.partition_col is not None:
-        raise ValueError(
-            f"sq_upsert on a layout partitioned by {index.partition_col!r} "
-            "would mix unpartitioned files into the directory tree; "
-            "rebuild via build_ivfsq_index (or ingest through ivf_upsert "
-            "and re-encode the touched clusters)"
-        )
-    check_upsert_dim(new_df, vec_col, index.dim, "sq_upsert")
-    codes_df = encode_sq(new_df, vec_col=vec_col, id_col=id_col)
-    codes_df.persist()
-    try:
-        tombstones.resurrect_ids(spark, index.path, codes_df, id_col)
-        n_new = codes_df.count()
-        codes_df.write.mode("append").parquet(os.path.join(index.path, "codes"))
-    finally:
-        codes_df.unpersist()
-    return _save_meta(SqIndex(index.path, index.dim, index.n_rows + n_new), id_col)
-
-
-def sq_compact(
-    spark: SparkSession,
-    index: SqIndex,
-    out_dir: str,
-    n_files: int = 1,
-    dedup_ids: bool = False,
-    id_col: str = "id",
-) -> SqIndex:
-    """Generation rewrite: fold tombstones and append churn into
-    ``n_files`` files (immutable new generation, pointer flip — the
-    shared ``ivf_compact``/``bq_compact`` contract). ``dedup_ids=True``
-    keeps one row per id for streaming replay hygiene. A partitioned
-    (IVF x SQ) layout compacts partition-aware — one file per cluster
-    directory, ``partition_col`` preserved in the meta — so
-    the IVF-composed search keeps cluster-directory pruning and the
-    ``sq_upsert`` partition guard keeps rejecting flat appends."""
-    if n_files < 1:
-        raise ValueError("n_files must be a positive integer")
-    df = tombstones.apply_tombstones(
-        spark, index.path,
-        spark.read.parquet(os.path.join(index.path, "codes")),
-        id_col=id_col,
-    )
-    if dedup_ids:
-        df = df.dropDuplicates([id_col])
-    if index.partition_col is not None:
-        # hash on the partition key: each cluster's rows land in one
-        # shuffle partition => exactly one file per cluster directory
-        df.repartition(n_files, index.partition_col).write.mode(
-            "overwrite"
-        ).partitionBy(index.partition_col).parquet(os.path.join(out_dir, "codes"))
-    else:
-        df.repartition(n_files).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "codes")
-        )
-    n_rows = spark.read.parquet(os.path.join(out_dir, "codes")).count()
-    return _save_meta(
-        SqIndex(out_dir, index.dim, n_rows, index.partition_col), id_col
-    )
 
 
 # ----------------------------------------------- IVF x SQ composition

@@ -11,11 +11,12 @@ pattern, object-store friendly:
   scan (the set is broadcast — deletes are assumed small relative to
   the corpus; a corpus-scale purge should be a rebuild, not a
   tombstone flood).
-* compaction (``ivf_compact``/``bq_compact``) folds tombstones into
-  the new generation permanently and starts it with an empty set.
-* re-upserting a tombstoned id RESURRECTS it: upsert rewrites the
-  (tiny) tombstone set minus the incoming ids before appending, so
-  "latest operation wins" holds without per-row versioning.
+* compaction (``layout.compact``) folds tombstones into the new
+  generation permanently and starts it with an empty set.
+* re-upserting a tombstoned id RESURRECTS it: the upsert
+  (``layout.append_batch``) replaces the (tiny) tombstone set by the
+  set minus the incoming ids before appending, so "latest operation
+  wins" holds without per-row versioning.
 """
 
 from __future__ import annotations
@@ -74,23 +75,28 @@ def apply_tombstones(
     return df.join(F.broadcast(t.withColumnRenamed("id", id_col)), id_col, "left_anti")
 
 
-def resurrect_ids(spark: SparkSession, index_path: str, ids_df: DataFrame, id_col: str) -> None:
+def resurrect_ids(
+    spark: SparkSession, index_path: str, ids_df: DataFrame, id_col: str = "id"
+) -> None:
     """Remove ``ids_df``'s ids from the tombstone set (upsert-wins
-    semantics). Rewrites the tiny tombstone table; no-op without one."""
+    semantics); no-op without one. The remaining set is appended as new
+    files first and the old files are then removed by name, so a reader
+    only ever sees a superset of the remaining set, a failed write
+    leaves the old set in place, and ids a concurrent ``delete_ids``
+    appends meanwhile are kept."""
     t = load_tombstones(spark, index_path)
     if t is None:
         return
+    root = tombstone_path(index_path)
+    old = [f for f in os.listdir(root) if f.endswith((".parquet", ".parquet.crc"))]
     remaining = t.join(
         ids_df.select(F.col(id_col).alias("id")).distinct(), "id", "left_anti"
     )
     rows = remaining.collect()  # deletes-sized by contract
-    import shutil
-
-    shutil.rmtree(tombstone_path(index_path), ignore_errors=True)
     if rows:
-        spark.createDataFrame(rows, t.schema).write.parquet(
-            tombstone_path(index_path)
-        )
+        spark.createDataFrame(rows, t.schema).write.mode("append").parquet(root)
+    for name in old:
+        os.remove(os.path.join(root, name))
 
 
 # ------------------------------------------------ generation pointer

@@ -67,9 +67,8 @@ from .index import (
 )
 from ..config import DEFAULT_K, validate_strategy
 from ..functions.distance import score_expr
+from .layout import append_batch, nearest, write_meta
 from .search import _rank_per_query, rank_topk
-
-_META_FILE = "_kmeans_tree.json"
 
 
 @dataclass(frozen=True)
@@ -83,6 +82,7 @@ class KmeansTreeIndex:
     schema: T.StructType | None = None
 
     partition_cols: ClassVar[tuple[str, ...]] = ("l1", "l2")
+    meta_file: ClassVar[str] = "_kmeans_tree.json"
 
     @property
     def n_leaves(self) -> int:
@@ -91,6 +91,17 @@ class KmeansTreeIndex:
     @property
     def dim(self) -> int:
         return self.centroids_l1.shape[1]
+
+    @property
+    def layout_dir(self) -> str:
+        return self.path
+
+    @property
+    def n_partitions(self) -> int:
+        return max(1, self.n_leaves)
+
+    def rows(self, spark: SparkSession) -> DataFrame:
+        return _read_clusters(spark, self)
 
 
 def _lloyd(x: np.ndarray, k: int, n_iter: int = 20) -> np.ndarray:
@@ -234,16 +245,13 @@ def build_kmeans_tree(
     # annotations`; see dedup._band_vals_fn)
     def _leaf_fn(l1s, vecs):
         cents = [np.asarray(c, dtype=np.float64) for c in cents_bc.value]
-        out = []
-        for l1, v in zip(l1s, vecs):
-            c = cents[int(l1)]
-            if len(c) == 0:
-                out.append(0)
-                continue
-            q = np.asarray(v, dtype=np.float64)
-            d2 = ((c - q) ** 2).sum(axis=1)
-            out.append(int(d2.argmin()))
-        return pd.Series(out, dtype="int32")
+        return pd.Series(
+            [
+                nearest(cents[int(l1)], np.asarray([v], dtype=np.float64))[0][0]
+                for l1, v in zip(l1s, vecs)
+            ],
+            dtype="int32",
+        )
 
     _leaf = F.pandas_udf(_leaf_fn, T.IntegerType())
 
@@ -252,24 +260,21 @@ def build_kmeans_tree(
     )
     leaves.write.mode("overwrite").partitionBy("l1", "l2").parquet(out_dir)
 
-    with open(os.path.join(out_dir, _META_FILE), "w") as f:
-        json.dump(
-            {
-                "n_l1": n_l1,
-                "fanout": fanout,
-                "centroids_l1": np.array(
-                    [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
-                ).tolist(),
-                "centroids_l2": [c.tolist() for c in centroids_l2],
-                "schema": json.loads(leaves.schema.json()),
-            },
-            f,
+    write_meta(
+        KmeansTreeIndex(
+            path=out_dir,
+            n_l1=n_l1,
+            fanout=fanout,
+            centroids_l1=np.array(l1_centers),
+            centroids_l2=centroids_l2,
+            schema=leaves.schema,
         )
+    )
     return load_kmeans_tree(out_dir)
 
 
 def load_kmeans_tree(path: str) -> KmeansTreeIndex:
-    with open(os.path.join(path, _META_FILE)) as f:
+    with open(os.path.join(path, KmeansTreeIndex.meta_file)) as f:
         meta = json.load(f)
     return KmeansTreeIndex(
         path=path,
@@ -375,126 +380,33 @@ def tree_search(
     return rank_topk(pruned, query_vec, k, strategy, round_digits)
 
 
-def tree_upsert(
-    spark: SparkSession,
-    index: KmeansTreeIndex,
-    new_df: DataFrame,
-    id_col: str = "id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Incremental tree maintenance — the tree twin of
-    ``index.ivf_upsert``: route each new vector down the FROZEN tree
-    (nearest L1 centroid by L2, then nearest L2 centroid within that
-    cell — the same membership rule the build's assignment pass used)
-    and APPEND into the (l1, l2) leaf directory. One Arrow pass
-    computes the leaf and the assignment distance; searches see new
-    rows immediately (leaf pruning is directory-based).
+def tree_upsert(spark: SparkSession, index: KmeansTreeIndex, new_df: DataFrame) -> dict:
+    """Incremental tree maintenance, the tree twin of
+    ``index.ivf_upsert``: route each ``(id, embedding)`` row down the
+    FROZEN tree (``layout.nearest`` at both levels: the nearest L1
+    centroid, then the nearest L2 centroid within that cell, the
+    membership rule of the build's assignment pass) and APPEND it into
+    its (l1, l2) leaf directory through ``layout.append_batch``.
+    Searches see new rows at once (leaf pruning is directory-based); a
+    batch holding a vector of another length than the index dim raises
+    and writes nothing.
 
-    Centroids stay frozen; the returned stats (per-leaf counts +
-    ``max_assign_l2``) feed the rebuild trigger, exactly as for the
-    flat index. Rows with a mismatched vector length are dropped.
-    Returns {"n_appended", "per_leaf", "max_assign_l2"}.
-    """
-    import pandas as pd
+    Centroids stay frozen; the returned stats (per-leaf counts,
+    ``max_assign_l2``) feed the rebuild trigger, as for the flat index.
+    Returns {"n_appended", "per_partition" ((l1, l2) -> rows),
+    "max_assign_l2"}."""
+    c1, c2 = index.centroids_l1, index.centroids_l2
 
-    c1 = index.centroids_l1
-    c2 = index.centroids_l2
-    dim = c1.shape[1]
+    def route(E):
+        l1, d = nearest(c1, E)
+        l2 = np.zeros(len(E), dtype=np.int32)
+        for cell in np.unique(l1):
+            rows = l1 == cell
+            l2[rows], d[rows] = nearest(c2[cell], E[rows])
+        return {"l1": l1, "l2": l2, "d": d}
 
-    def _route_fn(vecs):
-        l1s, l2s, ds = [], [], []
-        for v in vecs:
-            if v is None or len(v) != dim:
-                l1s.append(None)
-                l2s.append(None)
-                ds.append(None)
-                continue
-            q = np.asarray(v, dtype=np.float64)
-            d1 = ((c1 - q) ** 2).sum(axis=1)
-            l1 = int(d1.argmin())
-            kids = c2[l1]
-            if len(kids) == 0:
-                l2, d = 0, float(np.sqrt(d1[l1]))
-            else:
-                d2 = ((kids - q) ** 2).sum(axis=1)
-                l2 = int(d2.argmin())
-                d = float(np.sqrt(d2[l2]))
-            l1s.append(l1)
-            l2s.append(l2)
-            ds.append(d)
-        return pd.DataFrame({"l1": l1s, "l2": l2s, "d": ds})
-
-    _route_udf = F.pandas_udf(
-        _route_fn,
-        T.StructType(
-            [
-                T.StructField("l1", T.IntegerType()),
-                T.StructField("l2", T.IntegerType()),
-                T.StructField("d", T.DoubleType()),
-            ]
-        ),
-    )
-
-    assigned = (
-        new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("embedding"))
-        .withColumn("a", _route_udf(F.col("embedding")))
-        .select(
-            "id", "embedding",
-            F.col("a.l1").alias("l1"), F.col("a.l2").alias("l2"),
-            F.col("a.d").alias("d"),
-        )
-        .filter(F.col("l1").isNotNull())
-    )
-    # one evaluation feeds both the write and the stats (ivf_upsert's
-    # non-deterministic-source guard)
-    assigned.persist()
-    try:
-        tombstones.resurrect_ids(spark, index.path, assigned, "id")
-        assigned.drop("d").write.mode("append").partitionBy("l1", "l2").parquet(
-            index.path
-        )
-        stats = (
-            assigned.groupBy("l1", "l2")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("d").alias("max_d"))
-            .collect()
-        )
-    finally:
-        assigned.unpersist()
-    per_leaf = {(int(r.l1), int(r.l2)): int(r.n) for r in stats}
-    return {
-        "n_appended": sum(per_leaf.values()),
-        "per_leaf": per_leaf,
-        "max_assign_l2": max((float(r.max_d) for r in stats), default=0.0),
-    }
-
-
-def tree_compact(
-    spark: SparkSession,
-    index: KmeansTreeIndex,
-    out_dir: str,
-    dedup_ids: bool = False,
-) -> KmeansTreeIndex:
-    """Generation-based compaction for the tree layout — the tree twin
-    of ``index.ivf_compact``: rewrite append churn into a NEW immutable
-    generation (~one file per leaf directory), centroids carried over,
-    serving flips the pointer. ``dedup_ids=True`` keeps one row per id
-    (streaming replay duplicates; costs its own exchange, same
-    unconditional-dedup argument as ivf_compact)."""
-    import shutil
-
-    df = tombstones.apply_tombstones(spark, index.path, _read_clusters(spark, index))
-    if dedup_ids:
-        df = df.dropDuplicates(["id"])
-    (
-        df.repartition(max(1, index.n_leaves), "l1", "l2")
-        .write.mode("overwrite")
-        .partitionBy("l1", "l2")
-        .parquet(out_dir)
-    )
-    shutil.copyfile(
-        os.path.join(index.path, _META_FILE), os.path.join(out_dir, _META_FILE)
-    )
-    return load_kmeans_tree(out_dir)
+    fields = [T.StructField(c, T.IntegerType()) for c in index.partition_cols]
+    return append_batch(spark, index, new_df, route, fields)
 
 
 def tree_knn_join_distributed(
