@@ -644,12 +644,16 @@ def test_opq_engine_filtered_and_pruned(spark, qvec, opq_engine):
     assert all(r["vendor"] == "fr" for r in pruned)
 
 
-def test_ivf_search_df_root_is_take_ordered(qvec, ivf_engine_nonstrict):
+def test_ivf_search_df_root_is_take_ordered(qvec, ivf_engine_nonstrict, monkeypatch):
     """The post-join re-sort carries limit(k): the plan root is a
     TakeOrderedAndProject, with no range-partitioning exchange (whose
-    sampling job and shuffle a bare ORDER BY would run per request)."""
+    sampling job and shuffle a bare ORDER BY would run per request).
+    The driver-side cap is forced to 0, so the request takes the Spark
+    plan."""
+    from ydb_vector_search_simple_api_spark.operators import layout
     from ydb_vector_search_simple_api_spark.plans import checks
 
+    monkeypatch.setattr(layout, "DRIVER_SEARCH_CAP", 0)
     df = ivf_engine_nonstrict.search_df(qvec, k=5, search_top_size=4)
     plan = checks.simple_plan(df)
     ops = [
@@ -780,12 +784,17 @@ def _ivf_engine_at_dim(spark, tmp_path, dim):
 COLUMN_API_COMMANDS_DIM64 = 814
 
 
-def test_ivf_search_df_round_trips_flat_in_dim(spark, tmp_path):
+def test_ivf_search_df_round_trips_flat_in_dim(spark, tmp_path, monkeypatch):
     """Building the /search plan costs the same number of py4j round
     trips at dim 8, 64 and 512 — the score is one SQL string — and at
-    most 40% of what the Column API form cost at dim 64."""
+    most 40% of what the Column API form cost at dim 64. The
+    driver-side cap is forced to 0, so the request takes the Spark
+    plan."""
     from conftest import py4j_commands
 
+    from ydb_vector_search_simple_api_spark.operators import layout
+
+    monkeypatch.setattr(layout, "DRIVER_SEARCH_CAP", 0)
     counts = {}
     for dim in (8, 64, 512):
         eng, q = _ivf_engine_at_dim(spark, tmp_path, dim)

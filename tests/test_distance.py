@@ -6,6 +6,7 @@ import math
 import struct
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from ydb_vector_search_simple_api_spark.functions import distance as D
@@ -210,3 +211,26 @@ def test_column_operand_is_rejected(spark):
 
     with pytest.raises(TypeError):
         D.score_expr("CosineSimilarity", F.col("embedding"), [1.0])
+
+
+def test_fold_scores_equal_score_sql(spark):
+    """The driver fold equals the SQL score by ``repr`` for all five
+    strategies over the edge cases above (zero norm, NaN, ±inf, -0.0,
+    a dimension mismatch, the empty query) plus a null row and a null
+    element, which score NULL."""
+    rows, queries = _rows_and_queries()
+    rows += [None, [1.0, None, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0]]
+    df = spark.createDataFrame(list(enumerate(rows)), "id long, embedding array<float>")
+    keys = [(qi, s) for qi in range(len(queries)) for s in STRATEGY_NAMES]
+    got = df.select(
+        "id",
+        *[D.score_expr(s, "embedding", queries[qi]).alias(f"s{i}") for i, (qi, s) in enumerate(keys)],
+    ).orderBy("id").collect()
+    vecs = pa.array(rows, pa.list_(pa.float32()))
+    bad = []
+    for i, (qi, s) in enumerate(keys):
+        want = [repr(r[f"s{i}"]) for r in got]
+        fold = [repr(v) for v in D.fold_scores(s, vecs, queries[qi]).tolist()]
+        if fold != want:
+            bad.append((s, qi, fold, want))
+    assert not bad, bad[:3]

@@ -489,10 +489,10 @@ def test_ivf_search_plan_launches_no_jobs(spark, built, qvec):
     assert n == 0
 
 
-def test_ivf_engine_search_launches_at_most_two_jobs(spark, built, qvec):
-    """A warm search launches exactly one job, the pruned top-k: the
-    metadata is a driver-side point read (``store.doc_metadata``), not
-    a second job joining the top-k to a scan of documents."""
+def test_ivf_engine_search_launches_no_job(spark, built, qvec):
+    """A warm search launches no Spark job: the routed clusters are
+    scored on the driver (``layout.driver_search``) and the metadata is
+    a driver-side point read (``store.doc_metadata``)."""
     from conftest import spark_jobs
 
     from ydb_vector_search_simple_api_spark.api import VectorSearchEngine
@@ -508,7 +508,7 @@ def test_ivf_engine_search_launches_at_most_two_jobs(spark, built, qvec):
         spark, lambda: eng.search(qvec, k=5, search_top_size=4)
     )
     assert len(results) == 5
-    assert n == 1
+    assert n == 0
 
 
 def test_upserts_between_searches_are_read(spark, tmp_path_factory, built):

@@ -235,16 +235,20 @@ def test_lexical_index_tombstones(spark, tmp_path):
     assert restored == before
 
 
-def test_tombstone_read_infers_no_schema(spark, tmp_path):
+def test_tombstone_read_infers_no_schema(spark, tmp_path, monkeypatch):
     """The tombstone set is read with its fixed schema: a warm
     full-width IVF search over a tombstoned index adds only the jobs
     that broadcast the set (two), where inferring the schema from the
     parquet footers cost one more job per search. The rows are the
-    exact top-k of the live rows."""
+    exact top-k of the live rows. The driver-side cap is forced to 0,
+    so the search takes the Spark plan."""
     from ydb_vector_search_simple_api_spark import api
     from ydb_vector_search_simple_api_spark.config import SearchConfig
+    from ydb_vector_search_simple_api_spark.operators import layout
 
     from conftest import spark_jobs
+
+    monkeypatch.setattr(layout, "DRIVER_SEARCH_CAP", 0)
 
     idx = ivf.build_ivf_index(spark, _src(spark), str(tmp_path / "ivf"), n_clusters=4)
     eng = api.VectorSearchEngine(

@@ -17,6 +17,10 @@ Measured:
     (broadcast(docs) — the corpus on the wire) for before/after
   * filtered top-k end-to-end
   * engine-served IVF at width 1/4/full (index + metadata point read)
+  * the driver-side serving crossover: the engine's search at widths
+    1..full scored on the driver and through the Spark plan (the cap
+    in ``layout.DRIVER_SEARCH_CAP`` forced above and below the
+    request), against the routed rows x dim the cap is compared with
   * HTTP ``POST /search`` on the IVF engine (k=10, width 10) under
     closed-loop load from 1, 8 and 32 client threads: q/s, p50/p99
     latency and Spark jobs per request. Each request runs under its
@@ -151,13 +155,15 @@ def main() -> None:
         load_embeddings,
     )
 
+    # one task slot per core and a 4 GB heap: the JVM sized to the host
+    # (a 24 GB heap let it grow past 7 GB RSS at the default 200x)
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{os.cpu_count()}]")
         .appName("serve-probe")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", "4g")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -297,6 +303,23 @@ def main() -> None:
             )
         )
 
+    from ydb_vector_search_simple_api_spark.operators import layout
+
+    def routed(width):
+        view = layout.driver_view(spark, idx)
+        keys = idx.partitions(qvec, eng.config.strategy, width)
+        return sum(md.num_rows for key in keys for _, md in view.files.get(key, ())) * idx.dim
+
+    cap = layout.DRIVER_SEARCH_CAP
+    crossover = []
+    for width in (1, 2, 4, 8, 16, 32, n_clusters):
+        times = []
+        for forced in (float("inf"), -1):
+            layout.DRIVER_SEARCH_CAP = forced
+            times.append(timed(lambda w=width: eng.search(qvec, 10, None, w)))
+        layout.DRIVER_SEARCH_CAP = cap
+        crossover.append((width, routed(width), *times))
+
     from ydb_vector_search_simple_api_spark import http_server
 
     pool = [
@@ -351,6 +374,17 @@ def main() -> None:
         f"({n_q / t_batch:.0f} q/s) | pruned dirs x BLAS blocks |"
     )
     print(f"\nivf build (16k-row fit sample): {t_build:.1f} s")
+    print(
+        f"\nengine IVF /search on the driver vs the Spark plan (best-of-3; "
+        f"DRIVER_SEARCH_CAP = {cap:,} routed rows x dim):\n"
+    )
+    print("| width | routed rows x dim | driver | Spark plan | served by |")
+    print("|---|---|---|---|---|")
+    for width, n, t_driver, t_spark in crossover:
+        print(
+            f"| {width}/{n_clusters} | {n:,} | {t_driver * 1000:.0f} ms | "
+            f"{t_spark * 1000:.0f} ms | {'driver' if n <= cap else 'Spark'} |"
+        )
     print(
         f"\nHTTP POST /search, IVF {n_clusters} clusters, k=10 width=10, "
         f"{seconds:.0f} s closed-loop window per level:\n"

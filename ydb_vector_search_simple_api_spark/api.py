@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import listing
 from .config import DEFAULT_SEARCH_TOP_SIZE, SearchConfig
 from .operators import bq as bq_mod
 from .operators import graphann as gann_mod
@@ -37,13 +38,14 @@ from .operators import opq as opq_mod
 from .operators import sq as sq_mod
 from .operators import index as ivf_mod
 from .operators import tree as tree_mod
+from .operators.layout import driver_search
 from .operators.search import (
     exact_topk,
     filtered_doc_ids,
     knn_join_blocked_arrays,
     shortlist_search,
 )
-from .sources.store import doc_metadata, load_embeddings
+from .sources.store import doc_metadata, load_embeddings, table_path
 
 
 def get_query_embedding(
@@ -113,10 +115,11 @@ class VectorSearchEngine:
     #: recomputing corpus statistics per request
     #: (operators.ranking.build_lexical_index)
     lexical_index: object | None = None
-    #: >0 enables an LRU memo of (embedding, k, filter, width) ->
-    #: results for repeated hot queries (the store is immutable per
-    #: engine instance by contract; call clear_result_cache() after
-    #: upserts/deletes or build a fresh engine)
+    #: >0 enables an LRU memo of (served generation, embedding, k,
+    #: filter, width) -> results for repeated hot queries. The
+    #: generation is the served directory (the index, else
+    #: ``embeddings``) and its file listing, so an upsert, a delete or a
+    #: swap to a compacted index misses instead of replaying stale rows
     result_cache_size: int = 0
     _result_cache: OrderedDict = field(
         default_factory=OrderedDict, init=False, repr=False
@@ -144,7 +147,14 @@ class VectorSearchEngine:
         t0 = time.perf_counter()
         key = None
         if self.result_cache_size > 0:
+            served = (
+                self.index.path
+                if self._indexed
+                else table_path(self.sf_dir, "embeddings")
+            )
             key = (
+                served,
+                tuple(listing(served)),
                 tuple(float(x) for x in embedding),
                 k,
                 tuple(sorted((filter or {}).items())),
@@ -171,8 +181,8 @@ class VectorSearchEngine:
         return results, time.perf_counter() - t0
 
     def clear_result_cache(self) -> None:
-        """Drop the memoized results — call after upserts/deletes
-        change what a query should return."""
+        """Drop the memoized results (entries of an older generation
+        never hit; this frees them)."""
         with self._cache_lock:
             self._result_cache.clear()
 
@@ -188,10 +198,31 @@ class VectorSearchEngine:
         then by id. :meth:`search` collects it and attaches each id's
         ``documents`` metadata on the driver (``store.doc_metadata``),
         so an unfiltered plan reads no ``documents`` file and a filtered
-        one reads ``documents`` only for the filter's id set."""
+        one reads ``documents`` only for the filter's id set.
+
+        An unfiltered IVF or tree request is scored on the driver while
+        its routed rows stay under ``layout.DRIVER_SEARCH_CAP``
+        (``layout.driver_search``): the same rows, bit for bit, as a
+        local DataFrame whose collect launches no Spark job. Above the
+        cap, and for every other shape, it is the Spark plan."""
         if self._indexed:
             if filter and self.config.strict_filter_index_exclusion:
                 raise ValueError("Unable to use filter with enabled vector index.")
+            width = search_top_size or self.config.search_top_size
+            if not filter and isinstance(
+                self.index, (ivf_mod.IvfIndex, tree_mod.KmeansTreeIndex)
+            ):
+                strategy = self.config.strategy
+                local = driver_search(
+                    self.spark,
+                    self.index,
+                    self.index.partitions(embedding, strategy, width),
+                    embedding,
+                    k,
+                    strategy,
+                )
+                if local is not None:
+                    return local
             # non-strict mode (config.py strict_filter_index_exclusion=
             # False): the filter IS honored — applied to the pruned
             # candidate set before scoring, as documented. The filtered
@@ -204,7 +235,6 @@ class VectorSearchEngine:
                 if filter
                 else None
             )
-            width = search_top_size or self.config.search_top_size
             if hasattr(self.index, "shortlist"):
                 # for the code layouts (BQ sign bits, SQ int8,
                 # rotated-ADC OPQ) the search width IS the rerank

@@ -56,10 +56,12 @@ def listing(path: str) -> list[tuple[str, int, int]]:
     out = []
     for root, dirs, files in os.walk(path):
         dirs.sort()
+        rel = os.path.relpath(root, path)
         for name in sorted(files):
-            p = os.path.join(root, name)
-            st = os.stat(p)
-            out.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+            st = os.stat(os.path.join(root, name))
+            out.append(
+                (name if rel == "." else os.path.join(rel, name), st.st_size, st.st_mtime_ns)
+            )
     return out
 
 

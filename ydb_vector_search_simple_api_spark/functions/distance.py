@@ -36,6 +36,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -120,6 +121,59 @@ def score_sql(strategy: str, a, b) -> str:
     )
     cos = f"try_divide({dot}, sqrt({fold_sql(sa, sa, _PRODUCT)}) * {nb})"
     return cos if strategy == "CosineSimilarity" else f"1.0D - {cos}"
+
+
+def fold_scores(strategy: str, E, q: Sequence[float]) -> np.ma.MaskedArray:
+    """``score_sql(strategy, <row>, q)`` of every row of ``E`` on the
+    driver, bit for bit: a masked float64 array whose masked entries
+    are SQL NULL.
+
+    ``E`` is an Arrow list array of the rows. The fold repeats the SQL
+    op order column by column:
+    ``acc += E[:, j] * q[j]`` in float64 from ``0.0`` (the L2 forms take
+    the difference first, Manhattan its ``abs``), then the same
+    ``sqrt``, the literal query norm :func:`_py_l2_norm` and
+    ``try_divide``'s NULL on a zero divisor. A null row, a null element
+    or a row of another length than ``q`` gives NULL, as ``zip_with``'s
+    padding does."""
+    import pyarrow.compute as pc
+
+    validate_strategy(strategy)
+    q = [float(x) for x in q]  # the conversion double_sql applies
+    n, d = len(E), len(q)
+    ok = pc.fill_null(pc.equal(pc.list_value_length(E), d), False).to_numpy(
+        zero_copy_only=False
+    )
+    vals = pc.list_flatten(E)
+    flat = vals.to_numpy(zero_copy_only=False)
+    if vals.null_count or not ok.all():
+        parents = pc.list_parent_indices(E).to_numpy(zero_copy_only=False)
+        ok[parents[vals.is_null().to_numpy(zero_copy_only=False)]] = False
+        flat = flat[ok[parents]]
+    # the rows that score, one contiguous float64 array per dimension
+    cols = np.array(flat.reshape(int(ok.sum()), d).T, dtype=np.float64, order="C")
+
+    def fold(term, ys):
+        acc = np.zeros(cols.shape[1])
+        for x, y in zip(cols, ys):
+            acc += term(x, y)
+        return acc
+
+    null = ~ok
+    out = np.zeros(n)
+    with np.errstate(all="ignore"):
+        if strategy == "EuclideanDistance":
+            out[ok] = np.sqrt(fold(lambda x, y: (x - y) * (x - y), q))
+        elif strategy == "ManhattanDistance":
+            out[ok] = fold(lambda x, y: np.abs(x - y), q)
+        elif strategy == "InnerProductSimilarity":
+            out[ok] = fold(np.multiply, q)
+        else:
+            den = np.sqrt(fold(np.multiply, cols)) * _py_l2_norm(q)
+            cos = fold(np.multiply, q) / np.where(den == 0.0, 1.0, den)
+            null[np.flatnonzero(ok)[den == 0.0]] = True
+            out[ok] = cos if strategy == "CosineSimilarity" else 1.0 - cos
+    return np.ma.MaskedArray(out, mask=null, shrink=False)
 
 
 def score_expr(strategy: str, embedding, target) -> Column:

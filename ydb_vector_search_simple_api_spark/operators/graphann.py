@@ -525,7 +525,8 @@ def graphann_upsert(
     vector of another length than the index dim before anything is
     written. Then each new node's m nearest EXISTING nodes come from one
     blocked BLAS kNN join (new side broadcast — an ingest batch is
-    small by construction), the new rows append to ``adjacency/`` with
+    small by construction), collected once (batch x m pairs) for the
+    two writes: the new rows append to ``adjacency/`` with
     those forward links, and the REVERSE links (existing -> new, what
     keeps the graph navigable toward fresh nodes and the full-beam
     connectivity assertion true) append to a ``delta/`` directory
@@ -546,13 +547,16 @@ def graphann_upsert(
     )
 
     def link(rows: DataFrame) -> None:
-        pairs = knn_join_blocked(
+        # the kNN join scans the whole adjacency; its batch x m pairs
+        # feed both writes, so they are collected once
+        knn = knn_join_blocked(
             spark,
             rows.selectExpr("id AS query_id", "embedding AS query_vec"),
             adj,
             k=index.m,
             strategy=strategy,
         ).select("query_id", "id")
+        pairs = spark.createDataFrame(knn.toArrow(), knn.schema)
         fwd = (
             pairs.groupBy("query_id")
             .agg(F.array_sort(F.collect_set("id")).alias("neighbors"))

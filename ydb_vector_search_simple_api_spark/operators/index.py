@@ -28,7 +28,11 @@ Spark-native design (no custom Catalyst rule needed):
   launches no Spark job (no partition-discovery job past Spark's
   32-path threshold, no footer-inference job: the layout schema is
   stored beside the centroids). Candidates are re-ranked exactly
-  (same TakeOrderedAndProject shape as exact_search).
+  (``search.rank_topk``, the TakeOrderedAndProject tail of
+  exact_search). The serving engine runs this plan for a filtered
+  request, or one routed over ``layout.DRIVER_SEARCH_CAP``; an
+  unfiltered request under it is scored on the driver with the same
+  rows (``layout.driver_search``), launching no Spark job.
 * Recall contract (SURVEY.md §4.3): recall is monotone in
   ``search_top_size`` and the search is EXACT when
   ``search_top_size >= n_clusters`` (all partitions read).
@@ -85,6 +89,16 @@ class IvfIndex:
 
     def rows(self, spark: SparkSession) -> DataFrame:
         return _read_clusters(spark, self)
+
+    def partitions(
+        self, query_vec: Sequence[float], strategy: str, width: int
+    ) -> list[tuple[int]]:
+        """The ``(cluster_id,)`` keys a search of ``width`` reads: the
+        ``width`` nearest clusters, best first."""
+        validate_strategy(strategy)
+        if width < 1:
+            raise ValueError("search_top_size must be a positive integer")
+        return [(c,) for c in _rank_centroids(self, query_vec, strategy)[:width]]
 
 
 def _infer_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -268,11 +282,7 @@ def ivf_search(
     still shrinks the scan, the semi-join keeps only rows passing the
     filter, and recall for filtered rows is bounded by the clusters the
     width admits (exact at full width)."""
-    validate_strategy(strategy)
-    if search_top_size < 1:
-        raise ValueError("search_top_size must be a positive integer")
-    keep = _rank_centroids(index, query_vec, strategy)[:search_top_size]
-
+    keep = index.partitions(query_vec, strategy, search_top_size)
     pruned = tombstones.apply_tombstones(
         spark, index.path, _read_clusters(spark, index, keep)
     )

@@ -21,6 +21,12 @@ The reference never maintains an index itself: YDB keeps its
   file) into a new generation, then its metadata.
 * :func:`nearest` — the one nearest-centroid routing (L2), used by the
   IVF, both tree levels and the IVF-composed code layouts.
+* :func:`driver_search` — the serving half for the partitioned vector
+  layouts (IVF, tree): an unfiltered single-query top-k over the routed
+  partitions, read with pyarrow through the generation's
+  :func:`driver_view` and scored on the driver, bit for bit the Spark
+  plan's rows, while the routed rows stay under
+  :data:`DRIVER_SEARCH_CAP`.
 
 A layout class supplies ``meta_file``, ``layout_dir``,
 ``partition_cols``, ``n_partitions`` (the rewrite's shuffle width, None
@@ -34,7 +40,7 @@ import dataclasses
 import json
 import os
 from collections.abc import Callable, Sequence
-from typing import ClassVar
+from typing import Any, ClassVar
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +48,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import tombstones
+from ..artifacts import session_memo
+from ..config import sort_descending
+from ..functions.distance import fold_scores
 
 
 def nearest(centroids: np.ndarray, E: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -316,3 +325,143 @@ def compact(spark: SparkSession, index, out_dir: str, dedup_ids: bool = False):
         new = dataclasses.replace(new, n_rows=spark.read.parquet(new.layout_dir).count())
     write_meta(new)
     return new
+
+
+# ------------------------------------------------ driver-side serving
+
+#: routed rows x dim above which :func:`driver_search` leaves a request
+#: to the Spark plan: the crossover measured with ``tools/serve_probe.py``
+#: (SCALING.md, "Driver-side serving")
+DRIVER_SEARCH_CAP = 24_000_000
+
+
+@dataclasses.dataclass(frozen=True)
+class DriverView:
+    """One generation of a partitioned layout as the driver reads it.
+
+    ``files`` maps a partition key (a tuple over ``partition_cols``) to
+    the ``(path, footer)`` of every file Spark's reader takes there
+    (names not starting with ``_`` or ``.``); ``tombstones`` holds the
+    tombstoned ids (int64, no nulls); ``schema`` is the layout's
+    ``(id, embedding)`` as Spark reads them."""
+
+    files: dict[tuple[int, ...], list[tuple[str, Any]]]
+    tombstones: Any
+    schema: T.StructType
+
+
+def _visible(path: str) -> list[str]:
+    return sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+
+
+def _build_view(spark: SparkSession, index) -> DriverView:
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    cols = index.partition_cols
+    files: dict[tuple[int, ...], list[tuple[str, Any]]] = {}
+
+    def walk(path: str, key: tuple[int, ...]) -> None:
+        if len(key) == len(cols):
+            paths = [os.path.join(path, n) for n in _visible(path)]
+            files[key] = [(p, pq.read_metadata(p)) for p in paths if os.path.isfile(p)]
+            return
+        prefix = f"{cols[len(key)]}="
+        for name in _visible(path):
+            if name.startswith(prefix) and os.path.isdir(os.path.join(path, name)):
+                walk(os.path.join(path, name), key + (int(name[len(prefix):]),))
+
+    walk(index.layout_dir, ())
+    tomb = [pa.array([], pa.int64())]
+    if tombstones.has_tombstones(index.path):
+        root = tombstones.tombstone_path(index.path)
+        tomb += [
+            pq.read_table(os.path.join(root, n), columns=["id"])["id"].cast(pa.int64())
+            for n in _visible(root)
+        ]
+    return DriverView(
+        files=files,
+        tombstones=pc.drop_null(pa.chunked_array(tomb, pa.int64()).combine_chunks()),
+        schema=T.StructType([index.rows(spark).schema[c] for c in ("id", "embedding")]),
+    )
+
+
+def driver_view(spark: SparkSession, index) -> DriverView:
+    """The :class:`DriverView` of ``index``'s current generation, built
+    once per layout listing: any file an upsert, delete or rewrite adds
+    or changes gives a new view."""
+    return session_memo(
+        spark, "driver_view", index.path, {}, lambda: _build_view(spark, index)
+    )
+
+
+def _rank(ids, scores: np.ma.MaskedArray, k: int, strategy: str) -> np.ndarray:
+    """The first ``k`` positions in ``search._order_cols`` order: score
+    in the strategy's direction, NULL last either way, NaN above +inf
+    and -0.0 equal to 0.0 (Spark's double ordering), then id ascending
+    with a NULL id first."""
+    import pyarrow.compute as pc
+
+    s, null = scores.filled(0.0), np.ma.getmaskarray(scores)
+    nan = np.isnan(s) & ~null
+    desc = sort_descending(strategy)
+    # value class: desc NaN < value < NULL; asc value < NaN < NULL
+    klass = np.where(null, 2, np.where(nan, 0 if desc else 1, 1 if desc else 0))
+    value = np.where(nan, 0.0, -s if desc else s)
+    id_null = ids.is_null().to_numpy(zero_copy_only=False)
+    id_value = pc.fill_null(ids, 0).to_numpy(zero_copy_only=False)
+    return np.lexsort((id_value, ~id_null, value, klass))[:k]
+
+
+def driver_search(
+    spark: SparkSession,
+    index,
+    keys: Sequence[tuple[int, ...]],
+    query_vec: Sequence[float],
+    k: int,
+    strategy: str,
+) -> DataFrame | None:
+    """The (id, score) top-``k`` of the partitions ``keys`` of
+    ``index``, tombstones applied, as a local DataFrame (collecting it
+    launches no Spark job) holding the rows ``search.rank_topk`` gives
+    over the same partitions: ``distance.fold_scores`` repeats the SQL
+    score bit for bit and :func:`_rank` the plan's ordering. None when
+    the routed rows times the dimension, summed from the footers before
+    any read, pass :data:`DRIVER_SEARCH_CAP`: the caller then runs the
+    Spark plan."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if k < 0:
+        raise ValueError("k must be a non-negative integer")
+    view = driver_view(spark, index)
+    files = [f for key in dict.fromkeys(keys) for f in view.files.get(key, ())]
+    if sum(md.num_rows for _, md in files) * index.dim > DRIVER_SEARCH_CAP:
+        return None
+    # every file's rows in the types Spark's reader gives them
+    schema = to_arrow_schema(view.schema)
+    rows = pa.concat_tables(
+        [schema.empty_table()]
+        + [
+            pq.ParquetFile(path, metadata=md).read(columns=schema.names).cast(schema)
+            for path, md in files
+        ]
+    )
+    ids, vecs = (rows.column(c).combine_chunks() for c in schema.names)
+    if len(view.tombstones):
+        live = pc.invert(pc.is_in(ids.cast(pa.int64()), value_set=view.tombstones))
+        ids, vecs = ids.filter(live), vecs.filter(live)
+    scores = fold_scores(strategy, vecs, query_vec)
+    top = _rank(ids, scores, k, strategy)
+    out = pa.table(
+        {
+            "id": ids.take(top),
+            "score": pa.array(scores.data[top], mask=np.ma.getmaskarray(scores)[top]),
+        }
+    )
+    return spark.createDataFrame(
+        out, T.StructType([view.schema["id"], T.StructField("score", T.DoubleType())])
+    )

@@ -103,6 +103,14 @@ class KmeansTreeIndex:
     def rows(self, spark: SparkSession) -> DataFrame:
         return _read_clusters(spark, self)
 
+    def partitions(
+        self, query_vec: Sequence[float], strategy: str, width: int
+    ) -> list[tuple[int, int]]:
+        """The ``(l1, l2)`` leaves a search of ``width`` per level reads,
+        best first."""
+        validate_strategy(strategy)
+        return route(self, query_vec, strategy, *_widths(self, width, None, None))
+
 
 def _lloyd(x: np.ndarray, k: int, n_iter: int = 20) -> np.ndarray:
     """Deterministic Lloyd k-means (no RNG: init = k rows spread
